@@ -4,20 +4,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val scratch = Scratch.tmpfs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config(scratch.map("spark.local.dir" -> _).toMap)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Session.builder(cpus)
+      .config(Scratch.tmpfs().map("spark.local.dir" -> _).toMap)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warm-up: the first measured query otherwise absorbs

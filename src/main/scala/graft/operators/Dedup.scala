@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
+import graft.Session
 import graft.functions._
 import graft.functions.VectorExpressions
 import graft.functions.VectorExpressions.{minHashBandBuckets, sortedIntersectSize}
@@ -1020,13 +1021,9 @@ object Dedup {
         if (loopShuffleWidth > 0) loopShuffleWidth
         else math.max(4, math.min(spark.sparkContext.defaultParallelism,
           (nPairs * 2 / 250000L + 1).toInt))
-      val saved = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", width.toString)
-      try connectedComponentsLoop(fwd, width, maxIter)
-      finally {
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
-        fwd.unpersist()
-      }
+      try Session.withConf(spark, "spark.sql.shuffle.partitions" -> width.toString) {
+        connectedComponentsLoop(fwd, width, maxIter)
+      } finally fwd.unpersist()
     }
   }
 
@@ -1105,8 +1102,6 @@ object Dedup {
       converged = nextSum == prevSum
       prevSum = nextSum
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] round $iter sum=$nextSum converged=$converged t=${System.nanoTime() / 1e9}")
     }
     require(converged, s"connectedComponents did not converge in $maxIter iterations")
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
+import graft.Session
+
 /** Iterative graph analytics over edge DataFrames — the PageRank loop a
   * curation pipeline runs over a link/transition graph to weight sources
   * (domain-authority weighting of crawled corpora is standard practice in
@@ -343,9 +345,7 @@ object Graph {
     val spark = norm.sparkSession
     val width = math.max(4, math.min(spark.sparkContext.defaultParallelism,
       (n / 250000L + 1).toInt))
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", width.toString)
-    try {
+    try Session.withConf(spark, "spark.sql.shuffle.partitions" -> width.toString) {
       var ranks = nodes
         .select(col("node"), lit(1.0 / n).as("r"))
         .localCheckpoint(true)
@@ -362,7 +362,6 @@ object Graph {
       }
       ranks.select(col("node"), round(col("r"), 6).as("rank"))
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
       norm.unpersist()
       nodes.unpersist()
     }

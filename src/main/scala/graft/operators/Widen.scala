@@ -39,28 +39,21 @@ object Widen {
     * barrier iff its scan is narrower than the core count; `df`
     * unchanged otherwise. Row set and values are identical either way —
     * only the physical partitioning differs (callers must be
-    * partitioning-agnostic, which every aggregation/join consumer is). */
+    * partitioning-agnostic, which every aggregation/join consumer is).
+    *
+    * Streaming frames are always returned unchanged. A micro-batch is
+    * trigger-sized, and a per-batch round-robin exchange (one extra
+    * stage + shuffle EVERY trigger) measured as a net loss on every
+    * streaming monitor once the per-row kernels went native (conformal
+    * 4.76 → 4.55, semdedup_ingest 3.30 → 2.72, t_closeness 3.45 → 2.86,
+    * dedup_ingest 5.10 → 4.13 s standalone min-of-3 at sf0.1). Scale-safe:
+    * a file-stream trigger's scan splits by maxPartitionBytes exactly like
+    * a batch scan, so batch-internal parallelism already comes from the
+    * source's file splits — the 1-task shape only exists for KB-sized
+    * local batch files. */
   def cpuWide(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val p = sc.defaultParallelism
-    // Streaming micro-batches: NO widening exchange by default. A
-    // micro-batch is trigger-sized, and the per-batch round-robin
-    // exchange (one extra stage + shuffle EVERY trigger) measured as a
-    // net loss on every streaming monitor once the per-row kernels went
-    // native (conformal 4.76 → 4.55, semdedup_ingest 3.30 → 2.72,
-    // t_closeness 3.45 → 2.86, dedup_ingest 5.10 → 4.13 s standalone
-    // min-of-3 at sf0.1). Scale-safe to drop: a file-stream trigger's
-    // scan splits by maxPartitionBytes exactly like a batch scan, so
-    // batch-internal parallelism already comes from the source's file
-    // splits — the 1-task shape only exists for KB-sized local batch
-    // files. GRAFT_STREAM_WIDEN=1 re-enables the exchange (at the
-    // session's stream shuffle width) for per-row work heavy enough to
-    // out-cost it.
-    if (df.isStreaming) {
-      if (sys.env.get("GRAFT_STREAM_WIDEN").contains("1"))
-        df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
-      else df
-    }
+    val p = df.sparkSession.sparkContext.defaultParallelism
+    if (df.isStreaming) df
     // Scan-width gate from FILE SIZES, not file count: Spark both PACKS
     // many small files into one FilePartition (openCost/maxPartitionBytes)
     // and SPLITS one large file into many — a count-based gate misreads

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Session
 import graft.operators.Pq
 import graft.schema.Schemas
 import graft.sources.{Staging, Tables}
@@ -26,8 +27,6 @@ import graft.sources.{Staging, Tables}
   * corpus size and both booleans.
   */
 object AnnIngest {
-
-  private val StreamShuffleWidth = sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "8")
 
   /** Replay the NEW vectors (vec_id % 5 == 0) as `nBatches` striped
     * parquet files (memoized per data dir; Staging's shutdown hook deletes
@@ -77,9 +76,7 @@ object AnnIngest {
     val out = java.nio.file.Files.createTempDirectory("graft-ann-ingest").toFile
     val encDir = new java.io.File(out, "index")
 
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    try {
+    try Session.withConf(spark, StreamConf.MonitorWidth) {
       // The accepted corpus at rest: cell-partitioned, the layout
       // ivfPqSearch prunes against (asserted in ScaleSpec for the batch
       // path; the ingest appends land in the same partition dirs).
@@ -131,9 +128,6 @@ object AnnIngest {
       import spark.implicits._
       Seq((nVecs, row.getLong(0) > 0L, row.getBoolean(1)))
         .toDF("n_vecs", "appended_nonempty", "parity_ok")
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      Staging.rmTree(out)
-    }
+    } finally Staging.rmTree(out)
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Session
 import graft.operators.{IndexRegistry, Pq}
 import graft.schema.Schemas
 import graft.sources.{Staging, Tables}
@@ -25,8 +26,6 @@ import graft.sources.{Staging, Tables}
   * the query-set size and the booleans.
   */
 object AnnServe {
-
-  private val StreamShuffleWidth = sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "8")
 
   /** The streamed query set: vec_id ≡ 1 (mod 5), striped into `nBatches`
     * parquet files by vec_id/5 mod nBatches (memoized per data dir;
@@ -61,9 +60,7 @@ object AnnServe {
     val out = java.nio.file.Files.createTempDirectory("graft-ann-serve").toFile
     val resDir = new java.io.File(out, "results")
 
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    try {
+    try Session.withConf(spark, StreamConf.MonitorWidth) {
       val q = spark.readStream.schema(Schemas.embeddings)
         .option("maxFilesPerTrigger", "1")
         .parquet(staged.toString)
@@ -108,9 +105,6 @@ object AnnServe {
       import spark.implicits._
       Seq((nQueries, row.getLong(0) > 0L, row.getBoolean(1)))
         .toDF("n_queries", "results_nonempty", "parity_ok")
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      Staging.rmTree(out)
-    }
+    } finally Staging.rmTree(out)
   }
 }

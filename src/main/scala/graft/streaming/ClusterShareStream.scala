@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongType, StructField, StructType}
 
+import graft.Session
 import graft.operators.Clustering
 import graft.schema.Schemas
 import graft.sources.{Staging, Tables}
@@ -28,8 +29,6 @@ import graft.sources.{Staging, Tables}
   * +0.5 / +k/2 Laplace-smoothed PSI terms (empty cells stay finite);
   * a missing side yields EMPTY — absence is not zero drift. */
 object ClusterShareStream {
-
-  private val StreamShuffleWidth = sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "8")
 
   /** The streamed current-side corpus: odd vec_ids striped into
     * `nBatches` files (the even half is the frozen reference). */
@@ -94,16 +93,14 @@ object ClusterShareStream {
     def grouped(df: DataFrame): DataFrame =
       labeled(df).groupBy(col("label"), col("cl")).agg(count(lit(1)).as("n"))
 
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    try {
+    Session.withConf(spark, StreamConf.MonitorWidth) {
       val q = grouped(
           spark.readStream.schema(Schemas.embeddings)
             .option("maxFilesPerTrigger", "1")
             .parquet(staged.toString))
         .writeStream.format("memory").queryName(name).outputMode("complete").start()
       try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    }
 
     // ref + parity in ONE assignment pass (the id parity rides the key)
     val both = labeled(Tables.embeddings(spark, dir))
@@ -162,9 +159,7 @@ object ClusterShareStream {
     val staged = stagedCur(spark, dir, nBatches)
     val name = "q_kmeans_share_stream_sink"
 
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    try {
+    Session.withConf(spark, StreamConf.MonitorWidth) {
       val q = Clustering.assign(
           Clustering.cleanVectors(
             spark.readStream.schema(Schemas.embeddings)
@@ -174,7 +169,7 @@ object ClusterShareStream {
         .groupBy(col("cl")).agg(count(lit(1)).as("n"))
         .writeStream.format("memory").queryName(name).outputMode("complete").start()
       try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    }
 
     // ref + parity batch counts in ONE assignment pass (the id parity
     // rides the count key — two filtered passes would run the decimal

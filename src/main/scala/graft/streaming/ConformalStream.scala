@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StructField, StructType}
 
+import graft.Session
 import graft.operators.{Curation, Robust}
 import graft.schema.Schemas
 import graft.sources.{Staging, Tables}
@@ -26,8 +27,6 @@ import graft.sources.{Staging, Tables}
   * in-plan (`parity_ok`). Output row matches [[Robust.conformalGate]]
   * (n_cal, n_test, qhat, coverage, avg_set_size) + parity_ok. */
 object ConformalStream {
-
-  private val StreamShuffleWidth = sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "8")
 
   /** The streamed test-half corpus: documents whose portable-hash parity
     * puts them OUTSIDE the calibration half, striped into `nBatches`
@@ -102,16 +101,14 @@ object ConformalStream {
 
     val staged = stagedTest(spark, dir, nBatches)
     val name = "q_conformal_stream_by_source_sink"
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    try {
+    Session.withConf(spark, StreamConf.MonitorWidth) {
       val q = coverFoldBy(scoredBy(
           spark.readStream.schema(Schemas.documents)
             .option("maxFilesPerTrigger", "1")
             .parquet(staged.toString)))
         .writeStream.format("memory").queryName(name).outputMode("complete").start()
       try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    }
 
     def folds(rows: Array[Row]): Map[String, (Long, Long, Long)] =
       rows.map(r => r.getAs[String]("__g") ->
@@ -175,17 +172,15 @@ object ConformalStream {
     spark.sparkContext.setJobDescription("conformal: stage stream input")
     val staged = stagedTest(spark, dir, nBatches)
     val name = "q_conformal_stream_sink"
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
     spark.sparkContext.setJobDescription(null)
-    try {
+    Session.withConf(spark, StreamConf.MonitorWidth) {
       val q = coverFold(scored(
           spark.readStream.schema(Schemas.documents)
             .option("maxFilesPerTrigger", "1")
             .parquet(staged.toString)))
         .writeStream.format("memory").queryName(name).outputMode("complete").start()
       try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    }
 
     def triple(rows: Array[Row]): (Long, Long, Long) = {
       val r = rows(0)

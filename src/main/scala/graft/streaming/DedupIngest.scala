@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Session
 import graft.operators.Dedup
 import graft.schema.Schemas
 import graft.sources.{Staging, Tables}
@@ -38,8 +39,6 @@ import graft.sources.{Staging, Tables}
   * in-plan.
   */
 object DedupIngest {
-
-  private val StreamShuffleWidth = sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "8")
 
   /** Replay the documents table as `nBatches` doc_id-striped parquet files
     * (memoized per (data dir, nBatches); Staging's shutdown hook deletes
@@ -129,9 +128,7 @@ object DedupIngest {
         .transform(Dedup.shingleSets(_, n = 3))), nPart, nSub).schema
     val bandPartCols = if (nSub > 1) Seq("pbkt", "sbb") else Seq("pbkt")
 
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    try {
+    try Session.withConf(spark, StreamConf.MonitorWidth) {
       val q = spark.readStream.schema(Schemas.documents)
         .option("maxFilesPerTrigger", "1")
         .parquet(staged.toString)
@@ -236,9 +233,6 @@ object DedupIngest {
       import spark.implicits._
       Seq((nDocs, row.getLong(0) > 0L, row.getBoolean(1)))
         .toDF("n_docs", "pairs_nonempty", "match_full")
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      Staging.rmTree(out)
-    }
+    } finally Staging.rmTree(out)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DecimalType, DoubleType, LongType, StructField, StructType}
 
+import graft.Session
 import graft.schema.Schemas
 import graft.sources.{Staging, Tables}
 
@@ -37,8 +38,6 @@ import graft.sources.{Staging, Tables}
   * yields an EMPTY result — the fail-loud gate contract of the batch
   * form. */
 object EmbedDriftStream {
-
-  private val StreamShuffleWidth = sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "8")
 
   /** Per-dimension mergeable moment sums over valid `dim`-length vectors:
     * (i, sx, sxx, n) with sx = Σ decimal(x), sxx = Σ decimal(x_d · x_d)
@@ -119,9 +118,7 @@ object EmbedDriftStream {
     val staged = stagedCur(spark, dir, nBatches)
     val name = "q_embed_drift_stream_sink"
 
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    try {
+    Session.withConf(spark, StreamConf.MonitorWidth) {
       val q = momentSums(
           spark.readStream.schema(Schemas.embeddings)
             .option("maxFilesPerTrigger", "1")
@@ -129,7 +126,7 @@ object EmbedDriftStream {
           col("embedding"), dim)
         .writeStream.format("memory").queryName(name).outputMode("complete").start()
       try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    }
 
     val curState = spark.table(name).collect() // ≤ d rows — model-sized
     val refRows = momentSums(

@@ -23,9 +23,8 @@ object EventStreams {
   /** Stateful-stream shuffle width: every shuffle partition is a state
     * store with its own per-batch snapshot/commit I/O, so this is sized to
     * KEY cardinality (tiny here), not scan parallelism. Baked into a
-    * checkpoint at first start — a design-time choice per deployment,
-    * exposed as an env knob for fixed-cost measurement. */
-  private val StreamShuffleWidth = sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "4")
+    * checkpoint at first start — a design-time choice per deployment. */
+  private val StreamWidth = "spark.sql.shuffle.partitions" -> "4"
 
   /** Streaming source over an events directory; schema must be explicit for
     * `readStream`. */
@@ -92,13 +91,6 @@ object EventStreams {
     }
   }
 
-  /** Restore an optional conf captured with `conf.getOption`. */
-  private def restoreOpt(spark: SparkSession, key: String, v: Option[String]): Unit =
-    v match {
-      case Some(x) => spark.conf.set(key, x)
-      case None => spark.conf.unset(key)
-    }
-
   /** File-split size while a stream runner is active: the replay inputs
     * are single parquet files (events at sf0.1 is ~2 MB), which is ONE
     * scan task at the 128 MB default — the whole decode runs
@@ -107,26 +99,24 @@ object EventStreams {
     * suite-neutral at steady state where state-store commits dominate —
     * kept because at larger replay sizes the single-task scan becomes the
     * bottleneck). Batch queries keep the default. */
-  private val StreamSplitBytes = sys.env.getOrElse("GRAFT_STREAM_SPLIT", "262144")
+  private val StreamSplit = "spark.sql.files.maxPartitionBytes" -> "262144"
 
-  /** Run `body` with the trailing no-data micro-batch disabled. Correct
-    * ONLY for queries whose output is fully emitted inside data batches:
-    * complete-mode aggregations (full state re-emits every batch), INNER
-    * stream-stream joins (matches emit on arrival), dedup filters (first
-    * occurrence emits immediately), and `TimeMode.None` stateful
-    * processors (no timers). The no-data batch exists to flush
-    * watermark-GATED emissions — append-mode windowed aggs, outer joins'
-    * null-extended rows, event-time timeouts — and those runners must
-    * keep it; here it is a full planning + state-commit cycle (~0.5 s at
-    * harness scale) that cannot emit anything. */
-  private def withoutNoDataBatch[A](spark: SparkSession)(body: => A): A = {
-    val saved = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try body finally saved match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-      case None => spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-    }
-  }
+  /** Disables the trailing no-data micro-batch. Correct ONLY for queries
+    * whose output is fully emitted inside data batches: complete-mode
+    * aggregations (full state re-emits every batch), INNER stream-stream
+    * joins (matches emit on arrival), dedup filters (first occurrence
+    * emits immediately), and `TimeMode.None` stateful processors (no
+    * timers). The no-data batch exists to flush watermark-GATED
+    * emissions — append-mode windowed aggs, outer joins' null-extended
+    * rows, event-time timeouts — and those runners must keep it; here it
+    * is a full planning + state-commit cycle (~0.5 s at harness scale)
+    * that cannot emit anything. */
+  private val NoDataBatchOff = "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
+
+  /** RocksDB is the only state-store provider that supports
+    * transformWithState. */
+  private val RocksDbState = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Runs a streaming transform of the events table to completion
     * (AvailableNow semantics via `processAllAvailable`) and returns the
@@ -144,17 +134,10 @@ object EventStreams {
     // space here is tiny; 32 stores would be pure fixed overhead. (The
     // partition count is baked into the checkpoint at first start, so this
     // is a design-time choice, not a tunable.)
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    val savedSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", StreamSplitBytes)
-    try withoutNoDataBatch(spark) {
+    graft.Session.withConf(spark, StreamWidth, StreamSplit, NoDataBatchOff) {
       val q = transform(withWatermark(readTestdataEventStream(spark, dir)))
         .writeStream.format("memory").queryName(name).outputMode("complete").start()
       try q.processAllAvailable() finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      restoreOpt(spark, "spark.sql.files.maxPartitionBytes", savedSplit)
     }
     spark.table(name)
   }
@@ -184,13 +167,9 @@ object EventStreams {
     * metadata survives the column renames inside the join (it rides on the
     * attribute). */
   def runStreamJoin(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    val savedSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", StreamSplitBytes)
     // INNER join: matches emit in the batch both sides arrive; the no-data
     // batch could only evict state, never emit — skip its fixed cost.
-    try withoutNoDataBatch(spark) {
+    graft.Session.withConf(spark, StreamWidth, StreamSplit, NoDataBatchOff) {
       // ONE source, filtered twice — a stream-stream SELF-join. Two separate
       // readStreams would scan the input once per side per micro-batch.
       val src = readTestdataEventStream(spark, dir)
@@ -199,9 +178,6 @@ object EventStreams {
       val q = intervalJoin(clicks, purchases)
         .writeStream.format("memory").queryName(name).outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      restoreOpt(spark, "spark.sql.files.maxPartitionBytes", savedSplit)
     }
     spark.table(name)
   }
@@ -242,11 +218,7 @@ object EventStreams {
       dir: String,
       name: String,
       cutoff: java.sql.Timestamp): DataFrame = {
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    val savedSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", StreamSplitBytes)
-    try {
+    graft.Session.withConf(spark, StreamWidth, StreamSplit) {
       // Watermark BEFORE the type/cutoff filters: the watermark must track
       // the full event stream's time, not the filtered click side's — the
       // last admitted click is otherwise 10 min ahead of its own side's
@@ -258,9 +230,6 @@ object EventStreams {
       val q = intervalJoinLeft(clicks, purchases)
         .writeStream.format("memory").queryName(name).outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      restoreOpt(spark, "spark.sql.files.maxPartitionBytes", savedSplit)
     }
     spark.table(name)
   }
@@ -291,20 +260,13 @@ object EventStreams {
       dir: String,
       name: String,
       cutoff: java.sql.Timestamp): DataFrame = {
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    val savedSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", StreamSplitBytes)
-    try {
+    graft.Session.withConf(spark, StreamWidth, StreamSplit) {
       val wm = withWatermark(readTestdataEventStream(spark, dir))
       val clicks = wm.filter(col("event_type") === "click" && col("ts") < lit(cutoff))
       val purchases = wm.filter(col("event_type") === "purchase" && col("ts") < lit(cutoff))
       val q = intervalJoinFull(clicks, purchases)
         .writeStream.format("memory").queryName(name).outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      restoreOpt(spark, "spark.sql.files.maxPartitionBytes", savedSplit)
     }
     spark.table(name)
   }
@@ -318,11 +280,7 @@ object EventStreams {
     * and is filtered. Result: bit-equality with the BATCH sessionization
     * — the same oracle SQL verifies both paths. */
   def runStreamSessionWindow(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    val savedSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", StreamSplitBytes)
-    try {
+    graft.Session.withConf(spark, StreamWidth, StreamSplit) {
       val events = graft.sources.Tables.events(spark, dir)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       val streamDir = stagedDir("session-stream", dir) { sd =>
@@ -334,9 +292,6 @@ object EventStreams {
         writeReplayPart(sd, events, 0)
         writeReplayPart(sd, closeRow, 1)
       }
-      if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-        streamDir.listFiles().sortBy(_.getName).foreach(f =>
-          println(s"[sessdbg] ${f.getName} len=${f.length} mod=${f.lastModified}"))
       val src = spark.readStream
         .schema(events.schema)
         .option("maxFilesPerTrigger", "1")
@@ -352,9 +307,6 @@ object EventStreams {
       val agg = sessionCounts(withWatermark(src), "30 minutes")
       val q = agg.writeStream.format("memory").queryName(name).outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      restoreOpt(spark, "spark.sql.files.maxPartitionBytes", savedSplit)
     }
     spark.table(name).filter(col("user_id") =!= -1L)
   }
@@ -365,12 +317,8 @@ object EventStreams {
     * The standard "enrich events with reference data in flight" shape. */
   def runStreamStaticEnrich(spark: SparkSession, dir: String, name: String): DataFrame = {
     import spark.implicits._
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    val savedSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", StreamSplitBytes)
     // complete-mode output: the trailing no-data flush batch adds nothing
-    try withoutNoDataBatch(spark) {
+    graft.Session.withConf(spark, StreamWidth, StreamSplit, NoDataBatchOff) {
       val dim = Seq(
         ("view", "engagement"), ("click", "engagement"),
         ("purchase", "conversion"), ("signup", "conversion"),
@@ -383,9 +331,6 @@ object EventStreams {
           col("n_events"), col("value_sum"))
         .writeStream.format("memory").queryName(name).outputMode("complete").start()
       try q.processAllAvailable() finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      restoreOpt(spark, "spark.sql.files.maxPartitionBytes", savedSplit)
     }
     spark.table(name)
   }
@@ -397,18 +342,11 @@ object EventStreams {
     * closed-session semantics are oracle-equivalent only batch-side
     * (`q_events_session`) and watermark-advance-tested in ScalaTest. */
   def runStreamSessionize(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    val savedSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", StreamSplitBytes)
-    try {
+    graft.Session.withConf(spark, StreamWidth, StreamSplit) {
       val q = sessionizeStateful(spark, withWatermark(readTestdataEventStream(spark, dir)))
         .toDF()
         .writeStream.format("memory").queryName(name).outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      restoreOpt(spark, "spark.sql.files.maxPartitionBytes", savedSplit)
     }
     spark.table(name)
   }
@@ -419,13 +357,9 @@ object EventStreams {
     * idempotent-load operator (SURVEY §2.1 S5). Demonstrated over a
     * deliberately doubled stream (the same source unioned with itself). */
   def runStreamDedup(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    val savedSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", StreamSplitBytes)
     // dedup is a stateful FILTER: first occurrences emit on arrival; the
     // no-data batch could only evict key state — skip it.
-    try withoutNoDataBatch(spark) {
+    graft.Session.withConf(spark, StreamWidth, StreamSplit, NoDataBatchOff) {
       // ONE source unioned with itself: a second readStream over the same
       // path would pay separate file-listing/offset admin per micro-batch.
       val src = readTestdataEventStream(spark, dir)
@@ -435,9 +369,6 @@ object EventStreams {
         .select(col("event_id"), col("event_type"), col("value"))
         .writeStream.format("memory").queryName(name).outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      restoreOpt(spark, "spark.sql.files.maxPartitionBytes", savedSplit)
     }
     spark.table(name)
   }
@@ -715,15 +646,8 @@ object EventStreams {
   /** Run [[RecentPurchasesProcessor]] over the purchase stream. */
   def runStreamRecentPurchases(spark: SparkSession, dir: String, name: String): DataFrame = {
     import spark.implicits._
-    val savedWidth = spark.conf.get("spark.sql.shuffle.partitions")
-    val savedSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    val savedProv = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", StreamSplitBytes)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // TimeMode.None: no timers, so the no-data batch can never emit — skip
-    try withoutNoDataBatch(spark) {
+    graft.Session.withConf(spark, StreamWidth, StreamSplit, NoDataBatchOff, RocksDbState) {
       val src = readTestdataEventStream(spark, dir)
         .filter(col("event_type") === "purchase").as[Event]
       val q = src.groupByKey(_.user_id)
@@ -733,10 +657,6 @@ object EventStreams {
           OutputMode.Append())
         .writeStream.format("memory").queryName(name).outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", savedWidth)
-      restoreOpt(spark, "spark.sql.files.maxPartitionBytes", savedSplit)
-      restoreOpt(spark, "spark.sql.streaming.stateStore.providerClass", savedProv)
     }
     spark.table(name)
   }
@@ -744,15 +664,8 @@ object EventStreams {
   /** Run [[TypeProfileProcessor]] over the full event stream. */
   def runStreamTypeProfile(spark: SparkSession, dir: String, name: String): DataFrame = {
     import spark.implicits._
-    val savedWidth = spark.conf.get("spark.sql.shuffle.partitions")
-    val savedSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    val savedProv = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", StreamSplitBytes)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // TimeMode.None: no timers, so the no-data batch can never emit — skip
-    try withoutNoDataBatch(spark) {
+    graft.Session.withConf(spark, StreamWidth, StreamSplit, NoDataBatchOff, RocksDbState) {
       val src = readTestdataEventStream(spark, dir).as[Event]
       val q = src.groupByKey(_.user_id)
         .transformWithState(
@@ -761,10 +674,6 @@ object EventStreams {
           OutputMode.Append())
         .writeStream.format("memory").queryName(name).outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", savedWidth)
-      restoreOpt(spark, "spark.sql.files.maxPartitionBytes", savedSplit)
-      restoreOpt(spark, "spark.sql.streaming.stateStore.providerClass", savedProv)
     }
     spark.table(name)
   }
@@ -774,15 +683,8 @@ object EventStreams {
     * conf flips for the query and restores after. */
   def runStreamRunningTotals(spark: SparkSession, dir: String, name: String): DataFrame = {
     import spark.implicits._
-    val savedWidth = spark.conf.get("spark.sql.shuffle.partitions")
-    val savedSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    val savedProv = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", StreamSplitBytes)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // TimeMode.None: no timers, so the no-data batch can never emit — skip
-    try withoutNoDataBatch(spark) {
+    graft.Session.withConf(spark, StreamWidth, StreamSplit, NoDataBatchOff, RocksDbState) {
       val src = readTestdataEventStream(spark, dir)
         .filter(col("event_type") === "purchase").as[Event]
       val q = src.groupByKey(_.user_id)
@@ -792,10 +694,6 @@ object EventStreams {
           OutputMode.Append())
         .writeStream.format("memory").queryName(name).outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", savedWidth)
-      restoreOpt(spark, "spark.sql.files.maxPartitionBytes", savedSplit)
-      restoreOpt(spark, "spark.sql.streaming.stateStore.providerClass", savedProv)
     }
     spark.table(name)
   }
@@ -884,11 +782,7 @@ object EventStreams {
     * harmlessly into any state that still exists, watermark
     * notwithstanding.) */
   def runStreamLateAudit(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    val savedSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", StreamSplitBytes)
-    try {
+    graft.Session.withConf(spark, StreamWidth, StreamSplit) {
       val events = graft.sources.Tables.events(spark, dir)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       val streamDir = stagedDir("late-audit", dir) { sd =>
@@ -934,9 +828,6 @@ object EventStreams {
         .select(col("window.start").as("w_start"), col("n_events"))
       val q = agg.writeStream.format("memory").queryName(name).outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      restoreOpt(spark, "spark.sql.files.maxPartitionBytes", savedSplit)
     }
     spark.table(name)
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Session
 import graft.sources.{Staging, Tables}
 
 /** Continuous k-anonymity monitor — the privacy family's streaming face
@@ -22,8 +23,6 @@ import graft.sources.{Staging, Tables}
   * histogram readout hash-matches the same plain-SQL oracle as the
   * batch audit, parity pinned. */
 object KAnonStream {
-
-  private val StreamShuffleWidth = sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "8")
 
   /** Stream-read schema DERIVED from the batch table's schema, pruned to
     * the monitor's columns — a regenerated dataset with widened physical
@@ -68,9 +67,7 @@ object KAnonStream {
     val name = "q_t_closeness_stream_sink"
     val bucket = floor(col("c_acctbal") / 1000.0).cast("long")
 
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    try {
+    Session.withConf(spark, StreamConf.MonitorWidth) {
       val q = spark.readStream.schema(customerStreamSchema(spark, dir))
         .option("maxFilesPerTrigger", "1")
         .parquet(staged.toString)
@@ -80,7 +77,7 @@ object KAnonStream {
         .writeStream.format("memory").queryName(name)
         .outputMode("complete").start()
       try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    }
 
     def toMap(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
       (r.getAs[Number]("nation").longValue(), r.getAs[String]("segment"),
@@ -109,9 +106,7 @@ object KAnonStream {
     val staged = stagedCustomers(spark, dir, nBatches)
     val name = "q_k_anonymity_stream_sink"
 
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    try {
+    Session.withConf(spark, StreamConf.MonitorWidth) {
       val q = spark.readStream.schema(customerStreamSchema(spark, dir))
         .option("maxFilesPerTrigger", "1")
         .parquet(staged.toString)
@@ -120,7 +115,7 @@ object KAnonStream {
         .writeStream.format("memory").queryName(name)
         .outputMode("complete").start()
       try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    }
 
     // streamed state: ≤ |nations|·|segments| integer rows — model-sized
     val cur = spark.table(name).collect()
@@ -178,9 +173,7 @@ object KAnonStream {
       spark: SparkSession, dir: String, nBatches: Int, sinkName: String,
       assertParity: Boolean): (DataFrame, Boolean) = {
     val staged = stagedCustomers(spark, dir, nBatches)
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    try {
+    Session.withConf(spark, StreamConf.MonitorWidth) {
       val q = spark.readStream.schema(customerStreamSchema(spark, dir))
         .option("maxFilesPerTrigger", "1")
         .parquet(staged.toString)
@@ -189,7 +182,7 @@ object KAnonStream {
         .writeStream.format("memory").queryName(sinkName)
         .outputMode("complete").start()
       try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    }
 
     // streamed state: the fixed QI grid — model-sized
     val cur = spark.table(sinkName)

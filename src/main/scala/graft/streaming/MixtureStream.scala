@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Session
 import graft.operators.Curation
 import graft.schema.Schemas
 import graft.sources.Tables
@@ -25,8 +26,6 @@ import graft.sources.Tables
   * batch oracle with the parity column appended. */
 object MixtureStream {
 
-  private val StreamShuffleWidth = sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "8")
-
   /** Run the monitor to completion: the [[Curation.mixtureReweight]]
     * table + `parity_ok`. */
   def runStreamMixtureReweight(
@@ -36,9 +35,7 @@ object MixtureStream {
     val staged = PreferenceIngest.stagedDocs(spark, dir, nBatches)
     val name = "q_mixture_reweight_stream_sink"
 
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    try {
+    Session.withConf(spark, StreamConf.MonitorWidth) {
       val q = spark.readStream.schema(Schemas.documents)
         .option("maxFilesPerTrigger", "1")
         .parquet(staged.toString)
@@ -52,7 +49,7 @@ object MixtureStream {
         .writeStream.format("memory").queryName(name)
         .outputMode("complete").start()
       try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    }
 
     def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()

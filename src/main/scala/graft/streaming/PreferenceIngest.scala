@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Session
 import graft.functions.PortableHash
 import graft.operators.Preference
 import graft.schema.Schemas
@@ -34,8 +35,6 @@ import graft.sources.{Staging, Tables}
   * unrolled DuckDB oracle with `true AS parity_ok` appended: the
   * streaming form keeps full hash-exactness, no floor weakening. */
 object PreferenceIngest {
-
-  private val StreamShuffleWidth = sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "8")
 
   /** Replay the documents table as `nBatches` doc_id-striped parquet
     * files (memoized per (data dir, nBatches)); shared with
@@ -173,9 +172,7 @@ object PreferenceIngest {
     val storeDir = new java.io.File(out, "store")
     val pairDir = new java.io.File(out, "pairs")
     try {
-      val saved = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-      try {
+      Session.withConf(spark, StreamConf.MonitorWidth) {
         val q = spark.readStream.schema(Schemas.documents)
           .option("maxFilesPerTrigger", "1")
           .parquet(staged.toString)
@@ -238,7 +235,7 @@ object PreferenceIngest {
           }
           .start()
         try q.processAllAvailable() finally q.stop()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+      }
 
       val pairsAll = snapshotRead(spark, pairDir, DpoPairSchema, listParquet(pairDir))
         .localCheckpoint(false) // capped readout + parity both consume it
@@ -293,9 +290,7 @@ object PreferenceIngest {
     val storeDir = new java.io.File(out, "store")
     val incDir = new java.io.File(out, "inc")
     try {
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    try {
+    Session.withConf(spark, StreamConf.MonitorWidth) {
       val q = spark.readStream.schema(Schemas.documents)
         .option("maxFilesPerTrigger", "1")
         .parquet(staged.toString)
@@ -317,7 +312,7 @@ object PreferenceIngest {
         }
         .start()
       try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    }
 
     // readout: sum the increments (≤ nBatches·|Items|²/2 integer rows —
     // model-sized), fit with the SAME unrolled MM arithmetic

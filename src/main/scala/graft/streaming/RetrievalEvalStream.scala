@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Session
 import graft.operators.{IvfIndex, Similarity}
 import graft.schema.Schemas
 import graft.sources.{Staging, Tables}
@@ -28,8 +29,6 @@ import graft.sources.{Staging, Tables}
   * 6dp-rounded grid values, summarized by the same integer/DECIMAL-sum
   * discipline as the batch rollup. */
 object RetrievalEvalStream {
-
-  private val StreamShuffleWidth = sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "8")
 
   /** The monitored traffic sample: vec_id ≡ 1 (mod 5), striped into
     * `nBatches` parquet files (memoized per data dir). */
@@ -85,9 +84,7 @@ object RetrievalEvalStream {
     val out = java.nio.file.Files.createTempDirectory("graft-releval").toFile
     val metDir = new java.io.File(out, "metrics")
     try {
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    try {
+    Session.withConf(spark, StreamConf.MonitorWidth) {
       val q = spark.readStream.schema(Schemas.embeddings)
         .option("maxFilesPerTrigger", "1")
         .parquet(staged.toString)
@@ -99,7 +96,7 @@ object RetrievalEvalStream {
         }
         .start()
       try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    }
 
     val streamedRaw = spark.read.parquet(metDir.toString)
       .localCheckpoint(false) // summary + parity both consume it

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Session
 import graft.sources.{Staging, Tables}
 import graft.transform.Transforms
 
@@ -36,8 +37,6 @@ import graft.transform.Transforms
   * same swap semantics, one dir instead of per-bucket dirs.
   */
 object ScdIngest {
-
-  private val StreamShuffleWidth = sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "8")
 
   /** The q_scd2 snapshot prep: per-customer per-date order status, same-day
     * conflicts collapsed to the max-orderkey row. Collapse is per
@@ -121,9 +120,7 @@ object ScdIngest {
     val version = new java.util.concurrent.atomic.AtomicInteger(0)
     def dimDir(v: Int) = new java.io.File(out, s"dim-v$v")
 
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    try {
+    try Session.withConf(spark, StreamConf.MonitorWidth) {
       val q = spark.readStream.schema(snapSchema)
         .option("maxFilesPerTrigger", "1")
         .parquet(staged.toString)
@@ -195,9 +192,6 @@ object ScdIngest {
       import spark.implicits._
       Seq((nKeys, row.getLong(0) > 0L, row.getBoolean(1)))
         .toDF("n_keys", "versions_nonempty", "parity_ok")
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      Staging.rmTree(out)
-    }
+    } finally Staging.rmTree(out)
   }
 }

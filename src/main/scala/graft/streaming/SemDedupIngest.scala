@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Session
 import graft.functions.{l2Norm, PairGenerators}
 import graft.operators.Clustering
 import graft.schema.Schemas
@@ -41,8 +42,6 @@ import graft.sources.{Staging, Tables}
   * fails the parity boolean) in-plan.
   */
 object SemDedupIngest {
-
-  private val StreamShuffleWidth = sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "8")
 
   /** Replay the embeddings table as `nBatches` vec_id-striped parquet
     * files (memoized per (data dir, nBatches)). */
@@ -176,9 +175,7 @@ object SemDedupIngest {
       StructField("cl", IntegerType), StructField("vec_a", LongType),
       StructField("vec_b", LongType), StructField("cosine", DoubleType)))
 
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    try {
+    try Session.withConf(spark, StreamConf.MonitorWidth) {
       val q = spark.readStream.schema(Schemas.embeddings)
         .option("maxFilesPerTrigger", "1")
         .parquet(staged.toString)
@@ -249,10 +246,7 @@ object SemDedupIngest {
         StructField("prune_rate", DoubleType),
         StructField("parity_ok", BooleanType)))
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      Staging.rmTree(out)
-    }
+    } finally Staging.rmTree(out)
   }
 
   /** CONTINUOUS semantic split-leakage monitor — the streaming face of
@@ -284,9 +278,7 @@ object SemDedupIngest {
       val h = pmod(graft.functions.PortableHash.keyHash(id), lit(100L))
       when(h < 90L, "train").when(h < 95L, "val").otherwise("test")
     }
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShuffleWidth)
-    try {
+    try Session.withConf(spark, StreamConf.MonitorWidth) {
       val q = spark.readStream.schema(Schemas.embeddings)
         .option("maxFilesPerTrigger", "1")
         .parquet(staged.toString)
@@ -348,9 +340,6 @@ object SemDedupIngest {
         StructField("n_pairs", LongType), StructField("share", DoubleType),
         StructField("is_leak", BooleanType), StructField("parity_ok", BooleanType)))
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      Staging.rmTree(out)
-    }
+    } finally Staging.rmTree(out)
   }
 }

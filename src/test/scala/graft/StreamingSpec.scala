@@ -322,32 +322,26 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   test("transformWithState running totals carry state across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
-    val savedProv = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ms = MemoryStream[Event]
-    val q = ms.toDS().groupByKey(_.user_id)
-      .transformWithState(
-        new EventStreams.RunningTotalsProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
-      .writeStream.format("memory").queryName("tws_out").outputMode("append").start()
-    try {
-      ms.addData(
-        ev(2, "2024-01-01 00:10:00", 1, 5.0), // same batch, later ts → seq 2
-        ev(1, "2024-01-01 00:00:00", 1, 2.0)) // sorted first within the batch
-      q.processAllAvailable()
-      ms.addData(ev(3, "2024-01-01 00:20:00", 1, 1.0)) // second batch resumes state
-      q.processAllAvailable()
-      val rows = spark.table("tws_out").orderBy($"seq").collect()
-        .map(r => (r.getAs[Long]("event_id"), r.getAs[Int]("seq"), r.getAs[Double]("running_value")))
-      assert(rows.toSeq == Seq((1L, 1, 2.0), (2L, 2, 7.0), (3L, 3, 8.0)))
-    } finally {
-      q.stop()
-      savedProv match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    Session.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      val ms = MemoryStream[Event]
+      val q = ms.toDS().groupByKey(_.user_id)
+        .transformWithState(
+          new EventStreams.RunningTotalsProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Append())
+        .writeStream.format("memory").queryName("tws_out").outputMode("append").start()
+      try {
+        ms.addData(
+          ev(2, "2024-01-01 00:10:00", 1, 5.0), // same batch, later ts → seq 2
+          ev(1, "2024-01-01 00:00:00", 1, 2.0)) // sorted first within the batch
+        q.processAllAvailable()
+        ms.addData(ev(3, "2024-01-01 00:20:00", 1, 1.0)) // second batch resumes state
+        q.processAllAvailable()
+        val rows = spark.table("tws_out").orderBy($"seq").collect()
+          .map(r => (r.getAs[Long]("event_id"), r.getAs[Int]("seq"), r.getAs[Double]("running_value")))
+        assert(rows.toSeq == Seq((1L, 1, 2.0), (2L, 2, 7.0), (3L, 3, 8.0)))
+      } finally q.stop()
     }
   }
 
@@ -512,6 +506,60 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(byId(4).getAs[Timestamp]("last_right_ts") == Timestamp.valueOf("2024-01-01 00:10:00"))
     assert(byId(4).getAs[Long]("gap_us") == 50L * 60 * 1000 * 1000)
     assert(byId(5).getAs[Timestamp]("last_right_ts") == null)
+  }
+
+  test("Session.withConf restores a set key and unsets an absent one, also when the body throws") {
+    val (set, absent) = ("graft.test.withConf.set", "graft.test.withConf.absent")
+    spark.conf.set(set, "before")
+    spark.conf.unset(absent)
+    def restored(): Unit = {
+      assert(spark.conf.get(set) == "before")
+      assert(!spark.conf.getAll.contains(absent))
+    }
+    try {
+      Session.withConf(spark, set -> "inside", absent -> "inside") {
+        assert(spark.conf.get(set) == "inside")
+        assert(spark.conf.get(absent) == "inside")
+      }
+      restored()
+      intercept[IllegalStateException] {
+        Session.withConf(spark, set -> "inside", absent -> "inside") {
+          throw new IllegalStateException("body failed")
+        }
+      }
+      restored()
+    } finally spark.conf.unset(set)
+  }
+
+  /** A small events + documents table set in the `SparkEntry` table layout
+    * (`<dir>/<table>.parquet`). The on-time max (01:40) and the row before
+    * it (01:30) share an hour after the 10-minute delay, as the late-audit
+    * schedule requires; user 3 is the late slice. */
+  private lazy val streamTables: String = {
+    val dir = Files.createTempDirectory("graft-stream-tables").toString
+    Seq(
+      ev(1, "2024-01-01 00:05:00", 1, 1.0), ev(2, "2024-01-01 00:40:00", 2, 2.0),
+      ev(3, "2024-01-01 01:10:00", 1, 3.0), ev(4, "2024-01-01 01:30:00", 2, 4.0),
+      ev(5, "2024-01-01 01:40:00", 1, 5.0), ev(6, "2024-01-01 00:30:00", 3, 6.0),
+      ev(7, "2024-01-01 01:35:00", 3, 7.0))
+      .toDF().write.parquet(s"$dir/events.parquet")
+    val fox = "the quick brown fox jumps over the lazy dog"
+    Seq(
+      (1L, fox, "en", "web"), (2L, fox + " again", "en", "web"),
+      (3L, "streaming state stores commit once per micro-batch", "en", "books"),
+      (4L, fox, "en", "forum"))
+      .map { case (id, text, lang, src) => (id, text, lang, src, text.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  test("contract stream entries leave the session conf exactly as they found it") {
+    for (name <- Seq("q_events_late_drop", "q_dedup_ingest_stream")) {
+      val before = spark.conf.getAll
+      assert(SparkEntry.queries(name)(spark, streamTables).collect().nonEmpty, name)
+      assert(spark.conf.getAll == before, name)
+    }
   }
 
   test("driver contract: entry returns rows on sf0.001") {

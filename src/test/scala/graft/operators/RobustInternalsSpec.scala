@@ -2,7 +2,7 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{Session, SparkSpec}
 
 /** Direct checks of Robust's package-private machinery. */
 class RobustInternalsSpec extends AnyFunSuite with SparkSpec {
@@ -24,10 +24,8 @@ class RobustInternalsSpec extends AnyFunSuite with SparkSpec {
         (gg, v, acc + c)
       }.drop(1)
     }.map(t => (t._1, t._2) -> t._3).toMap
-    val old = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      for (parts <- Seq("1", "2", "7", "64")) {
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
+    for (parts <- Seq("1", "2", "7", "64"))
+      Session.withConf(spark, "spark.sql.shuffle.partitions" -> parts) {
         val got = Robust.runningTotalsBy(
             perValue.toDF("__g", "v", "cnt"), Seq("__g"), Seq("cnt"))
           .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(3)).toMap
@@ -40,6 +38,5 @@ class RobustInternalsSpec extends AnyFunSuite with SparkSpec {
         val wantG = want.collect { case (("g0", v), c) => v -> c }
         assert(gotG == wantG, s"global mismatch at parts=$parts")
       }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", old)
   }
 }
