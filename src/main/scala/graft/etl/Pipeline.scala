@@ -1,5 +1,9 @@
 package graft.etl
 
+import java.util.concurrent.{ExecutionException, Executors}
+
+import scala.util.{Failure, Try}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType}
@@ -22,6 +26,13 @@ import graft.transform.DimTime
   * (`workflow.py:261-292`) become plain dataflow dependencies — parquet has
   * no FK enforcement, so only the data dependencies (orders before LTV)
   * survive, which is exactly what a lake pipeline wants.
+  *
+  * `run` first builds every DataFrame from the CSVs, then runs its nine
+  * sinks concurrently, as Flyte runs independent tasks: each sink writes
+  * one table under `warehouseDir` and counts it. This is safe because no
+  * sink reads another sink's output path; every sink reads only the CSVs
+  * and the DataFrames derived from them. A future sink that reads a path
+  * another sink writes must be ordered after that sink explicitly.
   */
 object Pipeline {
 
@@ -33,16 +44,15 @@ object Pipeline {
 
   /** Runs the full pipeline; returns loaded row counts per table. */
   def run(spark: SparkSession, cfg: Config): Map[String, Long] = {
-    val out = scala.collection.mutable.LinkedHashMap[String, Long]()
-    def load(name: String, df: DataFrame, pk: Seq[String]): Unit = {
-      Writers.idempotentAppend(spark, df, s"${cfg.warehouseDir}/$name", pk)
-      out(name) = spark.read.parquet(s"${cfg.warehouseDir}/$name").count()
+    def path(name: String) = s"${cfg.warehouseDir}/$name"
+    def readBack(name: String) = name -> spark.read.parquet(path(name)).count()
+    def load(name: String, df: DataFrame, pk: Seq[String]): Seq[(String, Long)] = {
+      Writers.idempotentAppend(spark, df, path(name), pk)
+      Seq(readBack(name))
     }
 
     // -- dim_time: truncate-then-load (reference `workflow.py:47-106`)
     val dimTime = DimTime(spark, cfg.dimStart, cfg.dimEnd)
-    Writers.overwrite(dimTime, s"${cfg.warehouseDir}/dim_time")
-    out("dim_time") = spark.read.parquet(s"${cfg.warehouseDir}/dim_time").count()
 
     // -- extract + clean (chunked pandas reads collapse into partitioned scans)
     def csv(name: String, schema: org.apache.spark.sql.types.StructType) =
@@ -55,19 +65,15 @@ object Pipeline {
       .dropNullRows(csv("product_categories", Schemas.productCategories), Seq("category_id", "name"))
       .withColumn("parent_id", Cleaning.nullableCast(col("parent_id"), IntegerType))
       .orderBy(col("category_id"))
-    load("product_categories", categories, Seq("category_id"))
 
     val products = Cleaning.dropNullRows(
       csv("products", Schemas.products), Seq("product_id", "name", "price"))
-    load("products", products, Seq("product_id"))
 
     // orders: dropna + enum-domain validation with quarantine
     val rawOrders = Cleaning.dropNullRows(
       csv("orders", Schemas.orders), Seq("order_id", "customer_id", "order_date"))
     val (orders, rejectedOrders) =
       Cleaning.validateDomain(rawOrders, "status", Schemas.orderStatusDomain)
-    load("orders", orders, Seq("order_id"))
-    out("orders_quarantine") = rejectedOrders.count()
 
     // customers: dropna on identity cols (NOT the derived lifetime_value —
     // reference `workflow.py:134`), then LTV enrichment (J1+A1)
@@ -79,7 +85,6 @@ object Pipeline {
     val customers = customersRaw
       .join(ltv, Seq("customer_id"), "left")
       .na.fill(0.0, Seq("lifetime_value"))
-    load("customers", customers, Seq("customer_id"))
 
     // order_items: recompute total = price*quantity - discount, overriding
     // whatever the CSV carried (reference `workflow.py:122-126`)
@@ -87,25 +92,62 @@ object Pipeline {
       .withColumn("total",
         (dec2(col("price")) * col("quantity") - dec2(col("discount")))
           .cast(Schemas.orderItems("total").dataType))
-    load("order_items", items, Seq("order_item_id"))
 
-    // -- daily sales aggregation (A2+J2+J3, reference `workflow.py:152-184`),
-    //    date-partitioned so one day's slice can be recomputed in place
-    //    (the plpgsql incremental path, `database-schema.sql:202-231`)
-    val daily = dailySalesAggregation(items, orders, products)
-    Writers.overwritePartitions(daily, s"${cfg.warehouseDir}/daily_sales_aggregation", Seq("date"))
-    out("daily_sales_aggregation") =
-      spark.read.parquet(s"${cfg.warehouseDir}/daily_sales_aggregation").count()
+    // -- the sinks: each writes its own path and counts it
+    val sinks: Seq[() => Seq[(String, Long)]] = Seq(
+      () => {
+        Writers.overwrite(dimTime, path("dim_time"))
+        Seq(readBack("dim_time"))
+      },
+      () => load("product_categories", categories, Seq("category_id")),
+      () => load("products", products, Seq("product_id")),
+      () => load("orders", orders, Seq("order_id")) :+ ("orders_quarantine" -> rejectedOrders.count()),
+      () => load("customers", customers, Seq("customer_id")),
+      () => load("order_items", items, Seq("order_item_id")),
+      // -- daily sales aggregation (A2+J2+J3, reference `workflow.py:152-184`),
+      //    date-partitioned so one day's slice can be recomputed in place
+      //    (the plpgsql incremental path, `database-schema.sql:202-231`)
+      () => {
+        Writers.overwritePartitions(dailySalesAggregation(items, orders, products),
+          path("daily_sales_aggregation"), Seq("date"))
+        Seq(readBack("daily_sales_aggregation"))
+      },
+      // -- summary "matviews" (S7 refresh = recompute + overwrite)
+      () => {
+        val pss = productSalesSummary(items, orders, products, categories)
+        Writers.overwrite(pss, path("product_sales_summary"))
+        Seq("product_sales_summary" -> pss.count())
+      },
+      () => {
+        val cps = customerPurchaseSummary(customers, orders)
+        Writers.overwrite(cps, path("customer_purchase_summary"))
+        Seq("customer_purchase_summary" -> cps.count())
+      })
+    runAll(spark, sinks).flatten.toMap
+  }
 
-    // -- summary "matviews" (S7 refresh = recompute + overwrite)
-    val pss = productSalesSummary(items, orders, products, categories)
-    Writers.overwrite(pss, s"${cfg.warehouseDir}/product_sales_summary")
-    out("product_sales_summary") = pss.count()
-    val cps = customerPurchaseSummary(customers, orders)
-    Writers.overwrite(cps, s"${cfg.warehouseDir}/customer_purchase_summary")
-    out("customer_purchase_summary") = cps.count()
-
-    out.toMap
+  /** Runs `tasks` on a pool of at most `defaultParallelism` threads made
+    * for this call and returns their results in order once every task has
+    * ended.
+    * The threads are created by the calling thread, so they inherit its
+    * Spark local properties (job group, description, scheduler pool) and
+    * active session. If tasks fail, the first failing task's own exception
+    * is rethrown, with the later failures attached as suppressed. */
+  private def runAll[A](spark: SparkSession, tasks: Seq[() => A]): Seq[A] = {
+    val pool = Executors.newFixedThreadPool(
+      math.min(tasks.size, spark.sparkContext.defaultParallelism))
+    try {
+      val futures = tasks.map(t => pool.submit[A](() => t()))
+      val results = futures.map(f => Try(f.get()).recoverWith {
+        case e: ExecutionException => Failure(e.getCause)
+      })
+      results.collect { case Failure(e) => e } match {
+        case first +: rest =>
+          rest.foreach(first.addSuppressed)
+          throw first
+        case _ => results.map(_.get)
+      }
+    } finally pool.shutdown()
   }
 
   /** reference `workflow.py:152-184` on the e-commerce schema. */
