@@ -8,7 +8,9 @@ package graft.sources
   * ONE staging instead of re-deriving it, and a single shutdown hook
   * deletes everything: the previous per-call temp dirs leaked table-sized
   * parquet into /tmp on every run. Staging is INPUT-only; consumers that
-  * need mutable scratch (checkpoints, sinks) must not use this. */
+  * need mutable scratch (checkpoints, sinks) must not use this. Stream
+  * replay inputs are staged through [[graft.streaming.Replay.stage]], which
+  * owns their one-file-per-micro-batch layout. */
 object Staging {
 
   private val dirs =

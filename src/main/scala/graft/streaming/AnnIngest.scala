@@ -33,18 +33,10 @@ object AnnIngest {
     * them). New ids are multiples of 5, so vec_id/5 indexes them densely
     * and mod-3 stripes evenly. */
   private def stagedNewVecs(spark: SparkSession, dir: String, nBatches: Int): java.io.File =
-    Staging.dir(s"ann-ingest-$nBatches", dir) { d =>
+    Replay.stage(s"ann-ingest-$nBatches", dir) {
       val vecs = Tables.embeddings(spark, dir).filter(col("vec_id") % 5 === 0)
-      (0 until nBatches).foreach { i =>
-        val stage = new java.io.File(d, s"__stage$i")
-        vecs.filter(pmod((col("vec_id") / 5).cast("long"), lit(nBatches)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(d, f"batch-$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(1700000000000L + i * 600000L)
-        Staging.rmTree(stage)
-      }
+      (0 until nBatches).map(i =>
+        vecs.filter(pmod((col("vec_id") / 5).cast("long"), lit(nBatches)) === i))
     }
 
   /** Run the ingest stream to completion and return ONE materialized row:
@@ -82,9 +74,7 @@ object AnnIngest {
       // path; the ingest appends land in the same partition dirs).
       Staging.copyTree(idxAtRest, encDir)
 
-      val q = spark.readStream.schema(Schemas.embeddings)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged.toString)
+      Replay.drain(Replay.source(spark, Schemas.embeddings, staged)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           // the FAISS add path: assign + residual-encode under the frozen
@@ -92,9 +82,7 @@ object AnnIngest {
           Pq.rebuildEncoded(batch, idx0)
             .write.partitionBy("cell_id").mode("append").parquet(encDir.toString)
           ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        })
 
       val atRestRaw = spark.read.parquet(encDir.toString)
       val row =

@@ -31,18 +31,10 @@ object AnnServe {
     * parquet files by vec_id/5 mod nBatches (memoized per data dir;
     * Staging's shutdown hook deletes them). */
   private def stagedQueries(spark: SparkSession, dir: String, nBatches: Int): java.io.File =
-    Staging.dir(s"ann-serve-$nBatches", dir) { d =>
+    Replay.stage(s"ann-serve-$nBatches", dir) {
       val vecs = Tables.embeddings(spark, dir).filter(col("vec_id") % 5 === 1)
-      (0 until nBatches).foreach { i =>
-        val stage = new java.io.File(d, s"__stage$i")
-        vecs.filter(pmod((col("vec_id") / 5).cast("long"), lit(nBatches)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(d, f"batch-$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(1700000000000L + i * 600000L)
-        Staging.rmTree(stage)
-      }
+      (0 until nBatches).map(i =>
+        vecs.filter(pmod((col("vec_id") / 5).cast("long"), lit(nBatches)) === i))
     }
 
   /** Run the serving stream to completion and return ONE materialized row
@@ -61,18 +53,14 @@ object AnnServe {
     val resDir = new java.io.File(out, "results")
 
     try Session.withConf(spark, StreamConf.MonitorWidth) {
-      val q = spark.readStream.schema(Schemas.embeddings)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged.toString)
+      Replay.drain(Replay.source(spark, Schemas.embeddings, staged)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           Pq.ivfPqSearchBatch(idx, batch, k = 5, nProbe = 8)
             .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
             .write.mode("append").parquet(resDir.toString)
           ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        })
 
       val queries = Tables.embeddings(spark, dir).filter(col("vec_id") % 5 === 1)
       val streamedRaw = spark.read.parquet(resDir.toString)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongTyp
 import graft.Session
 import graft.operators.Clustering
 import graft.schema.Schemas
-import graft.sources.{Staging, Tables}
+import graft.sources.Tables
 
 /** STREAMING cluster-share monitor — the clustering family's monitor
   * form (the [[EmbedDriftStream]] convention): [[Clustering]] trains a
@@ -33,22 +33,11 @@ object ClusterShareStream {
   /** The streamed current-side corpus: odd vec_ids striped into
     * `nBatches` files (the even half is the frozen reference). */
   private def stagedCur(spark: SparkSession, dir: String, nBatches: Int): java.io.File =
-    Staging.dir(s"cluster-share-$nBatches", dir) { d =>
+    Replay.stage(s"cluster-share-$nBatches", dir) {
       val vecs = Tables.embeddings(spark, dir).filter(pmod(col("vec_id"), lit(2L)) === 1)
-      (0 until nBatches).foreach { i =>
-        val stage = new java.io.File(d, s"__stage$i")
-        vecs.filter(pmod((col("vec_id") / 2).cast("long"), lit(nBatches)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(d, f"batch-$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(1700000000000L + i * 600000L)
-        Staging.rmTree(stage)
-      }
+      (0 until nBatches).map(i =>
+        vecs.filter(pmod((col("vec_id") / 2).cast("long"), lit(nBatches)) === i))
     }
-
-  private def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   private def countsOf(rows: Array[Row], k: Int): Array[Long] = {
     val a = Array.fill(k)(0L)
@@ -93,13 +82,8 @@ object ClusterShareStream {
     def grouped(df: DataFrame): DataFrame =
       labeled(df).groupBy(col("label"), col("cl")).agg(count(lit(1)).as("n"))
 
-    Session.withConf(spark, StreamConf.MonitorWidth) {
-      val q = grouped(
-          spark.readStream.schema(Schemas.embeddings)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged.toString))
-        .writeStream.format("memory").queryName(name).outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
+    val sink = Session.withConf(spark, StreamConf.MonitorWidth) {
+      Replay.toMemory(grouped(Replay.source(spark, Schemas.embeddings, staged)), name, "complete")
     }
 
     // ref + parity in ONE assignment pass (the id parity rides the key)
@@ -110,7 +94,7 @@ object ClusterShareStream {
       .filter(_.getAs[Long]("par") == parity)
       .map(r => (r.getAs[Long]("label"), r.getAs[Int]("cl")) -> r.getAs[Long]("n"))
       .toMap
-    val cur = spark.table(name).collect() // ≤ |labels|·k rows — model-sized
+    val cur = sink.collect() // ≤ |labels|·k rows — model-sized
       .map(r => (r.getAs[Long]("label"), r.getAs[Int]("cl")) -> r.getAs[Long]("n"))
       .toMap
     val ref = halfCounts(0L)
@@ -159,16 +143,13 @@ object ClusterShareStream {
     val staged = stagedCur(spark, dir, nBatches)
     val name = "q_kmeans_share_stream_sink"
 
-    Session.withConf(spark, StreamConf.MonitorWidth) {
-      val q = Clustering.assign(
-          Clustering.cleanVectors(
-            spark.readStream.schema(Schemas.embeddings)
-              .option("maxFilesPerTrigger", "1")
-              .parquet(staged.toString), dim),
-          cents)
-        .groupBy(col("cl")).agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(name).outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
+    val sink = Session.withConf(spark, StreamConf.MonitorWidth) {
+      Replay.toMemory(
+        Clustering.assign(
+            Clustering.cleanVectors(Replay.source(spark, Schemas.embeddings, staged), dim),
+            cents)
+          .groupBy(col("cl")).agg(count(lit(1)).as("n")),
+        name, "complete")
     }
 
     // ref + parity batch counts in ONE assignment pass (the id parity
@@ -181,7 +162,7 @@ object ClusterShareStream {
     def halfCounts(parity: Long): Array[Row] =
       both.filter(_.getAs[Long]("par") == parity)
 
-    val curState = spark.table(name).collect() // ≤ k rows — model-sized
+    val curState = sink.collect() // ≤ k rows — model-sized
     val cur = countsOf(curState, k)
     val ref = countsOf(halfCounts(0L), k)
     val parityOk = !assertParity ||

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StructFiel
 import graft.Session
 import graft.operators.{Curation, Robust}
 import graft.schema.Schemas
-import graft.sources.{Staging, Tables}
+import graft.sources.Tables
 
 /** STREAMING conformal coverage monitor — the conformal gate's monitor
   * form (the [[ClusterShareStream]] convention): q̂ is FROZEN from the
@@ -32,23 +32,11 @@ object ConformalStream {
     * puts them OUTSIDE the calibration half, striped into `nBatches`
     * files by doc_id. */
   private def stagedTest(spark: SparkSession, dir: String, nBatches: Int): java.io.File =
-    Staging.dir(s"conformal-stream-$nBatches", dir) { d =>
+    Replay.stage(s"conformal-stream-$nBatches", dir) {
       val test = Tables.documents(spark, dir).filter(
         pmod(graft.functions.PortableHash.keyHash(col("doc_id")), lit(2L)) === 1L)
-      (0 until nBatches).foreach { i =>
-        val stage = new java.io.File(d, s"__stage$i")
-        test.filter(pmod(col("doc_id"), lit(nBatches.toLong)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(d, f"batch-$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(1700000000000L + i * 600000L)
-        Staging.rmTree(stage)
-      }
+      (0 until nBatches).map(i => test.filter(pmod(col("doc_id"), lit(nBatches.toLong)) === i))
     }
-
-  private def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** GROUPED monitor (the Mondrian companion, per the grouped-gate
     * convention): a SEPARATE frozen q̂ per source, so each source's
@@ -101,19 +89,16 @@ object ConformalStream {
 
     val staged = stagedTest(spark, dir, nBatches)
     val name = "q_conformal_stream_by_source_sink"
-    Session.withConf(spark, StreamConf.MonitorWidth) {
-      val q = coverFoldBy(scoredBy(
-          spark.readStream.schema(Schemas.documents)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged.toString)))
-        .writeStream.format("memory").queryName(name).outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
+    val sink = Session.withConf(spark, StreamConf.MonitorWidth) {
+      Replay.toMemory(
+        coverFoldBy(scoredBy(Replay.source(spark, Schemas.documents, staged))),
+        name, "complete")
     }
 
     def folds(rows: Array[Row]): Map[String, (Long, Long, Long)] =
       rows.map(r => r.getAs[String]("__g") ->
         ((r.getAs[Long]("n"), r.getAs[Long]("cov"), r.getAs[Long]("sz")))).toMap
-    val streamed = folds(spark.table(name).collect()) // ≤ |sources| rows
+    val streamed = folds(sink.collect()) // ≤ |sources| rows
     val parityOk = !assertParity ||
       streamed == folds(coverFoldBy(base.filter(!col("is_cal"))).collect())
     val out = qhat.toSeq.sortBy(_._1).map { case (g, (nCal, qh)) =>
@@ -173,13 +158,9 @@ object ConformalStream {
     val staged = stagedTest(spark, dir, nBatches)
     val name = "q_conformal_stream_sink"
     spark.sparkContext.setJobDescription(null)
-    Session.withConf(spark, StreamConf.MonitorWidth) {
-      val q = coverFold(scored(
-          spark.readStream.schema(Schemas.documents)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged.toString)))
-        .writeStream.format("memory").queryName(name).outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
+    val sink = Session.withConf(spark, StreamConf.MonitorWidth) {
+      Replay.toMemory(
+        coverFold(scored(Replay.source(spark, Schemas.documents, staged))), name, "complete")
     }
 
     def triple(rows: Array[Row]): (Long, Long, Long) = {
@@ -187,7 +168,7 @@ object ConformalStream {
       (r.getAs[Long]("n"), r.getAs[Long]("cov"), r.getAs[Long]("sz"))
     }
     spark.sparkContext.setJobDescription("conformal: sink read + parity fold")
-    val streamed = triple(spark.table(name).collect()) // 1 row — model-sized
+    val streamed = triple(sink.collect()) // 1 row — model-sized
     val parityOk = !assertParity ||
       streamed == triple(coverFold(base.filter(!col("is_cal"))).collect())
     spark.sparkContext.setJobDescription(null)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Session
@@ -40,47 +40,6 @@ import graft.sources.{Staging, Tables}
   */
 object DedupIngest {
 
-  /** Replay the documents table as `nBatches` doc_id-striped parquet files
-    * (memoized per (data dir, nBatches); Staging's shutdown hook deletes
-    * them). */
-  private def stagedDocs(spark: SparkSession, dir: String, nBatches: Int): java.io.File =
-    Staging.dir(s"docs-ingest-$nBatches", dir) { d =>
-      val docs = Tables.documents(spark, dir)
-      (0 until nBatches).foreach { i =>
-        val stage = new java.io.File(d, s"__stage$i")
-        docs.filter(pmod(col("doc_id"), lit(nBatches)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(d, f"batch-$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(1700000000000L + i * 600000L)
-        Staging.rmTree(stage)
-      }
-    }
-
-  private def listParquet(dir: java.io.File): Seq[java.io.File] = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".parquet")) Seq(f)
-      else Nil
-    if (dir.exists()) walk(dir) else Nil
-  }
-
-  /** Read the index state as a PINNED snapshot: exactly the leaf files
-    * listed (recursive, partition dirs kept via basePath). Pinning makes
-    * the probe independent of this trigger's own appends, so the pair
-    * sink and the two index appends can run CONCURRENTLY — the batch
-    * structurally cannot see itself in the index. */
-  private def snapshotRead(
-      spark: SparkSession, dir: java.io.File,
-      schema: org.apache.spark.sql.types.StructType,
-      files: Seq[java.io.File]): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else
-      spark.read.option("basePath", dir.toString).schema(schema)
-        .parquet(files.map(_.toString): _*)
-
   /** Run the ingest stream to completion and return ONE materialized row:
     * `(n_docs, pairs_nonempty, match_full)` where `match_full` is the
     * streamed-pairs ≡ whole-corpus-operator equality (both directions,
@@ -97,7 +56,11 @@ object DedupIngest {
       spark: SparkSession, dir: String,
       nBatches: Int = 2, assertFull: Boolean = true,
       layoutOverride: Option[(Int, Int)] = None): DataFrame = {
-    val staged = stagedDocs(spark, dir, nBatches)
+    // the documents replayed as `nBatches` doc_id-striped files
+    val staged = Replay.stage(s"docs-ingest-$nBatches", dir) {
+      val docs = Tables.documents(spark, dir)
+      (0 until nBatches).map(i => docs.filter(pmod(col("doc_id"), lit(nBatches)) === i))
+    }
     // the at-rest layout's partition count from the capacity rule: the
     // corpus size is known at stream bootstrap (it is the staged input),
     // and the count is reused by the final readout. At the verify SFs
@@ -129,18 +92,16 @@ object DedupIngest {
     val bandPartCols = if (nSub > 1) Seq("pbkt", "sbb") else Seq("pbkt")
 
     try Session.withConf(spark, StreamConf.MonitorWidth) {
-      val q = spark.readStream.schema(Schemas.documents)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged.toString)
+      Replay.drain(Replay.source(spark, Schemas.documents, staged)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val s = batch.sparkSession
           // pin the pre-batch index snapshot, then run the sinks
           // concurrently — the probe reads only the pinned files, so the
           // appends cannot race it into seeing this batch's own rows
-          val pinnedBands = listParquet(bandDir).toSet
-          val bandsSnap = snapshotRead(s, bandDir, bandSchema, pinnedBands.toSeq)
-          val shSnap = snapshotRead(s, shDir, shSchema, listParquet(shDir))
+          val pinnedBands = Replay.listParquet(bandDir).toSet
+          val bandsSnap = Replay.snapshotRead(s, bandDir, bandSchema, pinnedBands.toSeq)
+          val shSnap = Replay.snapshotRead(s, shDir, shSchema, Replay.listParquet(shDir))
           val newSh = Dedup.shingleSets(batch, n = 3)
           // ONE MinHash pass per trigger: the banding is checkpointed and
           // shared between the index append and the pair probe
@@ -190,15 +151,14 @@ object DedupIngest {
           Await.result(shF, Duration.Inf)
           Await.result(pairsF, Duration.Inf)
           ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        })
 
       val streamedSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_a", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("doc_b", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("jaccard", org.apache.spark.sql.types.DoubleType)))
-      val streamedRaw = snapshotRead(spark, pairDir, streamedSchema, listParquet(pairDir))
+      val streamedRaw =
+        Replay.snapshotRead(spark, pairDir, streamedSchema, Replay.listParquet(pairDir))
       val row =
         if (assertFull) {
           // grouped with multiplicity (verify path only — bench times the

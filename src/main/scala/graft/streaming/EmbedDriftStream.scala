@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{BooleanType, DecimalType, DoubleType, LongTyp
 
 import graft.Session
 import graft.schema.Schemas
-import graft.sources.{Staging, Tables}
+import graft.sources.Tables
 
 /** STREAMING embedding-drift gate — the monitor form of
   * [[graft.operators.EmbeddingDrift.frechetDrift]]: the batch gate
@@ -63,22 +63,11 @@ object EmbedDriftStream {
     * `nBatches` parquet files (memoized per data dir; the even half is
     * the frozen reference). */
   private def stagedCur(spark: SparkSession, dir: String, nBatches: Int): java.io.File =
-    Staging.dir(s"embed-drift-$nBatches", dir) { d =>
+    Replay.stage(s"embed-drift-$nBatches", dir) {
       val vecs = Tables.embeddings(spark, dir).filter(pmod(col("vec_id"), lit(2L)) === 1)
-      (0 until nBatches).foreach { i =>
-        val stage = new java.io.File(d, s"__stage$i")
-        vecs.filter(pmod((col("vec_id") / 2).cast("long"), lit(nBatches)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(d, f"batch-$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(1700000000000L + i * 600000L)
-        Staging.rmTree(stage)
-      }
+      (0 until nBatches).map(i =>
+        vecs.filter(pmod((col("vec_id") / 2).cast("long"), lit(nBatches)) === i))
     }
-
-  private def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** (mean, s²) per dimension from a collected (i, sx, sxx, n) summary —
     * the fixed double chain both the operator and the oracle run:
@@ -118,17 +107,13 @@ object EmbedDriftStream {
     val staged = stagedCur(spark, dir, nBatches)
     val name = "q_embed_drift_stream_sink"
 
-    Session.withConf(spark, StreamConf.MonitorWidth) {
-      val q = momentSums(
-          spark.readStream.schema(Schemas.embeddings)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged.toString),
-          col("embedding"), dim)
-        .writeStream.format("memory").queryName(name).outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
+    val sink = Session.withConf(spark, StreamConf.MonitorWidth) {
+      Replay.toMemory(
+        momentSums(Replay.source(spark, Schemas.embeddings, staged), col("embedding"), dim),
+        name, "complete")
     }
 
-    val curState = spark.table(name).collect() // ≤ d rows — model-sized
+    val curState = sink.collect() // ≤ d rows — model-sized
     val refRows = momentSums(
       Tables.embeddings(spark, dir).filter(pmod(col("vec_id"), lit(2L)) === 0),
       col("embedding"), dim).collect()

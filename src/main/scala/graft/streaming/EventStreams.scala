@@ -8,7 +8,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.functions.moneySum
 import graft.schema.Schemas
-import graft.sources.Writers
 
 /** Structured Streaming over the `events` table shape (SURVEY §2.9 — the
   * reference is batch-only; this is the §7.4 streaming extension).
@@ -25,36 +24,6 @@ object EventStreams {
     * KEY cardinality (tiny here), not scan parallelism. Baked into a
     * checkpoint at first start — a design-time choice per deployment. */
   private val StreamWidth = "spark.sql.shuffle.partitions" -> "4"
-
-  /** Streaming source over an events directory; schema must be explicit for
-    * `readStream`. */
-  def readEventStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(Schemas.events).parquet(dir)
-
-  /** Staged multi-batch replay inputs (session-window close row, late-audit
-    * schedule), memoized per (kind, data dir) via [[graft.sources.Staging]]:
-    * the replay layout is a pure function of the input table, so Bench's
-    * three passes reuse ONE staging instead of re-deriving it (an agg(max)
-    * job plus 2-4 parquet writes per call), and Staging's shutdown hook
-    * deletes it — the per-call temp dirs previously leaked events-sized
-    * parquet into /tmp on every run. Staging is INPUT-only; each streaming
-    * query still gets its own fresh checkpoint. */
-  private def stagedDir(kind: String, dir: String)(build: java.io.File => Unit): java.io.File =
-    graft.sources.Staging.dir(kind, dir)(build)
-
-  /** Write one replay batch as a single parquet file named and
-    * modification-stamped so the file source processes it at position
-    * `idx` (oldest-first by mod time; names agree so path order matches). */
-  private def writeReplayPart(streamDir: java.io.File, df: DataFrame, idx: Int): Unit = {
-    import java.nio.file.Files
-    val stage = new java.io.File(streamDir, s"__stage$idx")
-    df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-    val dest = new java.io.File(streamDir, f"batch-$idx%02d.parquet")
-    Files.move(part.toPath, dest.toPath)
-    dest.setLastModified(1700000000000L + idx * 600000L)
-    graft.sources.Staging.rmTree(stage)
-  }
 
   /** Streaming source over the driver testdata layout: the events parquet
     * sits next to nine other tables, so glob-filter it. The driver has
@@ -135,11 +104,10 @@ object EventStreams {
     // partition count is baked into the checkpoint at first start, so this
     // is a design-time choice, not a tunable.)
     graft.Session.withConf(spark, StreamWidth, StreamSplit, NoDataBatchOff) {
-      val q = transform(withWatermark(readTestdataEventStream(spark, dir)))
-        .writeStream.format("memory").queryName(name).outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
+      Replay.toMemory(
+        transform(withWatermark(readTestdataEventStream(spark, dir))),
+        name, "complete")
     }
-    spark.table(name)
   }
 
   def withWatermark(events: DataFrame, delay: String = "10 minutes"): DataFrame =
@@ -175,11 +143,8 @@ object EventStreams {
       val src = readTestdataEventStream(spark, dir)
       val clicks = withWatermark(src.filter(col("event_type") === "click"))
       val purchases = withWatermark(src.filter(col("event_type") === "purchase"))
-      val q = intervalJoin(clicks, purchases)
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      Replay.toMemory(intervalJoin(clicks, purchases), name, "append")
     }
-    spark.table(name)
   }
 
   /** Left-outer interval join: every click, with its in-window purchases or
@@ -227,11 +192,8 @@ object EventStreams {
       val wm = withWatermark(readTestdataEventStream(spark, dir))
       val clicks = wm.filter(col("event_type") === "click" && col("ts") < lit(cutoff))
       val purchases = wm.filter(col("event_type") === "purchase")
-      val q = intervalJoinLeft(clicks, purchases)
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      Replay.toMemory(intervalJoinLeft(clicks, purchases), name, "append")
     }
-    spark.table(name)
   }
 
   /** FULL OUTER stream-stream interval join — both sides' unmatched rows
@@ -264,11 +226,8 @@ object EventStreams {
       val wm = withWatermark(readTestdataEventStream(spark, dir))
       val clicks = wm.filter(col("event_type") === "click" && col("ts") < lit(cutoff))
       val purchases = wm.filter(col("event_type") === "purchase" && col("ts") < lit(cutoff))
-      val q = intervalJoinFull(clicks, purchases)
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      Replay.toMemory(intervalJoinFull(clicks, purchases), name, "append")
     }
-    spark.table(name)
   }
 
   /** Native `session_window` aggregation on the REAL stream path, run to
@@ -283,19 +242,15 @@ object EventStreams {
     graft.Session.withConf(spark, StreamWidth, StreamSplit) {
       val events = graft.sources.Tables.events(spark, dir)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      val streamDir = stagedDir("session-stream", dir) { sd =>
+      val streamDir = Replay.stage("session-stream", dir) {
         val maxTs = events.agg(max(col("ts"))).head.getTimestamp(0)
         val closeTs = new java.sql.Timestamp(maxTs.getTime + 2 * 3600 * 1000L)
         val closeRow = events.limit(1).select(
           lit(-1L).as("event_id"), lit(closeTs).as("ts"), lit(-1L).as("user_id"),
           lit("close").as("event_type"), lit(0.0).as("value"))
-        writeReplayPart(sd, events, 0)
-        writeReplayPart(sd, closeRow, 1)
+        Seq(events, closeRow)
       }
-      val src = spark.readStream
-        .schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString)
+      val src = Replay.source(spark, events.schema, streamDir)
       // NOTE: the synthetic user's filter must NOT sit inside the
       // streaming query — user_id is a grouping column, so Catalyst
       // pushes the predicate below the aggregation INTO THE SCAN, and the
@@ -304,11 +259,8 @@ object EventStreams {
       // sink output instead; the synthetic session also never closes
       // (its end is past the final watermark), so this is belt and
       // braces.
-      val agg = sessionCounts(withWatermark(src), "30 minutes")
-      val q = agg.writeStream.format("memory").queryName(name).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).filter(col("user_id") =!= -1L)
+      Replay.toMemory(sessionCounts(withWatermark(src), "30 minutes"), name, "append")
+    }.filter(col("user_id") =!= -1L)
   }
 
   /** Stream-static enrichment: a streaming source broadcast-joined to a
@@ -323,16 +275,15 @@ object EventStreams {
         ("view", "engagement"), ("click", "engagement"),
         ("purchase", "conversion"), ("signup", "conversion"),
         ("error", "ops")).toDF("event_type", "category")
-      val q = withWatermark(readTestdataEventStream(spark, dir))
-        .join(broadcast(dim), Seq("event_type"))
-        .groupBy(window(col("ts"), "1 day"), col("category"))
-        .agg(count(lit(1)).as("n_events"), moneySum(col("value")).as("value_sum"))
-        .select(col("window.start").as("bucket"), col("category"),
-          col("n_events"), col("value_sum"))
-        .writeStream.format("memory").queryName(name).outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
+      Replay.toMemory(
+        withWatermark(readTestdataEventStream(spark, dir))
+          .join(broadcast(dim), Seq("event_type"))
+          .groupBy(window(col("ts"), "1 day"), col("category"))
+          .agg(count(lit(1)).as("n_events"), moneySum(col("value")).as("value_sum"))
+          .select(col("window.start").as("bucket"), col("category"),
+            col("n_events"), col("value_sum")),
+        name, "complete")
     }
-    spark.table(name)
   }
 
   /** The custom-state path ([[sessionizeStateful]]) run end-to-end as a
@@ -343,12 +294,10 @@ object EventStreams {
     * (`q_events_session`) and watermark-advance-tested in ScalaTest. */
   def runStreamSessionize(spark: SparkSession, dir: String, name: String): DataFrame = {
     graft.Session.withConf(spark, StreamWidth, StreamSplit) {
-      val q = sessionizeStateful(spark, withWatermark(readTestdataEventStream(spark, dir)))
-        .toDF()
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      Replay.toMemory(
+        sessionizeStateful(spark, withWatermark(readTestdataEventStream(spark, dir))),
+        name, "append")
     }
-    spark.table(name)
   }
 
   /** Streaming exact dedup with bounded state:
@@ -364,13 +313,12 @@ object EventStreams {
       // path would pay separate file-listing/offset admin per micro-batch.
       val src = readTestdataEventStream(spark, dir)
       val doubled = src.unionByName(src)
-      val q = withWatermark(doubled)
-        .dropDuplicatesWithinWatermark("event_id")
-        .select(col("event_id"), col("event_type"), col("value"))
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      Replay.toMemory(
+        withWatermark(doubled)
+          .dropDuplicatesWithinWatermark("event_id")
+          .select(col("event_id"), col("event_type"), col("value")),
+        name, "append")
     }
-    spark.table(name)
   }
 
   /** Tumbling-window aggregation per event type (the streaming twin of the
@@ -650,15 +598,14 @@ object EventStreams {
     graft.Session.withConf(spark, StreamWidth, StreamSplit, NoDataBatchOff, RocksDbState) {
       val src = readTestdataEventStream(spark, dir)
         .filter(col("event_type") === "purchase").as[Event]
-      val q = src.groupByKey(_.user_id)
-        .transformWithState(
-          new RecentPurchasesProcessor(),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Append())
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      Replay.toMemory(
+        src.groupByKey(_.user_id)
+          .transformWithState(
+            new RecentPurchasesProcessor(),
+            org.apache.spark.sql.streaming.TimeMode.None(),
+            OutputMode.Append()),
+        name, "append")
     }
-    spark.table(name)
   }
 
   /** Run [[TypeProfileProcessor]] over the full event stream. */
@@ -667,15 +614,14 @@ object EventStreams {
     // TimeMode.None: no timers, so the no-data batch can never emit — skip
     graft.Session.withConf(spark, StreamWidth, StreamSplit, NoDataBatchOff, RocksDbState) {
       val src = readTestdataEventStream(spark, dir).as[Event]
-      val q = src.groupByKey(_.user_id)
-        .transformWithState(
-          new TypeProfileProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Append())
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      Replay.toMemory(
+        src.groupByKey(_.user_id)
+          .transformWithState(
+            new TypeProfileProcessor,
+            org.apache.spark.sql.streaming.TimeMode.None(),
+            OutputMode.Append()),
+        name, "append")
     }
-    spark.table(name)
   }
 
   /** Run [[RunningTotalsProcessor]] over the purchase stream. RocksDB is
@@ -687,15 +633,14 @@ object EventStreams {
     graft.Session.withConf(spark, StreamWidth, StreamSplit, NoDataBatchOff, RocksDbState) {
       val src = readTestdataEventStream(spark, dir)
         .filter(col("event_type") === "purchase").as[Event]
-      val q = src.groupByKey(_.user_id)
-        .transformWithState(
-          new RunningTotalsProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Append())
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      Replay.toMemory(
+        src.groupByKey(_.user_id)
+          .transformWithState(
+            new RunningTotalsProcessor,
+            org.apache.spark.sql.streaming.TimeMode.None(),
+            OutputMode.Append()),
+        name, "append")
     }
-    spark.table(name)
   }
 
   // Session arithmetic runs at MICROsecond resolution — `Timestamp.getTime`
@@ -785,7 +730,7 @@ object EventStreams {
     graft.Session.withConf(spark, StreamWidth, StreamSplit) {
       val events = graft.sources.Tables.events(spark, dir)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      val streamDir = stagedDir("late-audit", dir) { sd =>
+      val streamDir = Replay.stage("late-audit", dir) {
         val late = pmod(col("user_id"), lit(17L)) === 3
         // the split row and the close offset both anchor on the ON-TIME max
         // (the late slice may hold the global max; schedule math must not)
@@ -813,35 +758,20 @@ object EventStreams {
           lit(-1L).as("event_id"), lit(closeTs).as("ts"), lit(0L).as("user_id"),
           lit("close").as("event_type"), lit(0.0).as("value"))
         val onTime = events.filter(!late)
-        writeReplayPart(sd, onTime.filter(col("ts") < lit(maxTs)), 0)
-        writeReplayPart(sd, onTime.filter(col("ts") === lit(maxTs)), 1)
-        writeReplayPart(sd, events.filter(late), 2)
-        writeReplayPart(sd, closeRow, 3)
+        Seq(
+          onTime.filter(col("ts") < lit(maxTs)),
+          onTime.filter(col("ts") === lit(maxTs)),
+          events.filter(late),
+          closeRow)
       }
-      val src = spark.readStream
-        .schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString)
-      val agg = src.withWatermark("ts", "10 minutes")
+      val agg = Replay.source(spark, events.schema, streamDir)
+        .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour"))
         .agg(count(lit(1)).as("n_events"))
         .select(col("window.start").as("w_start"), col("n_events"))
-      val q = agg.writeStream.format("memory").queryName(name).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      Replay.toMemory(agg, name, "append")
     }
-    spark.table(name)
   }
-
-  /** Incremental maintenance sink (the streaming analog of the reference's
-    * per-date recompute, `database-schema.sql:202-231`): each micro-batch
-    * recomputes only the dates it touches via dynamic partition overwrite. */
-  def dailyAggToPartitionedSink(stream: DataFrame, path: String) =
-    stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val daily = batch
-        .groupBy(to_date(col("ts")).as("event_date"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"), moneySum(col("value")).as("value_sum"))
-      Writers.overwritePartitions(daily, path, Seq("event_date"))
-    }
 
   /** The reference's daily-aggregation maintenance against its ACTUAL sink
     * type — an RDBMS (`database-schema.sql:202-231` is plpgsql), made

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Session
-import graft.sources.{Staging, Tables}
+import graft.sources.Tables
 
 /** Continuous k-anonymity monitor — the privacy family's streaming face
   * (the [[ClusterShareStream]] count discipline): customer records
@@ -35,18 +35,9 @@ object KAnonStream {
   }
 
   private def stagedCustomers(spark: SparkSession, dir: String, nBatches: Int): java.io.File =
-    Staging.dir(s"kanon-$nBatches", dir) { d =>
+    Replay.stage(s"kanon-$nBatches", dir) {
       val rows = Tables.customer(spark, dir)
-      (0 until nBatches).foreach { i =>
-        val stage = new java.io.File(d, s"__stage$i")
-        rows.filter(pmod(col("c_custkey"), lit(nBatches.toLong)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(d, f"batch-$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(1700000000000L + i * 600000L)
-        Staging.rmTree(stage)
-      }
+      (0 until nBatches).map(i => rows.filter(pmod(col("c_custkey"), lit(nBatches.toLong)) === i))
     }
 
   /** CONTINUOUS t-closeness monitor — the streaming face of
@@ -67,23 +58,19 @@ object KAnonStream {
     val name = "q_t_closeness_stream_sink"
     val bucket = floor(col("c_acctbal") / 1000.0).cast("long")
 
-    Session.withConf(spark, StreamConf.MonitorWidth) {
-      val q = spark.readStream.schema(customerStreamSchema(spark, dir))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged.toString)
-        .groupBy(col("c_nationkey").as("nation"),
-          col("c_mktsegment").as("segment"), bucket.as("sval"))
-        .agg(count(lit(1)).as("cnt"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
+    // streamed state: ≤ |nations|·|segments|·|buckets| integer rows
+    val cur = Session.withConf(spark, StreamConf.MonitorWidth) {
+      Replay.toMemory(
+        Replay.source(spark, customerStreamSchema(spark, dir), staged)
+          .groupBy(col("c_nationkey").as("nation"),
+            col("c_mktsegment").as("segment"), bucket.as("sval"))
+          .agg(count(lit(1)).as("cnt")),
+        name, "complete")
     }
 
     def toMap(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
       (r.getAs[Number]("nation").longValue(), r.getAs[String]("segment"),
         r.getAs[Long]("sval")) -> r.getAs[Long]("cnt")).toMap
-    // streamed state: ≤ |nations|·|segments|·|buckets| integer rows
-    val cur = spark.table(name)
     val parityOk = !assertParity || {
       val batch = Tables.customer(spark, dir)
         .groupBy(col("c_nationkey").as("nation"),
@@ -106,19 +93,16 @@ object KAnonStream {
     val staged = stagedCustomers(spark, dir, nBatches)
     val name = "q_k_anonymity_stream_sink"
 
-    Session.withConf(spark, StreamConf.MonitorWidth) {
-      val q = spark.readStream.schema(customerStreamSchema(spark, dir))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged.toString)
-        .groupBy(col("c_nationkey"), col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
+    val sink = Session.withConf(spark, StreamConf.MonitorWidth) {
+      Replay.toMemory(
+        Replay.source(spark, customerStreamSchema(spark, dir), staged)
+          .groupBy(col("c_nationkey"), col("c_mktsegment"))
+          .agg(count(lit(1)).as("n")),
+        name, "complete")
     }
 
     // streamed state: ≤ |nations|·|segments| integer rows — model-sized
-    val cur = spark.table(name).collect()
+    val cur = sink.collect()
       .map(r => (r.getAs[Number]("c_nationkey").longValue(), r.getAs[String]("c_mktsegment"))
         -> r.getAs[Long]("n")).toMap
     val parityOk = !assertParity || {
@@ -173,19 +157,14 @@ object KAnonStream {
       spark: SparkSession, dir: String, nBatches: Int, sinkName: String,
       assertParity: Boolean): (DataFrame, Boolean) = {
     val staged = stagedCustomers(spark, dir, nBatches)
-    Session.withConf(spark, StreamConf.MonitorWidth) {
-      val q = spark.readStream.schema(customerStreamSchema(spark, dir))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged.toString)
-        .groupBy(col("c_nationkey").as("nation"), col("c_mktsegment").as("segment"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-
     // streamed state: the fixed QI grid — model-sized
-    val cur = spark.table(sinkName)
+    val cur = Session.withConf(spark, StreamConf.MonitorWidth) {
+      Replay.toMemory(
+        Replay.source(spark, customerStreamSchema(spark, dir), staged)
+          .groupBy(col("c_nationkey").as("nation"), col("c_mktsegment").as("segment"))
+          .agg(count(lit(1)).as("n")),
+        sinkName, "complete")
+    }
     val parityOk = !assertParity || {
       def toMap(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
         (r.getAs[Number]("nation").longValue(), r.getAs[String]("segment"))

@@ -35,29 +35,24 @@ object MixtureStream {
     val staged = PreferenceIngest.stagedDocs(spark, dir, nBatches)
     val name = "q_mixture_reweight_stream_sink"
 
-    Session.withConf(spark, StreamConf.MonitorWidth) {
-      val q = spark.readStream.schema(Schemas.documents)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged.toString)
-        .filter(col("source").isNotNull)
-        // the SAME per-row quality expression tree as the batch scorer
-        .select(col("source"),
-          round(lit(1.0) / (lit(1.0) + exp(-Curation.qualityLogit(col("text")))), 6)
-            .cast(DecimalType(8, 6)).as("q6"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n"), sum(col("q6")).as("qsum"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
+    val sink = Session.withConf(spark, StreamConf.MonitorWidth) {
+      Replay.toMemory(
+        Replay.source(spark, Schemas.documents, staged)
+          .filter(col("source").isNotNull)
+          // the SAME per-row quality expression tree as the batch scorer
+          .select(col("source"),
+            round(lit(1.0) / (lit(1.0) + exp(-Curation.qualityLogit(col("text")))), 6)
+              .cast(DecimalType(8, 6)).as("q6"))
+          .groupBy(col("source"))
+          .agg(count(lit(1)).as("n"), sum(col("q6")).as("qsum")),
+        name, "complete")
     }
 
-    def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     def toMap(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
       r.getAs[String]("source") ->
         (r.getAs[Long]("n"), r.getAs[java.math.BigDecimal]("qsum"))).toMap
     // streamed state: the fixed |Sources| vocabulary — model-sized
-    val cur = toMap(spark.table(name).collect())
+    val cur = toMap(sink.collect())
     val parityOk = !assertParity || {
       val batch = toMap(Tables.documents(spark, dir)
         .filter(col("source").isNotNull)
@@ -74,7 +69,7 @@ object MixtureStream {
     // avg = round6(decimal-sum as double / n): the batch aggregation's
     // exact spelling, folded from the collected state
     val perSrc = cur.toIndexedSeq.sortBy(_._1).map { case (s, (n, q)) =>
-      (s, n, r6(q.doubleValue() / n))
+      (s, n, round6(q.doubleValue() / n))
     }
     Curation.egReweightTable(spark, perSrc, eta, iters, Curation.Sources)
       .withColumn("parity_ok", lit(parityOk))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -40,40 +40,14 @@ object PreferenceIngest {
     * files (memoized per (data dir, nBatches)); shared with
     * [[MixtureStream]]. */
   private[streaming] def stagedDocs(spark: SparkSession, dir: String, nBatches: Int): java.io.File =
-    Staging.dir(s"docs-preference-$nBatches", dir) { d =>
+    Replay.stage(s"docs-preference-$nBatches", dir) {
       val docs = Tables.documents(spark, dir)
-      (0 until nBatches).foreach { i =>
-        val stage = new java.io.File(d, s"__stage$i")
-        docs.filter(pmod(col("doc_id"), lit(nBatches.toLong)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(d, f"batch-$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(1700000000000L + i * 600000L)
-        Staging.rmTree(stage)
-      }
+      (0 until nBatches).map(i => docs.filter(pmod(col("doc_id"), lit(nBatches.toLong)) === i))
     }
-
-  private def listParquet(dir: java.io.File): Seq[java.io.File] = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".parquet")) Seq(f)
-      else Nil
-    if (dir.exists()) walk(dir) else Nil
-  }
 
   private[graft] def blockFiles(
       storeDir: java.io.File, blocks: Seq[Long]): Seq[java.io.File] =
-    blocks.flatMap(b => listParquet(new java.io.File(storeDir, s"blk=$b")))
-
-  private def snapshotRead(
-      spark: SparkSession, dir: java.io.File,
-      schema: StructType, files: Seq[java.io.File]): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else
-      spark.read.option("basePath", dir.toString).schema(schema)
-        .parquet(files.map(_.toString): _*)
+    blocks.flatMap(b => Replay.listParquet(new java.io.File(storeDir, s"blk=$b")))
 
   private[streaming] val StoreSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("lang", StringType),
@@ -102,7 +76,7 @@ object PreferenceIngest {
     // the batch's block set: bounded (≤ Blocks ids) — plans the probe
     val blocks = asg.select(col("blk")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val store = snapshotRead(s, storeDir, StoreSchema,
+    val store = Replay.snapshotRead(s, storeDir, StoreSchema,
       blockFiles(storeDir, blocks))
     def winExpr(ca: org.apache.spark.sql.Column, cb: org.apache.spark.sql.Column) =
       sum(when(ca > cb, 1L).otherwise(0L)).as("w")
@@ -173,9 +147,7 @@ object PreferenceIngest {
     val pairDir = new java.io.File(out, "pairs")
     try {
       Session.withConf(spark, StreamConf.MonitorWidth) {
-        val q = spark.readStream.schema(Schemas.documents)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(staged.toString)
+        Replay.drain(Replay.source(spark, Schemas.documents, staged)
           .writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             val s = batch.sparkSession
@@ -192,7 +164,7 @@ object PreferenceIngest {
               .localCheckpoint(true)
             val blocks = asg.select(col("blk")).distinct()
               .collect().map(_.getLong(0)).toSeq
-            val store = snapshotRead(s, storeDir, DpoStoreSchema,
+            val store = Replay.snapshotRead(s, storeDir, DpoStoreSchema,
               blockFiles(storeDir, blocks))
             def orient(aId: org.apache.spark.sql.Column, aUq: org.apache.spark.sql.Column,
                 bId: org.apache.spark.sql.Column, bUq: org.apache.spark.sql.Column) = Seq(
@@ -232,12 +204,10 @@ object PreferenceIngest {
             Await.result(pairsF, Duration.Inf)
             Await.result(storeF, Duration.Inf)
             ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+          })
       }
 
-      val pairsAll = snapshotRead(spark, pairDir, DpoPairSchema, listParquet(pairDir))
+      val pairsAll = Replay.snapshotRead(spark, pairDir, DpoPairSchema, Replay.listParquet(pairDir))
         .localCheckpoint(false) // capped readout + parity both consume it
       val parity =
         if (assertParity) {
@@ -291,9 +261,7 @@ object PreferenceIngest {
     val incDir = new java.io.File(out, "inc")
     try {
     Session.withConf(spark, StreamConf.MonitorWidth) {
-      val q = spark.readStream.schema(Schemas.documents)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged.toString)
+      Replay.drain(Replay.source(spark, Schemas.documents, staged)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val s = batch.sparkSession
@@ -309,14 +277,12 @@ object PreferenceIngest {
           Await.result(incF, Duration.Inf)
           Await.result(storeF, Duration.Inf)
           ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        })
     }
 
     // readout: sum the increments (≤ nBatches·|Items|²/2 integer rows —
     // model-sized), fit with the SAME unrolled MM arithmetic
-    val summed = snapshotRead(spark, incDir, IncSchema, listParquet(incDir))
+    val summed = Replay.snapshotRead(spark, incDir, IncSchema, Replay.listParquet(incDir))
       .groupBy(col("i"), col("j"))
       .agg(sum(col("n")).as("n"), sum(col("w")).as("w"))
       .collect()

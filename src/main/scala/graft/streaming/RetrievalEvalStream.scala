@@ -33,18 +33,10 @@ object RetrievalEvalStream {
   /** The monitored traffic sample: vec_id ≡ 1 (mod 5), striped into
     * `nBatches` parquet files (memoized per data dir). */
   private def stagedQueries(spark: SparkSession, dir: String, nBatches: Int): java.io.File =
-    Staging.dir(s"retrieval-eval-$nBatches", dir) { d =>
+    Replay.stage(s"retrieval-eval-$nBatches", dir) {
       val vecs = Tables.embeddings(spark, dir).filter(col("vec_id") % 5 === 1)
-      (0 until nBatches).foreach { i =>
-        val stage = new java.io.File(d, s"__stage$i")
-        vecs.filter(pmod((col("vec_id") / 5).cast("long"), lit(nBatches)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(d, f"batch-$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(1700000000000L + i * 600000L)
-        Staging.rmTree(stage)
-      }
+      (0 until nBatches).map(i =>
+        vecs.filter(pmod((col("vec_id") / 5).cast("long"), lit(nBatches)) === i))
     }
 
   /** Per-query IR metrics of one query set under a frozen index — shared
@@ -85,17 +77,13 @@ object RetrievalEvalStream {
     val metDir = new java.io.File(out, "metrics")
     try {
     Session.withConf(spark, StreamConf.MonitorWidth) {
-      val q = spark.readStream.schema(Schemas.embeddings)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged.toString)
+      Replay.drain(Replay.source(spark, Schemas.embeddings, staged)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           evalQueries(batch.sparkSession, batch, corpus, index, k, nProbe)
             .write.mode("append").parquet(metDir.toString)
           ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        })
     }
 
     val streamedRaw = spark.read.parquet(metDir.toString)

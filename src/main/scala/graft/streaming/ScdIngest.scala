@@ -57,7 +57,7 @@ object ScdIngest {
     * batch, and a key's later dates land in later batches — the CDC
     * ordering contract the incremental merge needs. */
   private def stagedSnapshots(spark: SparkSession, dir: String, nBatches: Int): java.io.File =
-    Staging.dir(s"scd-ingest-$nBatches", dir) { d =>
+    Replay.stage(s"scd-ingest-$nBatches", dir) {
       val snap = snapshots(spark, dir)
       // date → stripe via rank over the DISTINCT date domain (bounded,
       // calendar-sized — the single-partition window is over dates, never
@@ -71,16 +71,7 @@ object ScdIngest {
         Seq("o_orderdate"))
         .withColumn("__b", least(
           floor((col("__r") - 1) * nBatches / nDates), lit(nBatches - 1)))
-      (0 until nBatches).foreach { i =>
-        val stage = new java.io.File(d, s"__stage$i")
-        val slice = striped.filter(col("__b") === i).drop("__r", "__b")
-        slice.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(d, f"batch-$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(1700000000000L + i * 600000L)
-        Staging.rmTree(stage)
-      }
+      (0 until nBatches).map(i => striped.filter(col("__b") === i).drop("__r", "__b"))
     }
 
   private def readOrEmpty(
@@ -121,9 +112,7 @@ object ScdIngest {
     def dimDir(v: Int) = new java.io.File(out, s"dim-v$v")
 
     try Session.withConf(spark, StreamConf.MonitorWidth) {
-      val q = spark.readStream.schema(snapSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged.toString)
+      Replay.drain(Replay.source(spark, snapSchema, staged)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val s = batch.sparkSession
@@ -149,9 +138,7 @@ object ScdIngest {
             .write.mode("overwrite").parquet(dimDir(v + 1).toString)
           version.incrementAndGet()
           ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        })
 
       val streamedRaw = readOrEmpty(spark, dimDir(version.get()), dimSchema)
       val row =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Session
@@ -46,27 +46,10 @@ object SemDedupIngest {
   /** Replay the embeddings table as `nBatches` vec_id-striped parquet
     * files (memoized per (data dir, nBatches)). */
   private def stagedVecs(spark: SparkSession, dir: String, nBatches: Int): java.io.File =
-    Staging.dir(s"vecs-semdedup-$nBatches", dir) { d =>
+    Replay.stage(s"vecs-semdedup-$nBatches", dir) {
       val vecs = Tables.embeddings(spark, dir)
-      (0 until nBatches).foreach { i =>
-        val stage = new java.io.File(d, s"__stage$i")
-        vecs.filter(pmod(col("vec_id"), lit(nBatches)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(d, f"batch-$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(1700000000000L + i * 600000L)
-        Staging.rmTree(stage)
-      }
+      (0 until nBatches).map(i => vecs.filter(pmod(col("vec_id"), lit(nBatches)) === i))
     }
-
-  private def listParquet(dir: java.io.File): Seq[java.io.File] = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".parquet")) Seq(f)
-      else Nil
-    if (dir.exists()) walk(dir) else Nil
-  }
 
   /** The probe's file list: ONLY the given cells' partition directories
     * of the at-rest index — the structural guarantee that a batch's
@@ -74,20 +57,7 @@ object SemDedupIngest {
     * this on `inputFiles`). */
   private[graft] def cellFiles(
       indexDir: java.io.File, cells: Seq[Int]): Seq[java.io.File] =
-    cells.flatMap(c => listParquet(new java.io.File(indexDir, s"cl=$c")))
-
-  /** Pinned-snapshot read (the [[DedupIngest]] convention): exactly the
-    * leaf files listed, partition dirs recovered via basePath — the
-    * probe is independent of this trigger's own append. */
-  private[graft] def snapshotRead(
-      spark: SparkSession, dir: java.io.File,
-      schema: org.apache.spark.sql.types.StructType,
-      files: Seq[java.io.File]): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else
-      spark.read.option("basePath", dir.toString).schema(schema)
-        .parquet(files.map(_.toString): _*)
+    cells.flatMap(c => Replay.listParquet(new java.io.File(indexDir, s"cl=$c")))
 
   /** Raw cosine between a batch vector and an index vector — the SAME
     * double arithmetic as the in-cell generator (sequential double dot
@@ -123,7 +93,7 @@ object SemDedupIngest {
     // checkpointed assignment — plans the cell-pruned probe
     val cells = asg.select(col("cl")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val idxSnap = snapshotRead(s, indexDir, IdxSchema,
+    val idxSnap = Replay.snapshotRead(s, indexDir, IdxSchema,
       cellFiles(indexDir, cells))
     // cross-batch pairs: batch ⋈ at-rest, equi-join on the cell, loose
     // raw cutoff then the exact rounded threshold (the established
@@ -176,9 +146,7 @@ object SemDedupIngest {
       StructField("vec_b", LongType), StructField("cosine", DoubleType)))
 
     try Session.withConf(spark, StreamConf.MonitorWidth) {
-      val q = spark.readStream.schema(Schemas.embeddings)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged.toString)
+      Replay.drain(Replay.source(spark, Schemas.embeddings, staged)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val s = batch.sparkSession
@@ -195,15 +163,13 @@ object SemDedupIngest {
           Await.result(pairsF, Duration.Inf)
           Await.result(idxF, Duration.Inf)
           ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        })
 
       // readout: keeper rule over the accumulated pair table, sizes from
       // the at-rest index (= every arrived valid vector)
-      val pairsAll = snapshotRead(spark, pairDir, pairSchema, listParquet(pairDir))
+      val pairsAll = Replay.snapshotRead(spark, pairDir, pairSchema, Replay.listParquet(pairDir))
         .localCheckpoint(false) // rollup + parity both consume it
-      val idxAll = snapshotRead(spark, indexDir, IdxSchema, listParquet(indexDir))
+      val idxAll = Replay.snapshotRead(spark, indexDir, IdxSchema, Replay.listParquet(indexDir))
       val sizes = idxAll.groupBy(col("cl")).agg(count(lit(1)).as("n"))
       val pruned = Clustering.victimsFromPairs(pairsAll).groupBy(col("cl"))
         .agg(countDistinct(col("victim")).as("np"))
@@ -279,9 +245,7 @@ object SemDedupIngest {
       when(h < 90L, "train").when(h < 95L, "val").otherwise("test")
     }
     try Session.withConf(spark, StreamConf.MonitorWidth) {
-      val q = spark.readStream.schema(Schemas.embeddings)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged.toString)
+      Replay.drain(Replay.source(spark, Schemas.embeddings, staged)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val s = batch.sparkSession
@@ -304,11 +268,9 @@ object SemDedupIngest {
           Await.result(gridF, Duration.Inf)
           Await.result(idxF, Duration.Inf)
           ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        })
 
-      val grid = snapshotRead(spark, gridDir, gridSchema, listParquet(gridDir))
+      val grid = Replay.snapshotRead(spark, gridDir, gridSchema, Replay.listParquet(gridDir))
         .groupBy(col("split_a"), col("split_b"))
         .agg(sum(col("n_pairs")).as("n_pairs"))
         .localCheckpoint(false) // total + parity + output all consume it

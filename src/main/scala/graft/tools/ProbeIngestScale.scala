@@ -106,7 +106,7 @@ object ProbeIngestScale {
         .localCheckpoint(false)
       val cells = asg.select(col("cl")).distinct().collect().map(_.getInt(0)).toSeq
       val files = graft.streaming.SemDedupIngest.cellFiles(indexDir, cells)
-      val idxSnap = graft.streaming.SemDedupIngest
+      val idxSnap = graft.streaming.Replay
         .snapshotRead(spark, indexDir, idxSchema, files)
         .localCheckpoint(false) // rows-probed count + the probe join
       val probedRows = idxSnap.count()

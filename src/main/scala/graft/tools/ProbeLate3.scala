@@ -1,9 +1,9 @@
 package graft.tools
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.streaming.Replay
 
 /** Dev probe: does a 3-batch late-audit schedule ([on-time][late][close])
   * produce the same append-mode output as the current 4-batch one
@@ -34,41 +34,22 @@ object ProbeLate3 {
       lit("close").as("event_type"), lit(0.0).as("value"))
     val onTime = events.filter(!late)
 
-    def writePart(dir: java.io.File, df: DataFrame, idx: Int): Unit = {
-      val stage = new java.io.File(dir, s"__stage$idx")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-      val dest = new java.io.File(dir, f"batch-$idx%02d.parquet")
-      Files.move(part.toPath, dest.toPath)
-      dest.setLastModified(1700000000000L + idx * 600000L)
-      graft.sources.Staging.rmTree(stage)
-    }
-
-    def run(name: String)(stageParts: java.io.File => Unit): DataFrame = {
-      val dir = Files.createTempDirectory(s"probe-$name").toFile
-      stageParts(dir)
-      val src = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      val agg = src.withWatermark("ts", "10 minutes")
+    def run(name: String)(parts: => Seq[DataFrame]): DataFrame = {
+      val staged = Replay.stage(s"probe-late-$name", d)(parts)
+      val agg = Replay.source(spark, events.schema, staged)
+        .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour"))
         .agg(count(lit(1)).as("n_events"))
         .select(col("window.start").as("w_start"), col("n_events"))
-      val q = agg.writeStream.format("memory").queryName(name).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      spark.table(name)
+      Replay.toMemory(agg, name, "append")
     }
 
-    val four = run("four") { dir =>
-      writePart(dir, onTime.filter(col("ts") < lit(maxTs)), 0)
-      writePart(dir, onTime.filter(col("ts") === lit(maxTs)), 1)
-      writePart(dir, events.filter(late), 2)
-      writePart(dir, closeRow, 3)
-    }
-    val three = run("three") { dir =>
-      writePart(dir, onTime, 0)
-      writePart(dir, events.filter(late), 1)
-      writePart(dir, closeRow, 2)
-    }
+    val four = run("four")(Seq(
+      onTime.filter(col("ts") < lit(maxTs)),
+      onTime.filter(col("ts") === lit(maxTs)),
+      events.filter(late),
+      closeRow))
+    val three = run("three")(Seq(onTime, events.filter(late), closeRow))
     // oracle rule: late rows count ONLY toward hour windows whose end is
     // strictly after onTimeMax − 10 min; every window except close's emits
     val delayMs = 10 * 60 * 1000L

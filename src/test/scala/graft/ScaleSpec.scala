@@ -507,7 +507,7 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
       val files = graft.streaming.SemDedupIngest.cellFiles(tmp, Seq(0, 2))
       assert(files.nonEmpty && files.forall(f =>
         f.getPath.contains("cl=0") || f.getPath.contains("cl=2")))
-      val snap = graft.streaming.SemDedupIngest
+      val snap = graft.streaming.Replay
         .snapshotRead(spark, tmp, idxSchema, files)
       // structural: the probe's scan CANNOT touch cell 1's files
       assert(snap.inputFiles.nonEmpty && snap.inputFiles.forall(p =>

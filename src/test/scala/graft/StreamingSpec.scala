@@ -3,12 +3,14 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Writers
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, Replay}
 import graft.streaming.EventStreams.Event
 
 class StreamingSpec extends AnyFunSuite with SparkSpec {
@@ -529,6 +531,44 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       }
       restored()
     } finally spark.conf.unset(set)
+  }
+
+  test("Replay.stage writes one stamped file per part and builds the parts once per key") {
+    val src = Files.createTempDirectory("graft-replay-src").toFile
+    val df = (0L until 9L).map(i => (i, s"row$i")).toDF("id", "tag")
+    val parts = (0 until 3).map(i => df.filter($"id" % 3 === i))
+    var builds = 0
+    def stage() = Replay.stage("replay-spec", src.toString) { builds += 1; parts }
+    def rows(d: DataFrame) = d.collect().map(_.toString).sorted.toSeq
+    val dir = stage()
+    try {
+      assert(builds == 1)
+      assert(dir.list().toSeq.sorted ==
+        Seq("batch-00.parquet", "batch-01.parquet", "batch-02.parquet"))
+      for ((part, i) <- parts.zipWithIndex) {
+        val f = new java.io.File(dir, f"batch-$i%02d.parquet")
+        assert(f.lastModified == 1700000000000L + i * 600000L, f.getName)
+        assert(rows(spark.read.parquet(f.toString)) == rows(part), f.getName)
+      }
+      assert(stage() == dir)
+      assert(builds == 1)
+    } finally {
+      graft.sources.Staging.rmTree(dir)
+      graft.sources.Staging.rmTree(src)
+    }
+  }
+
+  test("Replay.drain rethrows the failing batch's throwable and leaves no query running") {
+    implicit val sqlCtx = spark.sqlContext
+    val ms = MemoryStream[Int]
+    ms.addData(1, 2, 3)
+    val boom = new IllegalStateException("first batch fails")
+    val writer = ms.toDF().writeStream.foreachBatch { (_: DataFrame, _: Long) =>
+      throw boom
+    }
+    val e = intercept[StreamingQueryException](Replay.drain(writer))
+    assert(e.getCause eq boom)
+    assert(spark.streams.active.isEmpty)
   }
 
   /** A small events + documents table set in the `SparkEntry` table layout
