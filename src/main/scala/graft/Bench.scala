@@ -1,10 +1,23 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // GRAFT_ONLY=q_a,q_b restricts the suite — fast iteration on one query.
+    // Resolved before the session starts: an unknown name throws instead
+    // of timing a smaller suite.
+    val only = sys.env.get("GRAFT_ONLY").map(_.split(",").toSeq)
+    // Bench times the operator-only plans for the self-asserting entries
+    // whose contract form carries an O(n²) verification twin; Verify keeps
+    // the hash-verified forms. GRAFT_CONTRACT_PLANS=1 reverts (for
+    // apples-to-apples against the contract plan when debugging). Every
+    // benched plan runs with the CartesianGuard armed (Suite.resolve): NO
+    // query on the bench path may nested-loop two large relations — a
+    // structural guarantee, not a reviewed one.
+    val benchForm = !sys.env.get("GRAFT_CONTRACT_PLANS").contains("1")
+    val suite = Suite.resolve(only.getOrElse(Nil), benchForm)
+    val guardBytes = sys.env.getOrElse("GRAFT_GUARD_BYTES", Suite.DefaultGuardBytes)
     val spark = Session.builder(cpus)
       .config(Scratch.tmpfs().map("spark.local.dir" -> _).toMap)
       .getOrCreate()
@@ -20,47 +33,24 @@ object Bench {
     // to zero on a long-running engine, and best-of-N also damps
     // machine-load noise. Runs are interleaved (full pass 1, full pass 2)
     // so a transient load spike cannot inflate both samples of a query.
-    // GRAFT_ONLY=q_a,q_b restricts the suite — fast iteration on one query.
-    val only = sys.env.get("GRAFT_ONLY").map(_.split(",").toSet)
-    // Bench times the operator-only plans for the self-asserting entries
-    // whose contract form carries an O(n²) verification twin; Verify keeps
-    // the hash-verified forms. GRAFT_CONTRACT_PLANS=1 reverts (for
-    // apples-to-apples against the contract plan when debugging).
-    val overrides =
-      if (sys.env.get("GRAFT_CONTRACT_PLANS").contains("1")) Map.empty[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]
-      else SparkEntry.benchOverrides
-    val suite = (SparkEntry.queries ++ overrides)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    // Arm the CartesianGuard for every benched plan: with the operator-only
-    // overrides in place, NO query on the bench path may nested-loop two
-    // large relations — a structural guarantee, not a reviewed one. The
-    // contract-form exact twins are exempt only when GRAFT_CONTRACT_PLANS=1
-    // put them back on this path.
-    val guardBytes = sys.env.getOrElse("GRAFT_GUARD_BYTES", "65536")
-    val guardExempt = SparkEntry.cartesianAllow -- overrides.keySet
-    def pass(): Map[String, Double] = suite.map { case (name, fn) =>
-      if (guardExempt(name)) spark.conf.unset(graft.plans.CartesianGuard.ConfKey)
-      else spark.conf.set(graft.plans.CartesianGuard.ConfKey, guardBytes)
+    def pass(): Map[String, Double] = suite.map { query =>
+      val name = query.name
       val t0 = System.nanoTime()
       // Failures must be LOUD: a swallowed error records a near-zero time
       // that reads as a win (a guard violation would look like a 100×
       // speedup). Stderr carries the detail; the summary JSON carries the
       // count via the negative sentinel below.
       val ok =
-        try { fn(spark, sfDir).count(); true }
+        try { query(spark, sfDir, guardBytes).count(); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           false
         }
       val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      // Drop the query's localCheckpoint blocks before timing the next
-      // one: the similarity operators materialize per-query index tables
-      // that serve no purpose across queries, and letting them pile up
-      // (~45 RDDs over 3 passes) taxes every later measurement with
-      // block-manager memory pressure — measured ~15% suite-wide drift.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      // Drop the query's localCheckpoint blocks before timing the next one.
+      Suite.release(spark)
       name -> dt
-    }
+    }.toMap
     // Three interleaved passes, min per query: pass 1 absorbs JIT/codegen,
     // and the per-pass GC drain keeps one query's garbage from inflating
     // the next pass's measurements — the min is the steady-state cost a
@@ -107,21 +97,19 @@ object Bench {
       case (k, v) if v >= 0 && anchors.get(k).exists(a => a > 0 && v > 2 * a) => k
     }.toSeq.sorted.take(8)
     val warm: Map[String, Double] = flagged.map { name =>
-      val fn = suite(name)
-      if (guardExempt(name)) spark.conf.unset(graft.plans.CartesianGuard.ConfKey)
-      else spark.conf.set(graft.plans.CartesianGuard.ConfKey, guardBytes)
+      val query = suite.find(_.name == name).get
       // failures must be LOUD here too (the pass() rule): a swallowed
       // warm-run error would publish its fast failure time as an
       // ambient-noise exoneration of a genuinely broken query
       val ts = (1 to 6).map { _ =>
         val t0 = System.nanoTime()
         val ok =
-          try { fn(spark, sfDir).count(); true }
+          try { query(spark, sfDir, guardBytes).count(); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] warm $name FAILED: ${e.getMessage}")
             false
           }
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        Suite.release(spark)
         if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       }
       val good = ts.filter(_ >= 0)
@@ -137,7 +125,7 @@ object Bench {
       .mkString("{", ",", "}")
     val warmJson = warm.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k":${r3(v)}""" }.mkString("{", ",", "}")
-    val opOnly = overrides.keySet.intersect(suite.keySet).toSeq.sorted
+    val opOnly = suite.map(_.name).filter(n => benchForm && SparkEntry.benchOverrides.contains(n)).sorted
       .map(n => s""""$n"""").mkString("[", ",", "]")
     val detailLine =
       s"""{"sf":"$sfDir","runs_per_query":$nPasses,"aggregation":"min","total_sec":${r3(total)},"operator_only":$opOnly,"anchors_loaded":${anchors.size},"warm_sec":$warmJson,"queries":$detail}""" + "\n"

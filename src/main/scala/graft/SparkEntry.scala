@@ -849,7 +849,7 @@ object SparkEntry {
     // the in-plan exact brute-force twin; a probe miss can flip a
     // borderline majority vote, so agreement is approximate by design —
     // measured 0.9940 (sf0.01) / 0.9935 (sf0.1) with 8/16 cells
-    // (tools/ProbeLabelNoise); floor 0.9 (the ADC-floor discipline:
+    // (tools/ProbeLabelNoise at 89034bd); floor 0.9 (the ADC-floor discipline:
     // just under the measured band, never half of it).
     "q_label_noise_ivf" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
@@ -902,7 +902,7 @@ object SparkEntry {
     // doubly approximate (IVF probe misses AND PQ score quantization).
     // Floor 0.4, just under the measured cross-SF band — ADC direct
     // ordering measures 0.532 at sf0.01 but 0.435 at sf0.1
-    // (ProbeRerank at both SFs: fuller cells make ADC ordering errors
+    // (tools/ProbeRerank at 89034bd, both SFs: fuller cells make ADC ordering errors
     // bite harder), so the earlier 0.45 sat INSIDE the band and failed
     // the larger SF. Still far above the halved-quality level (~0.22 —
     // the ADC-floor discipline holds); the rerank form below carries
@@ -929,7 +929,7 @@ object SparkEntry {
     // is exact over the shortlist. Recall is bounded by shortlist
     // recall@16 instead of ADC ordering recall@3, so the SELF-ASSERTED
     // floor rises to the honest 0.6 (measured 0.811 at sf0.01 vs 0.532
-    // for direct ADC ordering — tools/ProbeRerank records the kShort
+    // for direct ADC ordering — tools/ProbeRerank at 89034bd records the kShort
     // sweep; 16 is the knee, 32 only reaches the IVF probe ceiling 0.823).
     "q_hard_negatives_ivfpq_rerank" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
@@ -2740,7 +2740,7 @@ object SparkEntry {
       val sidx = expr("cast(substring(source, 4) as int)")
       // cpuWide: the exploded-shingle projection is derived by THREE
       // consumers (sketch agg + both twin join sides), each measured as
-      // a ~2.2 s single-task job at raw scan width (ProbeBatchJobs r17)
+      // a ~2.2 s single-task job at raw scan width (r17 per-job decomposition, now `tools.Probe run`)
       val sh = graft.operators.Widen.cpuWide(Tables.documents(s, d))
         .select(col("source"), explode(wordShingles(tokens(col("text")), 3)).as("sh"))
       val sk = sh.groupBy("source")
@@ -5275,7 +5275,7 @@ object SparkEntry {
     // The same metrics harness over the IVF tier (8/16 cells probed).
     // IVF's ranking depends on trained centroids, so this one is self-
     // asserting: floors far under the measured values (recall 0.806/0.844,
-    // MRR 1.000, nDCG 0.870/0.894 at sf0.01/sf0.1 — tools/ProbeRetrieval),
+    // MRR 1.000, nDCG 0.870/0.894 at sf0.01/sf0.1 — tools/ProbeRetrieval at 89034bd),
     // with the oracle pinning the query count and the literals.
     "q_retrieval_eval_ivf" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
@@ -5628,7 +5628,7 @@ object SparkEntry {
     // exposed a real bug instead: left to size estimates, the bucket join
     // hash-built the CORPUS-bands side — fatal at scale, and measurably
     // slow standalone. lshKnn now broadcasts the query side explicitly;
-    // tools/ProbeLsh.scala records the investigation.) The split exists to
+    // tools/ProbeLsh.scala at 89034bd records the investigation.) The split exists to
     // keep quadratic twins out of the bench, not to strip bounded ones.
     // Contract form: IVF mining ⋈ O(|Q|·|C|) brute-force twin + recall
     // agg. Operator: the cell-keyed self-mining join against the at-rest

@@ -5,8 +5,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // Optional 3rd+ args: restrict to named queries (local iteration).
-    val only: Set[String] = args.drop(2).toSet
+    // Optional 3rd+ args: restrict to named queries (local iteration); an
+    // unknown name throws before the session starts.
+    val queries = Suite.resolve(args.drop(2).toSeq, benchForm = false)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = Session.builder(cpus)
       .config(Scratch.tmpfs().map("spark.local.dir" -> _).toMap)
@@ -17,16 +18,12 @@ object Verify {
     // whose plan would nested-loop two >64 KB relations fails loudly here
     // instead of becoming a 100 TB incident. Only the declared
     // verification-SF exact twins are exempt (SparkEntry.cartesianAllow).
-    val guardBytes = sys.env.getOrElse("GRAFT_GUARD_BYTES", "65536")
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      if (SparkEntry.cartesianAllow(name)) spark.conf.unset(graft.plans.CartesianGuard.ConfKey)
-      else spark.conf.set(graft.plans.CartesianGuard.ConfKey, guardBytes)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val guardBytes = sys.env.getOrElse("GRAFT_GUARD_BYTES", Suite.DefaultGuardBytes)
+    queries.foreach { query =>
+      try query(spark, sfDir, guardBytes).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${query.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${query.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -326,7 +326,7 @@ object Bootstrap {
     // ALL R replicate weight sums via the raw-loop aggregate (the
     // explode(sequence) → per-(bucket, j) hash-agg predecessor fanned
     // every row through 64 virtual copies and group probes and measured
-    // several times the arithmetic — tools/ProbeMedianCi; the DECIMAL
+    // several times the arithmetic — tools/ProbeMedianCi at 89034bd; the DECIMAL
     // min/max riding that explode was worse still, 3-5 s at sf0.1).
     val summary = Robust.collectSummary(
       rows.groupBy(col("__bkt"))

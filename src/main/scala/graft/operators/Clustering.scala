@@ -83,32 +83,15 @@ object Clustering {
     * The per-step Add yields (36,24); the cast back to (35,24) is
     * exact (d2 < 64·2048² ≈ 3·10⁸ ≪ 10¹¹). At 100 TB latency the
     * [[IvfIndex]] double-argmin path is the throughput variant; this
-    * is the replayable form. */
-  private val decX = DecimalType(16, 12)
-  private val decM = DecimalType(8, 6)
-  private val decT = DecimalType(35, 24)
-  // Native kernel (graft.functions.DecDistArray): bit-identical decimals
-  // to the zip_with/aggregate spelling below, computed in primitive
-  // long/128-bit arithmetic — the HOF lambda chain allocated BigDecimals
-  // per (element, cluster, row) and dominated every assignment pass.
+    * is the replayable form.
+    *
+    * Computed by the native kernel (graft.functions.DecDistArray):
+    * bit-identical decimals to the zip_with/aggregate spelling it replaced
+    * (the twin in ClusteringInternalsSpec), in primitive long/128-bit
+    * arithmetic — the HOF lambda chain allocated BigDecimals per
+    * (element, cluster, row) and dominated every assignment pass. */
   private def distArray(v: Column, cents: Array[Array[Double]]): Column =
     graft.functions.VectorExpressions.decDistArray(v, cents)
-
-  /** The original higher-order-function spelling — retained as the twin
-    * the native kernel is property-tested against
-    * (ClusteringInternalsSpec). */
-  private[graft] def distArrayHof(v: Column, cents: Array[Array[Double]]): Column =
-    array(cents.zipWithIndex.map { case (c, j) =>
-      struct(
-        aggregate(
-          zip_with(v, typedLit(c.toSeq), (x, m) => {
-            val dx = x.cast(decX) - m.cast(decM)
-            (dx * dx).cast(decT)
-          }),
-          lit(0).cast(decT),
-          (acc, t) => (acc + t).cast(decT)).as("d2"),
-        lit(j).as("cl"))
-    }: _*)
 
   /** One assignment pass: (vec_id, v, cl, d2) — nearest centroid, ties
     * to the lowest cluster id (struct min compares d2 first, then cl). */

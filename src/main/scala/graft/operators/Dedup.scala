@@ -70,7 +70,7 @@ object Dedup {
     // Widen.cpuWide, not bare repartition: this projection is consumed
     // through a localCheckpoint, and AQE's stage materialization was
     // measured fusing a bare repartition's compute onto the 1-task scan
-    // side (the conformal-monitor finding, tools/ProbeStreamCost).
+    // side (the conformal-monitor finding, measured per job).
     // Two checkpoints are resident here (the widened RAW rows + this
     // projection) — bounded: the cpuWide gate only ever materializes
     // < p·maxPartitionBytes of raw rows (it returns wide scans
@@ -88,13 +88,6 @@ object Dedup {
     * negligible. */
   def sortedShingleHashes(text: Column, n: Int): Column =
     VectorExpressions.shingleHashes(tokens(text), n)
-
-  /** The interpreted HOF formulation of [[sortedShingleHashes]] — same
-    * equivalence classes (hash VALUES differ; set sizes and intersection
-    * cardinalities match), kept as the spec twin the kernel is tested
-    * against. */
-  def sortedShingleHashesHof(text: Column, n: Int): Column =
-    array_sort(transform(array_distinct(wordShingles(tokens(text), n)), s => xxhash64(s)))
 
   /** Exact Jaccard |A∩B|/|A∪B| over two SORTED distinct arrays, using the
     * native intersection-count kernel (|A∪B| = |A|+|B|−|A∩B|). */
@@ -492,7 +485,7 @@ object Dedup {
     // bounded collect ([[shingleProbePlan]]: ≤ 4096 values on either
     // level) plans the static isin partition filter, the same mechanism
     // the band-index probe uses (DPP does not fire on this layout; the
-    // static plan does — recorded in tools/ProbeShinglePrune).
+    // static plan does — recorded in tools/ProbeShinglePrune at 89034bd).
     val (candidates, idxShingles) =
       if (indexShingles.columns.contains("ssb")) {
         // Two-level store ([[withShingleLayout]]): both levels planned

@@ -706,7 +706,7 @@ object Robust {
     * BOTH the Sen-median selection and the S = Σ sign aggregation, and
     * the selection's summary pass already reads every pair row, so S is
     * one more map-side long riding it (one fewer broadcast-nested-loop
-    * regeneration; measured in tools/ProbeMk). Returns
+    * regeneration; measured in tools/ProbeMk at 89034bd). Returns
     * `(groupCol, w_median, n_rows, <name>...)` — n_rows is the group's
     * total weight; each <name> is Σ cast-to-long of its column over the
     * group's non-null-`value` rows. Groups with zero total weight DROP
@@ -1462,7 +1462,7 @@ object Robust {
     // of the former per-distinct-value runningTotals chain — same exact
     // "smallest a with cum count ≥ k" semantics, ~half the fixed jobs
     // (the range exchange, its checkpoint and the offsets window are
-    // gone; measured in tools/ProbeStreamCost r17). k > n_cal finds no
+    // gone; measured per job in r17, now `tools.Probe run`). k > n_cal finds no
     // rank bracket, the grid drops the group, and the coalesce degrades
     // honestly to q̂ = 1 (full sets) exactly as before.
     val cal = base.filter(col("is_cal"))

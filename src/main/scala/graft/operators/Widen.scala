@@ -9,7 +9,7 @@ import org.apache.spark.sql.DataFrame
   * compute-heavy projection (text scoring, shingle/MinHash signatures,
   * brute-force distance scans) exists so a single-file local scan does
   * not run the whole projection on one core. Measured this round
-  * (tools/ProbeStreamCost, per-job decomposition): under AQE the idiom
+  * (per-job decomposition, now `tools.Probe run`): under AQE the idiom
   * SILENTLY FAILS — when the plan is materialized through
   * `localCheckpoint`/`toRdd`, the adaptive re-optimization leaves the
   * projection fused against the 1-partition scan side and one task runs

@@ -53,7 +53,7 @@ object RetrievalEvalStream {
 
   /** Run the monitor to completion: ONE row
     * `(n_queries, recall_ok, mrr_ok, ndcg_ok, parity_ok)` — floors far
-    * under the measured tier values (tools/ProbeRetrieval), parity =
+    * under the measured tier values (tools/ProbeRetrieval at 89034bd), parity =
     * streamed per-query metric rows ≡ the whole-set evaluation
     * (multiplicity included). `assertParity = false` (the bench form)
     * times the monitor stream alone. */
@@ -64,7 +64,7 @@ object RetrievalEvalStream {
     // The corpus side of EVERY per-batch job (exact-gold scan, IVF cell
     // scan) otherwise runs at the raw scan's width — ONE task for the
     // single-file monitor corpus (measured: a 3.3 s single-task job per
-    // micro-batch, tools/ProbeStreamCost r17). Widen once, up front.
+    // micro-batch, r17 per-job decomposition, now `tools.Probe run`). Widen once, up front.
     val corpus = graft.operators.Widen.cpuWide(Tables.embeddings(spark, dir))
     // FROZEN index: built offline on the at-rest corpus before traffic.
     // The assignment frame is LAZY — without the pin each micro-batch's

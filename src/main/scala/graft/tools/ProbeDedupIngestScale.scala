@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -39,51 +38,22 @@ import graft.operators.Dedup
   * the probed fraction at the trigger's footprint. */
 object ProbeDedupIngestScale {
 
-  private val Off = 10000000000L
-  private val Reps = 10
-
-  private def tagged(text: org.apache.spark.sql.Column,
-      rep: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    array_join(
-      transform(split(text, " "),
-        t => concat(lit("r"), rep.cast("string"), lit("_"), t)),
-      " ")
-
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val work = "/tmp/graft-ingest10x"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val work = Substrate.Work
+    val spark = Substrate.session()
 
-    // ---- held-rate text substrates (if-absent guarded, shared path) ---
-    val oneDir = s"$work/docs1x-tagged"
-    val tenDir = s"$work/docs10x-tagged"
+    // ---- held-rate text substrates, shared with ProbeGraphTextScale ----
+    val (oneDir, tenDir) = Substrate.stageTaggedDocs(spark, base, work)
     val src = spark.read.parquet(s"$base/documents.parquet")
       .select(col("doc_id"), col("text"))
-    if (!new java.io.File(oneDir).exists())
-      src.select(col("doc_id"), tagged(col("text"), lit(0)).as("text"))
-        .write.parquet(oneDir)
-    if (!new java.io.File(tenDir).exists()) {
-      val reps = explode(typedLit((0 until Reps).toArray)).as("__r")
-      src.select(col("*"), reps)
-        .select((col("doc_id") + col("__r") * Off).as("doc_id"),
-          tagged(col("text"), col("__r")).as("text"))
-        .write.parquet(tenDir)
-    }
 
     // ---- the trigger: 4 replica-0 docs, fresh ids, last token dropped
     // (exact-Jaccard near-dups of their at-rest originals; same batch on
     // every side)
     val trigger = src.filter(col("doc_id") < 4)
-      .select((col("doc_id") + lit(99L) * Off).as("doc_id"),
-        tagged(col("text"), lit(0)).as("text"))
+      .select((col("doc_id") + lit(99L) * Substrate.Off).as("doc_id"),
+        Substrate.tagged(col("text"), lit(0)).as("text"))
       .select(col("doc_id"),
         when(size(split(col("text"), " ")) > 1,
           array_join(slice(split(col("text"), " "), lit(1),

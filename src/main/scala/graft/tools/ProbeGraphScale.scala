@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Clustering, Graph, IvfIndex}
@@ -20,34 +19,12 @@ import graft.operators.{Clustering, Graph, IvfIndex}
   * the ~2-3× class of the other linear families, not 10-100×. */
 object ProbeGraphScale {
 
-  private val Off = 10000000000L
-  private val Reps = 10
-
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val tenDir = if (args.length > 1) args(1) else "/tmp/graft-ingest10x/corpus10x"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val tenDir = if (args.length > 1) args(1) else s"${Substrate.Work}/corpus10x"
+    val spark = Substrate.session()
 
-    if (!new java.io.File(s"$tenDir/embeddings.parquet").exists()) {
-      val dim = 64
-      val reps = explode(typedLit((0 until Reps).toArray)).as("__r")
-      spark.read.parquet(s"$base/embeddings.parquet")
-        .select(col("*"), reps)
-        .select(
-          (col("vec_id") + col("__r") * Off).as("vec_id"),
-          concat(slice(col("embedding"), col("__r") + 1, lit(dim) - col("__r")),
-            slice(col("embedding"), lit(1), col("__r"))).as("embedding"),
-          col("label"))
-        .write.mode("overwrite").parquet(s"$tenDir/embeddings.parquet")
-    }
+    Substrate.stageEmbeddings10x(spark, base, tenDir)
 
     def side(tag: String, dir: String, nLists: Int,
         tau: Double = Clustering.SemDedupTau): (Double, Long) = {

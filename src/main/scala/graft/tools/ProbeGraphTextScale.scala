@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Graph}
@@ -21,40 +20,12 @@ import graft.operators.{Dedup, Graph}
   * its edge source. */
 object ProbeGraphTextScale {
 
-  private val Off = 10000000000L
-  private val Reps = 10
-
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val work = "/tmp/graft-ingest10x"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Substrate.session()
 
-    // held-rate substrates, shared with ProbeDedupIngestScale (guarded)
-    def tagged(text: org.apache.spark.sql.Column, rep: org.apache.spark.sql.Column) =
-      array_join(transform(split(text, " "),
-        t => concat(lit("r"), rep.cast("string"), lit("_"), t)), " ")
-    val oneDir = s"$work/docs1x-tagged"
-    val tenDir = s"$work/docs10x-tagged"
-    val src = spark.read.parquet(s"$base/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    if (!new java.io.File(oneDir).exists())
-      src.select(col("doc_id"), tagged(col("text"), lit(0)).as("text"))
-        .write.parquet(oneDir)
-    if (!new java.io.File(tenDir).exists()) {
-      val reps = explode(typedLit((0 until Reps).toArray)).as("__r")
-      src.select(col("*"), reps)
-        .select((col("doc_id") + col("__r") * Off).as("doc_id"),
-          tagged(col("text"), col("__r")).as("text"))
-        .write.parquet(tenDir)
-    }
+    // held-rate substrates, shared with ProbeDedupIngestScale
+    val (oneDir, tenDir) = Substrate.stageTaggedDocs(spark, base, Substrate.Work)
 
     def side(tag: String, dir: String): (Double, Long) = {
       val docs = spark.read.parquet(dir)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -39,49 +38,24 @@ import graft.operators.Clustering
   */
 object ProbeIngestScale {
 
-  private val Off = 10000000000L
-  private val Reps = 10
-
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val work = if (args.length > 1) args(1) else "/tmp/graft-ingest10x"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val work = if (args.length > 1) args(1) else Substrate.Work
+    val spark = Substrate.session()
 
     val tau = Clustering.SemDedupTau
-    val dim = 64
     val idxSchema = StructType(Seq(
       StructField("vec_id", LongType), StructField("v", ArrayType(FloatType)),
       StructField("nrm", DoubleType), StructField("cl", IntegerType)))
 
-    // ---- 10x corpus (ProbeScale's rotation synthesis, idempotent) -----
-    // Same if-absent guard as ProbeAutoNLists/ProbeGraphScale: the three
-    // probes share this substrate path, so a rerun must not silently
-    // re-synthesize it under the others.
+    // ---- 10x corpus, shared with ProbeAutoNLists/ProbeGraphScale -------
     val tenDir = s"$work/corpus10x"
-    if (!new java.io.File(s"$tenDir/embeddings.parquet").exists()) {
-      val reps = explode(typedLit((0 until Reps).toArray)).as("__r")
-      spark.read.parquet(s"$base/embeddings.parquet")
-        .select(col("*"), reps)
-        .select(
-          (col("vec_id") + col("__r") * Off).as("vec_id"),
-          concat(slice(col("embedding"), col("__r") + 1, lit(dim) - col("__r")),
-            slice(col("embedding"), lit(1), col("__r"))).as("embedding"),
-          col("label"))
-        .write.mode("overwrite").parquet(s"$tenDir/embeddings.parquet")
-    }
+    Substrate.stageEmbeddings10x(spark, base, tenDir)
 
     // ---- the trigger: 8 vectors, fresh ids, same on both sides --------
     val batch = spark.read.parquet(s"$base/embeddings.parquet")
       .filter(col("vec_id") < 8)
-      .select((col("vec_id") + lit(99L) * Off).as("vec_id"), col("embedding"))
+      .select((col("vec_id") + lit(99L) * Substrate.Off).as("vec_id"), col("embedding"))
       .cache()
     println(s"trigger batch: ${batch.count()} vectors")
 

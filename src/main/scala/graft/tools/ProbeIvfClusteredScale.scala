@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.operators.{IvfIndex, Pq, Similarity}
@@ -52,13 +52,7 @@ object ProbeIvfClusteredScale {
 
   def main(args: Array[String]): Unit = {
     val work = "/tmp/graft-ivfclustered"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Substrate.session()
 
     // fixed centers, seeded driver-side: C × d doubles — model-sized
     val rnd = new scala.util.Random(4242)

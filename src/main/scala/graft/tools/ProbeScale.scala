@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Empirical scale validation of the SF-invariance claims (round-13
@@ -18,11 +18,8 @@ import org.apache.spark.sql.functions._
   *    copies are the WORST case for the all-pairs control (its pair
   *    count should visibly blow up; that query is the one deliberately
   *    quadratic form).
-  *  - embeddings ×10: fresh vec_id, vector ROTATED by the replica
-  *    index — rotation preserves the norm and the marginal
-  *    distribution while decorrelating replicas (rotated random
-  *    vectors are near-orthogonal), so the 10× corpus behaves like 10×
-  *    fresh draws instead of planting artificial near-dup cliques.
+  *  - embeddings ×10: [[Substrate.embeddings10x]], the rotated-replica
+  *    copy.
   *
   * Families:
   *  - MK pair domain (q_mann_kendall_by_priority): day² pair count
@@ -45,21 +42,10 @@ import org.apache.spark.sql.functions._
   */
 object ProbeScale {
 
-  private val Off = 10000000000L // replica id offset, beyond any real id
-  private val Reps = 10
-
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/graft-scale10x"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Substrate.session()
 
     def t(tag: String)(f: => Long): Double = {
       val t0 = System.nanoTime(); val n = f
@@ -67,28 +53,18 @@ object ProbeScale {
       println(f"$tag%-44s $s%8.2f s  ($n rows)"); s
     }
     def q(name: String, dir: String): DataFrame =
-      graft.SparkEntry.benchOverrides
-        .getOrElse(name, graft.SparkEntry.queries(name))(spark, dir)
+      graft.Suite.resolve(Seq(name), benchForm = true).head(spark, dir)
 
     // ---- synthesize the 10× corpus (idempotent overwrite) --------------
-    val reps = explode(typedLit((0 until Reps).toArray)).as("__r")
     def rep(df: DataFrame, idCol: String): DataFrame =
-      df.select(col("*"), reps)
-        .withColumn(idCol, col(idCol) + col("__r") * Off).drop("__r")
-    println(s"== synthesizing ${Reps}x corpus at $out from $base")
+      df.select(col("*"), Substrate.replicas)
+        .withColumn(idCol, col(idCol) + col("__r") * Substrate.Off).drop("__r")
+    println(s"== synthesizing ${Substrate.Reps}x corpus at $out from $base")
     rep(spark.read.parquet(s"$base/orders.parquet"), "o_orderkey")
       .write.mode("overwrite").parquet(s"$out/orders.parquet")
     rep(spark.read.parquet(s"$base/documents.parquet"), "doc_id")
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
-    val dim = 64
-    spark.read.parquet(s"$base/embeddings.parquet")
-      .select(col("*"), reps)
-      .select(
-        (col("vec_id") + col("__r") * Off).as("vec_id"),
-        // rotate by r: norm- and distribution-preserving decorrelation
-        concat(slice(col("embedding"), col("__r") + 1, lit(dim) - col("__r")),
-          slice(col("embedding"), lit(1), col("__r"))).as("embedding"),
-        col("label"))
+    Substrate.embeddings10x(spark, base)
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
 
     // ---- family 1: MK pair domain flat ---------------------------------

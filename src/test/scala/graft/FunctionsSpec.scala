@@ -10,6 +10,12 @@ import graft.functions.VectorExpressions._
 class FunctionsSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
+  /** The interpreted HOF formulation of `Dedup.sortedShingleHashes` — same
+    * equivalence classes (hash VALUES differ; set sizes and intersection
+    * cardinalities match), the twin the native kernel is tested against. */
+  private def sortedShingleHashesHof(text: org.apache.spark.sql.Column, n: Int) =
+    array_sort(transform(array_distinct(wordShingles(tokens(text), n)), s => xxhash64(s)))
+
   // Mirror of the reference's revenue golden test (`workflow.py:326-332`):
   // qty=2, price=10.0, discount=1.0, stale total=0.0 → recomputed 19.0.
   // Our testdata carries the same rule as extendedprice*(1-discount).
@@ -100,7 +106,7 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     val both = docs.select(
       $"doc_id",
       graft.operators.Dedup.sortedShingleHashes($"text", 3).as("nat"),
-      graft.operators.Dedup.sortedShingleHashesHof($"text", 3).as("hof"))
+      sortedShingleHashesHof($"text", 3).as("hof"))
     val rows = both.orderBy($"doc_id").collect()
     rows.foreach { r =>
       assert(r.getSeq[Long](1).size == r.getSeq[Long](2).size,

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DecimalType, FloatType, LongType, StructField,
+  StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
@@ -11,8 +12,27 @@ import graft.functions.VectorExpressions
 /** The native DecDistArray kernel must be BIT-identical to the
   * zip_with/aggregate decimal chain it replaced — every cluster query's
   * oracle hash rides these exact DECIMAL(35,24) values. The twin
-  * (Clustering.distArrayHof) is retained solely as this test's witness. */
+  * (`distArrayHof`) is that chain, kept here as this test's witness. */
 class ClusteringInternalsSpec extends AnyFunSuite with SparkSpec {
+
+  private val decX = DecimalType(16, 12)
+  private val decM = DecimalType(8, 6)
+  private val decT = DecimalType(35, 24)
+
+  /** The original higher-order-function spelling of the per-cluster
+    * distance structs the native kernel replaced. */
+  private def distArrayHof(v: Column, cents: Array[Array[Double]]): Column =
+    array(cents.zipWithIndex.map { case (c, j) =>
+      struct(
+        aggregate(
+          zip_with(v, typedLit(c.toSeq), (x, m) => {
+            val dx = x.cast(decX) - m.cast(decM)
+            (dx * dx).cast(decT)
+          }),
+          lit(0).cast(decT),
+          (acc, t) => (acc + t).cast(decT)).as("d2"),
+        lit(j).as("cl"))
+    }: _*)
 
   private val cents: Array[Array[Double]] = Array(
     Array.tabulate(8)(i => (i - 3) * 1.25),
@@ -43,7 +63,7 @@ class ClusteringInternalsSpec extends AnyFunSuite with SparkSpec {
     val native = df.select(col("id"),
         VectorExpressions.decDistArray(col("v"), cents).as("d")).collect()
     val hof = df.select(col("id"),
-        Clustering.distArrayHof(col("v"), cents).as("d")).collect()
+        distArrayHof(col("v"), cents).as("d")).collect()
     assert(native.map(_.toString).toSeq == hof.map(_.toString).toSeq)
     // and through the real consumers (argmin / sort) on a real corpus
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
@@ -52,7 +72,7 @@ class ClusteringInternalsSpec extends AnyFunSuite with SparkSpec {
       array_min(VectorExpressions.decDistArray(col("v"),
         Clustering.modelFor(spark, "/root/testdata/sf0.001"))).as("b")).collect()
     val viaHof = clean.select(col("vec_id"),
-      array_min(Clustering.distArrayHof(col("v"),
+      array_min(distArrayHof(col("v"),
         Clustering.modelFor(spark, "/root/testdata/sf0.001"))).as("b")).collect()
     assert(viaNative.map(_.toString).sorted.toSeq ==
       viaHof.map(_.toString).sorted.toSeq)
@@ -68,7 +88,7 @@ class ClusteringInternalsSpec extends AnyFunSuite with SparkSpec {
     val native = df.select(col("id"),
         VectorExpressions.decDistArray(col("v"), cents).as("d")).collect()
     val hof = df.select(col("id"),
-        Clustering.distArrayHof(col("v"), cents).as("d")).collect()
+        distArrayHof(col("v"), cents).as("d")).collect()
     assert(native.map(_.toString).toSeq == hof.map(_.toString).toSeq)
     native.foreach { r =>
       val arr = r.getSeq[Row](1)
