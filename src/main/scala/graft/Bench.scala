@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import graft.contract.Contract
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -8,15 +11,13 @@ object Bench {
     // Resolved before the session starts: an unknown name throws instead
     // of timing a smaller suite.
     val only = sys.env.get("GRAFT_ONLY").map(_.split(",").toSeq)
-    // Bench times the operator-only plans for the self-asserting entries
-    // whose contract form carries an O(n²) verification twin; Verify keeps
-    // the hash-verified forms. GRAFT_CONTRACT_PLANS=1 reverts (for
-    // apples-to-apples against the contract plan when debugging). Every
+    // Bench times each record's operator-only benchPlan where it has one
+    // (the self-asserting entries whose contract plan carries an O(n²)
+    // verification twin); Verify keeps the hash-verified plans. Every
     // benched plan runs with the CartesianGuard armed (Suite.resolve): NO
     // query on the bench path may nested-loop two large relations — a
     // structural guarantee, not a reviewed one.
-    val benchForm = !sys.env.get("GRAFT_CONTRACT_PLANS").contains("1")
-    val suite = Suite.resolve(only.getOrElse(Nil), benchForm)
+    val suite = Suite.resolve(only.getOrElse(Nil), benchForm = true)
     val guardBytes = sys.env.getOrElse("GRAFT_GUARD_BYTES", Suite.DefaultGuardBytes)
     val spark = Session.builder(cpus)
       .config(Scratch.tmpfs().map("spark.local.dir" -> _).toMap)
@@ -125,7 +126,8 @@ object Bench {
       .mkString("{", ",", "}")
     val warmJson = warm.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k":${r3(v)}""" }.mkString("{", ",", "}")
-    val opOnly = suite.map(_.name).filter(n => benchForm && SparkEntry.benchOverrides.contains(n)).sorted
+    val benched = Contract.all.filter(_.benchPlan.nonEmpty).map(_.name).toSet
+    val opOnly = suite.map(_.name).filter(benched).sorted
       .map(n => s""""$n"""").mkString("[", ",", "]")
     val detailLine =
       s"""{"sf":"$sfDir","runs_per_query":$nPasses,"aggregation":"min","total_sec":${r3(total)},"operator_only":$opOnly,"anchors_loaded":${anchors.size},"warm_sec":$warmJson,"queries":$detail}""" + "\n"

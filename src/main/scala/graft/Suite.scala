@@ -2,24 +2,24 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.contract.{Contract, Query}
 import graft.plans.CartesianGuard
 
 /** The contract queries a main runs, resolved by name in one of two forms.
   *
-  * The bench form (`Bench`, `tools.Probe`) times each self-asserting entry
-  * through its operator-only twin from [[SparkEntry.benchOverrides]]; the
-  * contract form (`Verify`) keeps the hash-verified plans. Either way every
-  * plan runs with the [[CartesianGuard]] armed, except the verification-SF
-  * exact twins of [[SparkEntry.cartesianAllow]] that the form still runs. */
+  * The bench form (`Bench`, `tools.Probe`) runs each record's
+  * [[graft.contract.Query.benchPlan]] where it has one; the contract form
+  * (`Verify`) runs every record's hash-verified `plan`. Either way every
+  * plan runs with the [[CartesianGuard]] armed, except the contract `plan`
+  * of an `allowCartesian` record (a verification-SF exact twin). */
 object Suite {
-
-  type Plan = (SparkSession, String) => DataFrame
 
   /** The guard threshold when a main sets none: 64 KB on both sides. */
   val DefaultGuardBytes = "65536"
 
-  /** One resolved query and whether the CartesianGuard is armed for it. */
-  final case class Query(name: String, plan: Plan, guarded: Boolean) {
+  /** One resolved plan, its record's kind, and whether the CartesianGuard
+    * is armed for it. */
+  final case class Resolved(name: String, kind: Query.Kind, plan: Query.Plan, guarded: Boolean) {
 
     /** Arms the guard at `guardBytes` (or clears it for an exempt twin),
       * then builds the plan over the table set in `dir`. */
@@ -35,16 +35,20 @@ object Suite {
     * empty. Throws `IllegalArgumentException` naming every unknown name, so
     * a typo fails before any job runs instead of timing or dumping fewer
     * queries than asked. */
-  def resolve(names: Seq[String], benchForm: Boolean): Seq[Query] = {
-    val overrides = if (benchForm) SparkEntry.benchOverrides else Map.empty[String, Plan]
-    val all = SparkEntry.queries ++ overrides
-    val unknown = names.filterNot(all.contains).distinct
+  def resolve(names: Seq[String], benchForm: Boolean): Seq[Resolved] = {
+    // Keyed by name; the whole suite runs in this map's order, which is
+    // the order Bench has always timed it in.
+    val byName = Contract.all.map(q => q.name -> q).toMap
+    val unknown = names.filterNot(byName.contains).distinct
     if (unknown.nonEmpty)
       throw new IllegalArgumentException(
         s"unknown query names: ${unknown.map(n => s"'$n'").mkString(", ")}")
-    val exempt = SparkEntry.cartesianAllow -- overrides.keySet
-    val picked = if (names.isEmpty) all.toSeq else names.distinct.map(n => n -> all(n))
-    picked.map { case (n, plan) => Query(n, plan, guarded = !exempt(n)) }
+    val picked = if (names.isEmpty) byName.values.toSeq else names.distinct.map(byName)
+    picked.map { q =>
+      val bench = if (benchForm) q.benchPlan else None
+      Resolved(q.name, q.kind, bench.getOrElse(q.plan),
+        guarded = bench.nonEmpty || !q.allowCartesian)
+    }
   }
 
   /** Drops every persisted RDD. The similarity operators checkpoint

@@ -1,7 +1,11 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import graft.contract.Contract
+
+/** Driver-run correctness dump: each [[graft.contract.Contract]] query's
+  * contract-plan result → parquet, plus oracle_sql.json (every record's
+  * oracle SQL by name), for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -17,7 +21,7 @@ object Verify {
     // Arm the analysis-phase CartesianGuard for the whole dump: any query
     // whose plan would nested-loop two >64 KB relations fails loudly here
     // instead of becoming a 100 TB incident. Only the declared
-    // verification-SF exact twins are exempt (SparkEntry.cartesianAllow).
+    // verification-SF exact twins are exempt (Query.allowCartesian).
     val guardBytes = sys.env.getOrElse("GRAFT_GUARD_BYTES", Suite.DefaultGuardBytes)
     queries.foreach { query =>
       try query(spark, sfDir, guardBytes).coalesce(1).write.mode("overwrite")
@@ -38,7 +42,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = Contract.all.map(r => r.name -> r.oracleSql).toMap
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -24,7 +24,7 @@ import graft.functions.{distinctTokens, tokens, TextAnalysis}
 object Curation {
 
   /** Default top-`v` vocabulary size for [[jsDivergence]] — shared with
-    * the SparkEntry oracle (interpolated into its `LIMIT`) so the
+    * the contract oracle (interpolated into its `LIMIT`) so the
     * operator and the SQL replay cannot silently drift. */
   val JsVocabSize = 256
 

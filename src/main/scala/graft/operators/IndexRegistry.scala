@@ -15,7 +15,7 @@ import graft.sources.{Staging, Tables}
   * rebuild their index in-plan so the DuckDB gate can pin recall against
   * an in-plan exact twin at the verify SF; timing that rebuild per bench
   * pass would overstate the operator's steady-state cost the same way the
-  * O(n²) twins did (see [[graft.SparkEntry.benchOverrides]]).
+  * O(n²) twins did (see [[graft.contract.Query.benchPlan]]).
   *
   * So: each model trains at most once per JVM per data dir (deterministic —
   * fixed seeds, fixed corpus — so every pass sees the identical model, and

@@ -378,7 +378,7 @@ object Pq {
     * distinct cells, so (query, neighbor) pairs are unique by construction
     * — no dedup stage. Results are row-identical to [[ivfPqSearch]] for
     * the same index and nProbe (same probe ranking, same arithmetic, same
-    * rounding); SparkEntry's `q_embed_knn_pq_batch` asserts exactly that
+    * rounding); the contract's `q_embed_knn_pq_batch` asserts exactly that
     * in-plan. The LUT (~m·ksub·8 B) rides the shuffle nProbe times per
     * query — at m=8 × ksub=16 that is 1 KB × nProbe, small against the
     * embedding it replaces. */

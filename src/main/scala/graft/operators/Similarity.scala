@@ -216,7 +216,7 @@ object Similarity {
     * standard memory-bound trade for a 100 TB embedding store (the same
     * scheme FAISS calls SQ8). Reconstruction x̂ = code·scale bounds the
     * per-component error by scale/2 (round-to-nearest), which
-    * [[SparkEntry]]'s `q_embed_quantize` asserts in-plan. Pure expression
+    * the contract's `q_embed_quantize` asserts in-plan. Pure expression
     * work — quantization rides the scan projection, no shuffle. */
   def quantizeInt8(embedding: Column): Column = {
     val scale = array_max(transform(embedding, x => abs(x))) / lit(127.0)

@@ -46,8 +46,8 @@ object AnnIngest {
     * — the cell-partitioned index is per-run MUTABLE state and must not
     * outlive it (Staging is input-only).
     *
-    * `assertFull = false` (the bench-mode form, see
-    * `SparkEntry.benchOverrides`) times train + initial encode + the
+    * `assertFull = false` (the bench-mode form, the record's
+    * `benchPlan`) times train + initial encode + the
     * ingest stream alone: the whole-corpus re-encode is the verification
     * harness, not the operator — a continuous pipeline never re-encodes
     * its accepted corpus. */

@@ -41,8 +41,8 @@ object AnnServe {
     * `(n_queries, results_nonempty, parity_ok)`; `parity_ok` is the
     * streamed-results ≡ whole-set batched search row equality.
     *
-    * `assertFull = false` (the bench-mode form, `SparkEntry
-    * .benchOverrides`) times the serving stream alone — the whole-set
+    * `assertFull = false` (the bench-mode form, the record's
+    * `benchPlan`) times the serving stream alone — the whole-set
     * recompute is the verification harness, not the operator. */
   def runStreamAnnServe(
       spark: SparkSession, dir: String,

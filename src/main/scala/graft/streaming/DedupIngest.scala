@@ -48,8 +48,8 @@ object DedupIngest {
     * — the stream's index and pair sinks are per-run MUTABLE state and
     * must not outlive it (Staging is input-only).
     *
-    * `assertFull = false` (the bench-mode form, see
-    * `SparkEntry.benchOverrides`) times the ingest stream alone: the
+    * `assertFull = false` (the bench-mode form, the record's
+    * `benchPlan`) times the ingest stream alone: the
     * whole-corpus recompute is the verification harness, not the operator —
     * a continuous pipeline never rescans its accepted corpus. */
   def runStreamDedupIngest(

@@ -87,8 +87,8 @@ object ScdIngest {
     * the versioned dim dirs are per-run MUTABLE state (Staging is
     * input-only).
     *
-    * `assertFull = false` (the bench-mode form, `SparkEntry
-    * .benchOverrides`) times the ingest stream alone: the whole-input
+    * `assertFull = false` (the bench-mode form, the record's
+    * `benchPlan`) times the ingest stream alone: the whole-input
     * recompute is the verification harness — a dimension store never
     * re-derives its full history per batch. */
   def runStreamScdIngest(

@@ -25,7 +25,9 @@ import graft.{Scratch, Session, Suite}
   *    state-commit ms and input rows.
   *  - `plan q…`: the formatted explain, then one execution, then the
   *    AQE-final executed plan with its Exchange / ReusedExchange / Scan
-  *    counts.
+  *    counts. A `Stream` record has run its stream to completion by the
+  *    time it returns a plan, so that plan reads the stream's sink; its
+  *    micro-batches show up under `run`.
   *
   * Reads `SPARK_GRAFT_SF_DIR` and `SPARK_GRAFT_CPUS` with Bench's defaults.
   * Conf A/B runs set Spark's own JVM properties, e.g.
@@ -147,7 +149,7 @@ object Probe {
   }
 
   /** One warm run, then [[TimedRuns]] timed runs of `query` over `dir`. */
-  def run(spark: SparkSession, query: Suite.Query, dir: String): Record = {
+  def run(spark: SparkSession, query: Suite.Resolved, dir: String): Record = {
     val rec = new Recorder(spark)
     def once(): Run = {
       rec.clear()
@@ -167,7 +169,7 @@ object Probe {
 
   /** The formatted explain of `query` over `dir`, then — after one
     * execution — its AQE-final executed plan and node counts. */
-  def plan(spark: SparkSession, query: Suite.Query, dir: String): String = {
+  def plan(spark: SparkSession, query: Suite.Resolved, dir: String): String = {
     val qe = query(spark, dir).queryExecution
     val explain = qe.explainString(FormattedMode)
     SQLExecution.withNewExecutionId(qe, Some(s"probe plan ${query.name}")) {
@@ -176,7 +178,7 @@ object Probe {
     Suite.release(spark)
     val executed = qe.executedPlan.toString
     def count(re: String): Int = re.r.findAllIn(executed).size
-    s"""=== ${query.name} (sf=$dir) ===
+    s"""=== ${query.name} (${query.kind}, sf=$dir) ===
        |$explain
        |=== executed (AQE final) ===
        |$executed

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.contract.{Contract, Query}
 import graft.functions.VectorExpressions.vectorDot
 import graft.sources.Tables
 import graft.transform.Transforms
@@ -829,18 +830,32 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
 
   test("no single-task global window over row-sized input anywhere on the bench path") {
     import org.apache.spark.sql.execution.window.WindowExec
-    // Streaming-flavored entries execute their streams at construction time;
-    // their batch twins are covered via the operators they share.
-    val skip = (n: String) => n.contains("stream") || n.startsWith("q_events_")
-    val bad = SparkEntry.queries.keys.toSeq.sorted.filterNot(skip).flatMap { name =>
-      val fn = SparkEntry.benchOverrides.getOrElse(name, SparkEntry.queries(name))
-      flattenPlan(fn(spark, sf).queryExecution.executedPlan).collect {
-        case w: WindowExec if w.partitionSpec.isEmpty && !aggBounded(w.child) =>
-          s"$name: ${w.windowExpression.mkString(",").take(80)}"
-      }
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    // Stream records run their streams to completion at construction time;
+    // their batch twins are covered via the operators they share. Building
+    // a Batch record must start no streaming query at all.
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.incrementAndGet()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     }
-    assert(bad.isEmpty,
-      s"single-task global windows over row-sized input:\n${bad.mkString("\n")}")
+    spark.streams.addListener(listener)
+    val bad =
+      try Contract.all.filter(_.kind == Query.Batch).sortBy(_.name).flatMap { q =>
+        val before = started.get()
+        val plan = q.benchPlan.getOrElse(q.plan)(spark, sf).queryExecution.executedPlan
+        val streams = started.get() - before
+        (if (streams > 0) Seq(s"${q.name}: a Batch record started $streams streaming queries")
+         else Nil) ++ flattenPlan(plan).collect {
+          case w: WindowExec if w.partitionSpec.isEmpty && !aggBounded(w.child) =>
+            s"${q.name}: ${w.windowExpression.mkString(",").take(80)}"
+        }
+      }
+      finally spark.streams.removeListener(listener)
+    assert(bad.isEmpty, "Batch records that start a stream or run a single-task global " +
+      s"window over row-sized input:\n${bad.mkString("\n")}")
   }
 
   test("ppl bucketing never sorts a whole source on one task (windows are pid-keyed or summary-sized)") {

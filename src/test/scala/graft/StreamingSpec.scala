@@ -571,7 +571,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(spark.streams.active.isEmpty)
   }
 
-  /** A small events + documents table set in the `SparkEntry` table layout
+  /** A small events + documents table set in the contract's table layout
     * (`<dir>/<table>.parquet`). The on-time max (01:40) and the row before
     * it (01:30) share an hour after the 10-minute delay, as the late-audit
     * schedule requires; user 3 is the late slice. */
