@@ -1,8 +1,13 @@
 package graft
 
+import java.util.concurrent.{ExecutionException, Executors}
+
+import scala.util.{Failure, Try}
+
 import org.apache.spark.sql.SparkSession
 
-/** The house SparkSession settings and scoped session-conf changes. */
+/** The house SparkSession settings, scoped session-conf changes, and
+  * independent jobs run concurrently on one session. */
 object Session {
 
   /** The settings every graft session shares: `local[cpus]` with one
@@ -34,5 +39,29 @@ object Session {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** Runs `tasks` on a pool of at most `defaultParallelism` threads made
+    * for this call and returns their results in order once every task has
+    * ended.
+    * The threads are created by the calling thread, so they inherit its
+    * Spark local properties (job group, description, scheduler pool) and
+    * active session. If tasks fail, the first failing task's own exception
+    * is rethrown, with the later failures attached as suppressed. */
+  def runAll[A](spark: SparkSession, tasks: Seq[() => A]): Seq[A] = {
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(tasks.size, spark.sparkContext.defaultParallelism)))
+    try {
+      val futures = tasks.map(t => pool.submit[A](() => t()))
+      val results = futures.map(f => Try(f.get()).recoverWith {
+        case e: ExecutionException => Failure(e.getCause)
+      })
+      results.collect { case Failure(e) => e } match {
+        case first +: rest =>
+          rest.foreach(first.addSuppressed)
+          throw first
+        case _ => results.map(_.get)
+      }
+    } finally pool.shutdown()
   }
 }

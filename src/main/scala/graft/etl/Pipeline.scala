@@ -1,9 +1,5 @@
 package graft.etl
 
-import java.util.concurrent.{ExecutionException, Executors}
-
-import scala.util.{Failure, Try}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType}
@@ -123,31 +119,7 @@ object Pipeline {
         Writers.overwrite(cps, path("customer_purchase_summary"))
         Seq("customer_purchase_summary" -> cps.count())
       })
-    runAll(spark, sinks).flatten.toMap
-  }
-
-  /** Runs `tasks` on a pool of at most `defaultParallelism` threads made
-    * for this call and returns their results in order once every task has
-    * ended.
-    * The threads are created by the calling thread, so they inherit its
-    * Spark local properties (job group, description, scheduler pool) and
-    * active session. If tasks fail, the first failing task's own exception
-    * is rethrown, with the later failures attached as suppressed. */
-  private def runAll[A](spark: SparkSession, tasks: Seq[() => A]): Seq[A] = {
-    val pool = Executors.newFixedThreadPool(
-      math.min(tasks.size, spark.sparkContext.defaultParallelism))
-    try {
-      val futures = tasks.map(t => pool.submit[A](() => t()))
-      val results = futures.map(f => Try(f.get()).recoverWith {
-        case e: ExecutionException => Failure(e.getCause)
-      })
-      results.collect { case Failure(e) => e } match {
-        case first +: rest =>
-          rest.foreach(first.addSuppressed)
-          throw first
-        case _ => results.map(_.get)
-      }
-    } finally pool.shutdown()
+    graft.Session.runAll(spark, sinks).flatten.toMap
   }
 
   /** reference `workflow.py:152-184` on the e-commerce schema. */

@@ -35,12 +35,24 @@ object JdbcDemo {
     p
   }
 
+  /** Every database directory [[derbyUrl]] named in this JVM; one shutdown
+    * hook deletes them all, as [[Staging]] does for its dirs. */
+  private val databases = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+
+  locally {
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      databases.forEach(d => Staging.rmTree(d))))
+  }
+
   /** Embedded single-JVM database under the JVM temp dir (tmpfs when the
-    * harness set one up); `create=true` makes first contact idempotent. */
+    * harness set one up); `create=true` makes first contact idempotent.
+    * The database directory is deleted when the JVM exits. */
   def derbyUrl(name: String): String = {
+    val tmp = System.getProperty("java.io.tmpdir")
     // keep Derby's log out of the repo working dir
-    System.setProperty("derby.system.home", System.getProperty("java.io.tmpdir"))
-    s"jdbc:derby:${System.getProperty("java.io.tmpdir")}/$name;create=true"
+    System.setProperty("derby.system.home", tmp)
+    databases.add(new java.io.File(tmp, name))
+    s"jdbc:derby:$tmp/$name;create=true"
   }
 
   /** Full load with batched inserts (S6 truncate-then-load analog). */

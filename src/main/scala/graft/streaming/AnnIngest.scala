@@ -74,7 +74,7 @@ object AnnIngest {
       // path; the ingest appends land in the same partition dirs).
       Staging.copyTree(idxAtRest, encDir)
 
-      Replay.drain(Replay.source(spark, Schemas.embeddings, staged)
+      Replay.drain(spark, Replay.source(spark, Schemas.embeddings, staged)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           // the FAISS add path: assign + residual-encode under the frozen

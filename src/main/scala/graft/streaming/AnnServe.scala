@@ -53,7 +53,7 @@ object AnnServe {
     val resDir = new java.io.File(out, "results")
 
     try Session.withConf(spark, StreamConf.MonitorWidth) {
-      Replay.drain(Replay.source(spark, Schemas.embeddings, staged)
+      Replay.drain(spark, Replay.source(spark, Schemas.embeddings, staged)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           Pq.ivfPqSearchBatch(idx, batch, k = 5, nProbe = 8)

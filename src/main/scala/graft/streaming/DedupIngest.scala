@@ -92,7 +92,7 @@ object DedupIngest {
     val bandPartCols = if (nSub > 1) Seq("pbkt", "sbb") else Seq("pbkt")
 
     try Session.withConf(spark, StreamConf.MonitorWidth) {
-      Replay.drain(Replay.source(spark, Schemas.documents, staged)
+      Replay.drain(spark, Replay.source(spark, Schemas.documents, staged)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val s = batch.sparkSession

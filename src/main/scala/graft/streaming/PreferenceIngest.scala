@@ -147,7 +147,7 @@ object PreferenceIngest {
     val pairDir = new java.io.File(out, "pairs")
     try {
       Session.withConf(spark, StreamConf.MonitorWidth) {
-        Replay.drain(Replay.source(spark, Schemas.documents, staged)
+        Replay.drain(spark, Replay.source(spark, Schemas.documents, staged)
           .writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             val s = batch.sparkSession
@@ -261,7 +261,7 @@ object PreferenceIngest {
     val incDir = new java.io.File(out, "inc")
     try {
     Session.withConf(spark, StreamConf.MonitorWidth) {
-      Replay.drain(Replay.source(spark, Schemas.documents, staged)
+      Replay.drain(spark, Replay.source(spark, Schemas.documents, staged)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val s = batch.sparkSession

@@ -19,19 +19,25 @@ private[graft] object Replay {
   /** Stages `parts` for (kind, source dir) through [[Staging.dir]]: part
     * `i` becomes the single file `batch-%02d.parquet`, modification-stamped
     * so the file source (oldest file first, names agreeing) reads it as
-    * micro-batch `i`. `parts` is evaluated only when the key is first
-    * staged; later calls return the memoized dir. */
+    * micro-batch `i`. Each part is its own one-file write job, and the
+    * parts are written concurrently ([[graft.Session.runAll]]). `parts` is
+    * evaluated only when the key is first staged; later calls return the
+    * memoized dir. */
   def stage(kind: String, dir: String)(parts: => Seq[DataFrame]): File =
     Staging.dir(kind, dir) { d =>
-      parts.zipWithIndex.foreach { case (df, i) =>
-        val tmp = new File(d, s"__stage$i")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new File(d, f"batch-$i%02d.parquet")
-        Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(1700000000000L + i * 600000L)
-        Staging.rmTree(tmp)
-      }
+      val staged = parts
+      graft.Session.runAll(staged.head.sparkSession, staged.zipWithIndex.map {
+        case (df, i) => () => {
+          val tmp = new File(d, s"__stage$i")
+          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+          val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
+          val dest = new File(d, f"batch-$i%02d.parquet")
+          Files.move(part.toPath, dest.toPath)
+          dest.setLastModified(1700000000000L + i * 600000L)
+          Staging.rmTree(tmp)
+        }
+      })
+      ()
     }
 
   /** The staged dir as a stream of one file per micro-batch. */
@@ -42,15 +48,18 @@ private[graft] object Replay {
 
   /** Starts the query, runs it until every available input is processed,
     * and stops it, also when the stream fails (the failure is rethrown as
-    * the query's `StreamingQueryException`). */
-  def drain(writer: DataStreamWriter[_]): Unit = {
-    val q = writer.start()
-    try q.processAllAvailable() finally q.stop()
-  }
+    * the query's `StreamingQueryException`). The stream's checkpoint files
+    * go through [[LocalCheckpointFiles]] ([[StreamConf.CheckpointFiles]]). */
+  def drain(spark: SparkSession, writer: DataStreamWriter[_]): Unit =
+    graft.Session.withConf(spark, StreamConf.CheckpointFiles) {
+      val q = writer.start()
+      try q.processAllAvailable() finally q.stop()
+    }
 
   /** Drains `df` into the memory sink `name` and returns the sink table. */
   def toMemory(df: Dataset[_], name: String, outputMode: String): DataFrame = {
-    drain(df.writeStream.format("memory").queryName(name).outputMode(outputMode))
+    drain(df.sparkSession,
+      df.writeStream.format("memory").queryName(name).outputMode(outputMode))
     df.sparkSession.table(name)
   }
 

@@ -77,7 +77,7 @@ object RetrievalEvalStream {
     val metDir = new java.io.File(out, "metrics")
     try {
     Session.withConf(spark, StreamConf.MonitorWidth) {
-      Replay.drain(Replay.source(spark, Schemas.embeddings, staged)
+      Replay.drain(spark, Replay.source(spark, Schemas.embeddings, staged)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           evalQueries(batch.sparkSession, batch, corpus, index, k, nProbe)

@@ -112,7 +112,7 @@ object ScdIngest {
     def dimDir(v: Int) = new java.io.File(out, s"dim-v$v")
 
     try Session.withConf(spark, StreamConf.MonitorWidth) {
-      Replay.drain(Replay.source(spark, snapSchema, staged)
+      Replay.drain(spark, Replay.source(spark, snapSchema, staged)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val s = batch.sparkSession

@@ -146,7 +146,7 @@ object SemDedupIngest {
       StructField("vec_b", LongType), StructField("cosine", DoubleType)))
 
     try Session.withConf(spark, StreamConf.MonitorWidth) {
-      Replay.drain(Replay.source(spark, Schemas.embeddings, staged)
+      Replay.drain(spark, Replay.source(spark, Schemas.embeddings, staged)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val s = batch.sparkSession
@@ -245,7 +245,7 @@ object SemDedupIngest {
       when(h < 90L, "train").when(h < 95L, "val").otherwise("test")
     }
     try Session.withConf(spark, StreamConf.MonitorWidth) {
-      Replay.drain(Replay.source(spark, Schemas.embeddings, staged)
+      Replay.drain(spark, Replay.source(spark, Schemas.embeddings, staged)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val s = batch.sparkSession

@@ -11,4 +11,12 @@ private[streaming] object StreamConf {
     * choice per deployment. [[EventStreams]] keeps a narrower width of its
     * own for the event-table runners. */
   val MonitorWidth: (String, String) = "spark.sql.shuffle.partitions" -> "8"
+
+  /** Every checkpoint file of a stream started under this conf (offset,
+    * commit and source logs, HDFS-backed and RocksDB state stores) goes
+    * through [[LocalCheckpointFiles]], which starts no child process for
+    * a `file:` checkpoint. Held by [[Replay.drain]] for each stream's life;
+    * not a tuning knob. */
+  val CheckpointFiles: (String, String) =
+    "spark.sql.streaming.checkpointFileManagerClass" -> classOf[LocalCheckpointFiles].getName
 }

@@ -828,13 +828,11 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
     case other => other.children.forall(aggBounded)
   }
 
-  test("no single-task global window over row-sized input anywhere on the bench path") {
-    import org.apache.spark.sql.execution.window.WindowExec
+  /** Runs `body` with a counter of the streaming queries started on the
+    * session meanwhile. */
+  private def countingStreams[A](body: java.util.concurrent.atomic.AtomicInteger => A): A = {
     import org.apache.spark.sql.streaming.StreamingQueryListener
     import org.apache.spark.sql.streaming.StreamingQueryListener._
-    // Stream records run their streams to completion at construction time;
-    // their batch twins are covered via the operators they share. Building
-    // a Batch record must start no streaming query at all.
     val started = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: QueryStartedEvent): Unit = started.incrementAndGet()
@@ -842,8 +840,17 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     }
     spark.streams.addListener(listener)
-    val bad =
-      try Contract.all.filter(_.kind == Query.Batch).sortBy(_.name).flatMap { q =>
+    try body(started)
+    finally spark.streams.removeListener(listener)
+  }
+
+  test("no single-task global window over row-sized input anywhere on the bench path") {
+    import org.apache.spark.sql.execution.window.WindowExec
+    // Stream records run their streams to completion at construction time;
+    // their batch twins are covered via the operators they share. Building
+    // a Batch record must start no streaming query at all.
+    val bad = countingStreams { started =>
+      Contract.all.filter(_.kind == Query.Batch).sortBy(_.name).flatMap { q =>
         val before = started.get()
         val plan = q.benchPlan.getOrElse(q.plan)(spark, sf).queryExecution.executedPlan
         val streams = started.get() - before
@@ -853,9 +860,26 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
             s"${q.name}: ${w.windowExpression.mkString(",").take(80)}"
         }
       }
-      finally spark.streams.removeListener(listener)
+    }
     assert(bad.isEmpty, "Batch records that start a stream or run a single-task global " +
       s"window over row-sized input:\n${bad.mkString("\n")}")
+  }
+
+  test("every Stream record starts a streaming query when it is built") {
+    // q_events_late_drop refuses sf0.001 by design: its late-audit split
+    // needs the sf0.01 event spread.
+    val quiet = countingStreams { started =>
+      Contract.all.filter(_.kind == Query.Stream).sortBy(_.name).flatMap { q =>
+        val dir = if (q.name == "q_events_late_drop") s"${new java.io.File(sf).getParent}/sf0.01" else sf
+        val plans = (q.name -> q.plan) +: q.benchPlan.map(s"${q.name} (bench)" -> _).toSeq
+        plans.filter { case (_, plan) =>
+          val before = started.get()
+          plan(spark, dir)
+          started.get() == before
+        }.map(_._1)
+      }
+    }
+    assert(quiet.isEmpty, s"Stream records whose plan starts no streaming query: $quiet")
   }
 
   test("ppl bucketing never sorts a whole source on one task (windows are pid-keyed or summary-sized)") {

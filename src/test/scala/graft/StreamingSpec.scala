@@ -566,7 +566,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val writer = ms.toDF().writeStream.foreachBatch { (_: DataFrame, _: Long) =>
       throw boom
     }
-    val e = intercept[StreamingQueryException](Replay.drain(writer))
+    val e = intercept[StreamingQueryException](Replay.drain(spark, writer))
     assert(e.getCause eq boom)
     assert(spark.streams.active.isEmpty)
   }
