@@ -71,51 +71,6 @@ object Bench {
     })
     val failed = results.collect { case (k, v) if v < 0 => k }.toSeq.sorted
     val total = results.values.filter(_ >= 0).sum
-    // Per-query ambient guard: any row whose min-of-N exceeds 2× its
-    // per-query anchor gets an immediate warm min-of-6 in the SAME
-    // session, so a cross-epoch ratio can be adjudicated from one epoch
-    // instead of a follow-up probe session (the q_embed_knn_lsh saga:
-    // three rounds of cold-path bounce before a warm probe settled it).
-    // Anchor = the r8 clean-session detail file; override GRAFT_ANCHOR.
-    // Capped at 8 reruns so a systemic regression (which a warm rerun
-    // would not exonerate anyway) cannot double the bench wall.
-    val anchorPath = sys.env.getOrElse("GRAFT_ANCHOR", "bench_detail_r08_baseline.json")
-    val anchors: Map[String, Double] =
-      try {
-        val txt = new String(Files.readAllBytes(Paths.get(anchorPath)))
-        val qsec = txt.substring(txt.indexOf("\"queries\":"))
-        """"([A-Za-z0-9_]+)":(-?[0-9.]+)""".r.findAllMatchIn(qsec)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case e: Throwable =>
-        // LOUD: an empty warm_sec must mean "no outliers", never "the
-        // guard silently never loaded an anchor" — the detail JSON also
-        // records anchors_loaded so the two cases stay distinguishable
-        System.err.println(
-          s"[bench] ambient guard DISABLED: anchor $anchorPath unreadable (${e.getMessage})")
-        Map.empty[String, Double]
-      }
-    val flagged = results.collect {
-      case (k, v) if v >= 0 && anchors.get(k).exists(a => a > 0 && v > 2 * a) => k
-    }.toSeq.sorted.take(8)
-    val warm: Map[String, Double] = flagged.map { name =>
-      val query = suite.find(_.name == name).get
-      // failures must be LOUD here too (the pass() rule): a swallowed
-      // warm-run error would publish its fast failure time as an
-      // ambient-noise exoneration of a genuinely broken query
-      val ts = (1 to 6).map { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { query(spark, sfDir, guardBytes).count(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] warm $name FAILED: ${e.getMessage}")
-            false
-          }
-        Suite.release(spark)
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      }
-      val good = ts.filter(_ >= 0)
-      name -> (if (good.nonEmpty) good.min else -1.0)
-    }.toMap
     def r2(v: Double): Double = math.round(v * 100) / 100.0
     def r3(v: Double): Double = math.round(v * 1000) / 1000.0
     val bySlowest = results.toSeq.sortBy { case (k, v) => (-v, k) }
@@ -124,13 +79,11 @@ object Bench {
     // a 117-query map at 3 decimals (~4.3 KB) overflowed it in rounds 1-2.
     val detail = bySlowest.map { case (k, v) => s""""$k":${r3(v)}""" }
       .mkString("{", ",", "}")
-    val warmJson = warm.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":${r3(v)}""" }.mkString("{", ",", "}")
     val benched = Contract.all.filter(_.benchPlan.nonEmpty).map(_.name).toSet
     val opOnly = suite.map(_.name).filter(benched).sorted
       .map(n => s""""$n"""").mkString("[", ",", "]")
     val detailLine =
-      s"""{"sf":"$sfDir","runs_per_query":$nPasses,"aggregation":"min","total_sec":${r3(total)},"operator_only":$opOnly,"anchors_loaded":${anchors.size},"warm_sec":$warmJson,"queries":$detail}""" + "\n"
+      s"""{"sf":"$sfDir","runs_per_query":$nPasses,"aggregation":"min","total_sec":${r3(total)},"operator_only":$opOnly,"queries":$detail}""" + "\n"
     if (only.isEmpty) // a GRAFT_ONLY subset must not clobber the full record
       Files.writeString(Paths.get("bench_detail.json"), detailLine)
     // Controlled-measurement runs (the ambient-drift audits) need per-query

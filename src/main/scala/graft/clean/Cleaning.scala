@@ -41,16 +41,6 @@ object Cleaning {
   /** Parse `yyyy-MM-dd HH:mm:ss` strings (reference `workflow.py:164`). */
   def parseTimestamp(c: Column): Column = to_timestamp(c, "yyyy-MM-dd HH:mm:ss")
 
-  /** Default nulls in `cols` to 0 (pandas `fillna(0)`, `workflow.py:133,181`). */
-  def fillZero(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.na.fill(0, cols)
-
-  /** Write-path timestamp maintenance — the reference does this with a
-    * trigger on every table (`database-schema.sql:234-257`); in a lake
-    * engine it folds into the load. */
-  def withUpdatedAt(df: DataFrame): DataFrame =
-    df.withColumn("updated_at", current_timestamp())
-
   // ------------------------------------------------------------- PII ----
 
   /** NANP-style phone numbers (`xxx-xxx-xxxx`). Kept to portable regex

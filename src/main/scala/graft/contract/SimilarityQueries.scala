@@ -376,8 +376,8 @@ private[contract] object SimilarityQueries {
     // corpus" posture (the q_semdedup_auto_k convention): the capacity
     // rule picks the smallest candidate keeping expected cell occupancy
     // at or under 125 (4 at sf0.01's 500 vectors, 16 at sf0.1's 2000 —
-    // ProbeScale measured the FIXED-nLists regime at 11.22x search cost
-    // for 10x data, the regime this rule retires), then the standard
+    // a round-13 10x probe measured the FIXED-nLists regime at 11.22x
+    // search cost for 10x data, the regime this rule retires), then the standard
     // probe search runs under the selected model with the probe count
     // from the SEARCH-side companion rule (autoNProbe = 2·⌈√nLists⌉
     // capped at nLists — sublinear probe cost, non-exhaustive once the

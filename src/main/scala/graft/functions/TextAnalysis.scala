@@ -24,11 +24,6 @@ object TextAnalysis {
     * (ties and zero scores → "und" = undetermined, ISO 639-3 style).
     * Argmax is a static fold with a fixed language order, so the prediction
     * is deterministic. */
-  def langIdScores(text: Column): Seq[(String, Column)] = {
-    val toks = tokens(text)
-    stopwords.map { case (lang, words) => lang -> vocabHits(toks, words) }
-  }
-
   def langId(text: Column): Column =
     // one fused native pass (TextQualityFeats) instead of 5 interpreted
     // filter(isInCollection) HOFs; the argmax fold is unchanged — same

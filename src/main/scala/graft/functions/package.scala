@@ -76,24 +76,6 @@ package object functions {
 
   // ------------------------------------------------------------- sketches ----
 
-  /** MinHash signature of a string-array column: `k` independent permutations
-    * approximated by `xxhash64(element, seed=i)`; signature element i is the
-    * minimum hash under permutation i. Pure built-in expressions (static
-    * Scala loop over i — each entry is one `transform`+`array_min`). */
-  def minHashSignature(shingles: Column, k: Int): Column =
-    array((0 until k).map { i =>
-      array_min(transform(shingles, s => xxhash64(s, lit(i))))
-    }: _*)
-
-  /** LSH band hashes of a MinHash signature: `bands` groups of `rowsPerBand`
-    * signature entries, each group collapsed to one 64-bit bucket key. Docs
-    * sharing any band bucket become near-duplicate candidates. */
-  def lshBandHashes(signature: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      val slots = (0 until rowsPerBand).map(r => element_at(signature, b * rowsPerBand + r + 1))
-      struct(lit(b).as("band"), xxhash64(slots :+ lit(b): _*).as("bucket"))
-    }: _*)
-
   /** 64-bit SimHash over a token array: per token hash (xxhash64), vote
     * +1/-1 on each bit; fingerprint bit j set iff the vote sum is positive.
     * One string hash per token, then the native [[SimHash64]] voting kernel

@@ -51,11 +51,6 @@ object Dedup {
       .drop("__rn")
   }
 
-  /** Sorted, deduplicated word-`n`-gram shingle set of a text column — the
-    * canonical form both the MinHash sketch and the exact verifier consume. */
-  def sortedShingles(text: Column, n: Int): Column =
-    array_sort(array_distinct(wordShingles(tokens(text), n)))
-
   /** `(doc_id, sh)` — each document's sorted shingle-hash set, spread
     * across the cluster and MATERIALIZED (`localCheckpoint`). Every
     * similarity consumer (MinHash banding, prefix filtering, and both
@@ -196,7 +191,7 @@ object Dedup {
     * index as the corpus grows. The probed-partition count for a batch
     * is min(N, |batch|·bands) in the worst case (each (band, bucket)
     * hashes to one partition), so with FIXED N = 16 a multi-document
-    * trigger hits every partition — tools/ProbeDedupIngestScale
+    * trigger hits every partition — `Probe scale dedup_ingest`
     * measured the fixed layout probing 100% of a 10× index's rows for
     * a 4-doc trigger, vs 30.7% (49/160 partitions) under this rule's
     * N = 160 on the same index. At the shipped verify SFs the rule
@@ -325,9 +320,6 @@ object Dedup {
     * away and the guard names the missing doc. */
   def shingleCell(id: Column, m1: Int, m2: Int): Column =
     pmod(hash(id), lit(m1 * m2))
-
-  def shingleSubPartition(id: Column, m1: Int, m2: Int): Column =
-    levelSub(hash(id), m1, m2)
 
   /** Add the at-rest shingle partition column(s) for layout `(m1, m2)`:
     * always `sbkt`, plus `ssb` when two-level. */
@@ -500,14 +492,14 @@ object Dedup {
             "the M2 it was written with (withShingleLayout)")
         val c = candidates0.localCheckpoint(false)
         val pruned =
-          shingleProbePlan(c, shingleBuckets, shingleSubBuckets)._2 match {
+          shingleProbePlan(c, shingleBuckets, shingleSubBuckets) match {
             case None => indexShingles.limit(0)
             case Some(f) => indexShingles.filter(f)
           }
         (c, pruned.drop("sbkt", "ssb"))
       } else if (indexShingles.columns.contains("sbkt")) {
         val c = candidates0.localCheckpoint(false)
-        val pruned = shingleProbePlan(c, shingleBuckets, 1)._2 match {
+        val pruned = shingleProbePlan(c, shingleBuckets, 1) match {
           case None => indexShingles.limit(0)
           case Some(f) => indexShingles.filter(f)
         }
@@ -554,30 +546,26 @@ object Dedup {
   }
 
   /** Plan the shingle-store prune for a checkpointed candidate set:
-    * returns (the planned partition-key values, the filter), or None
-    * when there are no candidates. Values are the candidates' combined
-    * cell ids for a two-level store (m2 > 1), bounded at 4096 — a
-    * larger footprint falls back to the level-1 sbkt prune, itself
-    * bounded by m1 ≤ 4096, the same discipline as the band side —
-    * else the level-1 sbkt values (≤ min(2·|candidates|, m1)). Shared
-    * with the ProbeDedupIngestScale verify-side readout so the
-    * measurement cannot drift from the shipped plan. */
-  private[graft] def shingleProbePlan(
-      candidates: DataFrame, m1: Int, m2: Int): (Seq[Int], Option[Column]) = {
+    * the partition filter, or None when there are no candidates. It keeps
+    * the candidates' combined cell ids for a two-level store (m2 > 1),
+    * bounded at 4096 — a larger footprint falls back to the level-1 sbkt
+    * prune, itself bounded by m1 ≤ 4096, the same discipline as the band
+    * side — else the level-1 sbkt values (≤ min(2·|candidates|, m1)). */
+  private def shingleProbePlan(
+      candidates: DataFrame, m1: Int, m2: Int): Option[Column] = {
     val ids = candidates
       .select(explode(array(col("doc_a"), col("doc_b"))).as("__id"))
-    def level1: (Seq[Int], Option[Column]) = {
+    def level1: Option[Column] = {
       val sbkts = ids.select(shinglePartition(col("__id"), m1).as("sbkt"))
         .distinct().collect().map(_.getInt(0)).toSeq
-      (sbkts, if (sbkts.isEmpty) None else Some(col("sbkt").isin(sbkts: _*)))
+      if (sbkts.isEmpty) None else Some(col("sbkt").isin(sbkts: _*))
     }
     if (m2 > 1) {
       val cells = ids.select(shingleCell(col("__id"), m1, m2).as("cell"))
         .distinct().limit(4097).collect().map(_.getInt(0)).toSeq
       if (cells.length > 4096) level1
-      else (cells,
-        if (cells.isEmpty) None
-        else Some((col("ssb") * lit(m1) + col("sbkt")).isin(cells: _*)))
+      else if (cells.isEmpty) None
+      else Some((col("ssb") * lit(m1) + col("sbkt")).isin(cells: _*))
     } else level1
   }
 
@@ -602,12 +590,10 @@ object Dedup {
           "(bandBuckets, bandSubBuckets) match what the store was " +
           "written with (autoBandLayout)?"))).otherwise(col("doc_id")))
 
-  /** Candidate-pair generation shared by [[minHashIncrementalPairsImpl]]
-    * and the ProbeDedupIngestScale verify-side readout (exposed so the
-    * probe measures the SHIPPED candidate rule, not a copy that can
-    * drift): batch-vs-index equi-join on (band, bucket) plus the
-    * in-batch self-join, deduplicated as bare id pairs. */
-  private[graft] def incrementalCandidates(
+  /** Candidate-pair generation for [[minHashIncrementalPairsImpl]]:
+    * batch-vs-index equi-join on (band, bucket) plus the in-batch
+    * self-join, deduplicated as bare id pairs. */
+  private def incrementalCandidates(
       newBanded: DataFrame, prunedIndex: DataFrame): DataFrame = {
     val vsIndex = newBanded.alias("n")
       .join(prunedIndex.alias("i"),
@@ -962,9 +948,6 @@ object Dedup {
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast(DoubleType) /
       size(array_union(a, b)).cast(DoubleType)
-
-  def distinctShingles(text: Column, n: Int): Column =
-    array_distinct(wordShingles(tokens(text), n))
 
   /** Connected components over an undirected pair graph — turns
     * near-duplicate PAIRS into dedup CLUSTERS, so a curation pass can keep

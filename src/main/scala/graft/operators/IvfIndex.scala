@@ -33,8 +33,8 @@ object IvfIndex {
 
   /** Target-occupancy list-count rule — the FAISS capacity convention
     * made executable: the smallest candidate `nLists` keeping expected
-    * cell occupancy n/nLists at or under `occupancy`. ProbeScale
-    * measured the FIXED-nLists regime at 11.22× search cost for 10×
+    * cell occupancy n/nLists at or under `occupancy`. A round-13 10×
+    * probe measured the FIXED-nLists regime at 11.22× search cost for 10×
     * data (cells fatten linearly with the corpus); growing the list
     * count with the corpus keeps cells bounded, so probe cost scales
     * with data/nLists ≈ constant per cell and the search exponent stays
@@ -359,7 +359,7 @@ object IvfIndex {
       .join(labels.select(col("vec_id"), col("label").as("c_label")), Seq("vec_id"))
       .select(col("cell_id"), col("vec_id").as("neighbor_id"), col("c_label"),
         col("embedding").as("c_emb"), l2Norm(col("embedding")).as("c_nrm"))
-    // SHUFFLE_HASH pinned (the ProbeScale finding): with unbounded |Q|
+    // SHUFFLE_HASH pinned (a `Probe scale` finding): with unbounded |Q|
     // the probe side carries q_emb per row — a small-side ESTIMATE must
     // never broadcast it; the build side is the cell-bounded corpus
     val mined = Similarity.rankTopK(

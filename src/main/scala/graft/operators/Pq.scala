@@ -409,8 +409,8 @@ object Pq {
     // estimate cannot see the post-exchange LUT bytes, so left to stats
     // it BROADCASTS the fat probe side — measured fatal at a synthetic
     // 10× sf0.1 (1.1 GiB of collected task results > maxResultSize;
-    // ProbeScale, round 13). The hint makes the cell equi-join build
-    // its per-partition hash from the 16-byte codes — the side that is
+    // round 13). The hint makes the cell equi-join build its
+    // per-partition hash from the 16-byte codes — the side that is
     // bounded per cell by design — and the probe side streams.
     Similarity.rankTopK(
       qplan.join(index.encoded.hint("shuffle_hash"), Seq("cell_id"))

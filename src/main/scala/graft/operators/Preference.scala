@@ -62,11 +62,13 @@ object Preference {
   /** Distributed win-matrix over language pairs: documents meet within a
     * (source, block[, regime]) cell, the lexicographically-smaller lang
     * is `i`, winner = longer text, ties dropped. Output: (regime?,) i, j,
-    * n (matches), w (wins by i) — integers only. */
-  def winMatrix(docs: DataFrame, byRegime: Boolean): DataFrame = {
+    * n (matches), w (wins by i) — integers only. `blocks` other than
+    * [[Blocks]] is the grown-corpus layout `Probe scale bradley_terry`
+    * measures. */
+  def winMatrix(docs: DataFrame, byRegime: Boolean, blocks: Int = Blocks): DataFrame = {
     val base = docs.select(
       col("doc_id"), col("lang"), col("source"), col("n_chars"),
-      pmod(PortableHash.keyHash(col("doc_id")), lit(Blocks.toLong)).as("blk"),
+      pmod(PortableHash.keyHash(col("doc_id")), lit(blocks.toLong)).as("blk"),
       regimeCol.as("regime"))
     val keys = Seq("source", "blk") ++ (if (byRegime) Seq("regime") else Nil)
     val a = base.select(

@@ -51,22 +51,4 @@ object Skew {
       .agg(sum(valueExpr).as("_partial"))
       .groupBy(keys.map(col): _*)
       .agg(sum(col("_partial")).cast(DoubleType).as(resultName))
-
-  /** Salted join for a skewed large side: the large side gets a
-    * deterministic salt in [0, buckets); the small side is replicated once
-    * per salt value, so the hot key's rows hash to `buckets` different
-    * partitions instead of one. */
-  def saltedJoin(
-      large: DataFrame,
-      small: DataFrame,
-      key: String,
-      saltFrom: Column,
-      buckets: Int = 16): DataFrame = {
-    val saltedLarge = large.withColumn("_salt", pmod(xxhash64(saltFrom), lit(buckets)))
-    val saltedSmall = small.crossJoin(
-      small.sparkSession.range(buckets).select(col("id").cast("int").as("_salt")))
-    saltedLarge
-      .join(saltedSmall, Seq(key, "_salt"))
-      .drop("_salt")
-  }
 }

@@ -78,9 +78,6 @@ object Schemas {
   val orderStatusDomain: Seq[String] =
     Seq("Pending", "Processing", "Shipped", "In Transit", "Delivered", "Cancelled", "Returned")
 
-  val paymentMethodDomain: Seq[String] =
-    Seq("Credit Card", "PayPal", "Apple Pay", "Google Pay", "Gift Card", "Bank Transfer")
-
   /** reference `database-schema.sql:124-133`. */
   val orderItems: StructType = StructType(Seq(
     StructField("order_item_id", IntegerType, nullable = false),
@@ -105,14 +102,6 @@ object Schemas {
     StructField("l_returnflag", StringType),
     StructField("l_linestatus", StringType),
     StructField("l_shipdate", TimestampType)))
-
-  val ordersTpch: StructType = StructType(Seq(
-    StructField("o_orderkey", LongType),
-    StructField("o_custkey", LongType),
-    StructField("o_orderstatus", StringType),
-    StructField("o_totalprice", DoubleType),
-    StructField("o_orderdate", TimestampType),
-    StructField("o_orderpriority", StringType)))
 
   val events: StructType = StructType(Seq(
     StructField("event_id", LongType),

@@ -27,7 +27,7 @@ import graft.sources.{Staging, Tables}
   * ([[Dedup.shinglePartition]]), so the exact-Jaccard verify join-back
   * prunes to the partitions holding the trigger's CANDIDATE ids — both
   * index scans are trigger-footprint-sized, measured 4.9% of store rows
-  * at 10× under the ruled layout (tools/ProbeDedupIngestScale).
+  * at 10× under the ruled layout (`Probe scale dedup_ingest`).
   *
   * Every unordered pair is examined exactly once (when its LATER document
   * arrives: earlier-batch partners via the index probe, same-batch
@@ -39,6 +39,46 @@ import graft.sources.{Staging, Tables}
   * in-plan.
   */
 object DedupIngest {
+
+  /** The at-rest partition columns of the band index and of the shingle
+    * store: one level (`pbkt`, `sbkt`), or two when `nSub > 1`. */
+  private[graft] def partitionCols(nSub: Int): (Seq[String], Seq[String]) =
+    if (nSub > 1) (Seq("pbkt", "sbb"), Seq("sbkt", "ssb")) else (Seq("pbkt"), Seq("sbkt"))
+
+  /** One trigger's work before its sinks: shingle the batch, band it ONCE
+    * (checkpointed, shared by the index append and the probe), plan the
+    * pruned probe from that banding, and build the batch's verified pairs
+    * against the pinned snapshots. Returns (shingles, bands, pairs).
+    *
+    * The probe plan is a bounded distinct over the banding, collected
+    * driver-side: the level-1 bucket list (≤ `nPart` values), or for
+    * two-level stores the combined cell-id list ([[Dedup.autoBandLayout]];
+    * ≤ 4096 values — past that the probe falls back to the level-1 prune,
+    * so collecting more is pointless). Planning from the banding itself
+    * lets the pair write run concurrently with both appends instead of
+    * behind the band append's directory diff. `Probe scale dedup_ingest`
+    * times this function against a 1× and a 10× index. */
+  private[graft] def triggerPairs(batch: DataFrame, bandsSnap: DataFrame,
+      shSnap: DataFrame, nPart: Int, nSub: Int): (DataFrame, DataFrame, DataFrame) = {
+    val newSh = Dedup.shingleSets(batch, n = 3)
+    val newBands = Dedup.bandRows(newSh).localCheckpoint(false)
+    val cells =
+      if (nSub > 1)
+        Some(newBands.select(Dedup.bandCell(nPart, nSub).as("c"))
+          .distinct().limit(4097).collect().map(_.getInt(0)).toSeq)
+      else None
+    val bkts =
+      if (nSub > 1) Nil
+      else newBands.select(Dedup.bandPartition(nPart).as("pbkt"))
+        .distinct().collect().map(_.getInt(0)).toSeq
+    val pairs = Dedup.minHashIncrementalPairsPreBanded(
+      newSh, newBands, bandsSnap, shSnap,
+      probeBuckets = if (nSub > 1) None else Some(bkts),
+      bandBuckets = nPart,
+      shingleBuckets = nPart, bandSubBuckets = nSub,
+      probeCells = cells, shingleSubBuckets = nSub)
+    (newSh, newBands, pairs)
+  }
 
   /** Run the ingest stream to completion and return ONE materialized row:
     * `(n_docs, pairs_nonempty, match_full)` where `match_full` is the
@@ -85,11 +125,10 @@ object DedupIngest {
     val shSchema = Dedup.withShingleLayout(
       Dedup.shingleSets(Tables.documents(spark, dir).limit(0), n = 3),
       nPart, nSub).schema
-    val shPartCols = if (nSub > 1) Seq("sbkt", "ssb") else Seq("sbkt")
     val bandSchema = Dedup.withBandLayout(
       Dedup.bandRows(Tables.documents(spark, dir).limit(0)
         .transform(Dedup.shingleSets(_, n = 3))), nPart, nSub).schema
-    val bandPartCols = if (nSub > 1) Seq("pbkt", "sbb") else Seq("pbkt")
+    val (bandPartCols, shPartCols) = partitionCols(nSub)
 
     try Session.withConf(spark, StreamConf.MonitorWidth) {
       Replay.drain(spark, Replay.source(spark, Schemas.documents, staged)
@@ -102,54 +141,17 @@ object DedupIngest {
           val pinnedBands = Replay.listParquet(bandDir).toSet
           val bandsSnap = Replay.snapshotRead(s, bandDir, bandSchema, pinnedBands.toSeq)
           val shSnap = Replay.snapshotRead(s, shDir, shSchema, Replay.listParquet(shDir))
-          val newSh = Dedup.shingleSets(batch, n = 3)
-          // ONE MinHash pass per trigger: the banding is checkpointed and
-          // shared between the index append and the pair probe
-          val newBands = Dedup.bandRows(newSh).localCheckpoint(false)
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          // the batch's bucket set: a bounded distinct over the
-          // checkpointed banding (≤ BandIndexBuckets values, collected
-          // driver-side) — planning the pruned probe from the banding
-          // itself lets the probe run CONCURRENTLY with both appends,
-          // instead of serializing behind the band append's directory
-          // diff. Per-trigger wall-clock is then the checkpoint pass plus
-          // ONE write latency, not three in sequence.
-          // two-level stores plan the combined cell id instead (both
-          // levels in one static filter, Dedup.autoBandLayout); either
-          // list is bounded — ≤ 4096 values (past that the probe falls
-          // back to the level-1 prune, so collecting more is pointless)
-          val cells =
-            if (nSub > 1)
-              Some(newBands.select(Dedup.bandCell(nPart, nSub).as("c"))
-                .distinct().limit(4097).collect().map(_.getInt(0)).toSeq)
-            else None
-          val bkts =
-            if (nSub > 1) Nil
-            else newBands.select(Dedup.bandPartition(nPart).as("pbkt"))
-              .distinct().collect().map(_.getInt(0)).toSeq
+          val (newSh, newBands, pairs) = triggerPairs(batch, bandsSnap, shSnap, nPart, nSub)
           // one file per bucket dir per trigger: the append is tiny and
           // per-task dynamic-partition fan-out would 16× the file count
-          val bandsF = Future(
-            Dedup.withBandLayout(newBands, nPart, nSub)
+          Session.runAll(s, Seq(
+            () => Dedup.withBandLayout(newBands, nPart, nSub)
               .coalesce(1).write.partitionBy(bandPartCols: _*)
-              .mode("append").parquet(bandDir.toString))
-          val shF = Future(
-            Dedup.withShingleLayout(newSh, nPart, nSub)
+              .mode("append").parquet(bandDir.toString),
+            () => Dedup.withShingleLayout(newSh, nPart, nSub)
               .coalesce(1).write.partitionBy(shPartCols: _*).mode("append")
-              .parquet(shDir.toString))
-          val pairsF = Future(
-            Dedup.minHashIncrementalPairsPreBanded(
-                newSh, newBands, bandsSnap, shSnap,
-                probeBuckets = if (nSub > 1) None else Some(bkts),
-                bandBuckets = nPart,
-                shingleBuckets = nPart, bandSubBuckets = nSub,
-                probeCells = cells, shingleSubBuckets = nSub)
-              .write.mode("append").parquet(pairDir.toString))
-          Await.result(bandsF, Duration.Inf)
-          Await.result(shF, Duration.Inf)
-          Await.result(pairsF, Duration.Inf)
+              .parquet(shDir.toString),
+            () => pairs.write.mode("append").parquet(pairDir.toString)))
           ()
         })
 

@@ -194,15 +194,11 @@ object PreferenceIngest {
                 col("lang") === col("b_lang") && col("a_uq") =!= col("b_uq"))
               .select(col("lang") +: col("source") +:
                 orient(col("a_id"), col("a_uq"), col("b_id"), col("b_uq")): _*)
-            import scala.concurrent.{Await, Future}
-            import scala.concurrent.duration.Duration
-            import scala.concurrent.ExecutionContext.Implicits.global
-            val pairsF = Future(inBatch.unionByName(cross)
-              .write.mode("append").parquet(pairDir.toString))
-            val storeF = Future(asg.coalesce(1)
-              .write.partitionBy("blk").mode("append").parquet(storeDir.toString))
-            Await.result(pairsF, Duration.Inf)
-            Await.result(storeF, Duration.Inf)
+            Session.runAll(s, Seq(
+              () => inBatch.unionByName(cross)
+                .write.mode("append").parquet(pairDir.toString),
+              () => asg.coalesce(1)
+                .write.partitionBy("blk").mode("append").parquet(storeDir.toString)))
             ()
           })
       }
@@ -266,16 +262,12 @@ object PreferenceIngest {
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val s = batch.sparkSession
           val (asg, incs) = batchIncrements(s, batch, storeDir)
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
           // increments and store append run concurrently: the probe read
           // only the pinned pre-batch files, so the append can't race it
-          val incF = Future(incs.write.mode("append").parquet(incDir.toString))
-          val storeF = Future(asg.coalesce(1)
-            .write.partitionBy("blk").mode("append").parquet(storeDir.toString))
-          Await.result(incF, Duration.Inf)
-          Await.result(storeF, Duration.Inf)
+          Session.runAll(s, Seq(
+            () => incs.write.mode("append").parquet(incDir.toString),
+            () => asg.coalesce(1)
+              .write.partitionBy("blk").mode("append").parquet(storeDir.toString)))
           ()
         })
     }

@@ -81,8 +81,9 @@ object SemDedupIngest {
     * cross-batch pairs, run the in-batch generator for same-batch
     * pairs. Returns (asg, pairs); the caller appends `asg` to the index
     * and sinks whatever view of `pairs` its monitor needs — shared by
-    * the full ingest and the leakage monitor. */
-  private def batchPairs(s: SparkSession, batch: DataFrame,
+    * the full ingest, the leakage monitor and `Probe scale
+    * semdedup_ingest`. */
+  private[graft] def batchPairs(s: SparkSession, batch: DataFrame,
       cents: Array[Array[Double]], indexDir: java.io.File,
       tau: Double): (DataFrame, DataFrame) = {
     val asg = Clustering.assign(Clustering.cleanVectors(batch), cents)
@@ -151,17 +152,12 @@ object SemDedupIngest {
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val s = batch.sparkSession
           val (asg, pairs) = batchPairs(s, batch, cents, indexDir, tau)
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
           // pair sink and index append run concurrently: the probe reads
           // only the pinned pre-batch files, so the append can't race it
-          val pairsF = Future(pairs
-            .write.mode("append").parquet(pairDir.toString))
-          val idxF = Future(asg.coalesce(1)
-            .write.partitionBy("cl").mode("append").parquet(indexDir.toString))
-          Await.result(pairsF, Duration.Inf)
-          Await.result(idxF, Duration.Inf)
+          Session.runAll(s, Seq(
+            () => pairs.write.mode("append").parquet(pairDir.toString),
+            () => asg.coalesce(1)
+              .write.partitionBy("cl").mode("append").parquet(indexDir.toString)))
           ()
         })
 
@@ -258,15 +254,10 @@ object SemDedupIngest {
             .select(least(sa, sb).as("split_a"), greatest(sa, sb).as("split_b"))
             .groupBy(col("split_a"), col("split_b"))
             .agg(count(lit(1)).as("n_pairs"))
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val gridF = Future(delta.coalesce(1)
-            .write.mode("append").parquet(gridDir.toString))
-          val idxF = Future(asg.coalesce(1)
-            .write.partitionBy("cl").mode("append").parquet(indexDir.toString))
-          Await.result(gridF, Duration.Inf)
-          Await.result(idxF, Duration.Inf)
+          Session.runAll(s, Seq(
+            () => delta.coalesce(1).write.mode("append").parquet(gridDir.toString),
+            () => asg.coalesce(1)
+              .write.partitionBy("cl").mode("append").parquet(indexDir.toString)))
           ()
         })
 

@@ -2,13 +2,19 @@ package graft
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graftshim.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryException
+import org.apache.spark.sql.streaming.{StreamingQueryException, StreamingQueryListener}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.CartesianGuard
 import graft.sources.Writers
 import graft.streaming.{EventStreams, Replay}
 import graft.streaming.EventStreams.Event
@@ -599,6 +605,46 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       val before = spark.conf.getAll
       assert(SparkEntry.queries(name)(spark, streamTables).collect().nonEmpty, name)
       assert(spark.conf.getAll == before, name)
+    }
+  }
+
+  test("every job a stream run starts carries that run's job group, sink fan-outs included") {
+    // Spark sets the stream thread's job group to the run id; a sink write
+    // on a reused pool thread would carry an earlier run's group instead
+    val sc = spark.sparkContext
+    val events = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = events.add(
+        "job" -> Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: StreamingQueryListener.QueryStartedEvent => events.add("start" -> s.runId.toString)
+        case t: StreamingQueryListener.QueryTerminatedEvent => events.add("end" -> t.runId.toString)
+        case _ => ()
+      }
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val query = Suite.resolve(Seq("q_dedup_ingest_stream"), benchForm = true).head
+      (1 to 2).foreach(_ => assert(query(spark, streamTables).collect().nonEmpty))
+      ListenerBusDrain(sc)
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.conf.unset(CartesianGuard.ConfKey)
+    }
+    // (run id, job groups of the jobs started between its start and end)
+    val runs = events.asScala.foldLeft(List.empty[(String, List[String])] -> false) {
+      case ((rs, _), ("start", id)) => ((id, Nil) :: rs) -> true
+      case ((rs, open), ("end", id)) => assert(open && rs.head._1 == id); rs -> false
+      case (((id, gs) :: rs, true), (_, group)) => ((id, group :: gs) :: rs) -> true
+      case (acc, _) => acc
+    }._1
+    assert(runs.size == 2)
+    runs.foreach { case (id, groups) =>
+      assert(groups.nonEmpty)
+      val stray = groups.filterNot(_ == id)
+      assert(stray.isEmpty,
+        s"run $id: ${stray.size} of ${groups.size} jobs carry job group ${stray.distinct}")
     }
   }
 

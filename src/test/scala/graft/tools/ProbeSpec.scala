@@ -85,4 +85,21 @@ class ProbeSpec extends AnyFunSuite with SparkSpec {
       assert(r.gapMs >= 0 && r.gapMs <= (r.wallS * 1000).toLong + 1000)
     }
   }
+
+  test("scale: 10x tables hold exactly 10x rows; the MK domain and the ingest pairs hold") {
+    // at sf0.01: one family on the order substrate, one on the tagged documents
+    val scaled =
+      try Probe.scale(spark, streamSf, Seq("mk", "dedup_ingest"), runs = 1)
+      finally spark.conf.unset(CartesianGuard.ConfKey)
+    assert(scaled.map(_.family) == Seq("mk", "dedup_ingest"))
+    scaled.foreach { s =>
+      assert(s.one.rows > 0, s)
+      assert(s.ten.rows == 10 * s.one.rows, s)
+      assert(s.one.flat == s.ten.flat, s)
+    }
+    val mk = scaled.head
+    assert(mk.one.flat > 0)
+    assert(mk.lines.exists(_.contains("t(10x)/t(1x)")))
+    intercept[IllegalArgumentException](Probe.scale(spark, streamSf, Seq("nope")))
+  }
 }
