@@ -1,9 +1,10 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructType}
 
+import graft.Session
 import graft.clean.Cleaning
 import graft.functions.dec2
 import graft.schema.Schemas
@@ -23,12 +24,31 @@ import graft.transform.DimTime
   * no FK enforcement, so only the data dependencies (orders before LTV)
   * survive, which is exactly what a lake pipeline wants.
   *
-  * `run` first builds every DataFrame from the CSVs, then runs its nine
-  * sinks concurrently, as Flyte runs independent tasks: each sink writes
-  * one table under `warehouseDir` and counts it. This is safe because no
-  * sink reads another sink's output path; every sink reads only the CSVs
-  * and the DataFrames derived from them. A future sink that reads a path
-  * another sink writes must be ordered after that sink explicitly.
+  * Each piece of work is planned and run once per call:
+  *  - **One parse per CSV.** `run` parses and cleans each of the five
+  *    CSVs once: it persists the five frames and materializes them
+  *    concurrently (one job each) before any sink starts. Every sink reads
+  *    those frames, and they are unpersisted when `run` returns or throws.
+  *  - **Counts from the writes.** Each returned count is fused into the
+  *    work that produces it (`Dataset.observe` on the frame being written,
+  *    see [[graft.sources.Writers]]): a PK load returns the rows it found
+  *    plus the rows it appended, `dim_time` and the two summaries return
+  *    the rows they wrote, and `orders_quarantine` is counted while the
+  *    orders are materialized. Only `daily_sales_aggregation` is read
+  *    back: a dynamic partition overwrite leaves the days it does not
+  *    rewrite in place, so the table can hold more rows than the write.
+  *    The read-back uses the frame's known schema, so no schema-inference
+  *    job runs.
+  *  - **Longest sinks first.** The nine sinks run concurrently, as Flyte
+  *    runs independent tasks, and are submitted longest first (daily
+  *    aggregation, the two summaries, customers with their LTV join, then
+  *    the plain loads), so the pool does not end on a long sink that
+  *    started last.
+  *
+  * Running the sinks concurrently is safe because no sink reads another
+  * sink's output path; every sink reads only its own table and the frames
+  * derived from the CSVs. A future sink that reads a path another sink
+  * writes must be ordered after that sink explicitly.
   */
 object Pipeline {
 
@@ -41,47 +61,27 @@ object Pipeline {
   /** Runs the full pipeline; returns loaded row counts per table. */
   def run(spark: SparkSession, cfg: Config): Map[String, Long] = {
     def path(name: String) = s"${cfg.warehouseDir}/$name"
-    def readBack(name: String) = name -> spark.read.parquet(path(name)).count()
-    def load(name: String, df: DataFrame, pk: Seq[String]): Seq[(String, Long)] = {
-      Writers.idempotentAppend(spark, df, path(name), pk)
-      Seq(readBack(name))
-    }
-
-    // -- dim_time: truncate-then-load (reference `workflow.py:47-106`)
-    val dimTime = DimTime(spark, cfg.dimStart, cfg.dimEnd)
+    def load(name: String, df: DataFrame, pk: Seq[String]) =
+      name -> Writers.idempotentAppend(spark, df, path(name), pk)
 
     // -- extract + clean (chunked pandas reads collapse into partitioned scans)
-    def csv(name: String, schema: org.apache.spark.sql.types.StructType) =
+    def csv(name: String, schema: StructType) =
       Tables.csv(spark, s"${cfg.csvDir}/$name.csv", schema)
 
-    // categories: dropna on NOT NULL cols, nullable parent_id cast, ordered
-    // 2-phase parent/child load becomes a single write (no FKs in parquet);
-    // the hierarchy split is still exposed for callers that need it.
+    // categories: dropna on NOT NULL cols, nullable parent_id cast; the
+    // ordered 2-phase parent/child load becomes a single write (no FKs in
+    // parquet)
     val categories = Cleaning
       .dropNullRows(csv("product_categories", Schemas.productCategories), Seq("category_id", "name"))
       .withColumn("parent_id", Cleaning.nullableCast(col("parent_id"), IntegerType))
-      .orderBy(col("category_id"))
-
     val products = Cleaning.dropNullRows(
       csv("products", Schemas.products), Seq("product_id", "name", "price"))
-
-    // orders: dropna + enum-domain validation with quarantine
     val rawOrders = Cleaning.dropNullRows(
       csv("orders", Schemas.orders), Seq("order_id", "customer_id", "order_date"))
-    val (orders, rejectedOrders) =
-      Cleaning.validateDomain(rawOrders, "status", Schemas.orderStatusDomain)
-
     // customers: dropna on identity cols (NOT the derived lifetime_value —
-    // reference `workflow.py:134`), then LTV enrichment (J1+A1)
+    // reference `workflow.py:134`)
     val customersRaw = Cleaning.dropNullRows(
       csv("customers", Schemas.customers), Seq("customer_id", "email"))
-    val ltv = orders
-      .groupBy(col("customer_id"))
-      .agg(sum(dec2(col("total_amount"))).cast(DoubleType).as("lifetime_value"))
-    val customers = customersRaw
-      .join(ltv, Seq("customer_id"), "left")
-      .na.fill(0.0, Seq("lifetime_value"))
-
     // order_items: recompute total = price*quantity - discount, overriding
     // whatever the CSV carried (reference `workflow.py:122-126`)
     val items = csv("order_items", Schemas.orderItems)
@@ -89,37 +89,52 @@ object Pipeline {
         (dec2(col("price")) * col("quantity") - dec2(col("discount")))
           .cast(Schemas.orderItems("total").dataType))
 
-    // -- the sinks: each writes its own path and counts it
-    val sinks: Seq[() => Seq[(String, Long)]] = Seq(
-      () => {
-        Writers.overwrite(dimTime, path("dim_time"))
-        Seq(readBack("dim_time"))
-      },
-      () => load("product_categories", categories, Seq("category_id")),
-      () => load("products", products, Seq("product_id")),
-      () => load("orders", orders, Seq("order_id")) :+ ("orders_quarantine" -> rejectedOrders.count()),
-      () => load("customers", customers, Seq("customer_id")),
-      () => load("order_items", items, Seq("order_item_id")),
-      // -- daily sales aggregation (A2+J2+J3, reference `workflow.py:152-184`),
-      //    date-partitioned so one day's slice can be recomputed in place
-      //    (the plpgsql incremental path, `database-schema.sql:202-231`)
-      () => {
-        Writers.overwritePartitions(dailySalesAggregation(items, orders, products),
-          path("daily_sales_aggregation"), Seq("date"))
-        Seq(readBack("daily_sales_aggregation"))
-      },
-      // -- summary "matviews" (S7 refresh = recompute + overwrite)
-      () => {
-        val pss = productSalesSummary(items, orders, products, categories)
-        Writers.overwrite(pss, path("product_sales_summary"))
-        Seq("product_sales_summary" -> pss.count())
-      },
-      () => {
-        val cps = customerPurchaseSummary(customers, orders)
-        Writers.overwrite(cps, path("customer_purchase_summary"))
-        Seq("customer_purchase_summary" -> cps.count())
-      })
-    graft.Session.runAll(spark, sinks).flatten.toMap
+    // the five parsed frames, materialized concurrently before any sink
+    // starts (a `noop` write runs a plan once, and writes nothing); the
+    // orders materialization also counts the rows that fail the
+    // enum-domain check (`Cleaning.validateDomain` splits on the same flag)
+    val parsed = Seq(categories, products, rawOrders, customersRaw, items).map(_.persist())
+    val quarantined = Observation()
+    try {
+      val ordersCounted = rawOrders.observe(quarantined,
+        count_if(!Cleaning.domainFlag(col("status"), Schemas.orderStatusDomain)).as("n"))
+      Session.runAll(spark, Seq(categories, products, ordersCounted, customersRaw, items)
+        .map(df => () => df.write.format("noop").mode(SaveMode.Append).save()))
+      val (orders, _) = Cleaning.validateDomain(rawOrders, "status", Schemas.orderStatusDomain)
+      // LTV enrichment (J1+A1)
+      val ltv = orders
+        .groupBy(col("customer_id"))
+        .agg(sum(dec2(col("total_amount"))).cast(DoubleType).as("lifetime_value"))
+      val customers = customersRaw
+        .join(ltv, Seq("customer_id"), "left")
+        .na.fill(0.0, Seq("lifetime_value"))
+
+      // -- the sinks, longest first: each writes its own path and counts it
+      val sinks: Seq[() => Seq[(String, Long)]] = Seq(
+        // -- daily sales aggregation (A2+J2+J3, reference `workflow.py:152-184`),
+        //    date-partitioned so one day's slice can be recomputed in place
+        //    (the plpgsql incremental path, `database-schema.sql:202-231`)
+        () => {
+          val daily = dailySalesAggregation(items, orders, products)
+          val at = path("daily_sales_aggregation")
+          Writers.overwritePartitions(daily, at, Seq("date"))
+          Seq("daily_sales_aggregation" -> spark.read.schema(daily.schema).parquet(at).count())
+        },
+        // -- summary "matviews" (S7 refresh = recompute + overwrite)
+        () => Seq("product_sales_summary" -> Writers.overwrite(
+          productSalesSummary(items, orders, products, categories), path("product_sales_summary"))),
+        () => Seq("customer_purchase_summary" -> Writers.overwrite(
+          customerPurchaseSummary(customers, orders), path("customer_purchase_summary"))),
+        () => Seq(load("customers", customers, Seq("customer_id"))),
+        () => Seq(load("orders", orders, Seq("order_id")),
+          "orders_quarantine" -> quarantined.get("n").asInstanceOf[Long]),
+        () => Seq(load("order_items", items, Seq("order_item_id"))),
+        () => Seq(load("products", products, Seq("product_id"))),
+        () => Seq(load("product_categories", categories, Seq("category_id"))),
+        // -- dim_time: truncate-then-load (reference `workflow.py:47-106`)
+        () => Seq("dim_time" -> Writers.overwrite(DimTime(spark, cfg.dimStart, cfg.dimEnd), path("dim_time"))))
+      Session.runAll(spark, sinks).flatten.toMap
+    } finally parsed.foreach(_.unpersist())
   }
 
   /** reference `workflow.py:152-184` on the e-commerce schema. */

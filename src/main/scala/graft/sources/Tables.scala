@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -93,22 +93,26 @@ object Tables {
   */
 object Writers {
 
-  /** Full-refresh load (TRUNCATE + INSERT analog, SURVEY §2.1 S6). */
-  def overwrite(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
+  /** Full-refresh load (TRUNCATE + INSERT analog, SURVEY §2.1 S6); returns
+    * the rows written, counted by the write itself. */
+  def overwrite(df: DataFrame, path: String): Long =
+    counted(df)(_.write.mode(SaveMode.Overwrite).parquet(path))
 
   /** Idempotent PK append (ON CONFLICT DO NOTHING analog, SURVEY §2.1 S5):
     * dedup the incoming batch on the PK, then anti-join against what is
     * already at `path` so a re-run inserts nothing. First-writer-wins, like
-    * the reference. */
-  def idempotentAppend(spark: SparkSession, df: DataFrame, path: String, pk: Seq[String]): Unit = {
+    * the reference. Returns the table's row count after the append: the
+    * rows already there, counted on the key read (footer row counts, no
+    * column is decoded), plus the rows appended, counted by the write. The
+    * key read uses the PK columns' known types, so no schema-inference job
+    * runs. */
+  def idempotentAppend(spark: SparkSession, df: DataFrame, path: String, pk: Seq[String]): Long = {
     val incoming = df.dropDuplicates(pk)
-    val toWrite =
-      if (pathExists(spark, path)) {
-        val existing = spark.read.parquet(path).select(pk.map(col): _*)
-        incoming.join(existing, pk, "left_anti")
-      } else incoming
-    toWrite.write.mode(SaveMode.Append).parquet(path)
+    def append(d: DataFrame): Long = counted(d)(_.write.mode(SaveMode.Append).parquet(path))
+    if (pathExists(spark, path)) {
+      val existing = spark.read.schema(StructType(pk.map(df.schema(_)))).parquet(path)
+      existing.count() + append(incoming.join(existing, pk, "left_anti"))
+    } else append(incoming)
   }
 
   /** Recompute-one-slice maintenance (the plpgsql
@@ -122,6 +126,15 @@ object Writers {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .parquet(path)
+
+  /** Runs `write` on `df` with a row count fused into it (`Dataset.observe`
+    * on the frame being written, the only place an observation is sure to
+    * report) and returns that count. */
+  private def counted(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = Observation()
+    write(df.observe(rows, count(lit(1)).as("n")))
+    rows.get("n").asInstanceOf[Long]
+  }
 
   private def pathExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)

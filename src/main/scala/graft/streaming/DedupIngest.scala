@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.Session
@@ -80,6 +81,16 @@ object DedupIngest {
     (newSh, newBands, pairs)
   }
 
+  /** Frees the blocks of every `localCheckpoint` a frame's plan scans.
+    * `Dataset.unpersist` does not: a checkpoint is an RDD the plan reads
+    * (`LogicalRDD`), not a cached plan. Only for frames whose checkpoints
+    * are their own, as a trigger's are. */
+  private def releaseCheckpoints(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
   /** Run the ingest stream to completion and return ONE materialized row:
     * `(n_docs, pairs_nonempty, match_full)` where `match_full` is the
     * streamed-pairs ≡ whole-corpus-operator equality (both directions,
@@ -144,7 +155,7 @@ object DedupIngest {
           val (newSh, newBands, pairs) = triggerPairs(batch, bandsSnap, shSnap, nPart, nSub)
           // one file per bucket dir per trigger: the append is tiny and
           // per-task dynamic-partition fan-out would 16× the file count
-          Session.runAll(s, Seq(
+          try Session.runAll(s, Seq(
             () => Dedup.withBandLayout(newBands, nPart, nSub)
               .coalesce(1).write.partitionBy(bandPartCols: _*)
               .mode("append").parquet(bandDir.toString),
@@ -152,6 +163,7 @@ object DedupIngest {
               .coalesce(1).write.partitionBy(shPartCols: _*).mode("append")
               .parquet(shDir.toString),
             () => pairs.write.mode("append").parquet(pairDir.toString)))
+          finally Seq(newSh, newBands, pairs).foreach(releaseCheckpoints)
           ()
         })
 

@@ -8,24 +8,31 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graftshim.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.clean.Cleaning
 import graft.etl.Pipeline
-import graft.sources.Writers
+import graft.schema.Schemas
+import graft.sources.{Tables, Writers}
 
 /** End-to-end runs of the reference workflow: over a small hand-made CSV
   * set the spec writes itself, and over the reference's own shipped CSVs
   * (skipped where they are absent; row counts follow BASELINE.md's counted
   * values). */
-class PipelineSpec extends AnyFunSuite with SparkSpec {
+class PipelineSpec extends AnyFunSuite with SparkSpec with TempDirs {
   import spark.implicits._
 
   private val csvDir = "/root/reference/ecommerce_data"
 
   test("full reference ETL over the shipped CSVs") {
     assume(new java.io.File(s"$csvDir/orders.csv").exists())
-    val wh = Files.createTempDirectory("graft-wh").toString
+    val wh = tempDir("graft-wh").toString
     val counts = Pipeline.run(spark, Pipeline.Config(csvDir, wh))
 
     assert(counts("product_categories") == 500)
@@ -116,7 +123,7 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
       "1005,105,10,2,100.00,0.00,200.00"))
 
   private def writeCsvs(tables: Map[String, Seq[String]]): String = {
-    val dir = Files.createTempDirectory("graft-csv")
+    val dir = tempDir("graft-csv")
     tables.foreach { case (name, lines) =>
       Files.write(dir.resolve(s"$name.csv"), lines.asJava)
     }
@@ -127,7 +134,7 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     Pipeline.Config(csvDir, wh.toString, dimStart = "2023-01-01", dimEnd = "2023-01-31")
 
   test("load, replay and incremental over a hand-made CSV set") {
-    val wh = Files.createTempDirectory("graft-wh")
+    val wh = tempDir("graft-wh")
     val baseDir = writeCsvs(base)
     val incrDir = writeCsvs(base.map { case (t, lines) => t -> (lines ++ newDay.getOrElse(t, Nil)) })
 
@@ -178,9 +185,79 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     assert(math.abs(totalDaily - totalItems) < 0.005)
   }
 
+  /** The CSV scan nodes of every execution a listener sees, those under a
+    * cached relation included, each node once; with the rows each
+    * produced, a CSV parsed twice shows as two nodes or twice its rows. */
+  private class CsvScans extends QueryExecutionListener {
+    private val seen = mutable.ArrayBuffer[FileSourceScanExec]()
+    private def walk(p: SparkPlan): Unit = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+      case f: FileSourceScanExec if f.relation.fileFormat.isInstanceOf[CSVFileFormat] =>
+        if (!seen.exists(_ eq f)) seen += f
+      case o => (o.children ++ o.subqueries).foreach(walk)
+    }
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      synchronized(walk(qe.executedPlan))
+    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    /** file name -> (scan nodes, rows they produced) */
+    def byFile: Map[String, (Int, Long)] = synchronized {
+      seen.toSeq.groupBy(_.relation.location.rootPaths.head.getName).map { case (f, ns) =>
+        f -> (ns.size, ns.map(_.metrics("numOutputRows").value).sum)
+      }
+    }
+  }
+
+  /** One `Pipeline.run` call of [[threeCalls]]: its CSV tables, what it
+    * returned and the CSV scans it ran. */
+  private final case class Call(
+      name: String, csvDir: String, tables: Map[String, Seq[String]], wh: Path,
+      counts: Map[String, Long], scans: Map[String, (Int, Long)])
+
+  /** Runs load, replay and incremental on one warehouse, handing each call
+    * to `check` as soon as it returns. */
+  private def threeCalls(check: Call => Unit): Unit = {
+    val sc = spark.sparkContext
+    val wh = tempDir("graft-wh")
+    val incr = base.map { case (t, lines) => t -> (lines ++ newDay.getOrElse(t, Nil)) }
+    Seq(("load", base), ("replay", base), ("incremental", incr)).foreach { case (name, tables) =>
+      val dir = writeCsvs(tables)
+      val scans = new CsvScans
+      ListenerBusDrain(sc)
+      spark.listenerManager.register(scans)
+      val counts =
+        try Pipeline.run(spark, cfg(dir, wh))
+        finally { ListenerBusDrain(sc); spark.listenerManager.unregister(scans) }
+      check(Call(name, dir, tables, wh, counts, scans.byFile))
+    }
+  }
+
+  test("each call releases what it persists") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    threeCalls(c => assert(sc.getPersistentRDDs.keySet == before, c.name))
+  }
+
+  test("every returned count equals a fresh read of its table, and each CSV is parsed once per call") {
+    threeCalls { c =>
+      // the read-back definition of a table's count
+      c.counts.removed("orders_quarantine").foreach { case (t, n) =>
+        assert(spark.read.parquet(c.wh.resolve(t).toString).count() == n, s"${c.name} $t")
+      }
+      val (_, rejected) = Cleaning.validateDomain(
+        Cleaning.dropNullRows(Tables.csv(spark, s"${c.csvDir}/orders.csv", Schemas.orders),
+          Seq("order_id", "customer_id", "order_date")),
+        "status", Schemas.orderStatusDomain)
+      assert(c.counts("orders_quarantine") == rejected.count(), c.name)
+      // one scan node per CSV, producing each of its data lines once
+      assert(c.scans == c.tables.map { case (t, lines) => s"$t.csv" -> (1, lines.size - 1L) }, c.name)
+    }
+  }
+
   test("a failing sink's own exception reaches the caller after every sink has stopped") {
     val sc = spark.sparkContext
-    val wh = Files.createTempDirectory("graft-wh")
+    val wh = tempDir("graft-wh")
     val blocker = wh.resolve("product_categories")
     Files.write(blocker, Seq("not parquet").asJava)
     val csvDir = writeCsvs(base)
@@ -222,7 +299,7 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
 
   test("every job of a run carries the caller's job group and description") {
     val sc = spark.sparkContext
-    val wh = Files.createTempDirectory("graft-wh")
+    val wh = tempDir("graft-wh")
     val csvDir = writeCsvs(base)
     val props = new ConcurrentLinkedQueue[java.util.Properties]()
     val listener = new SparkListener {

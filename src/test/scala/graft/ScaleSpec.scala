@@ -14,7 +14,7 @@ import graft.transform.Transforms
   * so a regression (lost pushdown, broadcast that stopped firing, top-k
   * degrading to a global sort) fails the build instead of surfacing as a
   * 100× slowdown on a cluster. */
-class ScaleSpec extends AnyFunSuite with SparkSpec {
+class ScaleSpec extends AnyFunSuite with SparkSpec with TempDirs {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
@@ -202,7 +202,7 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
   test("IVF cells partition-prune at rest (a probe reads nProbe/nLists of the data)") {
     val emb = Tables.embeddings(spark, sf)
     val index = graft.operators.IvfIndex.build(spark, emb, nLists = 4)
-    val dir = Files.createTempDirectory("graft-ivf").toString
+    val dir = tempDir("graft-ivf").toString
     index.assigned.write.mode("overwrite").partitionBy("cell_id").parquet(dir)
     val read = spark.read.parquet(dir).filter($"cell_id" === 1)
     val leaf = read.queryExecution.executedPlan.collectLeaves().head.toString
@@ -405,7 +405,7 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
     val docs = Tables.documents(spark, sf)
     val accepted = Dedup.shingleSets(docs.filter($"doc_id" % 5 =!= 0), n = 3)
     val (n1, n2) = (4, 3) // forced two-level: stands in for past-cap scale
-    val dir = Files.createTempDirectory("graft-bands2lvl").toString
+    val dir = tempDir("graft-bands2lvl").toString
     Dedup.withBandLayout(Dedup.bandRows(accepted), n1, n2)
       .write.mode("overwrite").partitionBy("pbkt", "sbb").parquet(dir)
     val atRest = spark.read.parquet(dir)
@@ -454,7 +454,7 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
     // past-cap shape: level one NOT 16) — pairs must still equal the
     // flat index when the caller passes the written layout
     val (m1, m2) = (8, 2)
-    val dir2 = Files.createTempDirectory("graft-bands2lvl8").toString
+    val dir2 = tempDir("graft-bands2lvl8").toString
     Dedup.withBandLayout(Dedup.bandRows(accepted), m1, m2)
       .write.mode("overwrite").partitionBy("pbkt", "sbb").parquet(dir2)
     val pruned8 = Dedup.minHashIncrementalPairs(batch,
@@ -902,7 +902,7 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
     import graft.operators.Pq
     val emb = Tables.embeddings(spark, sf)
     val idx = Pq.buildIvfPq(spark, emb, dims = 64, nLists = 4, m = 8, ksub = 16)
-    val dir = Files.createTempDirectory("graft-ivfpq").toString
+    val dir = tempDir("graft-ivfpq").toString
     idx.encoded.write.mode("overwrite").partitionBy("cell_id").parquet(dir)
     val atRest = Pq.IvfPqIndex(spark.read.parquet(dir), idx.ivfCents, idx.cb)
     val q = emb.filter($"vec_id" < 2)
@@ -925,7 +925,7 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
     import graft.operators.Dedup
     val docs = Tables.documents(spark, sf)
     val accepted = Dedup.shingleSets(docs.filter($"doc_id" % 5 =!= 0), n = 3)
-    val dir = Files.createTempDirectory("graft-bands").toString
+    val dir = tempDir("graft-bands").toString
     Dedup.bandRows(accepted).withColumn("pbkt", Dedup.bandPartition())
       .write.mode("overwrite").partitionBy("pbkt").parquet(dir)
     val atRest = spark.read.parquet(dir)
@@ -949,11 +949,11 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
     import graft.operators.Dedup
     val docs = Tables.documents(spark, sf)
     val accepted = Dedup.shingleSets(docs.filter($"doc_id" % 5 =!= 0), n = 3)
-    val bandDir = Files.createTempDirectory("graft-bands2").toString
+    val bandDir = tempDir("graft-bands2").toString
     Dedup.bandRows(accepted).withColumn("pbkt", Dedup.bandPartition())
       .write.mode("overwrite").partitionBy("pbkt").parquet(bandDir)
     val atRestBands = spark.read.parquet(bandDir)
-    val shDir = Files.createTempDirectory("graft-shstore").toString
+    val shDir = tempDir("graft-shstore").toString
     accepted.withColumn("sbkt", Dedup.shinglePartition($"doc_id"))
       .write.mode("overwrite").partitionBy("sbkt").parquet(shDir)
     val atRestSh = spark.read.parquet(shDir)
@@ -978,12 +978,12 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
     import graft.operators.Dedup
     val docs = Tables.documents(spark, sf)
     val accepted = Dedup.shingleSets(docs.filter($"doc_id" % 5 =!= 0), n = 3)
-    val bandDir = Files.createTempDirectory("graft-bands3").toString
+    val bandDir = tempDir("graft-bands3").toString
     Dedup.bandRows(accepted).withColumn("pbkt", Dedup.bandPartition())
       .write.mode("overwrite").partitionBy("pbkt").parquet(bandDir)
     val atRestBands = spark.read.parquet(bandDir)
     val (m1, m2) = (4, 3) // forced two-level: the past-cap verify shape
-    val shDir = Files.createTempDirectory("graft-shstore2lvl").toString
+    val shDir = tempDir("graft-shstore2lvl").toString
     Dedup.withShingleLayout(accepted, m1, m2)
       .write.mode("overwrite").partitionBy("sbkt", "ssb").parquet(shDir)
     val atRestSh = spark.read.parquet(shDir)
@@ -1054,7 +1054,7 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
         .collect()
       b.map(r => (r.getLong(2) - r.getLong(1) + 1).toDouble / domain).sum / b.length
     }
-    val dir = Files.createTempDirectory("graft-zcompact").toString
+    val dir = tempDir("graft-zcompact").toString
     Layout.writeClustered(df, s"$dir/z1", numFiles = 16, "x", "y")
     Layout.writeClustered(df, s"$dir/z2", numFiles = 16, "x", "y")
     val bytes = new java.io.File(s"$dir/z1").listFiles()
@@ -1076,7 +1076,7 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
 
   test("partitioned compaction rewrites fragmented leaves concurrently") {
     import graft.operators.Layout
-    val root = Files.createTempDirectory("graft-leafpar").toString
+    val root = tempDir("graft-leafpar").toString
     // 6 leaves × 5 small files each
     spark.range(6000)
       .select(($"id" % 6).as("p"), $"id".as("v"))
@@ -1112,7 +1112,7 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("year-partitioned writes prune partitions on read") {
-    val dir = Files.createTempDirectory("graft-part").toString
+    val dir = tempDir("graft-part").toString
     Tables.orders(spark, sf)
       .withColumn("o_year", year($"o_orderdate"))
       .write.mode("overwrite").partitionBy("o_year").parquet(dir)
@@ -1128,7 +1128,7 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
     // small FILTERED dim — Spark must inject the dim's build-side values
     // as a runtime partition filter (DPP), so the fact scan reads only
     // the matching partitions instead of all of them.
-    val dir = Files.createTempDirectory("graft-dpp").toString
+    val dir = tempDir("graft-dpp").toString
     Tables.orders(spark, sf)
       .withColumn("o_year", year($"o_orderdate"))
       .write.mode("overwrite").partitionBy("o_year").parquet(dir)
@@ -1136,7 +1136,7 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
     // the dim must be a real source — a LocalRelation's filter gets
     // constant-folded away before the DPP rule checks for a selective
     // predicate on the build side
-    val dimDir = Files.createTempDirectory("graft-dpp-dim").toString
+    val dimDir = tempDir("graft-dpp-dim").toString
     Seq((1996, "keep"), (1997, "drop")).toDF("d_year", "tag")
       .write.mode("overwrite").parquet(dimDir)
     val dim = spark.read.parquet(dimDir)
@@ -1247,7 +1247,7 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
     val yBack = (0 until 16).map(i => ((k >> (2 * i + 1)) & 1L) << i).sum
     assert(xBack == key.getLong(1) && yBack == key.getLong(2))
 
-    val dir = Files.createTempDirectory("graft-zorder").toString
+    val dir = tempDir("graft-zorder").toString
     Layout.writeClustered(df, s"$dir/z", numFiles = 16, "x", "y")
     df.repartitionByRange(16, $"x").sortWithinPartitions($"x")
       .write.mode("overwrite").parquet(s"$dir/linear")

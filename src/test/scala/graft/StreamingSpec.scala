@@ -19,7 +19,7 @@ import graft.sources.Writers
 import graft.streaming.{EventStreams, Replay}
 import graft.streaming.EventStreams.Event
 
-class StreamingSpec extends AnyFunSuite with SparkSpec {
+class StreamingSpec extends AnyFunSuite with SparkSpec with TempDirs {
   import spark.implicits._
 
   private def ev(id: Long, t: String, user: Long, v: Double) =
@@ -115,7 +115,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("writers: idempotent append and dynamic partition overwrite") {
-    val dir = Files.createTempDirectory("graft-writers").toString
+    val dir = tempDir("graft-writers").toString
     val t1 = s"$dir/t1"
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     Writers.idempotentAppend(spark, df, t1, Seq("id"))
@@ -140,7 +140,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   test("JSON-lines source round-trips with an explicit schema") {
     // third source format next to parquet and CSV; schema is declared (no
     // inference pass — one scan, deterministic types)
-    val dir = Files.createTempDirectory("graft-jsonl").toString
+    val dir = tempDir("graft-jsonl").toString
     val df = Seq((1L, "alpha", 1.5), (2L, "beta", -2.0), (3L, null.asInstanceOf[String], 0.0))
       .toDF("id", "name", "score")
     df.write.mode("overwrite").json(dir)
