@@ -13,7 +13,8 @@ seed i on both sides, the base first when i is odd and the working tree
 first when i is even, so a drift of the host over the run does not
 favour one side. ``--aa`` runs the base against a second archive of itself
 (an A/A check of the pairing: wins should be near N/2 and the ratios near
-1). Each side builds itself once (``run.py`` caches its build).
+1). Each side builds itself once (``run.py`` caches its build). Every run
+lasts ``BENCHMARK.json``'s ``run_seconds``.
 
 It prints, for every end-to-end metric of ``BENCHMARK.json``, the per-pair
 ratios (working tree / base), how many pairs the working tree won, a
@@ -51,7 +52,7 @@ def archive(rev, dest):
 
 
 def run(root, workload, seed, seconds):
-    """One `run.py --trace 0` in `root`: (result line, perfbench line)."""
+    """One `run.py --trace 0` of `seconds` in `root`: (result line, perfbench line)."""
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
                         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
                        cwd=root, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
@@ -82,7 +83,6 @@ def main():
     ap.add_argument("--pairs", type=int, required=True)
     ap.add_argument("--scratch", required=True, help="directory for the base archive and results")
     ap.add_argument("--base", default="HEAD", help="git revision of the base side")
-    ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--aa", action="store_true", help="run the base against a copy of itself")
     a = ap.parse_args()
 
@@ -95,7 +95,8 @@ def main():
     else:
         change = ROOT
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        declared = json.load(f)["end_to_end"]
+        bench = json.load(f)
+    declared, seconds = bench["end_to_end"], bench["run_seconds"]
 
     runs = []
     for seed in range(1, a.pairs + 1):
@@ -104,7 +105,7 @@ def main():
             order.reverse()
         pair = {"seed": seed, "first": order[0][0]}
         for side, root in order:
-            res, info = run(root, a.workload, seed, a.seconds)
+            res, info = run(root, a.workload, seed, seconds)
             pair[side] = {"correct": res["correct"], "failed": res["failed"],
                           "cpu_steal_share": info.get("cpu_steal_share"),
                           "metrics": {k: v["value"] for k, v in res["metrics"].items()}}

@@ -25,9 +25,10 @@ object Cleaning {
 
   /** Enum-domain validation (Postgres enum analog). Returns (valid rows,
     * quarantined rows) — cleaning keeps rejects inspectable instead of
-    * silently dropping them. */
+    * silently dropping them. [[domainFlag]] decides the split, so a count
+    * of `!domainFlag` counts the quarantined rows. */
   def validateDomain(df: DataFrame, c: String, domain: Seq[String]): (DataFrame, DataFrame) = {
-    val ok = col(c).isInCollection(domain)
+    val ok = domainFlag(col(c), domain)
     (df.filter(ok), df.filter(!ok))
   }
 

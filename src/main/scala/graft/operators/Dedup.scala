@@ -70,9 +70,12 @@ object Dedup {
     // projection) — bounded: the cpuWide gate only ever materializes
     // < p·maxPartitionBytes of raw rows (it returns wide scans
     // untouched), and Bench unpersists blocks between queries.
-    Widen.cpuWide(documents)
-      .select(col("doc_id"), sortedShingleHashes(col("text"), n).as("sh"))
-      .localCheckpoint(false)
+    shingleRows(Widen.cpuWide(documents), n).localCheckpoint(false)
+
+  /** [[shingleSets]]'s projection alone: not widened, not checkpointed,
+    * so its schema (the shingle table's) is known without a job. */
+  def shingleRows(documents: DataFrame, n: Int): DataFrame =
+    documents.select(col("doc_id"), sortedShingleHashes(col("text"), n).as("sh"))
 
   /** The same shingle set collapsed to sorted 64-bit hashes, after which
     * every downstream comparison (MinHash permutations, exact set

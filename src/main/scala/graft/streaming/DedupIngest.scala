@@ -81,15 +81,18 @@ object DedupIngest {
     (newSh, newBands, pairs)
   }
 
-  /** Frees the blocks of every `localCheckpoint` a frame's plan scans.
-    * `Dataset.unpersist` does not: a checkpoint is an RDD the plan reads
-    * (`LogicalRDD`), not a cached plan. Only for frames whose checkpoints
-    * are their own, as a trigger's are. */
-  private def releaseCheckpoints(df: DataFrame): Unit =
-    df.queryExecution.logical.foreach {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+  /** Frees the blocks of each `localCheckpoint` that `frames` scan and
+    * whose RDD is not in `kept`: given the session's persisted RDD ids
+    * from before a trigger planned `frames`, only the checkpoints that
+    * trigger made are released, never a shared or earlier frame's.
+    * `Dataset.unpersist` does not free them: a checkpoint is an RDD the
+    * plan reads (`LogicalRDD`), not a cached plan. */
+  private def releaseCheckpoints(frames: Seq[DataFrame], kept: collection.Set[Int]): Unit =
+    frames.foreach(_.queryExecution.logical.foreach {
+      case r: LogicalRDD if r.rdd.getStorageLevel.isValid && !kept.contains(r.rdd.id) =>
+        r.rdd.unpersist(blocking = false)
       case _ =>
-    }
+    })
 
   /** Run the ingest stream to completion and return ONE materialized row:
     * `(n_docs, pairs_nonempty, match_full)` where `match_full` is the
@@ -129,16 +132,14 @@ object DedupIngest {
     val bandDir = new java.io.File(out, "bands")
     val shDir = new java.io.File(out, "shingles")
     val pairDir = new java.io.File(out, "pairs")
-    // sink schemas, derived lazily from the table schema (no jobs).
+    // sink schemas, derived lazily from the table schema (no jobs, and
+    // no checkpoint left registered).
     // The shingle store rests partitioned by sbkt (shinglePartition) so
     // the verify join-back prunes to candidate-held partitions — the
     // same at-rest posture as the band index's pbkt.
-    val shSchema = Dedup.withShingleLayout(
-      Dedup.shingleSets(Tables.documents(spark, dir).limit(0), n = 3),
-      nPart, nSub).schema
-    val bandSchema = Dedup.withBandLayout(
-      Dedup.bandRows(Tables.documents(spark, dir).limit(0)
-        .transform(Dedup.shingleSets(_, n = 3))), nPart, nSub).schema
+    val shRows = Dedup.shingleRows(Tables.documents(spark, dir).limit(0), n = 3)
+    val shSchema = Dedup.withShingleLayout(shRows, nPart, nSub).schema
+    val bandSchema = Dedup.withBandLayout(Dedup.bandRows(shRows), nPart, nSub).schema
     val (bandPartCols, shPartCols) = partitionCols(nSub)
 
     try Session.withConf(spark, StreamConf.MonitorWidth) {
@@ -152,6 +153,7 @@ object DedupIngest {
           val pinnedBands = Replay.listParquet(bandDir).toSet
           val bandsSnap = Replay.snapshotRead(s, bandDir, bandSchema, pinnedBands.toSeq)
           val shSnap = Replay.snapshotRead(s, shDir, shSchema, Replay.listParquet(shDir))
+          val kept = s.sparkContext.getPersistentRDDs.keySet
           val (newSh, newBands, pairs) = triggerPairs(batch, bandsSnap, shSnap, nPart, nSub)
           // one file per bucket dir per trigger: the append is tiny and
           // per-task dynamic-partition fan-out would 16× the file count
@@ -163,7 +165,7 @@ object DedupIngest {
               .coalesce(1).write.partitionBy(shPartCols: _*).mode("append")
               .parquet(shDir.toString),
             () => pairs.write.mode("append").parquet(pairDir.toString)))
-          finally Seq(newSh, newBands, pairs).foreach(releaseCheckpoints)
+          finally releaseCheckpoints(Seq(newSh, newBands, pairs), kept)
           ()
         })
 

@@ -9,6 +9,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.graftshim.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ShuffledRowRDD
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, StreamingQueryListener}
@@ -16,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.CartesianGuard
 import graft.sources.Writers
-import graft.streaming.{EventStreams, Replay}
+import graft.streaming.{DedupIngest, EventStreams, Replay}
 import graft.streaming.EventStreams.Event
 
 class StreamingSpec extends AnyFunSuite with SparkSpec with TempDirs {
@@ -646,6 +647,21 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with TempDirs {
       assert(stray.isEmpty,
         s"run $id: ${stray.size} of ${groups.size} jobs carry job group ${stray.distinct}")
     }
+  }
+
+  test("a bench-form dedup ingest run leaves at most one widening barrier per trigger persisted") {
+    // each trigger releases the checkpoints its frames scan; what may stay
+    // is the Widen.cpuWide barrier under Dedup.shingleSets (a checkpoint
+    // straight over a round-robin shuffle), which none of those frames
+    // scans; the context cleaner frees it once it is garbage
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val row = DedupIngest.runStreamDedupIngest(spark, streamTables, assertFull = false).head()
+    assert(row.getBoolean(1))
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }.values
+    assert(left.size <= 2, left.map(_.toDebugString).mkString("\n"))
+    left.foreach(r =>
+      assert(r.dependencies.exists(_.rdd.isInstanceOf[ShuffledRowRDD]), r.toDebugString))
   }
 
   test("driver contract: entry returns rows on sf0.001") {
