@@ -4,6 +4,7 @@ against the working tree.
 
     python3 scripts/ab.py --workload etl_ingest --pairs 8 --scratch DIR [--base REV]
     python3 scripts/ab.py --workload etl_ingest --pairs 4 --scratch DIR --aa
+    python3 scripts/ab.py --workload stream_monitors --pairs 2 --scratch DIR --trace 1
 
 Run it from the root of a checkout. It puts a ``git archive`` of ``--base``
 (default ``HEAD``) under ``--scratch`` (kept, with its build, while
@@ -21,6 +22,12 @@ ratios (working tree / base), how many pairs the working tree won, a
 one-sided sign-test p-value, both medians and the base's interquartile
 range, as a markdown table; and each run's ``correct``, ``failed`` and
 ``cpu_steal_share``. The raw result lines go to ``--scratch/ab-<workload>.json``.
+
+With ``--trace 1`` every run is ``run.py --trace 1`` and the table lists
+``BENCHMARK.json``'s per-layer metrics instead: both sides' medians next to
+each other, and for the work counters (unit ``count`` or ``bytes``) a
+``DIFFERS`` flag when any pair reads a different value on the two sides.
+Timings are shown but not flagged.
 """
 import argparse
 import json
@@ -51,10 +58,10 @@ def archive(rev, dest):
         f.write(sha)
 
 
-def run(root, workload, seed, seconds):
-    """One `run.py --trace 0` of `seconds` in `root`: (result line, perfbench line)."""
+def run(root, workload, seed, seconds, trace):
+    """One `run.py` of `seconds` in `root`: (result line, perfbench line)."""
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
-                        "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+                        "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
                        cwd=root, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
@@ -84,6 +91,8 @@ def main():
     ap.add_argument("--scratch", required=True, help="directory for the base archive and results")
     ap.add_argument("--base", default="HEAD", help="git revision of the base side")
     ap.add_argument("--aa", action="store_true", help="run the base against a copy of itself")
+    ap.add_argument("--trace", type=int, choices=[0, 1], default=0,
+                    help="1: compare the per-layer metrics of traced runs")
     a = ap.parse_args()
 
     os.makedirs(a.scratch, exist_ok=True)
@@ -96,7 +105,7 @@ def main():
         change = ROOT
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    declared, seconds = bench["end_to_end"], bench["run_seconds"]
+    declared, seconds = bench["per_layer" if a.trace else "end_to_end"], bench["run_seconds"]
 
     runs = []
     for seed in range(1, a.pairs + 1):
@@ -105,18 +114,49 @@ def main():
             order.reverse()
         pair = {"seed": seed, "first": order[0][0]}
         for side, root in order:
-            res, info = run(root, a.workload, seed, seconds)
+            res, info = run(root, a.workload, seed, seconds, a.trace)
             pair[side] = {"correct": res["correct"], "failed": res["failed"],
                           "cpu_steal_share": info.get("cpu_steal_share"),
                           "metrics": {k: v["value"] for k, v in res["metrics"].items()}}
             print(f"ab: seed {seed} {side}: " + json.dumps(pair[side]), file=sys.stderr, flush=True)
         runs.append(pair)
-    with open(os.path.join(a.scratch, f"ab-{a.workload}.json"), "w") as f:
+    with open(os.path.join(a.scratch, f"ab-{a.workload}{'-trace' if a.trace else ''}.json"), "w") as f:
         json.dump(runs, f, indent=1)
 
     n = len(runs)
     label = "base copy" if a.aa else "change"
-    print(f"### `{a.workload}`: {n} alternating pairs, {label} vs `{a.base}`\n")
+    print(f"### `{a.workload}`: {n} alternating pairs{', traced' if a.trace else ''}, "
+          f"{label} vs `{a.base}`\n")
+    if a.trace:
+        layer_table(declared, runs, label)
+    else:
+        end_to_end_table(declared, runs, label)
+    print()
+    for side in ("base", "change"):
+        ok = all(r[side]["correct"] and r[side]["failed"] == 0 for r in runs)
+        steal = [r[side]["cpu_steal_share"] or 0.0 for r in runs]
+        print(f"- {side if side == 'base' else label}: correct and 0 failed in every run: {ok}; "
+              f"cpu_steal_share {min(steal):.3f}..{max(steal):.3f}")
+
+
+def layer_table(declared, runs, label):
+    """Per-layer metrics side by side; work counters that differ in any pair flagged."""
+    print("| Metric | Unit | Base (seeds 1..) | " + label.capitalize() + " (seeds 1..) "
+          "| Base median | " + label.capitalize() + " median | Flag |")
+    print("|---|---|---|---|---|---|---|")
+    for m in declared:
+        k = m["name"]
+        b = [r["base"]["metrics"][k] for r in runs]
+        c = [r["change"]["metrics"][k] for r in runs]
+        work = m["unit"] in ("count", "bytes")
+        flag = "DIFFERS" if work and any(x != y for x, y in zip(b, c)) else ""
+        print(f"| `{k}` | {m['unit']} | {' '.join(f'{x:g}' for x in b)} | {' '.join(f'{y:g}' for y in c)} "
+              f"| {quantile(b, 0.5):g} | {quantile(c, 0.5):g} | {flag} |")
+
+
+def end_to_end_table(declared, runs, label):
+    """End-to-end metrics: per-pair ratios, wins, sign test, medians, base IQR."""
+    n = len(runs)
     print("| Metric | Ratios (" + label + " / base, seeds 1.." + str(n) + ") | Wins | Sign p "
           "| Base median | Base IQR | " + label.capitalize() + " median | Median ratio |")
     print("|---|---|---|---|---|---|---|---|")
@@ -131,12 +171,6 @@ def main():
         iqr = quantile(b, 0.75) - quantile(b, 0.25)
         print(f"| `{k}` | {' '.join(f'{r:.3f}' for r in ratios)} | {wins}/{n} | {sign_p(wins, n):.3f} "
               f"| {mb:.3f} | {iqr:.3f} | {mc:.3f} | {mc / mb if mb else float('nan'):.3f} |")
-    print()
-    for side in ("base", "change"):
-        ok = all(r[side]["correct"] and r[side]["failed"] == 0 for r in runs)
-        steal = [r[side]["cpu_steal_share"] or 0.0 for r in runs]
-        print(f"- {side if side == 'base' else label}: correct and 0 failed in every run: {ok}; "
-              f"cpu_steal_share {min(steal):.3f}..{max(steal):.3f}")
 
 
 if __name__ == "__main__":

@@ -1,6 +1,7 @@
 package graft
 package contract
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -10,6 +11,19 @@ import Common._
 /** Label quality and calibration: rater agreement, conformal gates,
   * isotonic calibration and classifier metrics. */
 private[contract] object CalibrationQueries {
+
+  /** The rater frame every calibration plan reads: `doc_id`, the `extra`
+    * documents columns, the LR `quality` probability and its `keep`
+    * decision, and the curation audit's `kept` verdict — from ONE fused
+    * text-kernel pass ([[graft.operators.Curation.qualityKeptRaw]], pinned
+    * row-identical to `qualityScoreRaw ⋈ curationAuditRaw` by
+    * CurationSpec). It stands in for that join on `doc_id` (and the
+    * documents join for `extra`) because `doc_id` is the documents key:
+    * unique and non-null in every documents table the plans read (the
+    * sf0.001/sf0.01/sf0.1 testdata sets, and `np.arange` ids in
+    * perfbench's generator), so each join matched every row once. */
+  private def raters(s: SparkSession, d: String, extra: String*): DataFrame =
+    graft.operators.Curation.qualityKeptRaw(Tables.documents(s, d), extra = extra)
 
   /** Shared rater-join CTE prefix for the calibration family: the LR
     * quality probability joined with the curation-audit label, both
@@ -298,13 +312,8 @@ private[contract] object CalibrationQueries {
     // audit kept) — chance-corrected gate agreement: can the cheap gate
     // stand in for the expensive one? Exact N²-scaled integer algebra,
     // one double division over the guarded cell fold.
-    Query("q_cohen_kappa", Batch, (s, d) => {
-      val q = graft.operators.Curation.qualityScoreRaw(Tables.documents(s, d))
-        .select(col("doc_id"), col("keep"))
-      val a = graft.operators.Curation.curationAuditRaw(Tables.documents(s, d))
-        .select(col("doc_id"), (col("reason") === "kept").as("kept"))
-      graft.operators.Robust.cohenKappa(q.join(a, "doc_id"), col("keep"), col("kept"))
-    },
+    Query("q_cohen_kappa", Batch, (s, d) =>
+      graft.operators.Robust.cohenKappa(raters(s, d), col("keep"), col("kept")),
       // Both rater CTEs are the existing oracles (nested-CTE reuse, the
       // fdr pattern); kappa = (N·D − Σ row·col)/(N² − Σ row·col) in HUGEINT.
       cohenKappaSql),
@@ -312,14 +321,8 @@ private[contract] object CalibrationQueries {
     // Calibration bins of the LR quality probability against the curation
     // label — over-confidence audit before the score is used as a
     // sampling weight (exact decimal per-bin means, integer rates).
-    Query("q_calibration", Batch, (s, d) => {
-      val q = graft.operators.Curation.qualityScoreRaw(Tables.documents(s, d))
-        .select(col("doc_id"), col("quality"))
-      val a = graft.operators.Curation.curationAuditRaw(Tables.documents(s, d))
-        .select(col("doc_id"), (col("reason") === "kept").as("kept"))
-      graft.operators.Robust.calibrationBins(
-        q.join(a, "doc_id"), col("quality"), col("kept"))
-    },
+    Query("q_calibration", Batch, (s, d) =>
+      graft.operators.Robust.calibrationBins(raters(s, d), col("quality"), col("kept")),
       // Same rater CTEs; DECIMAL(8,6) recovers the 6-dp score exactly, the
       // per-bin mean is an exact decimal sum, rates pure integers.
       (raterJoinCte +
@@ -336,17 +339,9 @@ private[contract] object CalibrationQueries {
     // length gate) — the multi-rater chance-corrected agreement pairwise
     // Cohen's kappa can't see. One pass: per-doc vote count k, three
     // exact integers (N, Σk, Σ pair-agreements), DECIMAL(38,0) algebra.
-    Query("q_fleiss_kappa", Batch, (s, d) => {
-      val docs = Tables.documents(s, d)
-      val q = graft.operators.Curation.qualityScoreRaw(docs)
-        .select(col("doc_id"), col("keep"))
-      val a = graft.operators.Curation.curationAuditRaw(docs)
-        .select(col("doc_id"), (col("reason") === "kept").as("kept"))
-      val l = docs.select(col("doc_id"), (col("n_chars") >= 300).as("long_enough"))
-      graft.operators.Robust.fleissKappa(
-        q.join(a, "doc_id").join(l, "doc_id"),
-        Seq(col("keep"), col("kept"), col("long_enough")))
-    },
+    Query("q_fleiss_kappa", Batch, (s, d) =>
+      graft.operators.Robust.fleissKappa(raters(s, d, "n_chars"),
+        Seq(col("keep"), col("kept"), col("n_chars") >= 300)),
       // Fleiss: the three rater CTEs (LR keep + curation kept + length
       // gate), per-doc vote count, then the exact HUGEINT κ algebra.
       fleissKappaSql),
@@ -355,15 +350,9 @@ private[contract] object CalibrationQueries {
     // calibration/test split, exact ⌈(n+1)·0.9⌉-th order statistic of
     // the nonconformity scores via the two-level scan, then the
     // distribution-free coverage + set-size audit on the held-out half.
-    Query("q_conformal_gate", Batch, (s, d) => {
-      val docs = Tables.documents(s, d)
-      val q = graft.operators.Curation.qualityScoreRaw(docs)
-        .select(col("doc_id"), col("quality"))
-      val a = graft.operators.Curation.curationAuditRaw(docs)
-        .select(col("doc_id"), (col("reason") === "kept").as("kept"))
-      graft.operators.Robust.conformalGate(
-        q.join(a, "doc_id"), col("doc_id"), col("quality"), col("kept"))
-    },
+    Query("q_conformal_gate", Batch, (s, d) =>
+      graft.operators.Robust.conformalGate(raters(s, d),
+        col("doc_id"), col("quality"), col("kept")),
       // Conformal replay: doc-id-parity split, window rank pick of the
       // nonconformity order statistic, max()-folded scalars so the empty
       // test half still yields the operator's single row.
@@ -392,16 +381,9 @@ private[contract] object CalibrationQueries {
 
     // Mondrian (group-conditional) conformal: a separate q̂ per source so
     // the coverage guarantee holds per source, not just marginally.
-    Query("q_conformal_by_source", Batch, (s, d) => {
-      val docs = Tables.documents(s, d)
-      val q = graft.operators.Curation.qualityScoreRaw(docs)
-        .select(col("doc_id"), col("quality"))
-      val a = graft.operators.Curation.curationAuditRaw(docs)
-        .select(col("doc_id"), (col("reason") === "kept").as("kept"))
-      graft.operators.Robust.conformalGateBy(
-        q.join(a, "doc_id").join(docs.select(col("doc_id"), col("source")), "doc_id"),
-        col("doc_id"), col("quality"), col("kept"), "source")
-    },
+    Query("q_conformal_by_source", Batch, (s, d) =>
+      graft.operators.Robust.conformalGateBy(raters(s, d, "source"),
+        col("doc_id"), col("quality"), col("kept"), "source"),
       // Mondrian replay: source partitioning the split, the rank window,
       // and every fold; calibration-side-driven LEFT JOINs keep test-less
       // sources as (n_test = 0, NULL coverage) rows.
@@ -410,48 +392,26 @@ private[contract] object CalibrationQueries {
     // Grouped Fleiss: is the panel's agreement uniform across sources?
     // The segment rides the one aggregation's key; unanimous sources
     // keep their row with NULL kappa.
-    Query("q_fleiss_kappa_by_source", Batch, (s, d) => {
-      val docs = Tables.documents(s, d)
-      val q = graft.operators.Curation.qualityScoreRaw(docs)
-        .select(col("doc_id"), col("keep"))
-      val a = graft.operators.Curation.curationAuditRaw(docs)
-        .select(col("doc_id"), (col("reason") === "kept").as("kept"))
-      val l = docs.select(col("doc_id"), col("source"),
-        (col("n_chars") >= 300).as("long_enough"))
-      graft.operators.Robust.fleissKappaBy(
-        q.join(a, "doc_id").join(l, "doc_id"),
-        Seq(col("keep"), col("kept"), col("long_enough")), "source")
-    },
+    Query("q_fleiss_kappa_by_source", Batch, (s, d) =>
+      graft.operators.Robust.fleissKappaBy(raters(s, d, "source", "n_chars"),
+        Seq(col("keep"), col("kept"), col("n_chars") >= 300), "source"),
       // Grouped twins: source riding the aggregation keys / the PAV pools.
       fleissKappaBySql),
 
     // Per-source isotonic recalibration — each source gets its own
     // monotone fit (per-(source, bin) stats in one aggregation, per-
     // source exact-integer PAVA on the ≤ |sources|·10 collected rows).
-    Query("q_isotonic_by_source", Batch, (s, d) => {
-      val docs = Tables.documents(s, d)
-      val q = graft.operators.Curation.qualityScoreRaw(docs)
-        .select(col("doc_id"), col("quality"))
-      val a = graft.operators.Curation.curationAuditRaw(docs)
-        .select(col("doc_id"), (col("reason") === "kept").as("kept"))
-      graft.operators.Robust.isotonicCalibrationBy(
-        q.join(a, "doc_id").join(docs.select(col("doc_id"), col("source")), "doc_id"),
-        col("quality"), col("kept"), "source")
-    },
+    Query("q_isotonic_by_source", Batch, (s, d) =>
+      graft.operators.Robust.isotonicCalibrationBy(raters(s, d, "source"),
+        col("quality"), col("kept"), "source"),
       isotonicBySql),
 
     // Isotonic (PAV) recalibration of the same reliability bins — the
     // monotone remap that makes the over-confident LR score usable as a
     // sampling weight. Distributed work = the one ≤10-bin aggregation;
     // PAVA folds the collected stats with exact integer rate compares.
-    Query("q_isotonic_calibration", Batch, (s, d) => {
-      val q = graft.operators.Curation.qualityScoreRaw(Tables.documents(s, d))
-        .select(col("doc_id"), col("quality"))
-      val a = graft.operators.Curation.curationAuditRaw(Tables.documents(s, d))
-        .select(col("doc_id"), (col("reason") === "kept").as("kept"))
-      graft.operators.Robust.isotonicCalibration(
-        q.join(a, "doc_id"), col("quality"), col("kept"))
-    },
+    Query("q_isotonic_calibration", Batch, (s, d) =>
+      graft.operators.Robust.isotonicCalibration(raters(s, d), col("quality"), col("kept")),
       // Isotonic replay: the same bins, then ≤9 unrolled pool-adjacent-
       // violator merge stages (each stage: pool sums → lag compare on
       // exact integer cross-products → adopt the predecessor's pool id).
@@ -461,14 +421,8 @@ private[contract] object CalibrationQueries {
 
     // Brier score of the same pair — the one-number calibration metric
     // (exact decimal (q − y)² sums off the 6-dp score).
-    Query("q_brier", Batch, (s, d) => {
-      val q = graft.operators.Curation.qualityScoreRaw(Tables.documents(s, d))
-        .select(col("doc_id"), col("quality"))
-      val a = graft.operators.Curation.curationAuditRaw(Tables.documents(s, d))
-        .select(col("doc_id"), (col("reason") === "kept").as("kept"))
-      graft.operators.Robust.brierScore(
-        q.join(a, "doc_id"), col("quality"), col("kept"))
-    },
+    Query("q_brier", Batch, (s, d) =>
+      graft.operators.Robust.brierScore(raters(s, d), col("quality"), col("kept")),
       // Same rater CTEs; exact decimal (q − y)² sums, one double division.
       (raterJoinCte +
       """,
@@ -482,14 +436,8 @@ private[contract] object CalibrationQueries {
     // ROC AUC of the same pair — exact via the Mann–Whitney doubled-rank
     // algebra (AUC IS U/(n⁺·n⁻)); ranking quality where calibration
     // measures probability quality.
-    Query("q_auc", Batch, (s, d) => {
-      val q = graft.operators.Curation.qualityScoreRaw(Tables.documents(s, d))
-        .select(col("doc_id"), col("quality"))
-      val a = graft.operators.Curation.curationAuditRaw(Tables.documents(s, d))
-        .select(col("doc_id"), (col("reason") === "kept").as("kept"))
-      graft.operators.Robust.aucScore(
-        q.join(a, "doc_id"), col("quality"), col("kept"))
-    },
+    Query("q_auc", Batch, (s, d) =>
+      graft.operators.Robust.aucScore(raters(s, d), col("quality"), col("kept")),
       // Same rater CTEs into the exact MW doubled-rank chain; AUC is one
       // double division off the exact 2·U.
       (raterJoinCte +
@@ -518,16 +466,9 @@ private[contract] object CalibrationQueries {
 
     // Per-source ECE — which source is the gate over-confident on? Same
     // exact per-(source, bin) decimal means, per-source ≤10-bin fold.
-    Query("q_ece_by_source", Batch, (s, d) => {
-      val q = graft.operators.Curation.qualityScoreRaw(Tables.documents(s, d))
-        .select(col("doc_id"), col("quality"))
-      val a = graft.operators.Curation.curationAuditRaw(Tables.documents(s, d))
-        .select(col("doc_id"), (col("reason") === "kept").as("kept"))
-      val src = Tables.documents(s, d).select(col("doc_id"), col("source"))
-      graft.operators.Robust.expectedCalibrationErrorBy(
-        q.join(a, "doc_id").join(src, "doc_id"),
-        col("quality"), col("kept"), "source")
-    },
+    Query("q_ece_by_source", Batch, (s, d) =>
+      graft.operators.Robust.expectedCalibrationErrorBy(raters(s, d, "source"),
+        col("quality"), col("kept"), "source"),
       // Grouped twin: per-(source, bin) rounded stats, per-source fold.
       (raterJoinCte +
       """,
@@ -551,16 +492,9 @@ private[contract] object CalibrationQueries {
     // sources? Degenerate sources keep counts with NULL kappa. The keep
     // decision thresholds the ROUNDED 6-dp probability (the q_confusion
     // spelling — the oracle's r.q is the rounded contract value).
-    Query("q_cohen_kappa_by_source", Batch, (s, d) => {
-      val q = graft.operators.Curation.qualityScoreRaw(Tables.documents(s, d))
-        .select(col("doc_id"), (col("quality") >= 0.5).as("pred"))
-      val a = graft.operators.Curation.curationAuditRaw(Tables.documents(s, d))
-        .select(col("doc_id"), (col("reason") === "kept").as("kept"))
-      val src = Tables.documents(s, d).select(col("doc_id"), col("source"))
-      graft.operators.Robust.cohenKappaBy(
-        q.join(a, "doc_id").join(src, "doc_id"),
-        col("pred"), col("kept"), "source")
-    },
+    Query("q_cohen_kappa_by_source", Batch, (s, d) =>
+      graft.operators.Robust.cohenKappaBy(raters(s, d, "source"),
+        col("quality") >= 0.5, col("kept"), "source"),
       // Grouped twin of the kappa algebra: per-source sorted cell folds,
       // same HUGEINT margins; rounded-threshold keep (the r.q contract).
       (raterJoinCte +
@@ -590,16 +524,9 @@ private[contract] object CalibrationQueries {
 
     // Per-source AUC — does the gate's ranking quality hold on every
     // source, or only on one source's style? One-class sources drop.
-    Query("q_auc_by_source", Batch, (s, d) => {
-      val q = graft.operators.Curation.qualityScoreRaw(Tables.documents(s, d))
-        .select(col("doc_id"), col("quality"))
-      val a = graft.operators.Curation.curationAuditRaw(Tables.documents(s, d))
-        .select(col("doc_id"), (col("reason") === "kept").as("kept"))
-      val src = Tables.documents(s, d).select(col("doc_id"), col("source"))
-      graft.operators.Robust.aucScoreBy(
-        q.join(a, "doc_id").join(src, "doc_id"),
-        col("quality"), col("kept"), "source")
-    },
+    Query("q_auc_by_source", Batch, (s, d) =>
+      graft.operators.Robust.aucScoreBy(raters(s, d, "source"),
+        col("quality"), col("kept"), "source"),
       // Grouped twin: the source partitions every window and aggregate of
       // the exact MW chain; one-class sources drop via the HAVING.
       (raterJoinCte +
@@ -629,14 +556,8 @@ private[contract] object CalibrationQueries {
     // Decile lift table of the quality score — targeting concentration
     // ("keep the top-k deciles, how many positives do I capture?");
     // discrete score-decile edges, exact integer counts, ≤10-row window.
-    Query("q_lift_curve", Batch, (s, d) => {
-      val q = graft.operators.Curation.qualityScoreRaw(Tables.documents(s, d))
-        .select(col("doc_id"), col("quality"))
-      val a = graft.operators.Curation.curationAuditRaw(Tables.documents(s, d))
-        .select(col("doc_id"), (col("reason") === "kept").as("kept"))
-      graft.operators.Robust.liftCurve(
-        q.join(a, "doc_id"), col("quality"), col("kept"))
-    },
+    Query("q_lift_curve", Batch, (s, d) =>
+      graft.operators.Robust.liftCurve(raters(s, d), col("quality"), col("kept")),
       // Same rater CTEs; the decile edges are the identical discrete rank
       // picks ((p·n+99)//100), bins count edges strictly below, cumulative
       // window top-bin first, one lift chain per bin.
@@ -671,14 +592,8 @@ private[contract] object CalibrationQueries {
     // Confusion-matrix stats of the LR keep decision against the curation
     // label — the threshold-level readout next to q_auc's threshold-free
     // one (exact integer cells, guarded precision/recall/F1 chains).
-    Query("q_confusion", Batch, (s, d) => {
-      val q = graft.operators.Curation.qualityScoreRaw(Tables.documents(s, d))
-        .select(col("doc_id"), (col("quality") >= 0.5).as("pred"))
-      val a = graft.operators.Curation.curationAuditRaw(Tables.documents(s, d))
-        .select(col("doc_id"), (col("reason") === "kept").as("kept"))
-      graft.operators.Robust.confusionStats(
-        q.join(a, "doc_id"), col("pred"), col("kept"))
-    },
+    Query("q_confusion", Batch, (s, d) =>
+      graft.operators.Robust.confusionStats(raters(s, d), col("quality") >= 0.5, col("kept")),
       // Same rater CTEs; exact integer confusion cells, guarded
       // precision/recall/F1 chains spelled identically.
       (raterJoinCte +
@@ -702,14 +617,8 @@ private[contract] object CalibrationQueries {
 
     // Expected calibration error — the one-number fold of q_calibration
     // (ascending-bin fixed double fold over the rounded bin stats).
-    Query("q_ece", Batch, (s, d) => {
-      val q = graft.operators.Curation.qualityScoreRaw(Tables.documents(s, d))
-        .select(col("doc_id"), col("quality"))
-      val a = graft.operators.Curation.curationAuditRaw(Tables.documents(s, d))
-        .select(col("doc_id"), (col("reason") === "kept").as("kept"))
-      graft.operators.Robust.expectedCalibrationError(
-        q.join(a, "doc_id"), col("quality"), col("kept"))
-    },
+    Query("q_ece", Batch, (s, d) =>
+      graft.operators.Robust.expectedCalibrationError(raters(s, d), col("quality"), col("kept")),
       // The calibration bins folded to one number (ascending-bin order,
       // rounded bin stats — the same two-step chain the operator runs).
       (raterJoinCte +

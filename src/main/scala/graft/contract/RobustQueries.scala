@@ -372,7 +372,7 @@ private[contract] object RobustQueries {
     // Per-year MI status ↔ priority — the leakage probe per period,
     // completing the grouped association trio (chi2By significance,
     // kendallBy ordinal, miBy information); per-year sorted folds under
-    // the guardedCellsBy ceiling.
+    // the per-year contingency-cell ceiling.
     Query("q_mutual_info_by_year", Batch, (s, d) =>
       graft.operators.Robust.mutualInformationBy(
         Tables.orders(s, d).withColumn("order_year", year(col("o_orderdate")).cast("int")),
@@ -429,7 +429,7 @@ private[contract] object RobustQueries {
     // Per-year chi-square of status ↔ priority — "does the association
     // hold in EVERY period, or is the global χ² a mixture artifact?"
     // (Simpson's-paradox screening); per-(year, x, y) cells distributed,
-    // per-year sorted fold under the guardedCellsBy ceiling.
+    // per-year sorted fold under the per-year contingency-cell ceiling.
     Query("q_chi_square_by_year", Batch, (s, d) =>
       graft.operators.Robust.chiSquareBy(
         Tables.orders(s, d).withColumn("order_year", year(col("o_orderdate")).cast("int")),

@@ -1449,12 +1449,12 @@ object Curation {
       lit(wTtr) * fTtr + lit(wStop) * fStop
   }
 
-  /** Fused (doc_id, quality, kept) projection — ONE per-row pass that
-    * computes [[qualityScoreRaw]]'s LR score AND [[curationAuditRaw]]'s
-    * gate verdict together. Row-wise identical to
+  /** Fused (doc_id, extra…, quality, keep, kept) projection — ONE per-row
+    * pass that computes [[qualityScoreRaw]]'s LR score and keep decision
+    * AND [[curationAuditRaw]]'s gate verdict together. Row-wise identical to
     * `qualityScoreRaw ⋈ curationAuditRaw` on doc_id (both are
     * deterministic maps of the same row — equivalence pinned by a twin
-    * test, OperatorsSpec), but usable on a STREAMING source where the
+    * test, CurationSpec), but usable on a STREAMING source where the
     * two-scan join would be a stream-stream join. `kept` is the
     * conjunction of the audit's four gates (the when-chain's `reason =
     * 'kept'` arm): language, length, lexical diversity, repetition. */
@@ -1482,6 +1482,7 @@ object Curation {
     val z = qualityLogitFromFeats(f, w0, wLen, wAvgTok, wTtr, wStop)
     docs.select(col("doc_id") +: extra.map(col) :+
       round(lit(1.0) / (lit(1.0) + exp(-z)), 6).as("quality") :+
+      (lit(1.0) / (lit(1.0) + exp(-z)) >= 0.5).as("keep") :+
       (TextAnalysis.langIdFromFeats(f) === lang &&
         n.cast(IntegerType) >= minTokens && fTtr >= minTtr &&
         TextAnalysis.dupBigramFromFeats(f) <= maxDupBigram).as("kept"): _*)

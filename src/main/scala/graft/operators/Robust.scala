@@ -26,6 +26,15 @@ import graft.functions.dec2
   * over that value-domain table, and slice scans that shuffle only
   * target-bucket rows. No bounds pass, no per-group sort, nothing
   * quadratic; broadcasts are bracket rows, bounded by |groups|·|targets|.
+  *
+  * Segments: each statistic with a `…By` form spells its algebra once, in
+  * a private core that takes the segment keys — `Nil` for the global form,
+  * which is then Spark's global aggregate (`groupBy()`, one row even on
+  * empty input), and the segment column riding every key as `__g`
+  * otherwise. The public wrappers own the segment contract: the `By` form
+  * decides which null rows drop, which one-sided segments drop, any key
+  * cast, and returns the segment under its caller's name in segment order;
+  * the global form keeps its own guards.
   */
 object Robust {
 
@@ -736,27 +745,62 @@ object Robust {
     * fail-loud discipline applied to the O(cells²) family. */
   val MaxContingencyCells = 8192
 
-  /** Distributed guard enforcing [[MaxContingencyCells]]: checkpoints the
-    * cell table once (it also has 2–3 downstream consumers in every
-    * caller), counts it distributed, and routes every downstream `cnt`
-    * through a raise_error gate keyed on that count — the error fires at
-    * execution time, BEFORE the collect_list collapse builds the row.
-    * The gate lives inside the `cnt` value path (not a droppable side
-    * column), so no pruning rule can optimize it away. */
-  private def guardedCells(cells0: DataFrame, op: String): DataFrame = {
-    val cells = cells0.localCheckpoint(false)
-    val nc = cells.agg(count(lit(1)).as("__nc"))
-    cells.crossJoin(broadcast(nc))
-      .select(col("x"), col("y"),
+  /** A core's segment column, renamed `__g` (none for the global form). */
+  private def segCols(by: Seq[String]): Seq[Column] = by.map(c => col(c).as("__g"))
+
+  /** A core's segment key names: `__g`, or none for the global form. */
+  private def segKeys(by: Seq[String]): Seq[String] = by.map(_ => "__g")
+
+  /** A `By` wrapper's output: the segment back under the caller's name,
+    * rows in segment order. */
+  private def bySegment(out: DataFrame, byCol: String): DataFrame =
+    out.withColumnRenamed("__g", byCol).orderBy(byCol)
+
+  /** Joins a per-segment summary onto `rows`: with no keys the summary is
+    * one row and rides a broadcast cross join; with keys it is an inner
+    * equi-join on them, broadcast unless `broadcastKeyed` is off. */
+  private def attach(rows: DataFrame, summary: DataFrame, keys: Seq[String],
+      broadcastKeyed: Boolean = true): DataFrame =
+    if (keys.isEmpty) rows.crossJoin(broadcast(summary))
+    else rows.join(if (broadcastKeyed) broadcast(summary) else summary, keys)
+
+  /** The (keys…, x, y, cnt) contingency cells of a (keys…, x, y) frame,
+    * under a distributed guard enforcing [[MaxContingencyCells]] per
+    * segment (`keys` empty: the one global table): checkpoints the cell
+    * table once (it also has 2–3 downstream consumers in every caller),
+    * counts it distributed, and routes every downstream `cnt` through a
+    * raise_error gate keyed on that count — the error fires at execution
+    * time, BEFORE the collect_list collapse builds the row. The gate
+    * lives inside the `cnt` value path (not a droppable side column), so
+    * no pruning rule can optimize it away. The global count rides a
+    * broadcast cross join; per-segment counts join on the keys (an inner
+    * join, so a null segment drops here). */
+  private def guardedCells(xy: DataFrame, keys: Seq[String], op: String): DataFrame = {
+    val cells = xy.groupBy((keys ++ Seq("x", "y")).map(col): _*)
+      .agg(count(lit(1)).as("cnt"))
+      .localCheckpoint(false)
+    val nc = cells.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__nc"))
+    val (domain, fold) =
+      if (keys.isEmpty) ("contingency domain", "single-row")
+      else ("a group's contingency domain", "per-group")
+    attach(cells, nc, keys, broadcastKeyed = false)
+      .select(keys.map(col) ++ Seq(col("x"), col("y"),
         when(col("__nc") > lit(MaxContingencyCells),
           raise_error(concat(
-            lit(s"$op: contingency domain has "), col("__nc"),
+            lit(s"$op: $domain has "), col("__nc"),
             lit(s" cells, over the $MaxContingencyCells ceiling — the" +
-              " O(cells²) single-row fold requires a bounded" +
+              s" O(cells²) $fold fold requires a bounded" +
               " discrete/ordinal domain; bucket or discretize the columns" +
               " first"))).cast(LongType))
-          .otherwise(col("cnt")).as("cnt"))
+          .otherwise(col("cnt")).as("cnt")): _*)
   }
+
+  /** Each segment's cells collapsed to one sorted `cs` array and total
+    * `n`, plus `extra` aggregates over the same cells. */
+  private def cellArray(cells: DataFrame, keys: Seq[String], extra: Column*): DataFrame =
+    cells.groupBy(keys.map(col): _*).agg(
+      array_sort(collect_list(struct(col("x"), col("y"), col("cnt")))).as("cs"),
+      sum(col("cnt")).as("n") +: extra: _*)
 
   /** Mutual information (nats) between two categorical columns — the
     * feature-association / leakage probe (does `source` predict `lang`?).
@@ -766,48 +810,29 @@ object Robust {
     * sorted order so the floating-point result replays bit-identically
     * in the SQL oracle's list fold. Marginals are exact-integer
     * re-aggregations of the same array (O(cells²) work on ONE row,
-    * guarded by [[MaxContingencyCells]]). */
-  def mutualInformation(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    val cells = guardedCells(
-      df.groupBy(col(xCol).as("x"), col(yCol).as("y"))
-        .agg(count(lit(1)).as("cnt")),
-      "mutualInformation")
-    val one = cells.agg(
-      array_sort(collect_list(struct(col("x"), col("y"), col("cnt")))).as("cs"),
-      sum(col("cnt")).as("n"))
-    val nD = col("n").cast(DoubleType)
-    val mi = aggregate(col("cs"), lit(0.0), (acc, c) => {
-      val cnt = c.getField("cnt").cast(DoubleType)
-      val px = aggregate(
-        filter(col("cs"), x => x.getField("x") === c.getField("x")),
-        lit(0L), (a, x) => a + x.getField("cnt")).cast(DoubleType)
-      val py = aggregate(
-        filter(col("cs"), x => x.getField("y") === c.getField("y")),
-        lit(0L), (a, x) => a + x.getField("cnt")).cast(DoubleType)
-      acc + (cnt / nD) * log(cnt * nD / (px * py))
-    })
-    one.select(col("n").as("n_rows"), round(mi, 6).as("mi_nats"))
-  }
+    * guarded by [[MaxContingencyCells]]). A null x or y is a category. */
+  def mutualInformation(df: DataFrame, xCol: String, yCol: String): DataFrame =
+    mutualInformationCore(df, Nil, xCol, yCol, "mutualInformation")
 
   /** Per-`byCol`-segment mutual information — the leakage probe run in
     * EVERY segment (completing the grouped categorical-association trio
     * with [[chiSquareBy]] and [[kendallTauBBy]]: a pooled MI of ~0 can
     * hide segments where X fully determines Y, and vice versa — the
     * mixture artifact the grouped-gate convention exists to expose).
-    * Exactly [[mutualInformation]] per segment: per-(segment, x, y)
-    * cells aggregate distributed, each segment's bounded cell table
-    * collapses to one sorted array ([[guardedCellsBy]] ceiling), and
-    * the MI fold runs in sorted order — bit-replayable in SQL. */
+    * Exactly [[mutualInformation]] per segment, each segment's bounded
+    * cell table under its own ceiling; rows with a null x or y drop. */
   def mutualInformationBy(
-      df: DataFrame, xCol: String, yCol: String, byCol: String): DataFrame = {
-    val cells = guardedCellsBy(
-      df.select(col(byCol).as("__g"), col(xCol).as("x"), col(yCol).as("y"))
-        .filter(col("x").isNotNull && col("y").isNotNull)
-        .groupBy(col("__g"), col("x"), col("y")).agg(count(lit(1)).as("cnt")),
-      "mutualInformationBy")
-    val one = cells.groupBy(col("__g")).agg(
-      array_sort(collect_list(struct(col("x"), col("y"), col("cnt")))).as("cs"),
-      sum(col("cnt")).as("n"))
+      df: DataFrame, xCol: String, yCol: String, byCol: String): DataFrame =
+    bySegment(mutualInformationCore(
+      df.filter(col(xCol).isNotNull && col(yCol).isNotNull),
+      Seq(byCol), xCol, yCol, "mutualInformationBy"), byCol)
+
+  private def mutualInformationCore(
+      df: DataFrame, by: Seq[String], xCol: String, yCol: String, op: String): DataFrame = {
+    val keys = segKeys(by)
+    val one = cellArray(guardedCells(
+      df.select(segCols(by) ++ Seq(col(xCol).as("x"), col(yCol).as("y")): _*),
+      keys, op), keys)
     val nD = col("n").cast(DoubleType)
     val mi = aggregate(col("cs"), lit(0.0), (acc, c) => {
       val cnt = c.getField("cnt").cast(DoubleType)
@@ -819,9 +844,8 @@ object Robust {
         lit(0L), (a, x) => a + x.getField("cnt")).cast(DoubleType)
       acc + (cnt / nD) * log(cnt * nD / (px * py))
     })
-    one.select(col("__g").as(byCol), col("n").as("n_rows"),
-        round(mi, 6).as("mi_nats"))
-      .orderBy(byCol)
+    one.select(keys.map(col) ++
+      Seq(col("n").as("n_rows"), round(mi, 6).as("mi_nats")): _*)
   }
 
   /** Pearson chi-square statistic of independence between two categorical
@@ -829,15 +853,30 @@ object Robust {
     * Σ (obs − exp)²/exp with exp = row·col/N, plus the degrees of freedom
     * (|X|−1)(|Y|−1). Same scale shape as MI: distributed cell aggregation,
     * then one sorted bounded-size fold so the fp sum replays
-    * bit-identically in SQL. */
-  def chiSquare(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    val cells = guardedCells(
-      df.groupBy(col(xCol).as("x"), col(yCol).as("y"))
-        .agg(count(lit(1)).as("cnt")),
-      "chiSquare")
-    val one = cells.agg(
-      array_sort(collect_list(struct(col("x"), col("y"), col("cnt")))).as("cs"),
-      sum(col("cnt")).as("n"))
+    * bit-identically in SQL. A null x or y is a category. */
+  def chiSquare(df: DataFrame, xCol: String, yCol: String): DataFrame =
+    chiSquareCore(df, Nil, xCol, yCol, "chiSquare")
+
+  /** Per-`byCol`-segment chi-square independence + Cramér's V — "does
+    * the X↔Y association hold in EVERY segment, or is the global χ² a
+    * mixture artifact?" (Simpson's-paradox screening — an association
+    * can reverse inside segments while the pooled table shows none; the
+    * grouped-gate convention applied to the categorical-association
+    * family next to [[kendallTauBBy]]). Exactly [[chiSquare]] per
+    * segment, each segment's cell table under its own ceiling (fail-loud,
+    * never a silent mega-fold); rows with a null x or y drop, and
+    * single-category axes give NULL V within their segment. */
+  def chiSquareBy(df: DataFrame, xCol: String, yCol: String, byCol: String): DataFrame =
+    bySegment(chiSquareCore(
+      df.filter(col(xCol).isNotNull && col(yCol).isNotNull),
+      Seq(byCol), xCol, yCol, "chiSquareBy"), byCol)
+
+  private def chiSquareCore(
+      df: DataFrame, by: Seq[String], xCol: String, yCol: String, op: String): DataFrame = {
+    val keys = segKeys(by)
+    val one = cellArray(guardedCells(
+      df.select(segCols(by) ++ Seq(col(xCol).as("x"), col(yCol).as("y")): _*),
+      keys, op), keys)
     val nD = col("n").cast(DoubleType)
     val marg = (field: String, c: Column) => aggregate(
       filter(col("cs"), x => x.getField(field) === c.getField(field)),
@@ -860,57 +899,11 @@ object Robust {
     // A single-category axis has no association to normalize → NULL.
     val chi2r = round(chiObs + (nD - expObs), 6)
     val minDim = least(nx - 1, ny - 1).cast(DoubleType)
-    one.select(
+    one.select(keys.map(col) ++ Seq(
       col("n").as("n_rows"),
       ((nx - 1) * (ny - 1)).cast(LongType).as("dof"),
       chi2r.as("chi2"),
-      when(minDim > 0, round(sqrt(chi2r / (nD * minDim)), 6)).as("cramers_v"))
-  }
-
-  /** Per-`byCol`-segment chi-square independence + Cramér's V — "does
-    * the X↔Y association hold in EVERY segment, or is the global χ² a
-    * mixture artifact?" (Simpson's-paradox screening — an association
-    * can reverse inside segments while the pooled table shows none; the
-    * grouped-gate convention applied to the categorical-association
-    * family next to [[kendallTauBBy]]). Exactly [[chiSquare]] per
-    * segment: per-(segment, x, y) cells aggregate distributed (one
-    * keyed shuffle), each segment's bounded cell table collapses to one
-    * sorted array ([[guardedCellsBy]] ceiling — fail-loud, never a
-    * silent mega-fold), and the χ² fold runs in sorted order so the
-    * floating-point sum replays bit-identically in SQL. V derives from
-    * the rounded χ² (the global chain); single-category axes give NULL
-    * V within their segment. */
-  def chiSquareBy(df: DataFrame, xCol: String, yCol: String, byCol: String): DataFrame = {
-    val cells = guardedCellsBy(
-      df.select(col(byCol).as("__g"), col(xCol).as("x"), col(yCol).as("y"))
-        .filter(col("x").isNotNull && col("y").isNotNull)
-        .groupBy(col("__g"), col("x"), col("y")).agg(count(lit(1)).as("cnt")),
-      "chiSquareBy")
-    val one = cells.groupBy(col("__g")).agg(
-      array_sort(collect_list(struct(col("x"), col("y"), col("cnt")))).as("cs"),
-      sum(col("cnt")).as("n"))
-    val nD = col("n").cast(DoubleType)
-    val marg = (field: String, c: Column) => aggregate(
-      filter(col("cs"), x => x.getField(field) === c.getField(field)),
-      lit(0L), (a, x) => a + x.getField("cnt")).cast(DoubleType)
-    val chiObs = aggregate(col("cs"), lit(0.0), (acc, c) => {
-      val obs = c.getField("cnt").cast(DoubleType)
-      val exp = marg("x", c) * marg("y", c) / nD
-      acc + (obs - exp) * (obs - exp) / exp
-    })
-    val expObs = aggregate(col("cs"), lit(0.0), (acc, c) =>
-      acc + marg("x", c) * marg("y", c) / nD)
-    val nx = size(array_distinct(transform(col("cs"), c => c.getField("x"))))
-    val ny = size(array_distinct(transform(col("cs"), c => c.getField("y"))))
-    val chi2r = round(chiObs + (nD - expObs), 6)
-    val minDim = least(nx - 1, ny - 1).cast(DoubleType)
-    one.select(
-      col("__g").as(byCol),
-      col("n").as("n_rows"),
-      ((nx - 1) * (ny - 1)).cast(LongType).as("dof"),
-      chi2r.as("chi2"),
-      when(minDim > 0, round(sqrt(chi2r / (nD * minDim)), 6)).as("cramers_v"))
-      .orderBy(byCol)
+      when(minDim > 0, round(sqrt(chi2r / (nD * minDim)), 6)).as("cramers_v")): _*)
   }
 
   /** Two-proportion z-test between arms A and B: per-arm trial/success
@@ -918,53 +911,42 @@ object Robust {
     * floating-point step spelled once and replayed identically in the
     * oracle. The input is one row per unit with a boolean success flag;
     * everything aggregates to ONE row before any division. */
-  def twoProportionZ(units: DataFrame, arm: Column, success: Column): DataFrame = {
-    val agg = units.select(arm.as("__arm"), success.cast(LongType).as("__s"))
-      .agg(
-        sum(when(col("__arm") === 0, 1L).otherwise(0L)).as("n_a"),
-        sum(when(col("__arm") === 0, col("__s")).otherwise(0L)).as("conv_a"),
-        sum(when(col("__arm") =!= 0, 1L).otherwise(0L)).as("n_b"),
-        sum(when(col("__arm") =!= 0, col("__s")).otherwise(0L)).as("conv_b"))
-    val (na, ca, nb, cb) = (
-      col("n_a").cast(DoubleType), col("conv_a").cast(DoubleType),
-      col("n_b").cast(DoubleType), col("conv_b").cast(DoubleType))
-    val p = (ca + cb) / (na + nb)
-    val z = (ca / na - cb / nb) / sqrt(p * (lit(1.0) - p) * (lit(1.0) / na + lit(1.0) / nb))
-    agg.select(col("n_a"), col("conv_a"), col("n_b"), col("conv_b"),
-      round(z, 6).as("z_stat"))
-  }
+  def twoProportionZ(units: DataFrame, arm: Column, success: Column): DataFrame =
+    twoProportionZCore(units, Nil, arm, success, None)
 
   /** Per-`byCol`-segment two-proportion z — the CONVERSION-rate member
     * of the grouped A/B family ([[welchTBy]] means, [[mannWhitneyUBy]]
     * ranks, [[graft.operators.Bootstrap.bootstrapUpliftCiBy]] effect
     * CI — the rate test was the one gate still global-only): "does the
     * conversion uplift hold in EVERY segment?". Exactly
-    * [[twoProportionZ]]'s exact-integer counts and one fixed double
-    * chain with the segment riding the single keyed aggregation;
-    * segments missing either arm have no two-sample statistic and DROP
-    * (the grouped-gate contract). A segment whose pooled rate is 0 or 1
-    * yields the same NaN/±Inf z as the global operator — both engines
-    * spell the identical chain. */
+    * [[twoProportionZ]] with the segment riding the single keyed
+    * aggregation; segments missing either arm have no two-sample
+    * statistic and DROP (the grouped-gate contract). A segment whose
+    * pooled rate is 0 or 1 yields the same NaN/±Inf z as the global
+    * operator — both engines spell the identical chain. */
   def twoProportionZBy(
-      units: DataFrame, arm: Column, success: Column, byCol: String): DataFrame = {
-    val agg = units
-      .select(col(byCol).as("__g"), arm.as("__arm"), success.cast(LongType).as("__s"))
-      .groupBy(col("__g"))
+      units: DataFrame, arm: Column, success: Column, byCol: String): DataFrame =
+    bySegment(twoProportionZCore(units, Seq(byCol), arm, success,
+      Some(col("n_a") > 0 && col("n_b") > 0)), byCol)
+
+  private def twoProportionZCore(units: DataFrame, by: Seq[String], arm: Column,
+      success: Column, keep: Option[Column]): DataFrame = {
+    val agg0 = units
+      .select(segCols(by) ++ Seq(arm.as("__arm"), success.cast(LongType).as("__s")): _*)
+      .groupBy(segKeys(by).map(col): _*)
       .agg(
         sum(when(col("__arm") === 0, 1L).otherwise(0L)).as("n_a"),
         sum(when(col("__arm") === 0, col("__s")).otherwise(0L)).as("conv_a"),
         sum(when(col("__arm") =!= 0, 1L).otherwise(0L)).as("n_b"),
         sum(when(col("__arm") =!= 0, col("__s")).otherwise(0L)).as("conv_b"))
-      .filter(col("n_a") > 0 && col("n_b") > 0)
+    val agg = keep.fold(agg0)(agg0.filter(_))
     val (na, ca, nb, cb) = (
       col("n_a").cast(DoubleType), col("conv_a").cast(DoubleType),
       col("n_b").cast(DoubleType), col("conv_b").cast(DoubleType))
     val p = (ca + cb) / (na + nb)
     val z = (ca / na - cb / nb) / sqrt(p * (lit(1.0) - p) * (lit(1.0) / na + lit(1.0) / nb))
-    agg.select(col("__g").as(byCol),
-        col("n_a"), col("conv_a"), col("n_b"), col("conv_b"),
-        round(z, 6).as("z_stat"))
-      .orderBy(byCol)
+    agg.select(segKeys(by).map(col) ++ Seq(
+      col("n_a"), col("conv_a"), col("n_b"), col("conv_b"), round(z, 6).as("z_stat")): _*)
   }
 
   /** Welch's two-sample t statistic (unequal variances) with
@@ -977,33 +959,8 @@ object Robust {
     * result), collapse to one row, and only then run one fixed chain of
     * double arithmetic — mean, s² = (Σv² − (Σv)²/n)/(n−1), t, df — that
     * the SQL oracle spells identically. */
-  def welchT(units: DataFrame, arm: Column, value: Column): DataFrame = {
-    val v = dec2(value)
-    val agg = units.select(arm.as("__arm"), v.as("__v"), (v * v).as("__vv"))
-      .agg(
-        sum(when(col("__arm") === 0, 1L).otherwise(0L)).as("n_a"),
-        sum(when(col("__arm") === 0, col("__v"))).as("__s_a"),
-        sum(when(col("__arm") === 0, col("__vv"))).as("__ss_a"),
-        sum(when(col("__arm") =!= 0, 1L).otherwise(0L)).as("n_b"),
-        sum(when(col("__arm") =!= 0, col("__v"))).as("__s_b"),
-        sum(when(col("__arm") =!= 0, col("__vv"))).as("__ss_b"))
-    val (na, nb) = (col("n_a").cast(DoubleType), col("n_b").cast(DoubleType))
-    val (sa, sb) = (col("__s_a").cast(DoubleType), col("__s_b").cast(DoubleType))
-    val (ssa, ssb) = (col("__ss_a").cast(DoubleType), col("__ss_b").cast(DoubleType))
-    val ma = sa / na
-    val mb = sb / nb
-    val va = (ssa - sa * sa / na) / (na - lit(1.0))
-    val vb = (ssb - sb * sb / nb) / (nb - lit(1.0))
-    val sea = va / na
-    val seb = vb / nb
-    val t = (ma - mb) / sqrt(sea + seb)
-    val df = (sea + seb) * (sea + seb) /
-      (sea * sea / (na - lit(1.0)) + seb * seb / (nb - lit(1.0)))
-    agg.select(
-      col("n_a"), col("n_b"),
-      round(ma, 6).as("mean_a"), round(mb, 6).as("mean_b"),
-      round(t, 6).as("t_stat"), round(df, 6).as("welch_df"))
-  }
+  def welchT(units: DataFrame, arm: Column, value: Column): DataFrame =
+    welchTCore(units, Nil, arm, value, None)
 
   /** Per-`byCol`-segment Welch t — "is the A/B effect uniform across
     * segments, or driven by one?" (the heterogeneous-treatment-effect
@@ -1015,11 +972,16 @@ object Robust {
     * DROPPED (the [[ksStatisticBy]] missing-side contract: a gate must
     * not read a one-row arm as evidence). */
   def welchTBy(
-      units: DataFrame, arm: Column, value: Column, byCol: String): DataFrame = {
+      units: DataFrame, arm: Column, value: Column, byCol: String): DataFrame =
+    bySegment(welchTCore(units, Seq(byCol), arm, value,
+      Some(col("n_a") > 1 && col("n_b") > 1)), byCol)
+
+  private def welchTCore(units: DataFrame, by: Seq[String], arm: Column,
+      value: Column, keep: Option[Column]): DataFrame = {
     val v = dec2(value)
-    val agg = units
-      .select(col(byCol).as("__g"), arm.as("__arm"), v.as("__v"), (v * v).as("__vv"))
-      .groupBy(col("__g"))
+    val agg0 = units
+      .select(segCols(by) ++ Seq(arm.as("__arm"), v.as("__v"), (v * v).as("__vv")): _*)
+      .groupBy(segKeys(by).map(col): _*)
       .agg(
         sum(when(col("__arm") === 0, 1L).otherwise(0L)).as("n_a"),
         sum(when(col("__arm") === 0, col("__v"))).as("__s_a"),
@@ -1027,7 +989,7 @@ object Robust {
         sum(when(col("__arm") =!= 0, 1L).otherwise(0L)).as("n_b"),
         sum(when(col("__arm") =!= 0, col("__v"))).as("__s_b"),
         sum(when(col("__arm") =!= 0, col("__vv"))).as("__ss_b"))
-      .filter(col("n_a") > 1 && col("n_b") > 1)
+    val agg = keep.fold(agg0)(agg0.filter(_))
     val (na, nb) = (col("n_a").cast(DoubleType), col("n_b").cast(DoubleType))
     val (sa, sb) = (col("__s_a").cast(DoubleType), col("__s_b").cast(DoubleType))
     val (ssa, ssb) = (col("__ss_a").cast(DoubleType), col("__ss_b").cast(DoubleType))
@@ -1040,12 +1002,10 @@ object Robust {
     val t = (ma - mb) / sqrt(sea + seb)
     val df = (sea + seb) * (sea + seb) /
       (sea * sea / (na - lit(1.0)) + seb * seb / (nb - lit(1.0)))
-    agg.select(
-      col("__g").as(byCol),
+    agg.select(segKeys(by).map(col) ++ Seq(
       col("n_a"), col("n_b"),
       round(ma, 6).as("mean_a"), round(mb, 6).as("mean_b"),
-      round(t, 6).as("t_stat"), round(df, 6).as("welch_df"))
-      .orderBy(byCol)
+      round(t, 6).as("t_stat"), round(df, 6).as("welch_df")): _*)
   }
 
   /** One-way ANOVA F across the k groups of `groupCol` — the K-SAMPLE
@@ -1213,67 +1173,48 @@ object Robust {
     *
     * Scale shape: one keyed aggregation to the k-row score table
     * (map-side combined), one ≤ k-row fold. */
-  def cochranArmitage(df: DataFrame, score: Column, success: Column): DataFrame = {
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val g = df.select(score.cast("long").as("w"), success.cast("boolean").as("y"))
-      .filter(col("w").isNotNull && col("y").isNotNull)
-      .groupBy(col("w"))
-      .agg(count(lit(1)).cast(dec38).as("n"),
-        sum(when(col("y"), 1L).otherwise(0L)).cast(dec38).as("s"))
-    val one = g.agg(
-      count(lit(1)).as("k"),
-      sum(col("n")).as("nn"), sum(col("s")).as("ss"),
-      sum(col("w").cast(dec38) * col("s")).as("ws"),
-      sum(col("w").cast(dec38) * col("n")).as("wn"),
-      sum(col("w").cast(dec38) * col("w") * col("n")).as("wwn"))
-    val e = one.select(col("k"), col("nn"), col("ss"),
-      (col("nn") * col("ws") - col("ss") * col("wn")).as("__a"),
-      (col("nn") * col("wwn") - col("wn") * col("wn")).as("__b"))
-    e.select(
-      col("k"),
-      col("nn").cast("long").as("n_rows"),
-      col("ss").cast("long").as("n_success"),
-      round(when(col("ss") > 0 && col("ss") < col("nn") && col("__b") > 0,
-        col("__a").cast(DoubleType) /
-          sqrt((col("ss") * (col("nn") - col("ss")) * col("__b")).cast(DoubleType) /
-            col("nn").cast(DoubleType))), 6).as("z_stat"))
-  }
+  def cochranArmitage(df: DataFrame, score: Column, success: Column): DataFrame =
+    cochranArmitageCore(df, Nil, score, success)
 
   /** Per-`byCol`-segment Cochran–Armitage — does the ordered trend hold
     * in EVERY segment (per-year: is the priority→fulfillment gradient a
     * structural fact or one era's artifact)? Exactly [[cochranArmitage]]
     * with the segment riding the score aggregation and the ≤ k-row fold
-    * per segment; the same integer A/B algebra and one double z chain.
-    * Degenerate segments (all-success, all-fail, single score) yield a
-    * NULL z but keep their counts (the grouped fail-soft convention). */
+    * per segment. Rows with a null segment drop; degenerate segments
+    * (all-success, all-fail, single score) yield a NULL z but keep their
+    * counts (the grouped fail-soft convention). */
   def cochranArmitageBy(
-      df: DataFrame, score: Column, success: Column, byCol: String): DataFrame = {
+      df: DataFrame, score: Column, success: Column, byCol: String): DataFrame =
+    bySegment(cochranArmitageCore(
+      df.filter(col(byCol).isNotNull), Seq(byCol), score, success), byCol)
+
+  private def cochranArmitageCore(
+      df: DataFrame, by: Seq[String], score: Column, success: Column): DataFrame = {
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val g = df.select(col(byCol).as("__g"), score.cast("long").as("w"),
-        success.cast("boolean").as("y"))
-      .filter(col("__g").isNotNull && col("w").isNotNull && col("y").isNotNull)
-      .groupBy(col("__g"), col("w"))
+    val keys = segKeys(by).map(col)
+    val g = df.select(segCols(by) ++ Seq(score.cast("long").as("w"),
+        success.cast("boolean").as("y")): _*)
+      .filter(col("w").isNotNull && col("y").isNotNull)
+      .groupBy(keys :+ col("w"): _*)
       .agg(count(lit(1)).cast(dec38).as("n"),
         sum(when(col("y"), 1L).otherwise(0L)).cast(dec38).as("s"))
-    val one = g.groupBy(col("__g")).agg(
+    val one = g.groupBy(keys: _*).agg(
       count(lit(1)).as("k"),
       sum(col("n")).as("nn"), sum(col("s")).as("ss"),
       sum(col("w").cast(dec38) * col("s")).as("ws"),
       sum(col("w").cast(dec38) * col("n")).as("wn"),
       sum(col("w").cast(dec38) * col("w") * col("n")).as("wwn"))
-    val e = one.select(col("__g"), col("k"), col("nn"), col("ss"),
+    val e = one.select(keys ++ Seq(col("k"), col("nn"), col("ss"),
       (col("nn") * col("ws") - col("ss") * col("wn")).as("__a"),
-      (col("nn") * col("wwn") - col("wn") * col("wn")).as("__b"))
-    e.select(
-      col("__g").as(byCol),
+      (col("nn") * col("wwn") - col("wn") * col("wn")).as("__b")): _*)
+    e.select(keys ++ Seq(
       col("k"),
       col("nn").cast("long").as("n_rows"),
       col("ss").cast("long").as("n_success"),
       round(when(col("ss") > 0 && col("ss") < col("nn") && col("__b") > 0,
         col("__a").cast(DoubleType) /
           sqrt((col("ss") * (col("nn") - col("ss")) * col("__b")).cast(DoubleType) /
-            col("nn").cast(DoubleType))), 6).as("z_stat"))
-      .orderBy(byCol)
+            col("nn").cast(DoubleType))), 6).as("z_stat")): _*)
   }
 
   /** Calibration (reliability) bins of a [0,1] score against a boolean
@@ -1289,19 +1230,28 @@ object Robust {
     * DECIMAL(8,6) recovers the intended value exactly and the per-bin
     * mean is an exact decimal sum with one double division; observed
     * rates are pure integers. One keyed aggregation to ≤ 10 bins. */
-  def calibrationBins(df: DataFrame, score: Column, label: Column): DataFrame = {
+  def calibrationBins(df: DataFrame, score: Column, label: Column): DataFrame =
+    calibrationBinsCore(df, Nil, score, label).drop("__pos").orderBy(col("bin"))
+
+  /** Per-(segment, bin) reliability stats — n, `avg_pred`, `frac_pos` and
+    * the exact positive count `__pos` — shared by [[calibrationBins]],
+    * [[expectedCalibrationErrorBy]] and the isotonic fit. */
+  private def calibrationBinsCore(
+      df: DataFrame, by: Seq[String], score: Column, label: Column): DataFrame = {
     val q = score.cast(org.apache.spark.sql.types.DecimalType(8, 6))
     val bin = least(floor(q * 10).cast("int"), lit(9))
-    df.select(bin.as("bin"), q.as("__q"), label.cast("boolean").as("__y"))
+    val keys = segKeys(by).map(col)
+    df.select(segCols(by) ++ Seq(bin.as("bin"), q.as("__q"),
+        label.cast("boolean").as("__y")): _*)
       .filter(col("__q").isNotNull && col("__y").isNotNull)
-      .groupBy(col("bin"))
+      .groupBy(keys :+ col("bin"): _*)
       .agg(count(lit(1)).as("n"),
         sum(col("__q")).as("__sq"),
         sum(when(col("__y"), 1L).otherwise(0L)).as("__pos"))
-      .select(col("bin"), col("n"),
+      .select(keys ++ Seq(col("bin"), col("n"),
         round(col("__sq").cast(DoubleType) / col("n"), 6).as("avg_pred"),
-        round(col("__pos").cast(DoubleType) / col("n"), 6).as("frac_pos"))
-      .orderBy(col("bin"))
+        round(col("__pos").cast(DoubleType) / col("n"), 6).as("frac_pos"),
+        col("__pos")): _*)
   }
 
   /** Isotonic (pool-adjacent-violators) recalibration of the reliability
@@ -1321,54 +1271,71 @@ object Robust {
     * correctly-rounded IEEE division makes equal rationals equal
     * doubles). Output: the calibration table (bin, n, avg_pred,
     * frac_pos) plus the monotone `frac_iso` fit. */
-  def isotonicCalibration(df: DataFrame, score: Column, label: Column): DataFrame = {
+  def isotonicCalibration(df: DataFrame, score: Column, label: Column): DataFrame =
+    isotonicCalibrationCore(df, Nil, score, label, "isotonicCalibration")
+
+  /** Per-`byCol`-segment isotonic recalibration — the per-source
+    * calibration table with its own monotone fit (an over-confidence
+    * pattern can be one source's artifact; a pooled remap would smear
+    * it). Exactly [[isotonicCalibration]] per segment: per-(segment,
+    * bin) stats in the one distributed aggregation (summary ≤
+    * |segments|·10 rows, ceiling-guarded), then each segment's own
+    * exact-integer stack PAVA. The segment is keyed by its string form;
+    * rows with a null segment drop. */
+  def isotonicCalibrationBy(
+      df: DataFrame, score: Column, label: Column, byCol: String): DataFrame =
+    isotonicCalibrationCore(
+      df.withColumn(byCol, col(byCol).cast("string")).filter(col(byCol).isNotNull),
+      Seq(byCol), score, label, "isotonicCalibrationBy")
+
+  /** Segment columns must be strings: the fit runs on the driver over
+    * the collected bin rows. */
+  private def isotonicCalibrationCore(df: DataFrame, by: Seq[String], score: Column,
+      label: Column, op: String): DataFrame = {
     val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("bin", IntegerType, nullable = false),
-      StructField("n", LongType, nullable = false),
-      StructField("avg_pred", DoubleType, nullable = true),
-      StructField("frac_pos", DoubleType, nullable = true),
-      StructField("frac_iso", DoubleType, nullable = true)))
-    val q = score.cast(org.apache.spark.sql.types.DecimalType(8, 6))
-    val bin = least(floor(q * 10).cast("int"), lit(9))
+    val outSchema = StructType(
+      by.map(StructField(_, org.apache.spark.sql.types.StringType, nullable = true)) ++ Seq(
+        StructField("bin", IntegerType, nullable = false),
+        StructField("n", LongType, nullable = false),
+        StructField("avg_pred", DoubleType, nullable = true),
+        StructField("frac_pos", DoubleType, nullable = true),
+        StructField("frac_iso", DoubleType, nullable = true)))
+    val keys = segKeys(by).map(col)
     val binRows = collectSummary(
-      df.select(bin.as("bin"), q.as("__q"), label.cast("boolean").as("__y"))
-        .filter(col("__q").isNotNull && col("__y").isNotNull)
-        .groupBy(col("bin"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("__q")).as("sq"),
-          sum(when(col("__y"), 1L).otherwise(0L)).as("pos"))
-        .select(col("bin"), col("n"),
-          round(col("sq").cast(DoubleType) / col("n"), 6).as("avg_pred"),
-          col("pos")),
-      "isotonicCalibration").sortBy(_.getInt(0))
+      calibrationBinsCore(df, by, score, label)
+        .select(keys ++ Seq(col("bin"), col("n"), col("avg_pred"), col("__pos").as("pos")): _*),
+      op)
     def round6(x: Double): Double = java.math.BigDecimal.valueOf(x)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    // classic stack PAVA over (pos, n) with exact integer rate compares
+    // classic stack PAVA over (pos, n) with exact integer rate compares,
+    // one segment at a time (the key prefix is empty for the global form)
     final case class Pool(pos: Long, n: Long, members: List[Int])
-    val pools = binRows.foldLeft(List.empty[Pool]) { (acc, r) =>
-      var st = Pool(r.getAs[Long]("pos"), r.getAs[Long]("n"),
-        List(r.getInt(0))) :: acc
-      // merge while the pool below strictly out-rates the one above
-      while (st.lengthCompare(2) >= 0 &&
-          BigInt(st(1).pos) * st.head.n > BigInt(st.head.pos) * st(1).n) {
-        val top :: prev :: rest = st: @unchecked
-        st = Pool(prev.pos + top.pos, prev.n + top.n,
-          prev.members ::: top.members) :: rest
+    val b = by.size
+    val out = binRows.groupBy(r => (0 until b).map(r.getString)).toSeq
+      .sortBy(_._1.headOption).flatMap { case (g, rs) =>
+        val sorted = rs.sortBy(_.getInt(b))
+        val pools = sorted.foldLeft(List.empty[Pool]) { (acc, r) =>
+          var st = Pool(r.getAs[Long]("pos"), r.getAs[Long]("n"), List(r.getInt(b))) :: acc
+          // merge while the pool below strictly out-rates the one above
+          while (st.lengthCompare(2) >= 0 &&
+              BigInt(st(1).pos) * st.head.n > BigInt(st.head.pos) * st(1).n) {
+            val top :: prev :: rest = st: @unchecked
+            st = Pool(prev.pos + top.pos, prev.n + top.n, prev.members ::: top.members) :: rest
+          }
+          st
+        }
+        val isoByBin: Map[Int, Double] = pools.flatMap(p =>
+          p.members.map(_ -> round6(p.pos.toDouble / p.n.toDouble))).toMap
+        sorted.map { r =>
+          val bi = r.getInt(b)
+          val n = r.getAs[Long]("n")
+          val pos = r.getAs[Long]("pos")
+          Row.fromSeq(g ++ Seq[Any](bi, n, r.getAs[Double]("avg_pred"),
+            round6(pos.toDouble / n.toDouble), isoByBin(bi)))
+        }
       }
-      st
-    }
-    val isoByBin: Map[Int, Double] = pools.flatMap(p =>
-      p.members.map(_ -> round6(p.pos.toDouble / p.n.toDouble))).toMap
-    val out = binRows.map { r =>
-      val b = r.getInt(0)
-      val n = r.getAs[Long]("n")
-      val pos = r.getAs[Long]("pos")
-      Row(b, n, r.getAs[Double]("avg_pred"),
-        round6(pos.toDouble / n.toDouble), isoByBin(b))
-    }
     spark.createDataFrame(java.util.Arrays.asList(out: _*), outSchema)
-      .orderBy(col("bin"))
+      .orderBy((by :+ "bin").map(col): _*)
   }
 
   /** Fleiss' kappa over r ≥ 2 binary raters (Fleiss 1971) — the
@@ -1383,13 +1350,28 @@ object Robust {
     * one double division at the end. Unanimous-single-category panels
     * (E = r²N²) have P_e = 1 → NULL kappa, like the degenerate
     * [[cohenKappa]] contract. */
-  def fleissKappa(df: DataFrame, raters: Seq[Column]): DataFrame = {
+  def fleissKappa(df: DataFrame, raters: Seq[Column]): DataFrame =
+    fleissKappaCore(df, Nil, raters, "fleissKappa")
+
+  /** Per-`byCol`-segment Fleiss' kappa — is the PANEL's agreement
+    * uniform across sources, or do the three gates only co-vote on one
+    * source's style? Exactly [[fleissKappa]] per segment: the segment
+    * rides the one aggregation's key. Rows with a null segment drop;
+    * unanimous segments keep their row with NULL kappa. */
+  def fleissKappaBy(df: DataFrame, raters: Seq[Column], byCol: String): DataFrame =
+    bySegment(fleissKappaCore(df.filter(col(byCol).isNotNull), Seq(byCol), raters,
+      "fleissKappaBy"), byCol)
+
+  private def fleissKappaCore(
+      df: DataFrame, by: Seq[String], raters: Seq[Column], op: String): DataFrame = {
     val r = raters.length
-    require(r >= 2, s"fleissKappa: needs >= 2 raters, got $r")
+    require(r >= 2, s"$op: needs >= 2 raters, got $r")
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val k = raters.map(c => when(c, 1L).otherwise(0L)).reduce(_ + _)
     val rl = lit(r.toLong)
-    val agg = df.select(k.as("k"))
+    val keys = segKeys(by).map(col)
+    val agg = df.select(segCols(by) :+ k.as("k"): _*)
+      .groupBy(keys: _*)
       .agg(count(lit(1)).as("n"), sum(col("k")).as("s1"),
         sum(col("k") * (col("k") - 1L) +
           (rl - col("k")) * (rl - 1L - col("k"))).as("a"))
@@ -1400,14 +1382,14 @@ object Robust {
     val num = col("a").cast(dec38) * rl.cast(dec38) * nD - e * lit((r - 1).toLong).cast(dec38)
     val den = lit((r - 1).toLong).cast(dec38) *
       (lit((r.toLong * r)).cast(dec38) * nD * nD - e)
-    agg.select(col("n"),
+    agg.select(keys ++ Seq(col("n"),
       round(col("a").cast(DoubleType) /
         (col("n").cast(DoubleType) * lit((r * (r - 1)).toDouble)), 6).as("p_bar"),
       round(e.cast(DoubleType) /
         (lit((r * r).toDouble) * col("n").cast(DoubleType) * col("n").cast(DoubleType)), 6)
         .as("p_e"),
       when(den === lit(0).cast(dec38), lit(null).cast(DoubleType))
-        .otherwise(round(num.cast(DoubleType) / den.cast(DoubleType), 6)).as("kappa"))
+        .otherwise(round(num.cast(DoubleType) / den.cast(DoubleType), 6)).as("kappa")): _*)
   }
 
   /** Split-conformal calibration of a probabilistic gate (Vovk's
@@ -1421,25 +1403,92 @@ object Robust {
     *
     * Scale shape: the halves split by portable-hash parity (engine-
     * portable, no shuffle); the calibration quantile is the EXACT
-    * ⌈(n+1)(1−α)⌉-th order statistic via per-distinct-value counts +
-    * the [[runningTotals]] two-level scan — never a row-sized window,
-    * never a sort-to-driver; the test half folds to one row of integer
-    * counts. Everything compares DECIMAL(8,6) nonconformity scores
-    * exactly, so the whole chain replays in SQL. k > n_cal (tiny
-    * calibration sets) degrades honestly to q̂ = 1 — the full
-    * prediction set, coverage 1, the conformal contract. */
-  /** The conformal family's scored projection — (__id, q, y, is_cal, a):
-    * score clamped to DECIMAL(8,6), nonconformity a = y ? 1−q : q,
-    * calibration/test split by portable-hash parity. PUBLIC so the
-    * streaming coverage monitor ([[graft.streaming.ConformalStream]])
-    * applies the IDENTICAL per-row map to arriving rows — drift between
-    * the gate and its monitor is impossible by construction. */
-  def conformalScored(df: DataFrame, id: Column, score: Column,
-      label: Column): DataFrame = {
+    * ⌈(n+1)(1−α)⌉-th order statistic via the bit-grid selection — never
+    * a row-sized window, never a sort-to-driver; the test half folds to
+    * one row of integer counts. Everything compares DECIMAL(8,6)
+    * nonconformity scores exactly, so the whole chain replays in SQL.
+    * k > n_cal (tiny calibration sets) degrades honestly to q̂ = 1 — the
+    * full prediction set, coverage 1, the conformal contract. */
+  def conformalGate(df: DataFrame, id: Column, score: Column, label: Column,
+      coverPct: Int = 90): DataFrame = {
+    require(coverPct >= 1 && coverPct <= 99, s"conformalGate: coverPct=$coverPct")
+    conformalGateCore(conformalScored(df, id, score, label), Nil, coverPct)
+  }
+
+  /** Group-conditional (Mondrian) conformal calibration — a SEPARATE q̂
+    * per segment, so the ≥ 1−α guarantee holds PER SOURCE, not just
+    * marginally (a marginal q̂ can over-cover an easy source while
+    * under-covering a hard one — averaged away in [[conformalGate]]'s
+    * single row). Exactly the global operator per segment. Rows drive
+    * from the CALIBRATION side: a segment with no test rows keeps its
+    * (n_test = 0, NULL coverage) row; a segment with no calibration rows
+    * has no guarantee to offer and DROPS — the honest contract. */
+  def conformalGateBy(df: DataFrame, id: Column, score: Column, label: Column,
+      byCol: String, coverPct: Int = 90): DataFrame = {
+    require(coverPct >= 1 && coverPct <= 99, s"conformalGateBy: coverPct=$coverPct")
+    bySegment(conformalGateCore(conformalScoredBy(df, byCol, id, score, label),
+      Seq("__g"), coverPct), byCol)
+  }
+
+  /** The gate over a scored frame keyed by `keys` (Nil or `__g`). ONE
+    * scoring pass: the qhat selection (two grid scans + the total) and
+    * the test fold are four consumers of this 5-narrow-column
+    * projection; without the pin each re-runs the caller's per-row
+    * scoring chain (the ConformalStream fusion argument). The global
+    * form folds the test half into one row even when it is empty; the
+    * segmented form joins each calibration segment's fold back. */
+  private def conformalGateCore(scored: DataFrame, keys: Seq[String],
+      coverPct: Int): DataFrame = {
     val dec86 = org.apache.spark.sql.types.DecimalType(8, 6)
     val one = lit(1).cast(dec86)
-    df.select(id.as("__id"), score.cast(dec86).as("q"),
-        label.cast("boolean").as("y"))
+    val base = scored.localCheckpoint(false)
+    val qhat = conformalQhatCore(base, keys, coverPct)
+    val tested = attach(base.filter(!col("is_cal")), qhat, keys)
+    val fold = Seq(
+      count(lit(1)).as("n_test"),
+      sum(when(col("a") <= col("qhat"), 1L).otherwise(0L)).as("__cov"),
+      sum(when((one - col("q")).cast(dec86) <= col("qhat"), 1L).otherwise(0L) +
+        when(col("q") <= col("qhat"), 1L).otherwise(0L)).as("__sz"))
+    val rates = Seq(
+      round(col("__cov").cast(DoubleType) / col("n_test"), 6).as("coverage"),
+      round(col("__sz").cast(DoubleType) / col("n_test"), 6).as("avg_set_size"))
+    if (keys.isEmpty)
+      tested.agg(first(col("n_cal")).as("n_cal"),
+          fold :+ first(col("qhat")).as("__qh"): _*)
+        .select(Seq(col("n_cal"), col("n_test"), col("__qh").cast(DoubleType).as("qhat")) ++
+          rates: _*)
+    else
+      qhat.join(tested.groupBy(keys.map(col): _*).agg(fold.head, fold.tail: _*),
+          keys, "left")
+        .select(keys.map(col) ++ Seq(col("n_cal"),
+          coalesce(col("n_test"), lit(0L)).as("n_test"),
+          col("qhat").cast(DoubleType).as("qhat")) ++ rates: _*)
+  }
+
+  /** The conformal family's scored projection — (__id, q, y, is_cal, a):
+    * score clamped to DECIMAL(8,6), nonconformity a = y ? 1−q : q,
+    * calibration/test split by portable-hash parity; rows with a null
+    * id, score or label drop. PUBLIC so the streaming coverage monitor
+    * ([[graft.streaming.ConformalStream]]) applies the IDENTICAL per-row
+    * map to arriving rows — drift between the gate and its monitor is
+    * impossible by construction. */
+  def conformalScored(df: DataFrame, id: Column, score: Column,
+      label: Column): DataFrame =
+    conformalScoredCore(df, Nil, id, score, label)
+
+  /** Grouped twin of [[conformalScored]]: the segment rides along as
+    * `__g`, and rows with a null segment drop. PUBLIC for the grouped
+    * streaming coverage monitor. */
+  def conformalScoredBy(df: DataFrame, byCol: String, id: Column,
+      score: Column, label: Column): DataFrame =
+    conformalScoredCore(df.filter(col(byCol).isNotNull), Seq(byCol), id, score, label)
+
+  private def conformalScoredCore(df: DataFrame, by: Seq[String], id: Column,
+      score: Column, label: Column): DataFrame = {
+    val dec86 = org.apache.spark.sql.types.DecimalType(8, 6)
+    val one = lit(1).cast(dec86)
+    df.select(segCols(by) ++ Seq(id.as("__id"), score.cast(dec86).as("q"),
+        label.cast("boolean").as("y")): _*)
       .filter(col("__id").isNotNull && col("q").isNotNull && col("y").isNotNull)
       .withColumn("is_cal",
         pmod(graft.functions.PortableHash.keyHash(col("__id")), lit(2L)) === 0L)
@@ -1449,270 +1498,39 @@ object Robust {
 
   /** Frozen calibration summary — ONE row (qhat DECIMAL(8,6), n_cal):
     * the exact ⌈(n+1)·coverPct/100⌉-th order statistic of the
-    * calibration half's nonconformity scores via per-distinct-value
-    * counts + the [[runningTotals]] two-level scan (never a row-sized
-    * window, never a sort-to-driver). This is the at-rest model the
-    * streaming coverage monitor judges arrivals against; k > n_cal
+    * calibration half's nonconformity scores. This is the at-rest model
+    * the streaming coverage monitor judges arrivals against; k > n_cal
     * degrades honestly to q̂ = 1 (full sets, coverage 1). */
-  def conformalQhatRow(base: DataFrame, coverPct: Int): DataFrame = {
-    val dec86 = org.apache.spark.sql.types.DecimalType(8, 6)
-    val one = lit(1).cast(dec86)
-    // The k-th order statistic via the bit-grid selection (two pruned
-    // scans of the checkpointed base + one grid-bounded collect) instead
-    // of the former per-distinct-value runningTotals chain — same exact
-    // "smallest a with cum count ≥ k" semantics, ~half the fixed jobs
-    // (the range exchange, its checkpoint and the offsets window are
-    // gone; measured per job in r17, now `tools.Probe run`). k > n_cal finds no
-    // rank bracket, the grid drops the group, and the coalesce degrades
-    // honestly to q̂ = 1 (full sets) exactly as before.
-    val cal = base.filter(col("is_cal"))
-      .select(lit("all").as("__g"), col("a").as("v"), lit(1L).as("w"))
-    val tot = base.filter(col("is_cal")).agg(count(lit(1)).as("n_cal"))
-    val sel = bitValuesAtRanks(cal, Seq(50),
-      rankFor = (_, n) => (coverPct.toLong * (n + 1L) + 99L) / 100L)
-    sel.agg(coalesce(min(col("q_50")), one).as("qhat"))
-      .crossJoin(broadcast(tot))
-  }
-
-  def conformalGate(df: DataFrame, id: Column, score: Column, label: Column,
-      coverPct: Int = 90): DataFrame = {
-    require(coverPct >= 1 && coverPct <= 99, s"conformalGate: coverPct=$coverPct")
-    val dec86 = org.apache.spark.sql.types.DecimalType(8, 6)
-    val one = lit(1).cast(dec86)
-    // ONE scoring pass: the qhat selection (two grid scans + the total)
-    // and the test fold are four consumers of this 5-narrow-column
-    // projection; without the pin each re-runs the caller's per-row
-    // scoring chain (the ConformalStream fusion argument).
-    val base = conformalScored(df, id, score, label).localCheckpoint(false)
-    val qhatRow = broadcast(conformalQhatRow(base, coverPct))
-    base.filter(!col("is_cal"))
-      .crossJoin(qhatRow)
-      .agg(
-        first(col("n_cal")).as("n_cal"),
-        count(lit(1)).as("n_test"),
-        first(col("qhat")).as("__qh"),
-        sum(when(col("a") <= col("qhat"), 1L).otherwise(0L)).as("__cov"),
-        sum(when((one - col("q")).cast(dec86) <= col("qhat"), 1L).otherwise(0L) +
-          when(col("q") <= col("qhat"), 1L).otherwise(0L)).as("__sz"))
-      .select(col("n_cal"), col("n_test"),
-        col("__qh").cast(DoubleType).as("qhat"),
-        round(col("__cov").cast(DoubleType) / col("n_test"), 6).as("coverage"),
-        round(col("__sz").cast(DoubleType) / col("n_test"), 6).as("avg_set_size"))
-  }
-
-  /** Group-conditional (Mondrian) conformal calibration — a SEPARATE q̂
-    * per segment, so the ≥ 1−α guarantee holds PER SOURCE, not just
-    * marginally (a marginal q̂ can over-cover an easy source while
-    * under-covering a hard one — averaged away in [[conformalGate]]'s
-    * single row). Exactly the global operator per segment: per-(segment,
-    * value) counts, the GROUPED two-level scan, per-segment rank rule
-    * and fold — each segment's row bit-identical to [[conformalGate]]
-    * on that slice (twin-tested). Rows drive from the CALIBRATION side:
-    * a segment with no test rows keeps its (n_test = 0, NULL coverage)
-    * row; a segment with no calibration rows has no guarantee to offer
-    * and DROPS — the honest contract. */
-  /** Grouped twin of [[conformalScored]]: the segment rides along as
-    * `__g`. PUBLIC for the grouped streaming coverage monitor. */
-  def conformalScoredBy(df: DataFrame, byCol: String, id: Column,
-      score: Column, label: Column): DataFrame = {
-    val dec86 = org.apache.spark.sql.types.DecimalType(8, 6)
-    val one = lit(1).cast(dec86)
-    df.select(col(byCol).as("__g"), id.as("__id"), score.cast(dec86).as("q"),
-        label.cast("boolean").as("y"))
-      .filter(col("__g").isNotNull && col("__id").isNotNull &&
-        col("q").isNotNull && col("y").isNotNull)
-      .withColumn("is_cal",
-        pmod(graft.functions.PortableHash.keyHash(col("__id")), lit(2L)) === 0L)
-      .withColumn("a", when(col("y"), (one - col("q")).cast(dec86))
-        .otherwise(col("q")))
-  }
+  def conformalQhatRow(base: DataFrame, coverPct: Int): DataFrame =
+    conformalQhatCore(base, Nil, coverPct)
 
   /** Grouped twin of [[conformalQhatRow]]: one (__g, n_cal, qhat) row
     * per segment that HAS calibration rows (cal-less segments have no
     * guarantee to offer and drop — the Mondrian contract). */
-  def conformalQhatRowsBy(base: DataFrame, coverPct: Int): DataFrame = {
-    val dec86 = org.apache.spark.sql.types.DecimalType(8, 6)
-    val one = lit(1).cast(dec86)
-    // Grouped twin of the [[conformalQhatRow]] grid selection: per-group
-    // k-th order statistic in two pruned scans + one grid-bounded
-    // collect. Groups whose k exceeds n_cal drop from the grid and take
-    // q̂ = 1 through the left join; cal-less groups are absent from tot
-    // and DROP entirely (the Mondrian contract, unchanged).
+  def conformalQhatRowsBy(base: DataFrame, coverPct: Int): DataFrame =
+    conformalQhatCore(base, Seq("__g"), coverPct)
+
+  /** The k-th order statistic per segment via the bit-grid selection
+    * (two pruned scans of the checkpointed base + one grid-bounded
+    * collect) — the exact "smallest a with cum count ≥ k" semantics. A
+    * segment whose k exceeds n_cal finds no rank bracket and drops from
+    * the grid; the coalesce then degrades it honestly to q̂ = 1 (full
+    * sets). The global form aggregates the ≤ 1 selected row so it
+    * always returns its one row; segments attach theirs to the
+    * calibration totals, so cal-less segments are absent. */
+  private def conformalQhatCore(base: DataFrame, keys: Seq[String],
+      coverPct: Int): DataFrame = {
+    val one = lit(1).cast(org.apache.spark.sql.types.DecimalType(8, 6))
     val cal = base.filter(col("is_cal"))
-      .select(col("__g"), col("a").as("v"), lit(1L).as("w"))
-    val tot = base.filter(col("is_cal"))
-      .groupBy(col("__g")).agg(count(lit(1)).as("n_cal"))
-    val sel = bitValuesAtRanks(cal, Seq(50),
-      rankFor = (_, n) => (coverPct.toLong * (n + 1L) + 99L) / 100L)
-      .select(col("__g"), col("q_50").as("__qh0"))
-    tot.join(broadcast(sel), Seq("__g"), "left")
-      .select(col("__g"), col("n_cal"),
-        coalesce(col("__qh0"), one).as("qhat"))
-  }
-
-  def conformalGateBy(df: DataFrame, id: Column, score: Column, label: Column,
-      byCol: String, coverPct: Int = 90): DataFrame = {
-    require(coverPct >= 1 && coverPct <= 99, s"conformalGateBy: coverPct=$coverPct")
-    val dec86 = org.apache.spark.sql.types.DecimalType(8, 6)
-    val one = lit(1).cast(dec86)
-    // ONE scoring pass for the same reason as [[conformalGate]]
-    val base = conformalScoredBy(df, byCol, id, score, label).localCheckpoint(false)
-    val qhat = conformalQhatRowsBy(base, coverPct)
-    val testFold = base.filter(!col("is_cal"))
-      .join(broadcast(qhat), "__g")
-      .groupBy(col("__g"))
-      .agg(count(lit(1)).as("n_test"),
-        sum(when(col("a") <= col("qhat"), 1L).otherwise(0L)).as("__cov"),
-        sum(when((one - col("q")).cast(dec86) <= col("qhat"), 1L).otherwise(0L) +
-          when(col("q") <= col("qhat"), 1L).otherwise(0L)).as("__sz"))
-    qhat.join(testFold, Seq("__g"), "left")
-      .select(col("__g").as(byCol), col("n_cal"),
-        coalesce(col("n_test"), lit(0L)).as("n_test"),
-        col("qhat").cast(DoubleType).as("qhat"),
-        round(col("__cov").cast(DoubleType) / col("n_test"), 6).as("coverage"),
-        round(col("__sz").cast(DoubleType) / col("n_test"), 6).as("avg_set_size"))
-      .orderBy(byCol)
-  }
-
-  /** Per-`byCol`-segment Fleiss' kappa — is the PANEL's agreement
-    * uniform across sources, or do the three gates only co-vote on one
-    * source's style? Exactly [[fleissKappa]] per segment: the segment
-    * rides the one aggregation's key; each segment's κ is bit-identical
-    * to the global operator on that slice (twin-tested). Unanimous
-    * segments keep their row with NULL kappa. */
-  def fleissKappaBy(df: DataFrame, raters: Seq[Column], byCol: String): DataFrame = {
-    val r = raters.length
-    require(r >= 2, s"fleissKappaBy: needs >= 2 raters, got $r")
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val k = raters.map(c => when(c, 1L).otherwise(0L)).reduce(_ + _)
-    val rl = lit(r.toLong)
-    val agg = df.filter(col(byCol).isNotNull)
-      .select(col(byCol).as("__g"), k.as("k"))
-      .groupBy(col("__g"))
-      .agg(count(lit(1)).as("n"), sum(col("k")).as("s1"),
-        sum(col("k") * (col("k") - 1L) +
-          (rl - col("k")) * (rl - 1L - col("k"))).as("a"))
-    val nD = col("n").cast(dec38)
-    val s1 = col("s1").cast(dec38)
-    val s0 = rl.cast(dec38) * nD - s1
-    val e = s1 * s1 + s0 * s0
-    val num = col("a").cast(dec38) * rl.cast(dec38) * nD - e * lit((r - 1).toLong).cast(dec38)
-    val den = lit((r - 1).toLong).cast(dec38) *
-      (lit((r.toLong * r)).cast(dec38) * nD * nD - e)
-    agg.select(col("__g").as(byCol), col("n"),
-      round(col("a").cast(DoubleType) /
-        (col("n").cast(DoubleType) * lit((r * (r - 1)).toDouble)), 6).as("p_bar"),
-      round(e.cast(DoubleType) /
-        (lit((r * r).toDouble) * col("n").cast(DoubleType) * col("n").cast(DoubleType)), 6)
-        .as("p_e"),
-      when(den === lit(0).cast(dec38), lit(null).cast(DoubleType))
-        .otherwise(round(num.cast(DoubleType) / den.cast(DoubleType), 6)).as("kappa"))
-      .orderBy(byCol)
-  }
-
-  /** Per-`byCol`-segment isotonic recalibration — the per-source
-    * calibration table with its own monotone fit (an over-confidence
-    * pattern can be one source's artifact; a pooled remap would smear
-    * it). Exactly [[isotonicCalibration]] per segment: per-(segment,
-    * bin) stats in the one distributed aggregation (summary ≤
-    * |segments|·10 rows, ceiling-guarded), then each segment's own
-    * exact-integer stack PAVA — per-segment rows bit-identical to the
-    * global operator on that slice (twin-tested). */
-  def isotonicCalibrationBy(
-      df: DataFrame, score: Column, label: Column, byCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(Seq(
-      StructField(byCol, org.apache.spark.sql.types.StringType, nullable = true),
-      StructField("bin", IntegerType, nullable = false),
-      StructField("n", LongType, nullable = false),
-      StructField("avg_pred", DoubleType, nullable = true),
-      StructField("frac_pos", DoubleType, nullable = true),
-      StructField("frac_iso", DoubleType, nullable = true)))
-    val q = score.cast(org.apache.spark.sql.types.DecimalType(8, 6))
-    val bin = least(floor(q * 10).cast("int"), lit(9))
-    val binRows = collectSummary(
-      df.select(col(byCol).cast("string").as("__g"), bin.as("bin"),
-          q.as("__q"), label.cast("boolean").as("__y"))
-        .filter(col("__g").isNotNull && col("__q").isNotNull && col("__y").isNotNull)
-        .groupBy(col("__g"), col("bin"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("__q")).as("sq"),
-          sum(when(col("__y"), 1L).otherwise(0L)).as("pos"))
-        .select(col("__g"), col("bin"), col("n"),
-          round(col("sq").cast(DoubleType) / col("n"), 6).as("avg_pred"),
-          col("pos")),
-      "isotonicCalibrationBy")
-    def round6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    final case class Pool(pos: Long, n: Long, members: List[Int])
-    val out = binRows.groupBy(_.getString(0)).toSeq.sortBy(_._1).flatMap {
-      case (g, rs) =>
-        val sorted = rs.sortBy(_.getInt(1))
-        val pools = sorted.foldLeft(List.empty[Pool]) { (acc, r) =>
-          var st = Pool(r.getAs[Long]("pos"), r.getAs[Long]("n"),
-            List(r.getInt(1))) :: acc
-          while (st.lengthCompare(2) >= 0 &&
-              BigInt(st(1).pos) * st.head.n > BigInt(st.head.pos) * st(1).n) {
-            val top :: prev :: rest = st: @unchecked
-            st = Pool(prev.pos + top.pos, prev.n + top.n,
-              prev.members ::: top.members) :: rest
-          }
-          st
-        }
-        val isoByBin: Map[Int, Double] = pools.flatMap(p =>
-          p.members.map(_ -> round6(p.pos.toDouble / p.n.toDouble))).toMap
-        sorted.map { r =>
-          val b = r.getInt(1)
-          val n = r.getAs[Long]("n")
-          val pos = r.getAs[Long]("pos")
-          Row(g, b, n, r.getAs[Double]("avg_pred"),
-            round6(pos.toDouble / n.toDouble), isoByBin(b))
-        }
-    }
-    spark.createDataFrame(java.util.Arrays.asList(out: _*), outSchema)
-      .orderBy(col(byCol), col("bin"))
-  }
-
-  /** Per-`byCol`-segment Cohen's kappa — is the gate agreement uniform
-    * across segments, or does the cheap gate only track the expensive
-    * one on one source's style? Exactly [[cohenKappa]] per segment:
-    * per-(segment, x, y) cells aggregate distributed under the
-    * [[guardedCellsBy]] ceiling, each segment's N²-scaled integer
-    * algebra folds over its OWN sorted cell array. Degenerate segments
-    * (p_e = 1) keep their counts with NULL kappa. */
-  def cohenKappaBy(
-      df: DataFrame, raterA: Column, raterB: Column, byCol: String): DataFrame = {
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val cells = guardedCellsBy(
-      df.select(col(byCol).as("__g"), raterA.cast("string").as("x"),
-          raterB.cast("string").as("y"))
-        .filter(col("__g").isNotNull && col("x").isNotNull && col("y").isNotNull)
-        .groupBy(col("__g"), col("x"), col("y")).agg(count(lit(1)).as("cnt")),
-      "cohenKappaBy")
-    val one = cells.groupBy(col("__g")).agg(
-      array_sort(collect_list(struct(col("x"), col("y"), col("cnt")))).as("cs"),
-      sum(col("cnt")).as("n"),
-      sum(when(col("x") === col("y"), col("cnt")).otherwise(0L)).as("agree"))
-    val cats = array_sort(array_distinct(concat(
-      transform(col("cs"), c => c.getField("x")),
-      transform(col("cs"), c => c.getField("y")))))
-    val rowOf = (cat: Column) => aggregate(
-      filter(col("cs"), c => c.getField("x") === cat),
-      lit(0L), (a, c) => a + c.getField("cnt"))
-    val colOf = (cat: Column) => aggregate(
-      filter(col("cs"), c => c.getField("y") === cat),
-      lit(0L), (a, c) => a + c.getField("cnt"))
-    val peNum = aggregate(cats, lit(0L).cast(dec38),
-      (acc, cat) => acc + rowOf(cat).cast(dec38) * colOf(cat).cast(dec38))
-    val nDec = col("n").cast(dec38)
-    val num = nDec * col("agree").cast(dec38) - peNum
-    val den = nDec * nDec - peNum
-    one.select(
-      col("__g").as(byCol),
-      col("n").as("n_rows"), col("agree").as("n_agree"),
-      round(when(den =!= lit(0), num.cast(DoubleType) / den.cast(DoubleType)), 6)
-        .as("kappa"))
-      .orderBy(byCol)
+    val group = if (keys.isEmpty) Seq(lit("all").as("__g")) else keys.map(col)
+    val sel = bitValuesAtRanks(cal.select(group ++ Seq(col("a").as("v"), lit(1L).as("w")): _*),
+      Seq(50), rankFor = (_, n) => (coverPct.toLong * (n + 1L) + 99L) / 100L)
+    val tot = cal.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n_cal"))
+    if (keys.isEmpty)
+      sel.agg(coalesce(min(col("q_50")), one).as("qhat")).crossJoin(broadcast(tot))
+    else
+      tot.join(broadcast(sel.select(col("__g"), col("q_50").as("__qh0"))), keys, "left")
+        .select(col("__g"), col("n_cal"), coalesce(col("__qh0"), one).as("qhat"))
   }
 
   /** ROC AUC of a score against a boolean outcome — EXACT, because AUC
@@ -1721,42 +1539,36 @@ object Robust {
     * doubled-rank algebra delivers an exact-integer 2·U and the AUC is
     * ONE double division. Rides the whole [[mannWhitneyU]] scale shape
     * (per-distinct-value counts, distributed ECDF scan) and keeps its
-    * z (the "is this ranking better than chance?" significance). */
-  def aucScore(df: DataFrame, score: Column, label: Column): DataFrame = {
+    * z (the "is this ranking better than chance?" significance). A
+    * one-class input has no AUC (NULL). */
+  def aucScore(df: DataFrame, score: Column, label: Column): DataFrame =
+    aucScoreCore(df, Nil, score, label, None)
+
+  /** Per-`byCol`-segment ROC AUC — is the ranking quality uniform across
+    * segments, or does the gate only discriminate on one source's style?
+    * Exactly [[aucScore]] riding the [[mannWhitneyUBy]] algebra (segment
+    * on every key of the exact doubled-rank algebra); rows with a null
+    * segment drop, and one-class segments drop (no ranking to score —
+    * the grouped MW contract). */
+  def aucScoreBy(
+      df: DataFrame, score: Column, label: Column, byCol: String): DataFrame =
+    bySegment(aucScoreCore(df.filter(col(byCol).isNotNull), Seq(byCol), score, label,
+      Some(col("n_a") > 0 && col("n_b") > 0)), byCol)
+
+  private def aucScoreCore(df: DataFrame, by: Seq[String], score: Column, label: Column,
+      keep: Option[Column]): DataFrame = {
     val tagged = df
       .filter(score.isNotNull && label.isNotNull)
-      .select(score.as("__s"),
-        when(label.cast("boolean"), "pos").otherwise("neg").as("__l"))
-    mannWhitneyU(tagged, col("__s"), col("__l"), "pos", "neg")
-      .select(
+      .select(by.map(col) ++ Seq(score.as("__s"),
+        when(label.cast("boolean"), "pos").otherwise("neg").as("__l")): _*)
+    mannWhitneyUCore(tagged, by, col("__s"), col("__l"), "pos", "neg", keep)
+      .select(segKeys(by).map(col) ++ Seq(
         col("n_a").as("n_pos"), col("n_b").as("n_neg"),
         round(when(col("n_a") > 0 && col("n_b") > 0,
           col("u2_a").cast(DoubleType) /
             (lit(2.0) * col("n_a").cast(DoubleType) * col("n_b").cast(DoubleType))), 6)
           .as("auc"),
-        col("z_stat"))
-  }
-
-  /** Per-`byCol`-segment ROC AUC — is the ranking quality uniform across
-    * segments, or does the gate only discriminate on one source's style?
-    * Exactly [[aucScore]] riding [[mannWhitneyUBy]] (segment on every
-    * key of the exact doubled-rank algebra); one-class segments drop
-    * (no ranking to score — the grouped MW contract). */
-  def aucScoreBy(
-      df: DataFrame, score: Column, label: Column, byCol: String): DataFrame = {
-    val tagged = df
-      .filter(score.isNotNull && label.isNotNull && col(byCol).isNotNull)
-      .select(col(byCol), score.as("__s"),
-        when(label.cast("boolean"), "pos").otherwise("neg").as("__l"))
-    mannWhitneyUBy(tagged, col("__s"), col("__l"), "pos", "neg", byCol)
-      .select(
-        col(byCol),
-        col("n_a").as("n_pos"), col("n_b").as("n_neg"),
-        round(col("u2_a").cast(DoubleType) /
-          (lit(2.0) * col("n_a").cast(DoubleType) * col("n_b").cast(DoubleType)), 6)
-          .as("auc"),
-        col("z_stat"))
-      .orderBy(byCol)
+        col("z_stat")): _*)
   }
 
   /** Decile lift table of a score against a boolean outcome — the
@@ -1827,39 +1639,22 @@ object Robust {
     * computed over the bins' ROUNDED outputs in ascending-bin order (a
     * ≤ 10-element fixed double fold the oracle replays). */
   def expectedCalibrationError(
-      df: DataFrame, score: Column, label: Column): DataFrame = {
-    val one = calibrationBins(df, score, label).agg(
-      array_sort(collect_list(struct(
-        col("bin"), col("n"), col("avg_pred"), col("frac_pos")))).as("bs"),
-      sum(col("n")).as("n_rows"))
-    val nD = col("n_rows").cast(DoubleType)
-    val ece = aggregate(col("bs"), lit(0.0), (acc, b) =>
-      acc + b.getField("n").cast(DoubleType) / nD *
-        abs(b.getField("avg_pred") - b.getField("frac_pos")))
-    one.select(col("n_rows"), round(ece, 6).as("ece"))
-  }
+      df: DataFrame, score: Column, label: Column): DataFrame =
+    eceFold(calibrationBins(df, score, label), Nil)
 
   /** Per-`byCol`-segment expected calibration error — WHICH source is
     * the gate over-confident on? Exactly [[expectedCalibrationError]]
     * per segment: per-(segment, bin) exact decimal means and integer
     * rates, each segment's ≤ 10-bin ascending fold over its own rounded
-    * bin stats. */
+    * bin stats. Rows with a null segment drop. */
   def expectedCalibrationErrorBy(
-      df: DataFrame, score: Column, label: Column, byCol: String): DataFrame = {
-    val q = score.cast(org.apache.spark.sql.types.DecimalType(8, 6))
-    val bin = least(floor(q * 10).cast("int"), lit(9))
-    val bins = df
-      .select(col(byCol).as("__g"), bin.as("bin"), q.as("__q"),
-        label.cast("boolean").as("__y"))
-      .filter(col("__g").isNotNull && col("__q").isNotNull && col("__y").isNotNull)
-      .groupBy(col("__g"), col("bin"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("__q")).as("__sq"),
-        sum(when(col("__y"), 1L).otherwise(0L)).as("__pos"))
-      .select(col("__g"), col("bin"), col("n"),
-        round(col("__sq").cast(DoubleType) / col("n"), 6).as("avg_pred"),
-        round(col("__pos").cast(DoubleType) / col("n"), 6).as("frac_pos"))
-    val one = bins.groupBy(col("__g")).agg(
+      df: DataFrame, score: Column, label: Column, byCol: String): DataFrame =
+    bySegment(eceFold(
+      calibrationBinsCore(df.filter(col(byCol).isNotNull), Seq(byCol), score, label),
+      Seq("__g")), byCol)
+
+  private def eceFold(bins: DataFrame, keys: Seq[String]): DataFrame = {
+    val one = bins.groupBy(keys.map(col): _*).agg(
       array_sort(collect_list(struct(
         col("bin"), col("n"), col("avg_pred"), col("frac_pos")))).as("bs"),
       sum(col("n")).as("n_rows"))
@@ -1867,8 +1662,7 @@ object Robust {
     val ece = aggregate(col("bs"), lit(0.0), (acc, b) =>
       acc + b.getField("n").cast(DoubleType) / nD *
         abs(b.getField("avg_pred") - b.getField("frac_pos")))
-    one.select(col("__g").as(byCol), col("n_rows"), round(ece, 6).as("ece"))
-      .orderBy(byCol)
+    one.select(keys.map(col) ++ Seq(col("n_rows"), round(ece, 6).as("ece")): _*)
   }
 
   /** Brier score of the same (score, outcome) pair — the ONE-NUMBER
@@ -1904,16 +1698,30 @@ object Robust {
     * ([[guardedCells]] ceiling — a high-cardinality label space fails
     * loudly), one sorted bounded fold; the margin/diagonal folds run
     * over the cell array, never the rows. */
-  def cohenKappa(df: DataFrame, raterA: Column, raterB: Column): DataFrame = {
+  def cohenKappa(df: DataFrame, raterA: Column, raterB: Column): DataFrame =
+    cohenKappaCore(df, Nil, raterA, raterB, "cohenKappa")
+
+  /** Per-`byCol`-segment Cohen's kappa — is the gate agreement uniform
+    * across segments, or does the cheap gate only track the expensive
+    * one on one source's style? Exactly [[cohenKappa]] per segment, each
+    * segment's N²-scaled integer algebra folding over its OWN sorted
+    * cell array. Rows with a null segment drop; degenerate segments
+    * (p_e = 1) keep their counts with NULL kappa. */
+  def cohenKappaBy(
+      df: DataFrame, raterA: Column, raterB: Column, byCol: String): DataFrame =
+    bySegment(cohenKappaCore(df.filter(col(byCol).isNotNull), Seq(byCol), raterA, raterB,
+      "cohenKappaBy"), byCol)
+
+  private def cohenKappaCore(df: DataFrame, by: Seq[String], raterA: Column,
+      raterB: Column, op: String): DataFrame = {
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
+    val keys = segKeys(by)
     val cells = guardedCells(
-      df.select(raterA.cast("string").as("x"), raterB.cast("string").as("y"))
-        .filter(col("x").isNotNull && col("y").isNotNull)
-        .groupBy(col("x"), col("y")).agg(count(lit(1)).as("cnt")),
-      "cohenKappa")
-    val one = cells.agg(
-      array_sort(collect_list(struct(col("x"), col("y"), col("cnt")))).as("cs"),
-      sum(col("cnt")).as("n"),
+      df.select(segCols(by) ++ Seq(raterA.cast("string").as("x"),
+          raterB.cast("string").as("y")): _*)
+        .filter(col("x").isNotNull && col("y").isNotNull),
+      keys, op)
+    val one = cellArray(cells, keys,
       sum(when(col("x") === col("y"), col("cnt")).otherwise(0L)).as("agree"))
     val cats = array_sort(array_distinct(concat(
       transform(col("cs"), c => c.getField("x")),
@@ -1929,10 +1737,10 @@ object Robust {
     val nDec = col("n").cast(dec38)
     val num = nDec * col("agree").cast(dec38) - peNum
     val den = nDec * nDec - peNum
-    one.select(
+    one.select(keys.map(col) ++ Seq(
       col("n").as("n_rows"), col("agree").as("n_agree"),
       round(when(den =!= lit(0), num.cast(DoubleType) / den.cast(DoubleType)), 6)
-        .as("kappa"))
+        .as("kappa")): _*)
   }
 
   /** Mann–Whitney U (Wilcoxon rank-sum) between two groups — the
@@ -1958,11 +1766,35 @@ object Robust {
     * single-task sort over nearly the full input — the scale-killer.) */
   def mannWhitneyU(
       df: DataFrame, value: Column, groupCol: Column,
-      groupA: String, groupB: String): DataFrame = {
+      groupA: String, groupB: String): DataFrame =
+    mannWhitneyUCore(df, Nil, value, groupCol, groupA, groupB, None)
+
+  /** Per-`byCol`-group Mann–Whitney U — the grouped companion to
+    * [[mannWhitneyU]], completing the per-segment drift family with
+    * [[ksStatisticBy]] (max ECDF gap) and [[psiDriftBy]] (binned
+    * divergence): after "WHICH segment drifted?", the next gate is "is
+    * the rank shift SIGNIFICANT within that segment?". Exactly the
+    * global exact-integer doubled-rank algebra with the group riding
+    * every key; the cumulative below-counts run through the GROUPED
+    * two-level scan ([[runningTotalsBy]] — never a per-group single-task
+    * window). Groups missing either side have no two-sample statistic
+    * and are DROPPED (the [[ksStatisticBy]] contract); a within-group
+    * all-tied value column zeroes the tie-corrected sigma and z follows
+    * the same IEEE double division as the global operator. */
+  def mannWhitneyUBy(
+      df: DataFrame, value: Column, splitCol: Column,
+      groupA: String, groupB: String, byCol: String): DataFrame =
+    bySegment(mannWhitneyUCore(df, Seq(byCol), value, splitCol, groupA, groupB,
+      Some(col("n_a") > 0 && col("n_b") > 0)), byCol)
+
+  private def mannWhitneyUCore(
+      df: DataFrame, by: Seq[String], value: Column, splitCol: Column,
+      groupA: String, groupB: String, keep: Option[Column]): DataFrame = {
+    val keys = segKeys(by)
     val tagged = df
-      .filter(groupCol.isin(groupA, groupB))
-      .select(value.as("v"), (groupCol === groupA).as("is_a"))
-    val perValue = tagged.groupBy(col("v")).agg(
+      .filter(splitCol.isin(groupA, groupB))
+      .select(segCols(by) ++ Seq(value.as("v"), (splitCol === groupA).as("is_a")): _*)
+    val perValue = tagged.groupBy((keys :+ "v").map(col): _*).agg(
       sum(when(col("is_a"), 1L).otherwise(0L)).as("ca"),
       sum(when(!col("is_a"), 1L).otherwise(0L)).as("cb"))
     // decimal BEFORE multiplying (the spearmanRho discipline): Σ t³ passes
@@ -1971,13 +1803,14 @@ object Robust {
     // as BIGINT (the output contract; 2·U_A ≤ 2·n_a·n_b).
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val t = col("ca").cast(dec38) + col("cb")
-    val ranked = runningTotals(perValue, Seq("ca", "cb"))
+    val ranked = runningTotalsBy(perValue, keys, Seq("ca", "cb"))
       .withColumn("below", col("cum_ca") + col("cum_cb") - col("ca") - col("cb"))
-    val agg = ranked.agg(
+    val agg0 = ranked.groupBy(keys.map(col): _*).agg(
       sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"),
       sum(col("ca").cast(dec38) *
         (col("below").cast(dec38) * 2 + col("ca") + col("cb") + 1)).as("__r2a"),
       sum(t * t * t - t).as("__tie3"))
+    val agg = keep.fold(agg0)(agg0.filter(_))
     val (na, nb) = (col("n_a").cast(DoubleType), col("n_b").cast(DoubleType))
     val u2a = (col("__r2a") - col("n_a").cast(dec38) * (col("n_a") + 1))
       .cast(LongType) // exact 2·U_A
@@ -1986,61 +1819,10 @@ object Robust {
     val mu = na * nb / lit(2.0)
     val sigma = sqrt(na * nb / lit(12.0) *
       ((nn + lit(1.0)) - col("__tie3").cast(DoubleType) / (nn * (nn - lit(1.0)))))
-    agg.select(
+    agg.select(keys.map(col) ++ Seq(
       col("n_a"), col("n_b"),
       u2a.as("u2_a"),
-      round((u - mu) / sigma, 6).as("z_stat"))
-  }
-
-  /** Per-`byCol`-group Mann–Whitney U — the grouped companion to
-    * [[mannWhitneyU]], completing the per-segment drift family with
-    * [[ksStatisticBy]] (max ECDF gap) and [[psiDriftBy]] (binned
-    * divergence): after "WHICH segment drifted?", the next gate is "is
-    * the rank shift SIGNIFICANT within that segment?". Exactly the
-    * global exact-integer doubled-rank algebra with the group riding
-    * every key: per-(group, value) counts aggregate distributed, the
-    * cumulative below-counts run through the GROUPED two-level scan
-    * ([[runningTotalsBy]] — never a per-group single-task window), and
-    * `u2_a` = 2·U_A is emitted per group as the exact integer so the
-    * oracle compare stays float-free for the statistic itself. Groups
-    * missing either side have no two-sample statistic and are DROPPED
-    * (the [[ksStatisticBy]] contract); a within-group all-tied value
-    * column zeroes the tie-corrected sigma and z follows the same IEEE
-    * double division as the global operator. */
-  def mannWhitneyUBy(
-      df: DataFrame, value: Column, splitCol: Column,
-      groupA: String, groupB: String, byCol: String): DataFrame = {
-    val tagged = df
-      .filter(splitCol.isin(groupA, groupB))
-      .select(col(byCol).as("__g"), value.as("v"), (splitCol === groupA).as("is_a"))
-    val perValue = tagged.groupBy(col("__g"), col("v")).agg(
-      sum(when(col("is_a"), 1L).otherwise(0L)).as("ca"),
-      sum(when(!col("is_a"), 1L).otherwise(0L)).as("cb"))
-    // decimal-before-multiply, per group — see [[mannWhitneyU]]
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val t = col("ca").cast(dec38) + col("cb")
-    val ranked = runningTotalsBy(perValue, Seq("__g"), Seq("ca", "cb"))
-      .withColumn("below", col("cum_ca") + col("cum_cb") - col("ca") - col("cb"))
-    val agg = ranked.groupBy(col("__g")).agg(
-      sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"),
-      sum(col("ca").cast(dec38) *
-        (col("below").cast(dec38) * 2 + col("ca") + col("cb") + 1)).as("__r2a"),
-      sum(t * t * t - t).as("__tie3"))
-      .filter(col("n_a") > 0 && col("n_b") > 0)
-    val (na, nb) = (col("n_a").cast(DoubleType), col("n_b").cast(DoubleType))
-    val u2a = (col("__r2a") - col("n_a").cast(dec38) * (col("n_a") + 1))
-      .cast(LongType) // exact 2·U_A
-    val nn = na + nb
-    val u = u2a.cast(DoubleType) / lit(2.0)
-    val mu = na * nb / lit(2.0)
-    val sigma = sqrt(na * nb / lit(12.0) *
-      ((nn + lit(1.0)) - col("__tie3").cast(DoubleType) / (nn * (nn - lit(1.0)))))
-    agg.select(
-      col("__g").as(byCol),
-      col("n_a"), col("n_b"),
-      u2a.as("u2_a"),
-      round((u - mu) / sigma, 6).as("z_stat"))
-      .orderBy(byCol)
+      round((u - mu) / sigma, 6).as("z_stat")): _*)
   }
 
   /** Cliff's delta — the EFFECT-SIZE companion to [[mannWhitneyU]]: the
@@ -2059,7 +1841,7 @@ object Robust {
   def cliffsDelta(
       df: DataFrame, value: Column, groupCol: Column,
       groupA: String, groupB: String): DataFrame =
-    cliffsDeltaCore(df, value, groupCol, groupA, groupB, None)
+    cliffsDeltaCore(df, Nil, value, groupCol, groupA, groupB)
 
   /** Per-`byCol`-group Cliff's delta — "how big is the shift in EACH
     * segment?", the effect-size column of the per-segment drift
@@ -2070,17 +1852,15 @@ object Robust {
   def cliffsDeltaBy(
       df: DataFrame, value: Column, splitCol: Column,
       groupA: String, groupB: String, byCol: String): DataFrame =
-    cliffsDeltaCore(df, value, splitCol, groupA, groupB, Some(byCol))
+    bySegment(cliffsDeltaCore(df, Seq(byCol), value, splitCol, groupA, groupB), byCol)
 
   private def cliffsDeltaCore(
-      df: DataFrame, value: Column, splitCol: Column,
-      groupA: String, groupB: String, byColOpt: Option[String]): DataFrame = {
-    val by = byColOpt.toSeq
+      df: DataFrame, by: Seq[String], value: Column, splitCol: Column,
+      groupA: String, groupB: String): DataFrame = {
     val tagged = df
       .filter(splitCol.isin(groupA, groupB))
-      .select(by.map(c => col(c).as("__g")) ++
-        Seq(value.as("v"), (splitCol === groupA).as("is_a")): _*)
-    val gKey = by.map(_ => "__g")
+      .select(segCols(by) ++ Seq(value.as("v"), (splitCol === groupA).as("is_a")): _*)
+    val gKey = segKeys(by)
     val perValue = tagged.groupBy((gKey :+ "v").map(col): _*).agg(
       sum(when(col("is_a"), 1L).otherwise(0L)).as("ca"),
       sum(when(!col("is_a"), 1L).otherwise(0L)).as("cb"))
@@ -2094,14 +1874,9 @@ object Robust {
         (col("cum_cb").cast(dec38) * 2 - col("cb"))).as("__s"))
       .filter(col("n_a") > 0 && col("n_b") > 0)
     val nab = col("n_a").cast(dec38) * col("n_b")
-    val out = agg.select(gKey.map(col) ++ Seq(col("n_a"), col("n_b"),
+    agg.select(gKey.map(col) ++ Seq(col("n_a"), col("n_b"),
       round((col("__s") - nab).cast(DoubleType) / nab.cast(DoubleType), 6)
         .as("cliffs_delta")): _*)
-    byColOpt match {
-      case Some(b) =>
-        out.select(col("__g").as(b), col("n_a"), col("n_b"), col("cliffs_delta")).orderBy(b)
-      case None => out
-    }
   }
 
   /** Two-sided normal p-value from a z statistic — p = erfc(|z|/√2) via
@@ -2178,90 +1953,65 @@ object Robust {
     * psi-of-zero row: a gate must fail loudly on a missing profile. */
   def psiDrift(
       df: DataFrame, value: Column, groupCol: Column,
-      refGroup: String, curGroup: String, nBins: Int = 10): DataFrame = {
-    require(nBins >= 2 && 100 % nBins == 0, s"psiDrift: nBins must divide 100, got $nBins")
-    val tagged = df
-      .filter(groupCol.isin(refGroup, curGroup))
-      .select(value.cast(DoubleType).as("v"), (groupCol === refGroup).as("is_ref"))
-      .filter(col("v").isNotNull)
-    val pcts = (1 until nBins).map(i => i * 100 / nBins)
-    val edges = bitValuesAtRanks(
-      tagged.filter(col("is_ref")).select(lit(1).as("__g"), col("v"), lit(1L).as("w")),
-      pcts)
-    // bin id = # edges strictly below v (v == edge → the lower bin)
-    val bin = pcts.map(p => when(col("v") > col(s"q_$p"), 1).otherwise(0))
-      .reduce(_ + _)
-    val counts = tagged.crossJoin(broadcast(edges.drop("__g", "n")))
-      .select(bin.as("bin"), col("is_ref"))
-      .groupBy(col("bin"))
-      .agg(
-        sum(when(col("is_ref"), 1L).otherwise(0L)).as("cr"),
-        sum(when(!col("is_ref"), 1L).otherwise(0L)).as("cc"))
-    // full bin domain (smoothed empty bins contribute when n_ref ≠ n_cur)
-    val allBins = edges.select(explode(sequence(lit(0), lit(nBins - 1))).as("bin"))
-      .join(counts, Seq("bin"), "left")
-      .select(col("bin"),
-        coalesce(col("cr"), lit(0L)).as("cr"),
-        coalesce(col("cc"), lit(0L)).as("cc"))
-    // grouped (constant-key) aggregation, NOT a global one: an empty or
-    // all-null reference group then yields an EMPTY result — a drift gate
-    // must never read "psi = 0, perfectly stable" off a missing profile
-    val one = allBins.groupBy(lit(1).as("__one")).agg(
-      array_sort(collect_list(struct(col("bin"), col("cr"), col("cc")))).as("bs"),
-      sum(col("cr")).as("n_ref"), sum(col("cc")).as("n_cur"))
-    val nR = col("n_ref").cast(DoubleType)
-    val nC = col("n_cur").cast(DoubleType)
-    val half = lit(0.5)
-    val psi = aggregate(col("bs"), lit(0.0), (acc, b) => {
-      val p = (b.getField("cr").cast(DoubleType) + half) / (nR + half * nBins)
-      val q = (b.getField("cc").cast(DoubleType) + half) / (nC + half * nBins)
-      acc + (p - q) * log(p / q)
-    })
-    one.select(col("n_ref"), col("n_cur"), round(psi, 6).as("psi"))
-  }
+      refGroup: String, curGroup: String, nBins: Int = 10): DataFrame =
+    psiDriftCore(df, Nil, value, groupCol, refGroup, curGroup, nBins, "psiDrift")
 
   /** Per-`byCol`-segment PSI — the grouped companion to [[psiDrift]]
     * (with [[ksStatisticBy]]: "WHICH segment drifted, and how is its
     * mass redistributed?"). Each segment bins against ITS OWN reference
     * quantile edges — a shared global binning would hide a segment whose
-    * distribution moved inside one global bin. Scale shape: per-segment
-    * edges come from the GROUPED bit-grid selection ([[bitValuesAtRanks]]
-    * with the segment as the group — no bounds pass, point-mass-safe),
-    * attach to rows by a slim broadcast keyed on the segment, binning is
-    * map-side, and the per-(segment, bin) counts are a ≤ |segments|·nBins
-    * aggregate. Segments with an EMPTY reference side produce no edges
+    * distribution moved inside one global bin. Per-segment edges come
+    * from the GROUPED bit-grid selection (no bounds pass,
+    * point-mass-safe) and attach to rows by a slim broadcast keyed on
+    * the segment. Segments with an EMPTY reference side produce no edges
     * and are DROPPED (the gate fails loudly on a missing profile, as in
     * the global contract); segments with an empty CURRENT side keep the
     * smoothed all-zero fold — maximal drift is signal, not absence. */
   def psiDriftBy(
       df: DataFrame, value: Column, splitCol: Column,
       refGroup: String, curGroup: String, byCol: String,
-      nBins: Int = 10): DataFrame = {
-    require(nBins >= 2 && 100 % nBins == 0, s"psiDriftBy: nBins must divide 100, got $nBins")
+      nBins: Int = 10): DataFrame =
+    bySegment(psiDriftCore(df, Seq(byCol), value, splitCol, refGroup, curGroup, nBins,
+      "psiDriftBy"), byCol)
+
+  private def psiDriftCore(
+      df: DataFrame, by: Seq[String], value: Column, splitCol: Column,
+      refGroup: String, curGroup: String, nBins: Int, op: String): DataFrame = {
+    require(nBins >= 2 && 100 % nBins == 0, s"$op: nBins must divide 100, got $nBins")
+    val keys = segKeys(by)
     val tagged = df
       .filter(splitCol.isin(refGroup, curGroup))
-      .select(col(byCol).as("__g"), value.cast(DoubleType).as("v"),
-        (splitCol === refGroup).as("is_ref"))
+      .select(segCols(by) ++ Seq(value.cast(DoubleType).as("v"),
+        (splitCol === refGroup).as("is_ref")): _*)
       .filter(col("v").isNotNull)
     val pcts = (1 until nBins).map(i => i * 100 / nBins)
+    val group = if (keys.isEmpty) Seq(lit(1).as("__g")) else keys.map(col)
     val edges = bitValuesAtRanks(
-      tagged.filter(col("is_ref")).select(col("__g"), col("v"), lit(1L).as("w")),
+      tagged.filter(col("is_ref")).select(group ++ Seq(col("v"), lit(1L).as("w")): _*),
       pcts)
+    // bin id = # edges strictly below v (v == edge → the lower bin)
     val bin = pcts.map(p => when(col("v") > col(s"q_$p"), 1).otherwise(0))
       .reduce(_ + _)
-    val counts = tagged.join(broadcast(edges.drop("n")), Seq("__g"))
-      .select(col("__g"), bin.as("bin"), col("is_ref"))
-      .groupBy(col("__g"), col("bin"))
+    val counts = attach(tagged,
+        edges.drop((if (keys.isEmpty) Seq("__g", "n") else Seq("n")): _*), keys)
+      .select(keys.map(col) ++ Seq(bin.as("bin"), col("is_ref")): _*)
+      .groupBy((keys :+ "bin").map(col): _*)
       .agg(
         sum(when(col("is_ref"), 1L).otherwise(0L)).as("cr"),
         sum(when(!col("is_ref"), 1L).otherwise(0L)).as("cc"))
+    // full bin domain (smoothed empty bins contribute when n_ref ≠ n_cur)
     val allBins = edges
-      .select(col("__g"), explode(sequence(lit(0), lit(nBins - 1))).as("bin"))
-      .join(counts, Seq("__g", "bin"), "left")
-      .select(col("__g"), col("bin"),
+      .select(keys.map(col) :+ explode(sequence(lit(0), lit(nBins - 1))).as("bin"): _*)
+      .join(counts, keys :+ "bin", "left")
+      .select(keys.map(col) ++ Seq(col("bin"),
         coalesce(col("cr"), lit(0L)).as("cr"),
-        coalesce(col("cc"), lit(0L)).as("cc"))
-    val one = allBins.groupBy(col("__g")).agg(
+        coalesce(col("cc"), lit(0L)).as("cc")): _*)
+    // the global form groups by a constant key, NOT a global aggregation:
+    // an empty or all-null reference group then yields an EMPTY result —
+    // a drift gate must never read "psi = 0, perfectly stable" off a
+    // missing profile
+    val one = allBins.groupBy(
+        (if (keys.isEmpty) Seq(lit(1).as("__one")) else keys.map(col)): _*).agg(
       array_sort(collect_list(struct(col("bin"), col("cr"), col("cc")))).as("bs"),
       sum(col("cr")).as("n_ref"), sum(col("cc")).as("n_cur"))
     val nR = col("n_ref").cast(DoubleType)
@@ -2272,9 +2022,7 @@ object Robust {
       val q = (b.getField("cc").cast(DoubleType) + half) / (nC + half * nBins)
       acc + (p - q) * log(p / q)
     })
-    one.select(col("__g").as(byCol), col("n_ref"), col("n_cur"),
-      round(psi, 6).as("psi"))
-      .orderBy(byCol)
+    one.select(keys.map(col) ++ Seq(col("n_ref"), col("n_cur"), round(psi, 6).as("psi")): _*)
   }
 
   /** Reference quantile edges for PSI-style binning: the `nBins`-quantile
@@ -2310,60 +2058,47 @@ object Robust {
     */
   def ksStatistic(
       df: DataFrame, value: Column, groupCol: Column,
-      groupA: String, groupB: String): DataFrame = {
-    val tagged = df
-      .filter(groupCol.isin(groupA, groupB))
-      .select(value.as("v"), (groupCol === groupA).as("is_a"))
-    val perValue = tagged.groupBy(col("v")).agg(
-      sum(when(col("is_a"), 1L).otherwise(0L)).as("ca"),
-      sum(when(!col("is_a"), 1L).otherwise(0L)).as("cb"))
-    val cum = runningTotals(perValue, Seq("ca", "cb"))
-      .select(col("cum_ca").as("sa"), col("cum_cb").as("sb"))
-    val tot = perValue.agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"))
-    cum.crossJoin(broadcast(tot))
-      .agg(
-        first(col("n_a")).as("n_a"), first(col("n_b")).as("n_b"),
-        round(max(abs(
-          col("sa").cast(DoubleType) / col("n_a") -
-            col("sb").cast(DoubleType) / col("n_b"))), 6).as("ks_stat"))
-  }
+      groupA: String, groupB: String): DataFrame =
+    ksStatisticCore(df, Nil, value, groupCol, groupA, groupB, None)
 
   /** Per-`byCol`-group two-sample KS drift — the "WHICH source/segment
     * drifted?" companion to [[ksStatistic]] (the first question a
     * curation pipeline asks after the global gate trips): one row per
     * group with D = max |F_a(x) − F_b(x)| within that group. Same scale
-    * shape as the global statistic with the group riding every key:
-    * per-(group, value) counts aggregate distributed (one keyed
-    * shuffle), the exact ECDF cumulatives run through the GROUPED
-    * two-level scan ([[runningTotalsBy]] — never a per-group single-task
-    * window; a group bigger than one partition scans in parallel), and
-    * the per-group totals broadcast back. Groups missing either side
-    * have no two-sample statistic and are DROPPED (a gate must not read
-    * "D over an empty distribution" as signal); both ECDFs are
-    * exact-integer counts divided once at the end, so D is bit-portable
-    * across engines. */
+    * shape as the global statistic with the group riding every key: the
+    * exact ECDF cumulatives run through the GROUPED two-level scan
+    * ([[runningTotalsBy]] — never a per-group single-task window; a group
+    * bigger than one partition scans in parallel), and the per-group
+    * totals broadcast back. Groups missing either side have no
+    * two-sample statistic and are DROPPED before the division (a gate
+    * must not read "D over an empty distribution" as signal). */
   def ksStatisticBy(
       df: DataFrame, value: Column, splitCol: Column,
-      groupA: String, groupB: String, byCol: String): DataFrame = {
+      groupA: String, groupB: String, byCol: String): DataFrame =
+    bySegment(ksStatisticCore(df, Seq(byCol), value, splitCol, groupA, groupB,
+      Some(col("n_a") > 0 && col("n_b") > 0)), byCol)
+
+  private def ksStatisticCore(
+      df: DataFrame, by: Seq[String], value: Column, splitCol: Column,
+      groupA: String, groupB: String, keep: Option[Column]): DataFrame = {
+    val keys = segKeys(by)
     val tagged = df
       .filter(splitCol.isin(groupA, groupB))
-      .select(col(byCol).as("__g"), value.as("v"), (splitCol === groupA).as("is_a"))
-    val perValue = tagged.groupBy(col("__g"), col("v")).agg(
+      .select(segCols(by) ++ Seq(value.as("v"), (splitCol === groupA).as("is_a")): _*)
+    val perValue = tagged.groupBy((keys :+ "v").map(col): _*).agg(
       sum(when(col("is_a"), 1L).otherwise(0L)).as("ca"),
       sum(when(!col("is_a"), 1L).otherwise(0L)).as("cb"))
-    val cum = runningTotalsBy(perValue, Seq("__g"), Seq("ca", "cb"))
-    val tot = perValue.groupBy(col("__g"))
+    val cum = runningTotalsBy(perValue, keys, Seq("ca", "cb"))
+    val tot0 = perValue.groupBy(keys.map(col): _*)
       .agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"))
-      .filter(col("n_a") > 0 && col("n_b") > 0)
-    cum.join(broadcast(tot), "__g")
-      .groupBy(col("__g"))
+    val tot = keep.fold(tot0)(tot0.filter(_))
+    attach(cum, tot, keys)
+      .groupBy(keys.map(col): _*)
       .agg(
         first(col("n_a")).as("n_a"), first(col("n_b")).as("n_b"),
         round(max(abs(
           col("cum_ca").cast(DoubleType) / col("n_a") -
             col("cum_cb").cast(DoubleType) / col("n_b"))), 6).as("ks_stat"))
-      .select(col("__g").as(byCol), col("n_a"), col("n_b"), col("ks_stat"))
-      .orderBy(byCol)
   }
 
   /** Two-sample Wasserstein-1 (earth-mover) distance between the value
@@ -2395,7 +2130,7 @@ object Robust {
   def wassersteinDistance(
       df: DataFrame, value: Column, groupCol: Column,
       groupA: String, groupB: String): DataFrame =
-    wassersteinCore(df, value, groupCol, groupA, groupB, None)
+    wassersteinCore(df, Nil, value, groupCol, groupA, groupB)
 
   /** Per-`byCol`-group Wasserstein-1 drift — "HOW FAR did each segment's
     * distribution move?", the magnitude companion to [[ksStatisticBy]]
@@ -2407,17 +2142,15 @@ object Robust {
   def wassersteinDistanceBy(
       df: DataFrame, value: Column, splitCol: Column,
       groupA: String, groupB: String, byCol: String): DataFrame =
-    wassersteinCore(df, value, splitCol, groupA, groupB, Some(byCol))
+    bySegment(wassersteinCore(df, Seq(byCol), value, splitCol, groupA, groupB), byCol)
 
   private def wassersteinCore(
-      df: DataFrame, value: Column, splitCol: Column,
-      groupA: String, groupB: String, byColOpt: Option[String]): DataFrame = {
-    val by = byColOpt.toSeq
+      df: DataFrame, by: Seq[String], value: Column, splitCol: Column,
+      groupA: String, groupB: String): DataFrame = {
     val tagged = df
       .filter(splitCol.isin(groupA, groupB))
-      .select(by.map(c => col(c).as("__g")) ++
-        Seq(value.as("v"), (splitCol === groupA).as("is_a")): _*)
-    val gKey = by.map(_ => "__g")
+      .select(segCols(by) ++ Seq(value.as("v"), (splitCol === groupA).as("is_a")): _*)
+    val gKey = segKeys(by)
     val perValue = tagged.groupBy((gKey :+ "v").map(col): _*).agg(
       sum(when(col("is_a"), 1L).otherwise(0L)).as("ca"),
       sum(when(!col("is_a"), 1L).otherwise(0L)).as("cb"))
@@ -2425,9 +2158,7 @@ object Robust {
     val tot = perValue.groupBy(gKey.map(col): _*)
       .agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"))
       .filter(col("n_a") > 0 && col("n_b") > 0)
-    val joined =
-      if (by.isEmpty) cum.crossJoin(broadcast(tot))
-      else cum.join(broadcast(tot), gKey)
+    val joined = attach(cum, tot, gKey)
     // exact integer numerator: |cumA·n_b − cumB·n_a| · (next_v − v),
     // decimal BEFORE the multiply (the mannWhitneyU discipline); the
     // last value has no successor and contributes 0 mass
@@ -2435,18 +2166,13 @@ object Robust {
     val term = abs(col("cum_ca").cast(dec38) * col("n_b") -
         col("cum_cb").cast(dec38) * col("n_a")) *
       coalesce((col("next_v") - col("v")).cast(dec38), lit(0L))
-    val out = joined.groupBy(gKey.map(col): _*)
+    joined.groupBy(gKey.map(col): _*)
       .agg(
         first(col("n_a")).as("n_a"), first(col("n_b")).as("n_b"),
         sum(term).as("__num"))
       .select(gKey.map(col) ++ Seq(col("n_a"), col("n_b"),
         round(col("__num").cast(DoubleType) /
           (col("n_a").cast(dec38) * col("n_b")).cast(DoubleType), 6).as("w1_dist")): _*)
-    byColOpt match {
-      case Some(b) =>
-        out.select(col("__g").as(b), col("n_a"), col("n_b"), col("w1_dist")).orderBy(b)
-      case None => out
-    }
   }
 
   /** Spearman rank correlation between two numeric columns — the
@@ -2470,14 +2196,36 @@ object Robust {
     * scale-killer), and the doubled ranks join BACK to the rows on the
     * value key — two keyed shuffles of slim (value, rank) relations.
     * Null rows (either side) are excluded up front, as scipy does. */
-  def spearmanRho(df: DataFrame, xCol: Column, yCol: Column): DataFrame = {
-    val rows = df.select(xCol.as("x"), yCol.as("y"))
+  def spearmanRho(df: DataFrame, xCol: Column, yCol: Column): DataFrame =
+    spearmanRhoCore(df, Nil, xCol, yCol, _ / _)
+
+  /** Per-`byCol`-group Spearman ρ — "does the monotone association hold
+    * in EVERY segment, or is the global ρ a mix?" (Simpson's-paradox
+    * screening for feature/quality signals). Exactly [[spearmanRho]]'s
+    * doubled-rank algebra with the group riding every key — ranks are
+    * within-group by construction. Groups with < 2 rows or a constant
+    * column have zero variance and yield a NULL ρ (`try_divide` — under
+    * ANSI a plain 0/0 would kill the WHOLE query over one degenerate
+    * segment), kept in the output so the caller sees the segment rather
+    * than losing it. */
+  def spearmanRhoBy(
+      df: DataFrame, xCol: Column, yCol: Column, byCol: String): DataFrame =
+    bySegment(spearmanRhoCore(df, Seq(byCol), xCol, yCol, try_divide(_, _)), byCol)
+
+  private def spearmanRhoCore(df: DataFrame, by: Seq[String], xCol: Column, yCol: Column,
+      divide: (Column, Column) => Column): DataFrame = {
+    val keys = segKeys(by)
+    // Not materialized: three consumers (two rank scans + the join-back),
+    // but a pruned source re-scan measures cheaper than the checkpoint
+    // round-trip.
+    val rows = df.select(segCols(by) ++ Seq(xCol.as("x"), yCol.as("y")): _*)
       .filter(col("x").isNotNull && col("y").isNotNull)
     def ranks2(c: String): DataFrame = {
-      val perValue = rows.groupBy(col(c).as("v")).agg(count(lit(1)).as("cnt"))
-      runningTotals(perValue, Seq("cnt"))
-        .select(col("v").as(c),
-          (lit(2L) * (col("cum_cnt") - col("cnt")) + col("cnt") + lit(1L)).as(s"r2_$c"))
+      val perValue = rows.groupBy(keys.map(col) :+ col(c).as("v"): _*)
+        .agg(count(lit(1)).as("cnt"))
+      runningTotalsBy(perValue, keys, Seq("cnt"))
+        .select(keys.map(col) ++ Seq(col("v").as(c),
+          (lit(2L) * (col("cum_cnt") - col("cnt")) + col("cnt") + lit(1L)).as(s"r2_$c")): _*)
     }
     // Join strategy pinned (guide §3.1): BOTH sides of each rank
     // join-back are corpus-proportional (rows ≈ n, ranks ≈ distinct
@@ -2489,10 +2237,10 @@ object Robust {
     // corpus broadcast is an OOM, not a plan choice). The rank side is
     // the build: slim (value, rank) rows, per-partition build bounded by
     // distinct-values / shuffle-partitions.
-    val ranked = rows.join(ranks2("x").hint("shuffle_hash"), "x")
-      .join(ranks2("y").hint("shuffle_hash"), "y")
+    val ranked = rows.join(ranks2("x").hint("shuffle_hash"), keys :+ "x")
+      .join(ranks2("y").hint("shuffle_hash"), keys :+ "y")
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val m = ranked.agg(
+    val m = ranked.groupBy(keys.map(col): _*).agg(
       count(lit(1)).as("n"),
       sum(col("r2_x")).cast(dec38).as("sx"),
       sum(col("r2_y")).cast(dec38).as("sy"),
@@ -2507,58 +2255,8 @@ object Robust {
     val cov = (nD * col("sxy") - col("sx") * col("sy")).cast(DoubleType)
     val vx = (nD * col("sxx") - col("sx") * col("sx")).cast(DoubleType)
     val vy = (nD * col("syy") - col("sy") * col("sy")).cast(DoubleType)
-    m.select(col("n"), round(cov / (sqrt(vx) * sqrt(vy)), 6).as("rho"))
-  }
-
-  /** Per-`byCol`-group Spearman ρ — "does the monotone association hold
-    * in EVERY segment, or is the global ρ a mix?" (Simpson's-paradox
-    * screening for feature/quality signals). Exactly [[spearmanRho]]'s
-    * doubled-rank algebra with the group riding every key: per-(group,
-    * value) counts, the GROUPED two-level scan ([[runningTotalsBy]]) for
-    * cumulative counts — ranks are within-group by construction — and
-    * rank join-backs on (group, value). Moments combine per group in
-    * DECIMAL(38,0) with the same overflow bounds; groups with < 2 rows
-    * or a constant column have zero variance and yield a NULL ρ
-    * (`try_divide` — under ANSI a plain 0/0 would kill the WHOLE query
-    * over one degenerate segment), kept in the output so the caller
-    * sees the segment rather than losing it. */
-  def spearmanRhoBy(
-      df: DataFrame, xCol: Column, yCol: Column, byCol: String): DataFrame = {
-    // Not materialized: three consumers (two rank scans + the join-back),
-    // but a pruned source re-scan measures cheaper than the checkpoint
-    // round-trip — the same counter-measurement as [[spearmanRho]].
-    val rows = df.select(col(byCol).as("__g"), xCol.as("x"), yCol.as("y"))
-      .filter(col("x").isNotNull && col("y").isNotNull)
-    def ranks2(c: String): DataFrame = {
-      val perValue = rows.groupBy(col("__g"), col(c).as("v"))
-        .agg(count(lit(1)).as("cnt"))
-      runningTotalsBy(perValue, Seq("__g"), Seq("cnt"))
-        .select(col("__g"), col("v").as(c),
-          (lit(2L) * (col("cum_cnt") - col("cnt")) + col("cnt") + lit(1L)).as(s"r2_$c"))
-    }
-    // Join strategy pinned — the [[spearmanRho]] broadcast-estimate
-    // counter-measurement (neither join-back side may broadcast at scale)
-    val ranked = rows.join(ranks2("x").hint("shuffle_hash"), Seq("__g", "x"))
-      .join(ranks2("y").hint("shuffle_hash"), Seq("__g", "y"))
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val m = ranked.groupBy(col("__g")).agg(
-      count(lit(1)).as("n"),
-      sum(col("r2_x")).cast(dec38).as("sx"),
-      sum(col("r2_y")).cast(dec38).as("sy"),
-      // cast BEFORE multiplying: the rank-product sums are ~4n³, past
-      // BIGINT at n ≈ 1.3M rows (per group) — the aggregation itself must
-      // run in decimal for the documented exact-combination contract to
-      // hold (the HUGEINT oracle's semantics), not just the final cast
-      sum(col("r2_x").cast(dec38) * col("r2_y").cast(dec38)).as("sxy"),
-      sum(col("r2_x").cast(dec38) * col("r2_x").cast(dec38)).as("sxx"),
-      sum(col("r2_y").cast(dec38) * col("r2_y").cast(dec38)).as("syy"))
-    val nD = col("n").cast(dec38)
-    val cov = (nD * col("sxy") - col("sx") * col("sy")).cast(DoubleType)
-    val vx = (nD * col("sxx") - col("sx") * col("sx")).cast(DoubleType)
-    val vy = (nD * col("syy") - col("sy") * col("sy")).cast(DoubleType)
-    m.select(col("__g").as(byCol), col("n"),
-      round(try_divide(cov, sqrt(vx) * sqrt(vy)), 6).as("rho"))
-      .orderBy(byCol)
+    m.select(keys.map(col) ++ Seq(col("n"),
+      round(divide(cov, sqrt(vx) * sqrt(vy)), 6).as("rho")): _*)
   }
 
   /** Kendall τ-b between two DISCRETE/ordinal columns — the tie-robust
@@ -2575,77 +2273,34 @@ object Robust {
     * factor converts to double separately (their product would need
     * ~2×63 bits). Emits P and Q exactly: the oracle compare is
     * float-free for the pair counts themselves. */
-  def kendallTauB(df: DataFrame, xCol: Column, yCol: Column): DataFrame = {
-    val cells = guardedCells(
-      df.select(xCol.as("x"), yCol.as("y"))
-        .filter(col("x").isNotNull && col("y").isNotNull)
-        .groupBy(col("x"), col("y")).agg(count(lit(1)).as("cnt")),
-      "kendallTauB")
-    val tiesX = cells.groupBy(col("x")).agg(sum(col("cnt")).as("tx"))
-      .agg(sum(expr("tx * (tx - 1) div 2")).as("n1"))
-    val tiesY = cells.groupBy(col("y")).agg(sum(col("cnt")).as("ty"))
-      .agg(sum(expr("ty * (ty - 1) div 2")).as("n2"))
-    val one = cells.agg(
-      array_sort(collect_list(struct(col("x"), col("y"), col("cnt")))).as("cs"),
-      sum(col("cnt")).as("n"))
-    def pairSum(cmp: (Column, Column) => Column): Column =
-      aggregate(col("cs"), lit(0L), (acc, c) =>
-        acc + c.getField("cnt") * aggregate(
-          filter(col("cs"), o =>
-            o.getField("x") > c.getField("x") && cmp(o.getField("y"), c.getField("y"))),
-          lit(0L), (a, o) => a + o.getField("cnt")))
-    val n0 = expr("n * (n - 1) div 2")
-    val withPq = one
-      .select(col("n"), pairSum(_ > _).as("concordant"), pairSum(_ < _).as("discordant"))
-      .crossJoin(broadcast(tiesX)).crossJoin(broadcast(tiesY))
-    withPq.select(col("n"), col("concordant"), col("discordant"),
-      round((col("concordant") - col("discordant")).cast(DoubleType) /
-        (sqrt((n0 - col("n1")).cast(DoubleType)) * sqrt((n0 - col("n2")).cast(DoubleType))),
-        6).as("tau_b"))
-  }
-
-  /** Grouped [[guardedCells]]: the ceiling applies PER GROUP (each
-    * group's fold is O(cells_g²)), enforced on the `cnt` value path at
-    * execution time exactly like the global gate. */
-  private def guardedCellsBy(cells0: DataFrame, op: String): DataFrame = {
-    val cells = cells0.localCheckpoint(false)
-    val nc = cells.groupBy(col("__g")).agg(count(lit(1)).as("__nc"))
-    cells.join(nc, "__g")
-      .select(col("__g"), col("x"), col("y"),
-        when(col("__nc") > lit(MaxContingencyCells),
-          raise_error(concat(
-            lit(s"$op: a group's contingency domain has "), col("__nc"),
-            lit(s" cells, over the $MaxContingencyCells ceiling — the" +
-              " O(cells²) per-group fold requires a bounded" +
-              " discrete/ordinal domain; bucket or discretize the columns" +
-              " first"))).cast(LongType))
-          .otherwise(col("cnt")).as("cnt"))
-  }
+  def kendallTauB(df: DataFrame, xCol: Column, yCol: Column): DataFrame =
+    kendallTauBCore(df, Nil, xCol, yCol, "kendallTauB")
 
   /** Per-`byCol`-segment Kendall τ-b — the tie-robust association gate in
     * every segment (completing the grouped association family next to
     * [[spearmanRhoBy]]: "does the ordinal association hold per segment,
     * or is the global τ a mixture artifact?"). Exactly [[kendallTauB]]
-    * with the segment riding every key: per-(segment, x, y) cell counts
-    * aggregate distributed, marginal tie pairs re-aggregate per segment,
-    * and each segment's O(cells²) pair fold runs over its OWN collected
-    * array (one row per segment, each bounded by the per-group
-    * [[MaxContingencyCells]] gate). Pair counts stay exact integers per
-    * segment; only the final τ_b division floats. */
+    * with the segment riding every key: marginal tie pairs re-aggregate
+    * per segment, and each segment's O(cells²) pair fold runs over its
+    * OWN collected array (each bounded by the per-group
+    * [[MaxContingencyCells]] gate). */
   def kendallTauBBy(
-      df: DataFrame, xCol: Column, yCol: Column, byCol: String): DataFrame = {
-    val cells = guardedCellsBy(
-      df.select(col(byCol).as("__g"), xCol.as("x"), yCol.as("y"))
-        .filter(col("x").isNotNull && col("y").isNotNull)
-        .groupBy(col("__g"), col("x"), col("y")).agg(count(lit(1)).as("cnt")),
-      "kendallTauBBy")
-    val tiesX = cells.groupBy(col("__g"), col("x")).agg(sum(col("cnt")).as("tx"))
-      .groupBy(col("__g")).agg(sum(expr("tx * (tx - 1) div 2")).as("n1"))
-    val tiesY = cells.groupBy(col("__g"), col("y")).agg(sum(col("cnt")).as("ty"))
-      .groupBy(col("__g")).agg(sum(expr("ty * (ty - 1) div 2")).as("n2"))
-    val one = cells.groupBy(col("__g")).agg(
-      array_sort(collect_list(struct(col("x"), col("y"), col("cnt")))).as("cs"),
-      sum(col("cnt")).as("n"))
+      df: DataFrame, xCol: Column, yCol: Column, byCol: String): DataFrame =
+    bySegment(kendallTauBCore(df, Seq(byCol), xCol, yCol, "kendallTauBBy"), byCol)
+
+  private def kendallTauBCore(
+      df: DataFrame, by: Seq[String], xCol: Column, yCol: Column, op: String): DataFrame = {
+    val keys = segKeys(by)
+    val kc = keys.map(col)
+    val cells = guardedCells(
+      df.select(segCols(by) ++ Seq(xCol.as("x"), yCol.as("y")): _*)
+        .filter(col("x").isNotNull && col("y").isNotNull),
+      keys, op)
+    val tiesX = cells.groupBy(kc :+ col("x"): _*).agg(sum(col("cnt")).as("tx"))
+      .groupBy(kc: _*).agg(sum(expr("tx * (tx - 1) div 2")).as("n1"))
+    val tiesY = cells.groupBy(kc :+ col("y"): _*).agg(sum(col("cnt")).as("ty"))
+      .groupBy(kc: _*).agg(sum(expr("ty * (ty - 1) div 2")).as("n2"))
+    val one = cellArray(cells, keys)
     def pairSum(cmp: (Column, Column) => Column): Column =
       aggregate(col("cs"), lit(0L), (acc, c) =>
         acc + c.getField("cnt") * aggregate(
@@ -2653,14 +2308,12 @@ object Robust {
             o.getField("x") > c.getField("x") && cmp(o.getField("y"), c.getField("y"))),
           lit(0L), (a, o) => a + o.getField("cnt")))
     val n0 = expr("n * (n - 1) div 2")
-    one
-      .select(col("__g"), col("n"),
-        pairSum(_ > _).as("concordant"), pairSum(_ < _).as("discordant"))
-      .join(tiesX, "__g").join(tiesY, "__g")
-      .select(col("__g").as(byCol), col("n"), col("concordant"), col("discordant"),
-        round((col("concordant") - col("discordant")).cast(DoubleType) /
-          (sqrt((n0 - col("n1")).cast(DoubleType)) * sqrt((n0 - col("n2")).cast(DoubleType))),
-          6).as("tau_b"))
-      .orderBy(byCol)
+    val withPq = Seq(tiesX, tiesY).foldLeft(one.select(kc ++ Seq(col("n"),
+        pairSum(_ > _).as("concordant"), pairSum(_ < _).as("discordant")): _*))(
+      (l, ties) => attach(l, ties, keys, broadcastKeyed = false))
+    withPq.select(kc ++ Seq(col("n"), col("concordant"), col("discordant"),
+      round((col("concordant") - col("discordant")).cast(DoubleType) /
+        (sqrt((n0 - col("n1")).cast(DoubleType)) * sqrt((n0 - col("n2")).cast(DoubleType))),
+        6).as("tau_b")): _*)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.Session
@@ -81,18 +80,20 @@ object DedupIngest {
     (newSh, newBands, pairs)
   }
 
-  /** Frees the blocks of each `localCheckpoint` that `frames` scan and
-    * whose RDD is not in `kept`: given the session's persisted RDD ids
-    * from before a trigger planned `frames`, only the checkpoints that
-    * trigger made are released, never a shared or earlier frame's.
-    * `Dataset.unpersist` does not free them: a checkpoint is an RDD the
-    * plan reads (`LogicalRDD`), not a cached plan. */
-  private def releaseCheckpoints(frames: Seq[DataFrame], kept: collection.Set[Int]): Unit =
-    frames.foreach(_.queryExecution.logical.foreach {
-      case r: LogicalRDD if r.rdd.getStorageLevel.isValid && !kept.contains(r.rdd.id) =>
-        r.rdd.unpersist(blocking = false)
-      case _ =>
-    })
+  /** Frees every RDD persisted since the `kept` snapshot of the session's
+    * persisted RDD ids. A trigger takes the snapshot before
+    * [[triggerPairs]] and releases after its three sinks, and only those
+    * run in between, so this reaches every checkpoint the trigger made —
+    * the banding's, and the `Widen.cpuWide` barrier under
+    * `Dedup.shingleSets`, which no frame the trigger holds scans — and
+    * never a shared or earlier frame's. The run does the same around its
+    * whole body, for the parity readout's checkpoints, once its one row
+    * is collected. `Dataset.unpersist` would not free them: a checkpoint
+    * is an RDD a plan reads, not a cached plan. */
+  private def releaseNewlyPersisted(spark: SparkSession, kept: collection.Set[Int]): Unit =
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!kept.contains(id)) rdd.unpersist(blocking = false)
+    }
 
   /** Run the ingest stream to completion and return ONE materialized row:
     * `(n_docs, pairs_nonempty, match_full)` where `match_full` is the
@@ -142,6 +143,7 @@ object DedupIngest {
     val bandSchema = Dedup.withBandLayout(Dedup.bandRows(shRows), nPart, nSub).schema
     val (bandPartCols, shPartCols) = partitionCols(nSub)
 
+    val keptRun = spark.sparkContext.getPersistentRDDs.keySet
     try Session.withConf(spark, StreamConf.MonitorWidth) {
       Replay.drain(spark, Replay.source(spark, Schemas.documents, staged)
         .writeStream
@@ -165,7 +167,7 @@ object DedupIngest {
               .coalesce(1).write.partitionBy(shPartCols: _*).mode("append")
               .parquet(shDir.toString),
             () => pairs.write.mode("append").parquet(pairDir.toString)))
-          finally releaseCheckpoints(Seq(newSh, newBands, pairs), kept)
+          finally releaseNewlyPersisted(s, kept)
           ()
         })
 
@@ -209,6 +211,9 @@ object DedupIngest {
       import spark.implicits._
       Seq((nDocs, row.getLong(0) > 0L, row.getBoolean(1)))
         .toDF("n_docs", "pairs_nonempty", "match_full")
-    } finally Staging.rmTree(out)
+    } finally {
+      releaseNewlyPersisted(spark, keptRun)
+      Staging.rmTree(out)
+    }
   }
 }

@@ -644,16 +644,20 @@ class CurationSpec extends AnyFunSuite with SparkSpec {
     val edge = Seq(
       (1L, "the cat is in the hat and the dog sat on the mat with a bat near the rat and a hat"),
       (2L, "zz zz"), // too short AND not-English
-      (3L, ("the quick brown fox " * 10).trim)) // repetitive bigrams
+      (3L, ("the quick brown fox " * 10).trim), // repetitive bigrams
+      (4L, null: String), // documents.text is nullable
+      (5L, ""))
       .toDF("doc_id", "text")
+    // null-aware: a NULL verdict must not read as false
     val f2 = Curation.qualityKeptRaw(edge).orderBy($"doc_id").collect()
-      .map(r => (r.getLong(0), r.getAs[Boolean]("kept")))
+      .map(r => (r.getLong(0), Option(r.getAs[java.lang.Boolean]("kept"))))
     val j2 = Curation.qualityScoreRaw(edge).select($"doc_id")
       .join(Curation.curationAuditRaw(edge)
         .select($"doc_id", ($"reason" === "kept").as("kept")), "doc_id")
       .orderBy($"doc_id").collect()
-      .map(r => (r.getLong(0), r.getAs[Boolean]("kept")))
-    assert(f2.toSeq == j2.toSeq)
-    assert(f2.toMap == Map(1L -> true, 2L -> false, 3L -> false), f2.mkString(","))
+      .map(r => (r.getLong(0), Option(r.getAs[java.lang.Boolean]("kept"))))
+    assert(f2.toSeq == j2.toSeq, s"fused ${f2.mkString(",")} vs joined ${j2.mkString(",")}")
+    assert(f2.toMap == Map(1L -> Some(true), 2L -> Some(false), 3L -> Some(false),
+      4L -> Some(false), 5L -> Some(false)), f2.mkString(","))
   }
 }

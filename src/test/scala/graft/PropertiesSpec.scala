@@ -1256,4 +1256,168 @@ class PropertiesSpec extends AnyFunSuite with SparkSpec {
       }
     }
   }
+
+  test("Robust segment contract: each global form on empty input, each By form per segment") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import graft.operators.Robust
+    // Segments: NULL (ids 0-3), 'one' (4-7: arm 0, split 'a', label true
+    // only), 's1' (8-20) and 's2' (21-33); id 20 has a null x/v/label and
+    // id 33 a null y/score/yi, so every per-pair null filter shows.
+    val fx = spark.range(34).selectExpr(
+      "CASE WHEN id < 4 THEN NULL WHEN id < 8 THEN 'one' " +
+        "WHEN id < 21 THEN 's1' ELSE 's2' END AS seg",
+      "id",
+      "CASE WHEN id = 20 THEN NULL " +
+        "ELSE element_at(array('a','b','c'), CAST(id % 3 + 1 AS INT)) END AS x",
+      "CASE WHEN id = 33 THEN NULL " +
+        "ELSE element_at(array('u','v'), CAST((id DIV 2) % 2 + 1 AS INT)) END AS y",
+      "CASE WHEN id BETWEEN 4 AND 7 THEN 0 ELSE CAST(id % 2 AS INT) END AS arm",
+      "CASE WHEN id BETWEEN 4 AND 7 THEN true ELSE (id * 7) % 3 = 0 END AS ok",
+      "CASE WHEN id = 20 THEN NULL ELSE CAST((id * 37) % 19 AS DOUBLE) + 0.25 * (id % 4) END AS v",
+      "CAST(id % 3 AS BIGINT) AS w",
+      "CASE WHEN id = 33 THEN NULL " +
+        "ELSE CAST(((id * 53) % 100) / 100.0 + 0.003 AS DOUBLE) END AS score",
+      "CASE WHEN id = 20 THEN NULL " +
+        "WHEN id BETWEEN 4 AND 7 THEN true ELSE (id * 5) % 3 <> 0 END AS label",
+      "id % 2 = 0 AS r1", "id % 3 <> 0 AS r2", "(id * 5) % 3 <> 0 AS r3",
+      "CASE WHEN id BETWEEN 4 AND 7 THEN 'a' WHEN id % 7 = 6 THEN 'c' " +
+        "WHEN id % 2 = 0 THEN 'a' ELSE 'b' END AS split",
+      "CAST(id % 4 AS INT) AS xi",
+      "CASE WHEN id = 33 THEN NULL ELSE CAST((id * 3) % 5 AS INT) END AS yi")
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], fx.schema)
+    val raters = Seq($"r1", $"r2", $"r3")
+    // the scored projection is row-level: pin its per-(segment, half) sums
+    def scoredSums(df: DataFrame, keys: String*): DataFrame =
+      df.groupBy((keys :+ "is_cal").map(col): _*)
+        .agg(count(lit(1)).as("n"), sum($"__id").as("ids"), sum($"q").as("sq"),
+          sum($"a").as("sa"), sum($"y".cast("int")).as("ny"))
+        .orderBy((keys :+ "is_cal").map(col): _*)
+    val cases: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "mutualInformation" -> (d => Robust.mutualInformation(d, "x", "y")),
+      "mutualInformationBy" -> (d => Robust.mutualInformationBy(d, "x", "y", "seg")),
+      "chiSquare" -> (d => Robust.chiSquare(d, "x", "y")),
+      "chiSquareBy" -> (d => Robust.chiSquareBy(d, "x", "y", "seg")),
+      "twoProportionZ" -> (d => Robust.twoProportionZ(d, $"arm", $"ok")),
+      "twoProportionZBy" -> (d => Robust.twoProportionZBy(d, $"arm", $"ok", "seg")),
+      "welchT" -> (d => Robust.welchT(d, $"arm", $"v")),
+      "welchTBy" -> (d => Robust.welchTBy(d, $"arm", $"v", "seg")),
+      "cochranArmitage" -> (d => Robust.cochranArmitage(d, $"w", $"ok")),
+      "cochranArmitageBy" -> (d => Robust.cochranArmitageBy(d, $"w", $"ok", "seg")),
+      "isotonicCalibration" -> (d => Robust.isotonicCalibration(d, $"score", $"label")),
+      "isotonicCalibrationBy" -> (d =>
+        Robust.isotonicCalibrationBy(d, $"score", $"label", "seg")),
+      "fleissKappa" -> (d => Robust.fleissKappa(d, raters)),
+      "fleissKappaBy" -> (d => Robust.fleissKappaBy(d, raters, "seg")),
+      "conformalScored" -> (d =>
+        scoredSums(Robust.conformalScored(d, $"id", $"score", $"label"))),
+      "conformalScoredBy" -> (d =>
+        scoredSums(Robust.conformalScoredBy(d, "seg", $"id", $"score", $"label"), "__g")),
+      "conformalQhatRow" -> (d => Robust.conformalQhatRow(
+        Robust.conformalScored(d, $"id", $"score", $"label"), 90)),
+      "conformalQhatRowsBy" -> (d => Robust.conformalQhatRowsBy(
+        Robust.conformalScoredBy(d, "seg", $"id", $"score", $"label"), 60).orderBy("__g")),
+      "conformalGate" -> (d => Robust.conformalGate(d, $"id", $"score", $"label")),
+      "conformalGateBy" -> (d =>
+        Robust.conformalGateBy(d, $"id", $"score", $"label", "seg", 60)),
+      "cohenKappa" -> (d => Robust.cohenKappa(d, $"r1", $"r3")),
+      "cohenKappaBy" -> (d => Robust.cohenKappaBy(d, $"r1", $"r3", "seg")),
+      "aucScore" -> (d => Robust.aucScore(d, $"score", $"label")),
+      "aucScoreBy" -> (d => Robust.aucScoreBy(d, $"score", $"label", "seg")),
+      "expectedCalibrationError" -> (d =>
+        Robust.expectedCalibrationError(d, $"score", $"label")),
+      "expectedCalibrationErrorBy" -> (d =>
+        Robust.expectedCalibrationErrorBy(d, $"score", $"label", "seg")),
+      "mannWhitneyU" -> (d => Robust.mannWhitneyU(d, $"v", $"split", "a", "b")),
+      "mannWhitneyUBy" -> (d => Robust.mannWhitneyUBy(d, $"v", $"split", "a", "b", "seg")),
+      "psiDrift" -> (d => Robust.psiDrift(d, $"v", $"split", "a", "b", 5)),
+      "psiDriftBy" -> (d => Robust.psiDriftBy(d, $"v", $"split", "a", "b", "seg", 5)),
+      "ksStatistic" -> (d => Robust.ksStatistic(d, $"v", $"split", "a", "b")),
+      "ksStatisticBy" -> (d => Robust.ksStatisticBy(d, $"v", $"split", "a", "b", "seg")),
+      "spearmanRho" -> (d => Robust.spearmanRho(d, $"xi", $"yi")),
+      "spearmanRhoBy" -> (d => Robust.spearmanRhoBy(d, $"xi", $"yi", "seg")),
+      "kendallTauB" -> (d => Robust.kendallTauB(d, $"xi", $"yi")),
+      "kendallTauBBy" -> (d => Robust.kendallTauBBy(d, $"xi", $"yi", "seg")))
+    def render(df: DataFrame): String =
+      df.columns.mkString("[", ",", "]") + " " +
+        df.collect().map(_.mkString("(", ",", ")")).mkString(" ")
+    val expected = Map[String, String](
+      "mutualInformation" -> "[n_rows,mi_nats] (null,0.0)",
+      "mutualInformationBy" -> "[seg,n_rows,mi_nats] (one,4,0.346574) (s1,12,0.0) (s2,12,0.0)",
+      "chiSquare" -> "[n_rows,dof,chi2,cramers_v] (null,1,null,null)",
+      "chiSquareBy" ->
+        ("[seg,n_rows,dof,chi2,cramers_v] (one,4,2,2.0,0.707107) (s1,12,2,0.0,0.0)" +
+         " (s2,12,2,0.0,0.0)"),
+      "twoProportionZ" -> "[n_a,conv_a,n_b,conv_b,z_stat] (null,null,null,null,null)",
+      "twoProportionZBy" ->
+        ("[seg,n_a,conv_a,n_b,conv_b,z_stat] (null,2,1,2,1,0.0) (s1,7,2,6,2,-0.18545)" +
+         " (s2,6,2,7,3,-0.351866)"),
+      "welchT" -> "[n_a,n_b,mean_a,mean_b,t_stat,welch_df] (null,null,null,null,null,null)",
+      "welchTBy" ->
+        ("[seg,n_a,n_b,mean_a,mean_b,t_stat,welch_df]" +
+         " (null,2,2,8.75,17.5,-0.996347,1.014693)" +
+         " (s1,7,6,5.357143,5.5,-0.066268,10.963523)" +
+         " (s2,6,7,11.25,11.464286,-0.094677,10.976774)"),
+      "cochranArmitage" -> "[k,n_rows,n_success,z_stat] (0,null,null,null)",
+      "cochranArmitageBy" ->
+        ("[seg,k,n_rows,n_success,z_stat] (one,3,4,4,null) (s1,3,13,4,-3.124492)" +
+         " (s2,3,13,5,-3.175879)"),
+      "isotonicCalibration" -> "[bin,n,avg_pred,frac_pos,frac_iso] ",
+      "isotonicCalibrationBy" ->
+        ("[seg,bin,n,avg_pred,frac_pos,frac_iso] (one,1,2,0.153,1.0,1.0)" +
+         " (one,6,1,0.653,1.0,1.0) (one,7,1,0.713,1.0,1.0) (s1,0,2,0.043,1.0,0.666667)" +
+         " (s1,2,1,0.243,1.0,0.666667) (s1,3,2,0.333,0.5,0.666667)" +
+         " (s1,4,2,0.453,1.0,0.666667) (s1,5,1,0.543,0.0,0.666667)" +
+         " (s1,7,1,0.773,0.0,0.666667) (s1,8,2,0.863,1.0,0.666667)" +
+         " (s1,9,1,0.953,0.0,0.666667) (s2,1,2,0.163,0.5,0.5)" +
+         " (s2,2,1,0.253,1.0,0.666667) (s2,3,2,0.343,0.5,0.666667)" +
+         " (s2,4,1,0.433,1.0,0.714286) (s2,6,1,0.663,1.0,0.714286)" +
+         " (s2,7,2,0.753,0.5,0.714286) (s2,8,1,0.843,1.0,0.714286)" +
+         " (s2,9,2,0.933,0.5,0.714286)"),
+      "fleissKappa" -> "[n,p_bar,p_e,kappa] (0,null,null,null)",
+      "fleissKappaBy" ->
+        ("[seg,n,p_bar,p_e,kappa] (one,4,0.5,0.555556,-0.125)" +
+         " (s1,13,0.692308,0.539776,0.331429) (s2,13,0.692308,0.508218,0.374332)"),
+      "conformalScored" -> "[is_cal,n,ids,sq,sa,ny] ",
+      "conformalScoredBy" ->
+        ("[__g,is_cal,n,ids,sq,sa,ny] (one,false,2,13,0.896000,1.104000,2)" +
+         " (one,true,2,9,0.776000,1.224000,2) (s1,false,6,84,2.538000,3.274000,4)" +
+         " (s1,true,6,78,3.358000,4.094000,4) (s2,false,6,165,3.468000,3.784000,4)" +
+         " (s2,true,6,153,3.108000,1.784000,4)"),
+      "conformalQhatRow" -> "[qhat,n_cal] (1.000000,0)",
+      "conformalQhatRowsBy" -> "[__g,n_cal,qhat] (one,2,0.877000) (s1,6,0.953000) (s2,6,0.337000)",
+      "conformalGate" -> "[n_cal,n_test,qhat,coverage,avg_set_size] (null,0,null,null,null)",
+      "conformalGateBy" ->
+        ("[seg,n_cal,n_test,qhat,coverage,avg_set_size] (one,2,2,0.877,1.0,2.0)" +
+         " (s1,6,6,0.953,1.0,2.0) (s2,6,6,0.337,0.166667,0.666667)"),
+      "cohenKappa" -> "[n_rows,n_agree,kappa] (null,null,null)",
+      "cohenKappaBy" ->
+        ("[seg,n_rows,n_agree,kappa] (one,4,1,-0.5) (s1,13,7,0.04878) (s2,13,7,0.093023)"),
+      "aucScore" -> "[n_pos,n_neg,auc,z_stat] (null,null,null,null)",
+      "aucScoreBy" ->
+        ("[seg,n_pos,n_neg,auc,z_stat] (s1,8,4,0.25,-1.358732) (s2,8,4,0.5625,0.339683)"),
+      "expectedCalibrationError" -> "[n_rows,ece] (null,0.0)",
+      "expectedCalibrationErrorBy" ->
+        ("[seg,n_rows,ece] (one,4,0.582) (s1,12,0.5535) (s2,12,0.347333)"),
+      "mannWhitneyU" -> "[n_a,n_b,u2_a,z_stat] (null,null,null,null)",
+      "mannWhitneyUBy" -> "[seg,n_a,n_b,u2_a,z_stat] (s1,6,5,36,0.547723) (s2,6,6,36,0.0)",
+      "psiDrift" -> "[n_ref,n_cur,psi] ",
+      "psiDriftBy" ->
+        ("[seg,n_ref,n_cur,psi] (null,0,0,0.0) (one,4,0,0.135214) (s1,6,5,0.120632)" +
+         " (s2,6,6,0.189346)"),
+      "ksStatistic" -> "[n_a,n_b,ks_stat] (null,null,null)",
+      "ksStatisticBy" -> "[seg,n_a,n_b,ks_stat] (s1,6,5,0.266667) (s2,6,6,0.166667)",
+      "spearmanRho" -> "[n,rho] (0,null)",
+      "spearmanRhoBy" -> "[seg,n,rho] (one,4,0.0) (s1,13,-0.086711) (s2,12,0.055048)",
+      "kendallTauB" -> "[n,concordant,discordant,tau_b] (null,0,0,null)",
+      "kendallTauBBy" ->
+        ("[seg,n,concordant,discordant,tau_b] (one,4,3,3,0.0) (s1,13,24,28,-0.061568)" +
+         " (s2,12,24,21,0.054074)"))
+    val got = cases.map { case (name, f) =>
+      name -> render(f(if (name.endsWith("By")) fx else empty))
+    }
+    val diff = got.filter { case (n, r) => !expected.get(n).contains(r) }
+    assert(got.size == expected.size)
+    assert(diff.isEmpty,
+      diff.map { case (n, r) => "\"" + n + "\" -> \"" + r + "\"," }.mkString("\n", "\n", ""))
+  }
 }

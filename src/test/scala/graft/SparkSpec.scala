@@ -2,13 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared SparkSession for the whole forked test JVM. */
+/** One shared SparkSession for the whole forked test JVM; its warehouse
+  * dir is deleted when the JVM exits. */
 object SparkTestSession {
   lazy val get: SparkSession = {
+    val warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse").toFile
+    sys.addShutdownHook(graft.sources.Staging.rmTree(warehouse))
     val s = Session.builder(4)
       .appName("graft-tests")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -9,10 +9,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.graftshim.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ShuffledRowRDD
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, StreamingQueryListener}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.CartesianGuard
@@ -20,7 +20,7 @@ import graft.sources.Writers
 import graft.streaming.{DedupIngest, EventStreams, Replay}
 import graft.streaming.EventStreams.Event
 
-class StreamingSpec extends AnyFunSuite with SparkSpec with TempDirs {
+class StreamingSpec extends AnyFunSuite with SparkSpec with TempDirs with BeforeAndAfterAll {
   import spark.implicits._
 
   private def ev(id: Long, t: String, user: Long, v: Double) =
@@ -299,12 +299,12 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with TempDirs {
   }
 
   test("checkpointed stream restarts exactly-once: stop, append data, resume, no dups") {
-    val dir = Files.createTempDirectory("graft_restart_src").toFile.getAbsolutePath
-    val ckpt = Files.createTempDirectory("graft_restart_ckpt").toFile.getAbsolutePath
+    val dir = tempDir("graft_restart_src").toFile.getAbsolutePath
+    val ckpt = tempDir("graft_restart_ckpt").toFile.getAbsolutePath
     // stage each batch as a FLAT file in the watched dir (the file stream
     // source lists the directory, not nested subdirs)
     def write(events: Seq[Event], part: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_restart_stage").toFile
+      val tmp = tempDir("graft_restart_stage").toFile
       events.toDF().coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
       tmp.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
         java.nio.file.Files.copy(f.toPath, java.nio.file.Paths.get(dir, s"$part.parquet"))
@@ -582,8 +582,14 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with TempDirs {
     * (`<dir>/<table>.parquet`). The on-time max (01:40) and the row before
     * it (01:30) share an hour after the 10-minute delay, as the late-audit
     * schedule requires; user 3 is the late slice. */
+  private var streamTablesDir: Option[java.io.File] = None
+
+  override def afterAll(): Unit =
+    try streamTablesDir.foreach(graft.sources.Staging.rmTree) finally super.afterAll()
+
   private lazy val streamTables: String = {
     val dir = Files.createTempDirectory("graft-stream-tables").toString
+    streamTablesDir = Some(new java.io.File(dir))
     Seq(
       ev(1, "2024-01-01 00:05:00", 1, 1.0), ev(2, "2024-01-01 00:40:00", 2, 2.0),
       ev(3, "2024-01-01 01:10:00", 1, 3.0), ev(4, "2024-01-01 01:30:00", 2, 4.0),
@@ -649,19 +655,18 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with TempDirs {
     }
   }
 
-  test("a bench-form dedup ingest run leaves at most one widening barrier per trigger persisted") {
-    // each trigger releases the checkpoints its frames scan; what may stay
-    // is the Widen.cpuWide barrier under Dedup.shingleSets (a checkpoint
-    // straight over a round-robin shuffle), which none of those frames
-    // scans; the context cleaner frees it once it is garbage
+  test("a dedup ingest run leaves no RDD newly persisted, bench and contract form") {
+    // each trigger releases every RDD persisted since its start (the
+    // banding checkpoint and the Widen.cpuWide barrier under
+    // Dedup.shingleSets alike), and the run releases its parity readout's
     val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val row = DedupIngest.runStreamDedupIngest(spark, streamTables, assertFull = false).head()
-    assert(row.getBoolean(1))
-    val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }.values
-    assert(left.size <= 2, left.map(_.toDebugString).mkString("\n"))
-    left.foreach(r =>
-      assert(r.dependencies.exists(_.rdd.isInstanceOf[ShuffledRowRDD]), r.toDebugString))
+    for (full <- Seq(false, true)) {
+      val before = sc.getPersistentRDDs.keySet
+      val row = DedupIngest.runStreamDedupIngest(spark, streamTables, assertFull = full).head()
+      assert(row.getBoolean(1) && row.getBoolean(2), s"assertFull = $full")
+      val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }.values
+      assert(left.isEmpty, s"assertFull = $full:\n" + left.map(_.toDebugString).mkString("\n"))
+    }
   }
 
   test("driver contract: entry returns rows on sf0.001") {
